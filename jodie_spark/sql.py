@@ -126,13 +126,31 @@ def _split_top_level(s: str, sep: str) -> list[str]:
     return [p.strip() for p in out if p.strip()]
 
 
-def _parse_assignments(s: str) -> dict[str, str]:
+_IDENT_PART = r"(?:`(?:[^`]|``)*`|\w+)"
+
+
+def _target_column(ref: str, alias: str | None) -> str:
+    """Column named by an assignment target or INSERT column: parts
+    backtick-unquoted, and a leading target-alias qualifier (``t.v``)
+    stripped, since the qualified form names no target column."""
+    parts = [
+        p[1:-1].replace("``", "`") if p.startswith("`") else p
+        for p in re.findall(_IDENT_PART, ref)
+    ]
+    if alias and len(parts) > 1 and parts[0].lower() == alias.lower():
+        parts = parts[1:]
+    return ".".join(parts)
+
+
+def _parse_assignments(s: str, alias: str | None) -> dict[str, str]:
     out: dict[str, str] = {}
     for part in _split_top_level(s, ","):
-        m = re.match(r"^\s*([\w.`]+)\s*=\s*(.+)$", part, re.S)
+        m = re.match(
+            rf"^\s*({_IDENT_PART}(?:\s*\.\s*{_IDENT_PART})*)\s*=\s*(.+)$", part, re.S
+        )
         if not m:
             raise JodieValidationError(f"cannot parse SET assignment: {part!r}")
-        out[m.group(1).strip("`")] = m.group(2).strip()
+        out[_target_column(m.group(1), alias)] = m.group(2).strip()
     return out
 
 
@@ -182,7 +200,7 @@ def sql(spark: SparkSession, statement: str) -> DataFrame | None:
         rest = m.group("rest")
         wi = _find_top_level(rest, "WHERE")
         cond = rest[wi + 5 :].strip() if wi >= 0 else None
-        sets = _parse_assignments(rest[:wi] if wi >= 0 else rest)
+        sets = _parse_assignments(rest[:wi] if wi >= 0 else rest, m.group("name"))
         _resolve(spark, m).update(cond, sets)
         return None
 
@@ -549,6 +567,7 @@ def _show_create_table(t) -> str:
     NOT NULL, identity/generation clauses, CURRENT_DEFAULT), USING
     DELTA, PARTITIONED BY / CLUSTER BY, TBLPROPERTIES, LOCATION."""
     from jodie_spark.tables.identity import identity_columns_of
+    from jodie_spark.tables.merge import quote_ident as bq, type_ddl
     from jodie_spark.tables.table import column_defaults_of, generated_columns_of
 
     snap = t.snapshot()
@@ -557,21 +576,15 @@ def _show_create_table(t) -> str:
     generated = generated_columns_of(schema)
     defaults = column_defaults_of(schema)
 
-    def bq(name: str) -> str:
-        # backtick-quoted identifier: ` escapes as `` (Spark parser
-        # rule), so a column literally named a`b emits `a``b` and the
-        # DDL stays runnable — same treatment TBLPROPERTIES values get
-        return "`" + str(name).replace("`", "``") + "`"
-
     def sq(s: str) -> str:
         return str(s).replace("'", "''")  # SQL-standard '' escaping
 
     col_lines = []
     for f in schema.fields:
-        # simpleString verbatim — uppercasing would rename NESTED
-        # struct/map field names; identifiers are backtick-quoted so
-        # names with spaces/dashes stay runnable
-        line = f"  {bq(f.name)} {f.dataType.simpleString()}"
+        # identifiers are backtick-quoted (a ` doubles) so names with
+        # spaces/dashes/backticks stay runnable; type_ddl quotes nested
+        # struct field names the same way and never case-mangles them
+        line = f"  {bq(f.name)} {type_ddl(f.dataType)}"
         if f.name in identities:
             spec = identities[f.name]
             kind = "ALWAYS" if not spec.get("allow_explicit") else "BY DEFAULT"
@@ -749,7 +762,7 @@ def _merge(spark: SparkSession, s: str) -> None:
                     f"<explicit assignments> or DELETE): {act!r}"
                 )
             builder = builder.whenNotMatchedBySourceUpdate(
-                condition=ccond, set=_parse_assignments(ub.group("sets"))
+                condition=ccond, set=_parse_assignments(ub.group("sets"), talias)
             )
             continue
         if c.group("not"):
@@ -763,7 +776,10 @@ def _merge(spark: SparkSession, s: str) -> None:
             )
             if not iv:
                 raise JodieValidationError(f"cannot parse INSERT action: {act!r}")
-            cols = [x.strip().strip("`") for x in iv.group("cols").split(",")]
+            cols = [
+                _target_column(x, talias)
+                for x in _split_top_level(iv.group("cols"), ",")
+            ]
             vals = _split_top_level(iv.group("vals"), ",")
             if len(cols) != len(vals):
                 raise JodieValidationError("INSERT column/value count mismatch")
@@ -780,7 +796,7 @@ def _merge(spark: SparkSession, s: str) -> None:
                 builder = builder.whenMatchedUpdateAll(ccond)
             else:
                 builder = builder.whenMatchedUpdate(
-                    condition=ccond, set=_parse_assignments(ua.group("sets"))
+                    condition=ccond, set=_parse_assignments(ua.group("sets"), talias)
                 )
     builder.execute()
     return None

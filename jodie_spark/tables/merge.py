@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING, Any
@@ -44,61 +45,175 @@ if TYPE_CHECKING:
     from jodie_spark.tables.table import DeltaTable
 
 
-def _qcol(talias: str, name: str) -> Column:
-    """Alias-qualified column reference with the name backtick-quoted —
-    F.col() PARSES its argument, so a raw backtick in a field name is a
-    syntax error without escaping."""
-    return F.col(f"{talias}.`{name.replace('`', '``')}`")
+# per-row actions the rewrite pass counts, and their observation labels
+_COUNTS = (
+    ("update", "updated"),
+    ("delete", "deleted"),
+    ("copy", "copied"),
+    ("insert", "inserted"),
+)
+_PLAIN_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
 
 
-def _align_by_name(col: Column, src_type, dst_type) -> Column:
-    """Project a source column onto a (possibly wider) target type by
-    FIELD NAME, recursively: struct fields match by name (missing ones
-    become typed NULLs), leaves cast. Spark's struct-to-struct cast is
-    POSITIONAL, so a source ``struct<b, a>`` squeezed into a target
-    ``struct<a, b>`` would silently swap values — merges must never do
-    that. A NULL source struct stays NULL (F.struct of NULL fields
-    would otherwise materialize a non-null struct of NULLs)."""
+def quote_ident(name: str) -> str:
+    """Backtick-quoted SQL identifier; a backtick inside the name doubles
+    (the Spark parser's escape rule)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def type_ddl(dt) -> str:
+    """SQL type text that parses back to ``dt``: nested struct field
+    names are backtick-quoted unless they are plain identifiers —
+    ``simpleString()`` never quotes them, so ``struct<va l:bigint>``
+    would not parse."""
     from pyspark.sql import types as T
 
+    if isinstance(dt, T.StructType):
+        return "struct<" + ",".join(
+            (f.name if _PLAIN_IDENT.match(f.name) else quote_ident(f.name))
+            + ":" + type_ddl(f.dataType)
+            for f in dt.fields
+        ) + ">"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{type_ddl(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{type_ddl(dt.keyType)},{type_ddl(dt.valueType)}>"
+    return dt.simpleString()
+
+
+def _frag(sql: str) -> str:
+    """Embed a user SQL fragment (condition or assignment) in generated
+    text: parenthesised, with a newline so a trailing ``-- comment``
+    ends before the generated text resumes."""
+    return f"({sql}\n)"
+
+
+def _str_lit(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _align_sql(expr: str, src_type, dst_type, depth: int = 0) -> str:
+    """SQL text projecting ``expr`` (of ``src_type``) onto a (possibly
+    wider) ``dst_type`` by FIELD NAME, recursively: struct fields match
+    by name (missing ones become typed NULLs), leaves cast. Spark's
+    struct-to-struct cast is POSITIONAL, so a source ``struct<b, a>``
+    squeezed into a target ``struct<a, b>`` would silently swap values —
+    merges must never do that. A NULL source struct stays NULL."""
+    from pyspark.sql import types as T
+
+    if src_type == dst_type:
+        return expr
     if isinstance(dst_type, T.StructType) and isinstance(src_type, T.StructType):
         by_name = {f.name: f for f in src_type.fields}
         parts = []
         for f in dst_type.fields:
             sf = by_name.get(f.name)
-            if sf is None:
-                parts.append(F.lit(None).cast(f.dataType).alias(f.name))
-            else:
-                parts.append(
-                    _align_by_name(
-                        col.getField(f.name), sf.dataType, f.dataType
-                    ).alias(f.name)
+            val = (
+                _align_sql(
+                    f"{expr}.{quote_ident(f.name)}", sf.dataType, f.dataType, depth
                 )
-        return F.when(col.isNull(), F.lit(None).cast(dst_type)).otherwise(
-            F.struct(*parts)
+                if sf is not None
+                else f"CAST(NULL AS {type_ddl(f.dataType)})"
+            )
+            parts.append(f"{_str_lit(f.name)}, {val}")
+        return (
+            f"CASE WHEN {expr} IS NULL THEN NULL"
+            f" ELSE named_struct({', '.join(parts)}) END"
         )
-    if (
-        isinstance(dst_type, T.ArrayType)
-        and isinstance(src_type, T.ArrayType)
-        and src_type.elementType != dst_type.elementType
-    ):
-        return F.transform(
-            col,
-            lambda e: _align_by_name(e, src_type.elementType, dst_type.elementType),
+    if isinstance(dst_type, T.ArrayType) and isinstance(src_type, T.ArrayType):
+        e = f"__e{depth}"
+        inner = _align_sql(e, src_type.elementType, dst_type.elementType, depth + 1)
+        return f"transform({expr}, {e} -> {inner})"
+    if isinstance(dst_type, T.MapType) and isinstance(src_type, T.MapType):
+        v = f"__v{depth}"
+        inner = _align_sql(v, src_type.valueType, dst_type.valueType, depth + 1)
+        return (
+            f"map_from_arrays(CAST(map_keys({expr}) AS "
+            f"array<{type_ddl(dst_type.keyType)}>), "
+            f"transform(map_values({expr}), {v} -> {inner}))"
         )
-    if (
-        isinstance(dst_type, T.MapType)
-        and isinstance(src_type, T.MapType)
-        and src_type.valueType != dst_type.valueType
-    ):
-        return F.map_from_arrays(
-            F.map_keys(col).cast(T.ArrayType(dst_type.keyType)),
-            F.transform(
-                F.map_values(col),
-                lambda v: _align_by_name(v, src_type.valueType, dst_type.valueType),
-            ),
+    return f"CAST({expr} AS {type_ddl(dst_type)})"
+
+
+def resolve_assignment_keys(
+    assignments: dict[str, Any], columns: list[str], what: str
+) -> dict[str, Any]:
+    """Map assignment keys onto target column names the way Spark's
+    default resolver does (case-insensitively, exact match first). A key
+    that names no target column raises — dropping it silently would
+    write the row without the assignment."""
+    exact = set(columns)
+    folded: dict[str, str] = {}
+    for c in columns:
+        folded.setdefault(c.lower(), c)
+    out: dict[str, Any] = {}
+    unknown = []
+    for key, v in assignments.items():
+        name = key if key in exact else folded.get(key.lower())
+        if name is None:
+            unknown.append(key)
+        elif name in out:
+            raise JodieValidationError(f"{what} assigns column {name!r} twice")
+        else:
+            out[name] = v
+    if unknown:
+        raise JodieValidationError(
+            f"{what} assigns {unknown}, which name no target column "
+            f"(target columns: {columns})"
         )
-    return col.cast(dst_type)
+    return out
+
+
+def _observed(ob: Observation, keys: list[str]) -> dict[str, int]:
+    """Observed metrics, zero when Catalyst's empty-relation propagation
+    optimized the observed subtree away (e.g. empty source)."""
+    try:
+        got = ob.get
+        return {k: int(got.get(k) or 0) for k in keys}
+    except Exception:
+        return {k: 0 for k in keys}
+
+
+def _assign_identities(result: DataFrame, schema, id_generate, keep_cols):
+    """In-merge identity generation: output rows whose identity column
+    lands NULL (inserts no clause provided it for) get fresh values from
+    the watermark, exactly the append-path arithmetic; carried target
+    rows always have values (ALWAYS semantics), so the null-split touches
+    inserts only. Returns (result, schema carrying the new high-water
+    marks, or None when no value was assigned)."""
+    from jodie_spark.tables.identity import (
+        assign_identity_values,
+        identity_columns_of,
+        next_identity_base,
+        with_identity_metadata,
+    )
+
+    new_specs = dict(identity_columns_of(schema))
+    changed = False
+    for name, spec in id_generate.items():
+        need = result.filter(F.col(name).isNull()).drop(name)
+        keep = result.filter(F.col(name).isNotNull())
+        need, hwm = assign_identity_values(
+            need, name, next_identity_base(spec), int(spec["step"])
+        )
+        result = keep.unionByName(need).select(*keep_cols)
+        if hwm is not None:
+            new_specs[name] = {**spec, "high_water_mark": hwm}
+            changed = True
+    if not changed:
+        return result, None
+    return result, with_identity_metadata(
+        schema,
+        {
+            n: {
+                "start": s["start"],
+                "step": s["step"],
+                "allow_explicit": s["allow_explicit"],
+                "high_water_mark": s.get("high_water_mark"),
+            }
+            for n, s in new_specs.items()
+        },
+    )
 
 
 def _merge_struct_types(tgt_dt, src_dt, allow_widening: bool = True):
@@ -230,13 +345,12 @@ def _strip_alias_prefix(conj: str, talias: str) -> str:
     literals (``target.url = 'https://target.example/'``), corrupting
     the pruning predicate. Quoted regions (with doubled-quote escapes)
     are left untouched."""
-    import re as _re
-
-    parts = _re.split(r"('(?:[^']|'')*')", conj)
-    pat = _re.compile(rf"\b{_re.escape(talias)}\.(?=[A-Za-z_])")
+    parts = re.split(r"('(?:[^']|'')*')", conj)
+    pat = re.compile(rf"\b{re.escape(talias)}\.(?=[A-Za-z_])")
     return "".join(
         p if p.startswith("'") else pat.sub("", p) for p in parts
     )
+
 
 
 @dataclass
@@ -415,9 +529,7 @@ class DeltaMergeBuilder:
         inspected, so they conservatively fall back too. Quoted strings
         can false-positive the alias scan — that only costs the
         optimization, never correctness."""
-        import re as _re
-
-        pat = _re.compile(rf"\b{_re.escape(talias)}\.")
+        pat = re.compile(rf"\b{re.escape(talias)}\.")
         for cl in self._not_matched:
             if cl.condition and pat.search(str(cl.condition)):
                 return False
@@ -426,294 +538,64 @@ class DeltaMergeBuilder:
                     return False
         return True
 
-    def _execute_insert_only(
-        self,
-        t0: float,
-        snap,
-        schema,
-        talias: str,
-        src: DataFrame,
-        src_obs: Observation,
-        eager_source_rows: int | None,
-        candidates: list[dict[str, Any]],
-        lineage,
-        lineage_actions: list[dict[str, Any]],
-        schema_evolved: bool,
-        evolved_conf: dict[str, str] | None,
-        type_widened: bool,
-        id_generate,
-    ) -> None:
-        """Insert-only merge: anti-join the source against the
-        stats-pruned candidate scan (Catalyst prunes the scan to the
-        condition's columns), resolve the first matching not-matched
-        clause per row, and append the result as NEW files — no
-        removes, no rewrite of matched files."""
-        from jodie_spark.tables.table import (
-            apply_generated_columns,
-            enforce_check_constraints,
-            read_files_df,
-        )
-
-        t = self.table
-        spark = t.spark
-        if candidates:
-            tgt = t._read_candidates(snap, schema, candidates).alias(talias)
-        else:
-            tgt = read_files_df(spark, t.path, schema, []).alias(talias)
-        anti = src.join(tgt, F.expr(self.condition), "left_anti")
-
-        def _clause_cond(cl: _Clause) -> Column:
-            return F.expr(cl.condition) if cl.condition else F.lit(True)
-
-        i_idx: Column = F.lit(-1)
-        for k in range(len(self._not_matched) - 1, -1, -1):
-            i_idx = F.when(_clause_cond(self._not_matched[k]), F.lit(k)).otherwise(i_idx)
-        staged = anti.withColumn("__i_idx__", i_idx).filter(F.col("__i_idx__") >= 0)
-
-        obs = Observation()
-        staged = staged.observe(obs, F.count(F.lit(1)).alias("inserted"))
-
-        src_fields = {f.name: f for f in self.source.schema.fields}
-
-        def _ins_col(fld) -> Column:
-            expr: Column = F.lit(None).cast(fld.dataType)
-            for k in range(len(self._not_matched) - 1, -1, -1):
-                cl = self._not_matched[k]
-                if cl.star:
-                    sf = src_fields.get(fld.name)
-                    val = (
-                        _align_by_name(self.source[fld.name], sf.dataType, fld.dataType)
-                        if sf is not None
-                        else F.lit(None).cast(fld.dataType)
-                    )
-                elif fld.name in cl.assignments:
-                    v = cl.assignments[fld.name]
-                    val = (v if isinstance(v, Column) else F.expr(str(v))).cast(
-                        fld.dataType
-                    )
-                else:
-                    val = F.lit(None).cast(fld.dataType)
-                expr = F.when(F.col("__i_idx__") == k, val).otherwise(expr)
-            return expr.cast(fld.dataType).alias(fld.name)
-
-        result = staged.select(*[_ins_col(f) for f in schema.fields])
-
-        id_schema_meta = None
-        if id_generate:
-            from jodie_spark.tables.identity import (
-                assign_identity_values,
-                identity_columns_of,
-                next_identity_base,
-                with_identity_metadata,
-            )
-
-            new_specs = dict(identity_columns_of(schema))
-            changed = False
-            keep_cols = [f.name for f in schema.fields]
-            for name, spec in id_generate.items():
-                need = result.filter(F.col(name).isNull()).drop(name)
-                keep = result.filter(F.col(name).isNotNull())
-                need, hwm = assign_identity_values(
-                    need, name, next_identity_base(spec), int(spec["step"])
-                )
-                result = keep.unionByName(need).select(*keep_cols)
-                if hwm is not None:
-                    new_specs[name] = {**spec, "high_water_mark": hwm}
-                    changed = True
-            if changed:
-                id_schema_meta = with_identity_metadata(
-                    schema,
-                    {
-                        n: {
-                            "start": s["start"],
-                            "step": s["step"],
-                            "allow_explicit": s["allow_explicit"],
-                            "high_water_mark": s.get("high_water_mark"),
-                        }
-                        for n, s in new_specs.items()
-                    },
+    def _resolve_assignments(self, columns: list[str]) -> None:
+        for cl in self._matched + self._not_matched + self._not_matched_by_source:
+            if cl.assignments:
+                cl.assignments = resolve_assignment_keys(
+                    cl.assignments, columns, f"MERGE {cl.kind} clause"
                 )
 
-        if lineage is not None:
-            from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
+    def _mark_source(self, cached: DataFrame) -> DataFrame:
+        """The source side of the merge joins: ``cached`` plus ``__src__``,
+        NOT NULL exactly on joined rows that have a source side. Star
+        clauses read their values from it, so for them it is the struct
+        of the source row — ``self.source["*"]`` resolves against the
+        source plan, so a column name the target shares is never
+        ambiguous; otherwise it is TRUE. Added after the cache, so the
+        persisted source holds the source columns only."""
+        if any(cl.star for cl in self._matched + self._not_matched):
+            return cached.withColumn("__src__", F.struct(self.source["*"]))
+        return cached.withColumn("__src__", F.lit(True))
 
-            result = result.withColumn(LIN_RID, F.lit(None).cast("long")).withColumn(
-                LIN_RCV, F.lit(None).cast("long")
-            )
-
-        cdc_actions: list[dict[str, Any]] = []
-        try:
-            adds = t._write_rewrite_files(
-                snap,
-                enforce_check_constraints(
-                    apply_generated_columns(result, schema), snap.configuration
-                ),
-                lineage=lineage,
-                logical_schema=schema if schema_evolved else None,
-            )
-            if t.is_cdf_enabled(snap):
-                change_df = staged.select(
-                    *[_ins_col(f) for f in schema.fields]
-                ).withColumn("_change_type", F.lit("insert"))
-                cdc_actions = t._write_cdf_files(
-                    change_df, snap,
-                    logical_schema=schema if schema_evolved else None,
-                )
-        finally:
-            src.unpersist()
-
-        def _obs(ob: Observation, keys: list[str]) -> dict[str, int]:
-            try:
-                got = ob.get
-                return {k: int(got.get(k) or 0) for k in keys}
-            except Exception:
-                return {k: 0 for k in keys}
-
-        inserted = _obs(obs, ["inserted"])["inserted"]
-        num_source_rows = (
-            eager_source_rows
-            if eager_source_rows is not None
-            else _obs(src_obs, ["numSourceRows"])["numSourceRows"]
-        )
-        actions: list[dict[str, Any]] = list(lineage_actions)
-        if type_widened:
-            from jodie_spark.tables.table import _legacy_implied_features
-
-            proto = dict(snap.protocol or {})
-            _, impl_r = _legacy_implied_features(proto, snap.configuration)
-            rfeat = set(proto.get("readerFeatures") or []) | impl_r
-            upgrade = t._writer_feature_upgrade_actions(snap, {"typeWidening"})
-            if upgrade:
-                up = upgrade[0]["protocol"]
-            else:
-                up = dict(proto)
-                upgrade = [{"protocol": up}]
-            up["minReaderVersion"] = 3
-            up["readerFeatures"] = sorted(rfeat | {"typeWidening"})
-            if up != snap.protocol:
-                actions = upgrade + actions
-        if schema_evolved or id_schema_meta is not None:
-            meta = dict(snap.metadata)
-            meta["schemaString"] = (
-                id_schema_meta.json()
-                if id_schema_meta is not None
-                else json.dumps(schema.jsonValue())
-            )
-            if evolved_conf:
-                conf = dict(meta.get("configuration") or {})
-                conf.update(evolved_conf)
-                meta["configuration"] = conf
-            actions.append({"metaData": meta})
-        actions += list(cdc_actions)
-        actions += [{"add": a} for a in adds]
-        metrics = {
-            "numSourceRows": str(num_source_rows),
-            "numTargetRowsInserted": str(inserted),
-            "numTargetRowsUpdated": "0",
-            "numTargetRowsDeleted": "0",
-            "numTargetRowsCopied": "0",
-            "numOutputRows": str(inserted),
-            "numTargetFilesAdded": str(len(adds)),
-            "numTargetFilesRemoved": "0",
-            "numTargetChangeFilesAdded": str(len(cdc_actions)),
-            "executionTimeMs": str(int((time.time() - t0) * 1000)),
-            "scanTimeMs": "0",
-            "rewriteTimeMs": str(int((time.time() - t0) * 1000)),
-        }
-        params = {
-            "predicate": self.condition,
-            "matchedPredicates": json.dumps([]),
-            "notMatchedPredicates": json.dumps(
-                [
-                    {"predicate": c.condition, "actionType": c.kind}
-                    if c.condition
-                    else {"actionType": c.kind}
-                    for c in self._not_matched
-                ]
-            ),
-            "notMatchedBySourcePredicates": json.dumps(
-                [
-                    {"predicate": c.condition, "actionType": c.kind}
-                    if c.condition
-                    else {"actionType": c.kind}
-                    for c in self._not_matched_by_source
-                ]
-            ),
-        }
-        from jodie_spark.tables.pruning import make_read_checker
-
-        t.deltaLog.commit(
-            snap.version,
-            actions,
-            "MERGE",
-            params,
-            metrics,
-            # the anti-join READ the stats-pruned candidate set: the
-            # target-only conjuncts of the merge condition are exactly
-            # the predicate that selected it (same recomputation the
-            # planner used — no by-source clauses on this path)
-            read_check=make_read_checker(
-                t._planning_condition(
-                    snap,
-                    self._target_only_condition(
-                        talias, [f.name for f in schema.fields]
-                    ),
-                ),
-                schema,
-                snap.partition_columns,
-            ),
-        )
-        from jodie_spark.tables.table import maybe_auto_compact
-
-        maybe_auto_compact(t, config=snap.configuration)
-
-    def _stage_actions(self, joined: DataFrame) -> DataFrame:
+    def _stage_actions(
+        self, joined: DataFrame, hidden: dict[str, Column], has_target: bool = True
+    ) -> DataFrame:
         """Attach first-matching-clause indexes and the per-row action
         ('update'/'delete'/'copy'/'insert'/'drop') — the clause-order
-        resolution both the copy-on-write and merge-on-read paths share.
+        resolution every merge path shares — plus the ``hidden`` columns
+        of :meth:`_lower`. ``has_target=False`` stages the insert-only
+        anti join, whose rows have no target side.
 
-        Built as single SQL CASE expressions instead of nested F.when
-        chains: clause conditions are already SQL strings, and the
-        Column-chain construction cost one py4j round-trip per node —
-        hundreds of driver-blocking socket hops per merge, paid per
-        micro-batch on the streaming sinks."""
-        is_t = "__t_exists__ IS NOT NULL"
-        is_s = "__s_exists__ IS NOT NULL"
+        Built as single SQL CASE expressions: clause conditions are
+        already SQL strings, and Column-chain construction cost one py4j
+        round trip per node — paid per micro-batch on the streaming
+        sinks."""
+        is_t = "__t_exists__ IS NOT NULL" if has_target else "FALSE"
+        is_s = "__src__ IS NOT NULL"
 
         def _idx_sql(clauses: list[_Clause], base: str) -> str:
             # first matching clause wins: CASE evaluates in clause order
             whens = "".join(
-                f" WHEN ({base}) AND ({cl.condition or 'TRUE'}) THEN {k}"
+                f" WHEN ({base}) AND {_frag(cl.condition) if cl.condition else 'TRUE'}"
+                f" THEN {k}"
                 for k, cl in enumerate(clauses)
             )
             return f"CASE{whens} ELSE -1 END" if whens else "-1"
 
-        m_sql = _idx_sql(self._matched, f"({is_t}) AND ({is_s})")
-        i_sql = _idx_sql(self._not_matched, f"({is_s}) AND NOT ({is_t})")
-        b_sql = _idx_sql(self._not_matched_by_source, f"({is_t}) AND NOT ({is_s})")
+        def _in(col: str, clauses: list[_Clause], kind: str) -> str:
+            idxs = [str(k) for k, cl in enumerate(clauses) if cl.kind == kind]
+            return f"{col} IN ({', '.join(idxs)})" if idxs else "FALSE"
 
-        def _in(col: str, idxs: set[int]) -> str:
-            if not idxs:
-                return "FALSE"
-            return f"{col} IN ({', '.join(str(k) for k in sorted(idxs))})"
-
-        delete_idx = {k for k, cl in enumerate(self._matched) if cl.kind == "delete"}
-        update_idx = {k for k, cl in enumerate(self._matched) if cl.kind == "update"}
-        bs_delete = {
-            k for k, cl in enumerate(self._not_matched_by_source) if cl.kind == "delete"
-        }
-        bs_update = {
-            k for k, cl in enumerate(self._not_matched_by_source) if cl.kind == "update"
-        }
+        m, b = self._matched, self._not_matched_by_source
         action_sql = (
             "CASE"
-            f" WHEN ({is_t}) AND ({is_s}) AND {_in('__m_idx__', delete_idx)}"
+            f" WHEN ({is_t}) AND ({is_s}) AND {_in('__m_idx__', m, 'delete')}"
             " THEN 'delete'"
-            f" WHEN ({is_t}) AND ({is_s}) AND {_in('__m_idx__', update_idx)}"
+            f" WHEN ({is_t}) AND ({is_s}) AND {_in('__m_idx__', m, 'update')}"
             " THEN 'update'"
-            f" WHEN ({is_t}) AND NOT ({is_s}) AND {_in('__b_idx__', bs_delete)}"
+            f" WHEN ({is_t}) AND NOT ({is_s}) AND {_in('__b_idx__', b, 'delete')}"
             " THEN 'delete'"
-            f" WHEN ({is_t}) AND NOT ({is_s}) AND {_in('__b_idx__', bs_update)}"
+            f" WHEN ({is_t}) AND NOT ({is_s}) AND {_in('__b_idx__', b, 'update')}"
             " THEN 'update'"
             f" WHEN {is_t} THEN 'copy'"
             f" WHEN ({is_s}) AND (__i_idx__ >= 0) THEN 'insert'"
@@ -721,160 +603,93 @@ class DeltaMergeBuilder:
         )
         return joined.withColumns(
             {
-                "__m_idx__": F.expr(m_sql),
-                "__i_idx__": F.expr(i_sql),
-                "__b_idx__": F.expr(b_sql),
+                "__m_idx__": F.expr(_idx_sql(m, f"({is_t}) AND ({is_s})")),
+                "__i_idx__": F.expr(
+                    _idx_sql(self._not_matched, f"({is_s}) AND NOT ({is_t})")
+                ),
+                "__b_idx__": F.expr(_idx_sql(b, f"({is_t}) AND NOT ({is_s})")),
             }
-        ).withColumn("__action__", F.expr(action_sql))
+        ).withColumns({"__action__": F.expr(action_sql), **hidden})
 
-    def _out_col_factory(self, talias: str):
-        """Column builder applying the first matching clause's
-        assignments (clause-order semantics) to one output field.
+    def _lower(
+        self, schema, talias: str, has_target: bool = True
+    ) -> tuple[dict[str, Column], list[str]]:
+        """The merge's one lowering: SQL text selecting every output
+        field as ``CAST(CASE … END AS <ddl>) AS <name>``, applying the
+        first matching clause's assignment (the branch conditions are
+        mutually exclusive — ``__m_idx__``/``__b_idx__``/``__i_idx__``
+        pin the clause — so WHEN order is free). Rows no branch covers
+        keep the target value: copies, updates that do not assign the
+        field, and inserts (whose target side is NULL).
 
-        Per-clause branch conditions are built ONCE here and shared by
-        every output field: each Column node costs a py4j round trip,
-        and rebuilding `action == 'update' AND __m_idx__ == k` per field
-        multiplied that driver latency by the column count — paid per
-        micro-batch on the streaming merge sinks."""
-        src_fields = {f.name: f for f in self.source.schema.fields}
-        # per-clause branch conditions for the Column fallback path,
-        # built lazily (the SQL fast path never needs them) and cached
-        # so every fallback field shares the same Column objects
-        _cond_cache: dict[tuple[str, int], Column] = {}
+        Star clauses read the source row's fields from ``__src__`` (see
+        :meth:`_mark_source`). A Column-object assignment travels in a
+        ``hidden`` column, added next to ``__action__`` by
+        :meth:`_stage_actions`, as ``if(<its branch>, <Column>, NULL)``:
+        it is evaluated only on its own clause's rows (under ANSI mode
+        it may raise on others).
 
-        def _cond(kind: str, k: int) -> Column:
-            key = (kind, k)
-            c = _cond_cache.get(key)
-            if c is None:
-                if kind == "m":
-                    c = F.expr(f"__action__ = 'update' AND __m_idx__ = {k}")
-                elif kind == "bs":
-                    c = F.expr(
-                        "__action__ = 'update' AND __m_idx__ = -1"
-                        f" AND __b_idx__ = {k}"
+        The output text therefore depends only on the clauses and the
+        target schema."""
+        hidden: dict[str, Column] = {}
+        src_types: dict[str, Any] = {}
+        if any(cl.star for cl in self._matched + self._not_matched):
+            # updateAll/insertAll expand over the SOURCE columns
+            # (delta-spark star semantics): a target column absent from
+            # the source keeps its target value on update and inserts
+            # NULL — the shape a schema-evolution merge relies on
+            src_types = {f.name: f.dataType for f in self.source.schema.fields}
+        clauses = (
+            [
+                (f"__m_idx__ = {k}", cl)
+                for k, cl in enumerate(self._matched)
+                if cl.kind == "update"
+            ]
+            + [
+                # by-source assignments reference target columns only
+                # (no source row exists)
+                (f"__b_idx__ = {k}", cl)
+                for k, cl in enumerate(self._not_matched_by_source)
+                if cl.kind == "update"
+            ]
+            + [(f"__i_idx__ = {k}", cl) for k, cl in enumerate(self._not_matched)]
+        )
+        fields = []
+        for fld in schema.fields:
+            q = quote_ident(fld.name)
+            ddl = type_ddl(fld.dataType)
+            whens = []
+            for branch, cl in clauses:
+                if cl.star:
+                    if fld.name not in src_types:
+                        continue
+                    # structs align by FIELD NAME, recursively — never
+                    # through Spark's positional struct cast
+                    val = _align_sql(
+                        f"__src__.{q}", src_types[fld.name], fld.dataType
                     )
-                else:
-                    c = F.expr(f"__action__ = 'insert' AND __i_idx__ = {k}")
-                _cond_cache[key] = c
-            return c
-
-        def _assignment(cl: _Clause, name: str, dtype) -> Column:
-            if cl.star:
-                # updateAll/insertAll expand over the SOURCE columns
-                # (delta-spark star semantics): a target column absent
-                # from the source keeps its target value on update and
-                # inserts NULL — the shape a schema-evolution merge
-                # relies on, and what Delta's UPDATE/INSERT * expansion
-                # does even without evolution.
-                sf = src_fields.get(name)
-                if sf is None:
-                    if cl.kind == "update":
-                        return _qcol(talias, name)
-                    return F.lit(None).cast(dtype)
-                # structs align by FIELD NAME, recursively — a source
-                # struct with reordered or missing nested fields must
-                # not be squeezed through Spark's positional struct cast
-                return _align_by_name(self.source[name], sf.dataType, dtype)
-            if name in cl.assignments:
-                v = cl.assignments[name]
-                col = v if isinstance(v, Column) else F.expr(str(v))
-                return col.cast(dtype)
-            if cl.kind == "update":
-                return _qcol(talias, name)
-            return F.lit(None).cast(dtype)  # insert: unassigned columns → NULL
-
-        def _sql_assignment(cl: _Clause, name: str, ddl: str) -> str | None:
-            """SQL-text equivalent of ``_assignment`` when the clause is
-            expressible as text; None forces the Column fallback (star
-            clauses need by-name struct alignment against the source
-            DataFrame, and Column-object assignments cannot stringify)."""
-            if cl.star:
-                return None
-            q = f"`{name.replace('`', '``')}`"
-            if name in cl.assignments:
-                v = cl.assignments[name]
-                if isinstance(v, Column):
-                    return None
-                return f"CAST(({v}) AS {ddl})"
-            if cl.kind == "update":
-                return f"{talias}.{q}"
-            return f"CAST(NULL AS {ddl})"  # insert: unassigned columns → NULL
-
-        def _out_col(fld) -> Column:
-            # fast path: one CASE expression as SQL text — the nested
-            # F.when chain cost ~10 py4j round trips per clause per
-            # field; the text form is 3 per field. Same clause-order
-            # semantics: the branch conditions are mutually exclusive
-            # (__m_idx__/__i_idx__/__b_idx__ pin the clause), so WHEN
-            # order is free.
-            ddl = fld.dataType.simpleString()
-            branches: list[str] | None = []
-            for k, cl in enumerate(self._matched):
-                if cl.kind == "update":
-                    a = _sql_assignment(cl, fld.name, ddl)
-                    if a is None:
-                        branches = None
-                        break
-                    branches.append(
-                        f"WHEN __action__ = 'update' AND __m_idx__ = {k} THEN {a}"
-                    )
-            if branches is not None:
-                for k, cl in enumerate(self._not_matched_by_source):
-                    # by-source rows have __m_idx__ == -1, so these
-                    # branches never collide with the matched-update
-                    # ones; assignments reference target columns only
-                    if cl.kind == "update":
-                        a = _sql_assignment(cl, fld.name, ddl)
-                        if a is None:
-                            branches = None
-                            break
-                        branches.append(
-                            "WHEN __action__ = 'update' AND __m_idx__ = -1"
-                            f" AND __b_idx__ = {k} THEN {a}"
+                elif fld.name in cl.assignments:
+                    v = cl.assignments[fld.name]
+                    if isinstance(v, Column):
+                        h = f"__col{len(hidden)}__"
+                        hidden[h] = F.call_function(
+                            "if", F.expr(branch), v, F.lit(None)
                         )
-            if branches is not None:
-                for k, cl in enumerate(self._not_matched):
-                    a = _sql_assignment(cl, fld.name, ddl)
-                    if a is None:
-                        branches = None
-                        break
-                    branches.append(
-                        f"WHEN __action__ = 'insert' AND __i_idx__ = {k} THEN {a}"
-                    )
-            if branches is not None:
-                q = f"`{fld.name.replace('`', '``')}`"
-                base = f"{talias}.{q}"
-                sql = (
-                    f"CASE {' '.join(branches)} ELSE {base} END"
-                    if branches
-                    else base
-                )
-                return F.expr(sql).cast(fld.dataType).alias(fld.name)
+                        v = h
+                    else:
+                        v = _frag(v)
+                    val = f"CAST({v} AS {ddl})"
+                else:
+                    continue
+                whens.append(f" WHEN {branch} THEN {val}")
+            keep = f"{talias}.{q}" if has_target else "NULL"
+            case = f"CASE{''.join(whens)} ELSE {keep} END" if whens else keep
+            fields.append(f"CAST({case} AS {ddl}) AS {q}")
+        return hidden, fields
 
-            expr: Column = _qcol(talias, fld.name)
-            for k, cl in enumerate(self._matched):
-                if cl.kind == "update":
-                    expr = F.when(
-                        _cond('m', k), _assignment(cl, fld.name, fld.dataType)
-                    ).otherwise(expr)
-            for k, cl in enumerate(self._not_matched_by_source):
-                # by-source rows have __m_idx__ == -1, so these whens
-                # never collide with the matched-update ones above;
-                # assignments reference target columns only (no source
-                # row exists) and unassigned columns keep target values
-                if cl.kind == "update":
-                    expr = F.when(
-                        _cond('bs', k), _assignment(cl, fld.name, fld.dataType)
-                    ).otherwise(expr)
-            for k, cl in enumerate(self._not_matched):
-                expr = F.when(
-                    _cond('i', k), _assignment(cl, fld.name, fld.dataType)
-                ).otherwise(expr)
-            return expr.cast(fld.dataType).alias(fld.name)
-
-        return _out_col
-
-    def _execute_mor(self, allow_multiple_matches: bool, t0: float) -> None:
+    def _execute_mor(
+        self, allow_multiple_matches: bool, t0: float, snap, schema
+    ) -> None:
         """Merge-on-read MERGE: matched update/delete rows are marked in
         roaring-bitmap deletion vectors on their files; only the updated
         outputs and the not-matched inserts are written as new files.
@@ -891,15 +706,13 @@ class DeltaMergeBuilder:
             enforce_check_constraints,
             plan_candidate_files,
         )
-        from jodie_spark.tables.writer import write_metrics
 
         t = self.table
         spark = t.spark
-        snap = t.deltaLog.table_info()
-        schema = t.schema(snap)
         talias = t._alias or "target"
         out_cols = [f.name for f in schema.fields]
 
+        t_scan = time.time()
         prune_cond = self._target_only_condition(talias, out_cols)
         candidates = plan_candidate_files(
             spark,
@@ -908,10 +721,14 @@ class DeltaMergeBuilder:
             schema,
             snap.partition_columns,
         )
+        t_rewrite = time.time()
 
         lineage, lineage_actions = t._lineage_setup(snap, candidates)
-        src = self.source.withColumn("__s_exists__", F.lit(True))
-        src = src.persist()
+        src_obs = Observation()
+        cached = self.source.observe(
+            src_obs, F.expr("count(1) AS numSourceRows")
+        ).persist()
+        src = self._mark_source(cached)
         staged = None
         try:
             if candidates and lineage is not None:
@@ -952,7 +769,8 @@ class DeltaMergeBuilder:
                         .alias(talias)
                     )
             joined = tgt.join(src, F.expr(self.condition), "full_outer")
-            staged = self._stage_actions(joined).persist()
+            hidden, fields = self._lower(schema, talias)
+            staged = self._stage_actions(joined, hidden).persist()
 
             # multiple-match guard on the (file, row_index) identity —
             # same delete-only exemption as MergeIntoCommand
@@ -969,7 +787,7 @@ class DeltaMergeBuilder:
             }
             if not multi_ok:
                 mx = (
-                    staged.filter(F.col("__action__").isin("update", "delete"))
+                    staged.filter("__action__ IN ('update', 'delete')")
                     .groupBy("__fp__", "__ri__")
                     .agg(F.count(F.lit(1)).alias("n"))
                     .agg(F.max("n"))
@@ -986,11 +804,10 @@ class DeltaMergeBuilder:
                     )
 
             dv_marks = staged.filter(
-                F.col("__action__").isin("update", "delete") & F.col("__fp__").isNotNull()
+                "__action__ IN ('update', 'delete') AND __fp__ IS NOT NULL"
             ).select("__fp__", "__ri__").distinct()
             rows = t._write_dvs_for(dv_marks, candidates) if candidates else []
 
-            _out_col = self._out_col_factory(talias)
             # row tracking: updated rows keep their id, inserts get
             # fresh ids (NULL materialized value + fresh baseRowId);
             # every emitted row carries this commit's version (NULL
@@ -998,16 +815,16 @@ class DeltaMergeBuilder:
             lineage_out = []
             stat_exclude = None
             if lineage is not None:
-                from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
+                from jodie_spark.tables.row_lineage import LIN_RID
 
                 lineage_out = [
-                    F.col(LIN_RID).alias(lineage[0]),
-                    F.lit(None).cast("long").alias(lineage[1]),
+                    f"{LIN_RID} AS {quote_ident(lineage[0])}",
+                    f"CAST(NULL AS BIGINT) AS {quote_ident(lineage[1])}",
                 ]
                 stat_exclude = set(lineage)
-            emitted = staged.filter(
-                F.col("__action__").isin("update", "insert")
-            ).select(*[_out_col(f) for f in schema.fields], *lineage_out)
+            emitted = staged.filter("__action__ IN ('update', 'insert')").selectExpr(
+                *fields, *lineage_out
+            )
             adds = write_data_files(
                 enforce_check_constraints(
                     apply_generated_columns(emitted, schema), snap.configuration
@@ -1018,10 +835,9 @@ class DeltaMergeBuilder:
                 table_config=snap.configuration,
             )
 
-            inserted = int(action_counts.get("insert", 0))
-            n_src = src.count()
         finally:
-            src.unpersist()
+            cached.unpersist()
+        rewrite_ms = int((time.time() - t_rewrite) * 1000)
 
         actions = t._dv_protocol_upgrade_actions(snap) if rows else []
         actions = lineage_actions + actions
@@ -1030,13 +846,13 @@ class DeltaMergeBuilder:
         )
         actions += pair_actions
         actions += [{"add": a} for a in adds]
-        updated = int(action_counts.get("update", 0))
-        deleted = int(action_counts.get("delete", 0))
         metrics = {
-            "numTargetRowsUpdated": str(updated),
-            "numTargetRowsDeleted": str(deleted),
-            "numTargetRowsInserted": str(inserted),
-            "numSourceRows": str(n_src),
+            "numTargetRowsUpdated": str(action_counts.get("update", 0)),
+            "numTargetRowsDeleted": str(action_counts.get("delete", 0)),
+            "numTargetRowsInserted": str(action_counts.get("insert", 0)),
+            "numSourceRows": str(
+                _observed(src_obs, ["numSourceRows"])["numSourceRows"]
+            ),
             "numTargetRowsCopied": "0",
             "numTargetFilesRemoved": "0",
             "numTargetFilesAdded": str(len(adds)),
@@ -1045,6 +861,8 @@ class DeltaMergeBuilder:
                 dv_bytes + sum(int(a.get("size") or 0) for a in adds)
             ),
             "executionTimeMs": str(int((time.time() - t0) * 1000)),
+            "scanTimeMs": str(int((t_rewrite - t_scan) * 1000)),
+            "rewriteTimeMs": str(rewrite_ms),
         }
         if staged is not None:
             staged.unpersist()
@@ -1069,7 +887,8 @@ class DeltaMergeBuilder:
         self, allow_multiple_matches: bool = False, deletion_vectors: bool = False
     ) -> None:
         from jodie_spark.tables.table import (
-            map_touched_paths,
+            apply_generated_columns,
+            enforce_check_constraints,
             plan_candidate_files,
             read_files_df,
         )
@@ -1088,19 +907,7 @@ class DeltaMergeBuilder:
         if mapped:
             deletion_vectors = False  # DV coordinate scan is physical-name; CoW instead
         schema = t.schema(snap)
-        id_generate = self._check_identity_clauses(
-            schema, cdf_enabled=t.is_cdf_enabled(snap)
-        )
-        if (
-            deletion_vectors
-            and self._matched
-            and not self._not_matched_by_source
-            and not self._schema_evolution
-            and not t.is_cdf_enabled(snap)
-            and not id_generate  # generated inserts need the CoW path
-        ):
-            self._execute_mor(allow_multiple_matches, t0)
-            return
+        cdf = t.is_cdf_enabled(snap)
         schema_evolved = False
         evolved_conf: dict[str, str] | None = None
         type_widened = False
@@ -1156,8 +963,20 @@ class DeltaMergeBuilder:
                     )
                     evolved_conf = {MAX_ID_PROP: str(new_max)}
                 schema_evolved = True
-        talias = t._alias or "target"
         out_cols = [f.name for f in schema.fields]
+        self._resolve_assignments(out_cols)
+        id_generate = self._check_identity_clauses(schema, cdf_enabled=cdf)
+        if (
+            deletion_vectors
+            and self._matched
+            and not self._not_matched_by_source
+            and not self._schema_evolution
+            and not cdf
+            and not id_generate  # generated inserts need the CoW path
+        ):
+            self._execute_mor(allow_multiple_matches, t0, snap, schema)
+            return
+        talias = t._alias or "target"
 
         # mode=id target scans run through the field-id CHILD session
         # (read_files_df), and Spark fires observation metrics on the
@@ -1173,288 +992,146 @@ class DeltaMergeBuilder:
 
         mode_id = mapped and column_mapping_mode(snap.metadata) == "id"
         src_obs = Observation()
-        src = self.source.withColumn("__s_exists__", F.lit(True))
-        if not mode_id:
-            src = src.observe(
-                src_obs, F.count(F.lit(1)).alias("numSourceRows")
-            )
         # the source plan is consumed by both passes (find-touched semi
         # join, then the rewrite join); staged sources like Type2Scd's
         # union-of-joins are expensive to recompute, so persist for the
         # duration of the merge
-        src = src.persist()
-        eager_source_rows = src.count() if mode_id else None
-
-        # -- pass 1: which files contain matched rows? ----------------------
-        # by-source clauses act on UNMATCHED target rows, which live in
-        # files the merge-condition prune would wrongly skip — candidate
-        # planning must see every file then (clause conditions, being
-        # target-only, could prune instead; kept simple and correct)
-        prune_cond = (
-            None
-            if self._not_matched_by_source
-            else self._target_only_condition(talias, out_cols)
-        )
-        candidates = plan_candidate_files(
-            spark,
-            t.path,
-            t._planning_condition(snap, prune_cond),
-            schema,
-            snap.partition_columns,
-        )
-
-        touched: list[dict[str, Any]] = []
-        probe = None
-        raw_touched: set[str] = set()
-        lineage, lineage_actions = t._lineage_setup(snap, candidates)
-        if (
-            not self._matched
-            and not self._not_matched_by_source
-            and self._not_matched
-            and self._insert_only_fastpath_safe(talias)
-        ):
-            # insert-only merge (delta-spark optimizeInsertOnlyMerge):
-            # with no matched clause, NO target file ever needs a
-            # rewrite — matched rows are pure copies. The full-outer
-            # join + touched-file rewrite collapses to a LEFT ANTI join
-            # (source rows with no match) followed by a plain append of
-            # new files: zero removes, write volume ∝ inserted rows
-            # instead of ∝ touched-file bytes. This is the hot shape of
-            # streaming dedup sinks and appendWithoutDuplicates.
-            self._execute_insert_only(
-                t0=t0,
-                snap=snap,
-                schema=schema,
-                talias=talias,
-                src=src,
-                src_obs=src_obs,
-                eager_source_rows=eager_source_rows,
-                candidates=candidates,
-                lineage=lineage,
-                lineage_actions=lineage_actions,
-                schema_evolved=schema_evolved,
-                evolved_conf=evolved_conf,
-                type_widened=type_widened,
-                id_generate=id_generate,
-            )
-            return
-        if candidates and (
-            self._matched or self._not_matched or self._not_matched_by_source
-        ):
-            # the find-touched probe is NOT cached: uncached, Spark's
-            # column pruning reaches the parquet scan, so pass 1 reads
-            # only the merge-key columns of the candidate files, and
-            # pass 2 re-plans a full-column scan over the TOUCHED files
-            # only (MergeIntoCommand's shape). Caching here materialized
-            # every column of every candidate row — at scale that is
-            # executor memory pressure and a wider read; locally the
-            # cache write alone cost more than the re-scan it saved
-            if lineage is not None:
-                probe = (
-                    t._read_candidates(snap, schema, candidates, lineage=lineage)
-                    .withColumnRenamed("__file__", "__path__")
-                )
-            else:
-                probe = (
-                    t._read_candidates(snap, schema, candidates)
-                    .withColumn("__path__", F.input_file_name())
-                )
-            # delta-spark parity: multiple source rows matching one target
-            # row make the merge nondeterministic (and pass 2 would emit
-            # one output row per match — for merges WITHOUT matched
-            # clauses the matched target row is a 'copy' row, so a
-            # multi-match would silently DUPLICATE it in the rewrite).
-            # Delta allows it only when the sole matched clause is an
-            # unconditional DELETE (result is deterministic: the row is
-            # gone either way) — same rule as
-            # MergeIntoCommand.isDeleteWithMultipleMatchesAllowed. The
-            # guard must run whenever touched files will be rewritten,
-            # i.e. whenever this probe branch is taken, not only when
-            # matched clauses exist (by-source-only and slow-path
-            # insert-only merges rewrite copies too).
-            multi_ok = allow_multiple_matches or (
-                len(self._matched) == 1
-                and self._matched[0].kind == "delete"
-                and self._matched[0].condition is None
-            )
-            if not multi_ok:
-                # same shape as MergeIntoCommand.findTouchedFiles — an
-                # inner join with a per-target-row count; both groupBys
-                # partial-aggregate map-side, so the shuffle carries
-                # (t_id, path) pairs, never data columns
-                per_path = (
-                    probe.withColumn("__t_id__", F.monotonically_increasing_id())
-                    .alias(talias)
-                    .join(src, F.expr(self.condition), "inner")
-                    .groupBy("__t_id__", "__path__")
-                    .agg(F.count(F.lit(1)).alias("__n__"))
-                    .groupBy("__path__")
-                    .agg(F.max("__n__").alias("__mx__"))
-                    .collect()
-                )
-                raw_touched = {r["__path__"] for r in per_path}
-                if any(r["__mx__"] > 1 for r in per_path):
-                    from jodie_spark.errors import MergeMultipleMatchesError
-
-                    src.unpersist()
-                    raise MergeMultipleMatchesError(
-                        "MERGE: one target row matched multiple source rows "
-                        "while its file must be rewritten; the result would "
-                        "be nondeterministic (or would duplicate the copied "
-                        "target row). Deduplicate the source on the merge "
-                        "key, or pass allow_multiple_matches=True."
-                    )
-            else:
-                raw_touched = {
-                    r[0]
-                    for r in probe.alias(talias)
-                    .join(src, F.expr(self.condition), "left_semi")
-                    .select("__path__")
-                    .distinct()
-                    .collect()
-                }
-            if self._not_matched_by_source:
-                # files holding UNMATCHED target rows that satisfy some
-                # by-source clause condition must also rewrite — an
-                # anti join against the source, filtered by the OR of
-                # the clause conditions; shuffles (row, path) of the
-                # probe only, like the semi join above
-                bs_cond = None
-                for cl in self._not_matched_by_source:
-                    c = F.expr(cl.condition) if cl.condition else F.lit(True)
-                    bs_cond = c if bs_cond is None else (bs_cond | c)
-                raw_touched |= {
-                    r[0]
-                    for r in probe.alias(talias)
-                    .join(src, F.expr(self.condition), "left_anti")
-                    .filter(bs_cond)
-                    .select("__path__")
-                    .distinct()
-                    .collect()
-                }
-            # raises on any URI that fails to map back to a candidate add —
-            # a partial/empty touched set here would re-insert matched
-            # source rows as duplicates against an empty rewrite target
-            touched = map_touched_paths(t.path, candidates, raw_touched)
-
-        # -- pass 2: rewrite touched files + insert unmatched source rows ----
-        if probe is not None and touched:
-            # fresh scan over ONLY the touched adds — full columns, but
-            # a file-list-level prune instead of an input_file_name
-            # filter over every candidate
-            tgt = t._read_candidates(snap, schema, touched, lineage=lineage)
-            if lineage is not None:
-                tgt = tgt.drop("__file__")
-            tgt = tgt.withColumn("__t_exists__", F.lit(True)).alias(talias)
-        else:
-            tgt = (
-                read_files_df(spark, t.path, schema, [])
-                .withColumn("__t_exists__", F.lit(True))
-                .alias(talias)
-            )
-            if lineage is not None:
-                from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
-
-                tgt = tgt.withColumn(LIN_RID, F.lit(None).cast("long")).withColumn(
-                    LIN_RCV, F.lit(None).cast("long")
-                )
-        joined = tgt.join(src, F.expr(self.condition), "full_outer")
-
-        obs = Observation()
-        staged = self._stage_actions(joined)
-        staged = staged.observe(
-            obs,
-            *[
-                F.expr(
-                    f"sum(CASE WHEN __action__ = '{a}' THEN 1 ELSE 0 END)"
-                ).alias(label)
-                for a, label in (
-                    ("update", "updated"),
-                    ("delete", "deleted"),
-                    ("copy", "copied"),
-                    ("insert", "inserted"),
-                )
-            ],
-        )
+        cached = (
+            self.source.select("*")
+            if mode_id
+            else self.source.observe(src_obs, F.expr("count(1) AS numSourceRows"))
+        ).persist()
+        src = self._mark_source(cached)
         staged_cached = False
-        if t.is_cdf_enabled(snap):
-            # CDF re-consumes `staged` four more times (delete/pre/post/
-            # insert change legs); without a cache each leg would re-run
-            # the full-outer join. Non-CDF merges evaluate it once — no
-            # cache, no memory pressure
-            staged = staged.persist()
-            staged_cached = True
+        try:
+            eager_source_rows = cached.count() if mode_id else None
 
-        _out_col = self._out_col_factory(talias)
-        # row tracking: copied+updated rows keep their id (insert rows
-        # joined from the source side carry NULL → fresh ids via the
-        # add's baseRowId); only copied rows keep their commit version
-        lineage_out = []
-        if lineage is not None:
-            from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
-
-            lineage_out = [
-                F.col(LIN_RID).alias(LIN_RID),
-                F.when(F.col("__action__") == "copy", F.col(LIN_RCV))
-                .otherwise(F.lit(None).cast("long"))
-                .alias(LIN_RCV),
-            ]
-        result = staged.filter(F.col("__action__").isin("update", "copy", "insert")).select(
-            *[_out_col(f) for f in schema.fields], *lineage_out
-        )
-
-        # in-merge identity generation: insert-output rows land with a
-        # NULL identity column (no clause provided it) — assign fresh
-        # values from the watermark, exactly the append-path arithmetic;
-        # carried target rows always have values (ALWAYS semantics), so
-        # the null-split touches inserts only
-        id_schema_meta = None
-        if id_generate:
-            from jodie_spark.tables.identity import (
-                assign_identity_values,
-                identity_columns_of,
-                next_identity_base,
-                with_identity_metadata,
+            # -- pass 1: which files contain matched rows? ------------------
+            # by-source clauses act on UNMATCHED target rows, which live
+            # in files the merge-condition prune would wrongly skip —
+            # candidate planning must see every file then (clause
+            # conditions, being target-only, could prune instead; kept
+            # simple and correct)
+            t_scan = time.time()
+            prune_cond = (
+                None
+                if self._not_matched_by_source
+                else self._target_only_condition(talias, out_cols)
+            )
+            candidates = plan_candidate_files(
+                spark,
+                t.path,
+                t._planning_condition(snap, prune_cond),
+                schema,
+                snap.partition_columns,
             )
 
-            new_specs = dict(identity_columns_of(schema))
-            changed = False
-            keep_cols = [f.name for f in schema.fields]
+            touched: list[dict[str, Any]] = []
+            lineage, lineage_actions = t._lineage_setup(snap, candidates)
+            insert_only = (
+                not self._matched
+                and not self._not_matched_by_source
+                and self._not_matched
+                and self._insert_only_fastpath_safe(talias)
+            )
+            if insert_only:
+                # insert-only merge (delta-spark optimizeInsertOnlyMerge):
+                # with no matched clause, NO target file ever needs a
+                # rewrite — matched rows are pure copies. The full-outer
+                # join + touched-file rewrite collapses to a LEFT ANTI join
+                # of the source against the stats-pruned candidate scan
+                # (Catalyst prunes it to the condition's columns) followed
+                # by a plain append of new files: zero removes, write volume
+                # ∝ inserted rows instead of ∝ touched-file bytes. This is
+                # the hot shape of streaming dedup sinks and
+                # appendWithoutDuplicates.
+                if candidates:
+                    tgt = t._read_candidates(snap, schema, candidates).alias(talias)
+                else:
+                    tgt = read_files_df(spark, t.path, schema, []).alias(talias)
+                joined = src.join(tgt, F.expr(self.condition), "left_anti")
+            else:
+                if candidates and (
+                    self._matched or self._not_matched or self._not_matched_by_source
+                ):
+                    touched = self._find_touched(
+                        snap, schema, talias, src, candidates, lineage,
+                        allow_multiple_matches,
+                    )
+                # -- pass 2: rewrite touched files + insert unmatched rows ----
+                if touched:
+                    # fresh scan over ONLY the touched adds — full columns,
+                    # but a file-list-level prune instead of an
+                    # input_file_name filter over every candidate
+                    tgt = t._read_candidates(snap, schema, touched, lineage=lineage)
+                    if lineage is not None:
+                        tgt = tgt.drop("__file__")
+                    tgt = tgt.withColumn("__t_exists__", F.lit(True)).alias(talias)
+                else:
+                    tgt = (
+                        read_files_df(spark, t.path, schema, [])
+                        .withColumn("__t_exists__", F.lit(True))
+                        .alias(talias)
+                    )
+                    if lineage is not None:
+                        from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
+
+                        tgt = tgt.withColumn(
+                            LIN_RID, F.lit(None).cast("long")
+                        ).withColumn(LIN_RCV, F.lit(None).cast("long"))
+                joined = tgt.join(src, F.expr(self.condition), "full_outer")
+            t_rewrite = time.time()
+
+            has_target = not insert_only
+            hidden, fields = self._lower(schema, talias, has_target)
+            obs = Observation()
+            staged = self._stage_actions(joined, hidden, has_target).observe(
+                obs,
+                *[
+                    F.expr(
+                        f"sum(CASE WHEN __action__ = '{a}' THEN 1 ELSE 0 END)"
+                        f" AS {label}"
+                    )
+                    for a, label in _COUNTS
+                ],
+            )
+            # CDF re-consumes `staged` for the delete/pre/post/insert change
+            # legs; without a cache each leg would re-run the full-outer
+            # join. Non-CDF merges evaluate it once — no cache, no memory
+            # pressure
+            staged_cached = cdf and has_target
+            if staged_cached:
+                staged = staged.persist()
+
+            # row tracking: copied+updated rows keep their id (insert rows
+            # joined from the source side carry NULL → fresh ids via the
+            # add's baseRowId); only copied rows keep their commit version
+            lineage_out = []
             if lineage is not None:
                 from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
 
-                keep_cols = keep_cols + [LIN_RID, LIN_RCV]
-            for name, spec in id_generate.items():
-                need = result.filter(F.col(name).isNull()).drop(name)
-                keep = result.filter(F.col(name).isNotNull())
-                need, hwm = assign_identity_values(
-                    need, name, next_identity_base(spec), int(spec["step"])
+                lineage_out = (
+                    [
+                        LIN_RID,
+                        f"CASE WHEN __action__ = 'copy' THEN {LIN_RCV} END"
+                        f" AS {LIN_RCV}",
+                    ]
+                    if has_target
+                    else [f"CAST(NULL AS BIGINT) AS {c}" for c in (LIN_RID, LIN_RCV)]
                 )
-                result = keep.unionByName(need).select(*keep_cols)
-                if hwm is not None:
-                    new_specs[name] = {**spec, "high_water_mark": hwm}
-                    changed = True
-            if changed:
-                id_schema_meta = with_identity_metadata(
-                    schema,
-                    {
-                        n: {
-                            "start": s["start"],
-                            "step": s["step"],
-                            "allow_explicit": s["allow_explicit"],
-                            "high_water_mark": s.get("high_water_mark"),
-                        }
-                        for n, s in new_specs.items()
-                    },
+            result = staged.filter(
+                "__action__ IN ('update', 'copy', 'insert')"
+            ).selectExpr(*fields, *lineage_out)
+            id_schema_meta = None
+            if id_generate:
+                keep_cols = out_cols + (
+                    [LIN_RID, LIN_RCV] if lineage is not None else []
+                )
+                result, id_schema_meta = _assign_identities(
+                    result, schema, id_generate, keep_cols
                 )
 
-        cdc_actions: list[dict[str, Any]] = []
-        try:
-            from jodie_spark.tables.table import (
-                apply_generated_columns,
-                enforce_check_constraints,
-            )
-
+            cdc_actions: list[dict[str, Any]] = []
             adds = t._write_rewrite_files(
                 snap,
                 enforce_check_constraints(
@@ -1463,52 +1140,47 @@ class DeltaMergeBuilder:
                 lineage=lineage,
                 logical_schema=schema if schema_evolved else None,
             )
-            if t.is_cdf_enabled(snap):
+            if cdf:
                 # change rows: pre-images carry the target columns,
                 # post-images the merge output columns — same shapes
                 # Delta's MergeIntoCommand records
-                pre_cols = [
-                    F.col(f"{talias}.{f.name}").cast(f.dataType).alias(f.name)
+                pre = [
+                    f"CAST({talias}.{quote_ident(f.name)} AS {type_ddl(f.dataType)})"
+                    f" AS {quote_ident(f.name)}"
                     for f in schema.fields
                 ]
-                out_cols = [_out_col(f) for f in schema.fields]
-                deletes = staged.filter(F.col("__action__") == "delete").select(
-                    *pre_cols
-                ).withColumn("_change_type", F.lit("delete"))
-                upd_pre = staged.filter(F.col("__action__") == "update").select(
-                    *pre_cols
-                ).withColumn("_change_type", F.lit("update_preimage"))
-                upd_post = staged.filter(F.col("__action__") == "update").select(
-                    *out_cols
-                ).withColumn("_change_type", F.lit("update_postimage"))
-                inserts = staged.filter(F.col("__action__") == "insert").select(
-                    *out_cols
-                ).withColumn("_change_type", F.lit("insert"))
-                change_df = deletes.unionByName(upd_pre).unionByName(upd_post).unionByName(inserts)
+                legs = (
+                    [
+                        ("delete", pre, "delete"),
+                        ("update", pre, "update_preimage"),
+                        ("update", fields, "update_postimage"),
+                    ]
+                    if self._matched or self._not_matched_by_source
+                    else []
+                ) + [("insert", fields, "insert")]
+                change_df = None
+                for action, cols, change in legs:
+                    leg = staged.filter(f"__action__ = '{action}'").selectExpr(
+                        *cols, f"'{change}' AS _change_type"
+                    )
+                    change_df = (
+                        leg if change_df is None else change_df.unionByName(leg)
+                    )
                 cdc_actions = t._write_cdf_files(
                     change_df, snap,
                     logical_schema=schema if schema_evolved else None,
                 )
         finally:
-            src.unpersist()
+            cached.unpersist()
             if staged_cached:
                 staged.unpersist()
+        rewrite_ms = int((time.time() - t_rewrite) * 1000)
 
-        # Catalyst's empty-relation propagation can optimize an observed
-        # subtree away entirely (e.g. empty source); treat a missing
-        # observation as zero counts rather than failing the merge.
-        def _obs(ob: Observation, keys: list[str]) -> dict[str, int]:
-            try:
-                got = ob.get
-                return {k: int(got.get(k) or 0) for k in keys}
-            except Exception:
-                return {k: 0 for k in keys}
-
-        counts = _obs(obs, ["updated", "deleted", "copied", "inserted"])
+        counts = _observed(obs, [label for _, label in _COUNTS])
         num_source_rows = (
             eager_source_rows
             if eager_source_rows is not None
-            else _obs(src_obs, ["numSourceRows"])["numSourceRows"]
+            else _observed(src_obs, ["numSourceRows"])["numSourceRows"]
         )
 
         now_ms = int(time.time() * 1000)
@@ -1573,36 +1245,25 @@ class DeltaMergeBuilder:
             "numTargetFilesRemoved": str(len(touched)),
             "numTargetChangeFilesAdded": str(len(cdc_actions)),
             "executionTimeMs": str(int((time.time() - t0) * 1000)),
-            "scanTimeMs": "0",
-            "rewriteTimeMs": str(int((time.time() - t0) * 1000)),
+            # candidate planning + touched-file probe
+            "scanTimeMs": str(int((t_rewrite - t_scan) * 1000)),
+            # pass 2 and its writes
+            "rewriteTimeMs": str(rewrite_ms),
         }
-        params = {
-            "predicate": self.condition,
-            "matchedPredicates": json.dumps(
+        params = {"predicate": self.condition}
+        for key, clauses in (
+            ("matchedPredicates", self._matched),
+            ("notMatchedPredicates", self._not_matched),
+            ("notMatchedBySourcePredicates", self._not_matched_by_source),
+        ):
+            params[key] = json.dumps(
                 [
                     {"predicate": c.condition, "actionType": c.kind}
                     if c.condition
                     else {"actionType": c.kind}
-                    for c in self._matched
+                    for c in clauses
                 ]
-            ),
-            "notMatchedPredicates": json.dumps(
-                [
-                    {"predicate": c.condition, "actionType": c.kind}
-                    if c.condition
-                    else {"actionType": c.kind}
-                    for c in self._not_matched
-                ]
-            ),
-            "notMatchedBySourcePredicates": json.dumps(
-                [
-                    {"predicate": c.condition, "actionType": c.kind}
-                    if c.condition
-                    else {"actionType": c.kind}
-                    for c in self._not_matched_by_source
-                ]
-            ),
-        }
+            )
         from jodie_spark.tables.pruning import make_read_checker
 
         t.deltaLog.commit(
@@ -1612,7 +1273,8 @@ class DeltaMergeBuilder:
             params,
             metrics,
             # prune_cond selected the candidate files this merge read
-            # (None = whole table, e.g. with by-source clauses)
+            # (None = whole table, e.g. with by-source clauses; the
+            # insert-only anti join read the same stats-pruned set)
             read_check=make_read_checker(
                 t._planning_condition(snap, prune_cond),
                 schema,
@@ -1622,3 +1284,102 @@ class DeltaMergeBuilder:
         from jodie_spark.tables.table import maybe_auto_compact
 
         maybe_auto_compact(t, config=snap.configuration)
+
+    def _find_touched(
+        self, snap, schema, talias, src, candidates, lineage, allow_multiple_matches
+    ) -> list[dict[str, Any]]:
+        """Pass 1: the candidate adds holding at least one row the merge
+        changes. The probe is NOT cached: uncached, Spark's column
+        pruning reaches the parquet scan, so it reads only the merge-key
+        columns of the candidate files, and pass 2 re-plans a
+        full-column scan over the TOUCHED files only (MergeIntoCommand's
+        shape). Caching here materialized every column of every
+        candidate row — at scale that is executor memory pressure and a
+        wider read; locally the cache write alone cost more than the
+        re-scan it saved."""
+        from jodie_spark.tables.table import map_touched_paths
+
+        t = self.table
+        if lineage is not None:
+            probe = t._read_candidates(
+                snap, schema, candidates, lineage=lineage
+            ).withColumnRenamed("__file__", "__path__")
+        else:
+            probe = t._read_candidates(snap, schema, candidates).withColumn(
+                "__path__", F.input_file_name()
+            )
+        # delta-spark parity: multiple source rows matching one target
+        # row make the merge nondeterministic (and pass 2 would emit
+        # one output row per match — for merges WITHOUT matched
+        # clauses the matched target row is a 'copy' row, so a
+        # multi-match would silently DUPLICATE it in the rewrite).
+        # Delta allows it only when the sole matched clause is an
+        # unconditional DELETE (result is deterministic: the row is
+        # gone either way) — same rule as
+        # MergeIntoCommand.isDeleteWithMultipleMatchesAllowed. The
+        # guard must run whenever touched files will be rewritten, not
+        # only when matched clauses exist (by-source-only and slow-path
+        # insert-only merges rewrite copies too).
+        multi_ok = allow_multiple_matches or (
+            len(self._matched) == 1
+            and self._matched[0].kind == "delete"
+            and self._matched[0].condition is None
+        )
+        if not multi_ok:
+            # same shape as MergeIntoCommand.findTouchedFiles — an
+            # inner join with a per-target-row count; both groupBys
+            # partial-aggregate map-side, so the shuffle carries
+            # (t_id, path) pairs, never data columns
+            per_path = (
+                probe.withColumn("__t_id__", F.monotonically_increasing_id())
+                .alias(talias)
+                .join(src, F.expr(self.condition), "inner")
+                .groupBy("__t_id__", "__path__")
+                .agg(F.count(F.lit(1)).alias("__n__"))
+                .groupBy("__path__")
+                .agg(F.max("__n__").alias("__mx__"))
+                .collect()
+            )
+            raw_touched = {r["__path__"] for r in per_path}
+            if any(r["__mx__"] > 1 for r in per_path):
+                from jodie_spark.errors import MergeMultipleMatchesError
+
+                raise MergeMultipleMatchesError(
+                    "MERGE: one target row matched multiple source rows "
+                    "while its file must be rewritten; the result would "
+                    "be nondeterministic (or would duplicate the copied "
+                    "target row). Deduplicate the source on the merge "
+                    "key, or pass allow_multiple_matches=True."
+                )
+        else:
+            raw_touched = {
+                r[0]
+                for r in probe.alias(talias)
+                .join(src, F.expr(self.condition), "left_semi")
+                .select("__path__")
+                .distinct()
+                .collect()
+            }
+        if self._not_matched_by_source:
+            # files holding UNMATCHED target rows that satisfy some
+            # by-source clause condition must also rewrite — an anti
+            # join against the source, filtered by the OR of the clause
+            # conditions; shuffles (row, path) of the probe only, like
+            # the semi join above
+            bs_cond = " OR ".join(
+                _frag(cl.condition) if cl.condition else "TRUE"
+                for cl in self._not_matched_by_source
+            )
+            raw_touched |= {
+                r[0]
+                for r in probe.alias(talias)
+                .join(src, F.expr(self.condition), "left_anti")
+                .filter(bs_cond)
+                .select("__path__")
+                .distinct()
+                .collect()
+            }
+        # raises on any URI that fails to map back to a candidate add —
+        # a partial/empty touched set here would re-insert matched
+        # source rows as duplicates against an empty rewrite target
+        return map_touched_paths(t.path, candidates, raw_touched)

@@ -2315,7 +2315,11 @@ class DeltaTable:
         self.deltaLog.check_write_allowed(snap, removes_data=True)
         schema = self.schema(snap)
         from jodie_spark.tables.identity import identity_columns_of
+        from jodie_spark.tables.merge import resolve_assignment_keys
 
+        set = resolve_assignment_keys(  # noqa: A001
+            set, [f.name for f in schema.fields], "UPDATE"
+        )
         bad = [k for k in set if k in identity_columns_of(schema)]
         if bad:
             raise JodieValidationError(
