@@ -135,7 +135,7 @@ class FileSystem:
                 # entries are EXCLUDED even when size() happens to
                 # succeed on them (ADVICE r12 — a custom adapter whose
                 # size() works on directories would otherwise overcount
-                # in _log_bytes)
+                # in DeltaLog.replay_log_bytes)
                 if not self.isfile(child):
                     continue
                 out.append((name, self.size(child)))

@@ -16,18 +16,13 @@ the file list.
 
 from __future__ import annotations
 
-import os
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from jodie_spark.tables.log import (
-    DeltaLog,
-    checkpoint_file_name,
-    commit_file_name,
-)
+from jodie_spark.tables.log import DeltaLog, commit_file_name
 from jodie_spark.tables.pruning import (
     _coerce,
     _prefix_upper,
@@ -291,77 +286,38 @@ def files_df(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-_CP_ACTIONS_PER_PART = 500_000
-
-
 def write_checkpoint_spark(
     spark: SparkSession, path: str, version: int | None = None
 ) -> int:
     """Distributed checkpoint write: state reconstruction AND parquet
-    encoding run in Spark, so driver memory is bounded at any table
-    size (the driver-side ``pa.Table.from_pylist`` alternative holds
-    every add action in memory at once — minutes and gigabytes at 10⁶
-    files). Add/remove state lands in ``ceil(n/500k)`` Spark-written
-    parts; metaData/protocol ride in one tiny driver-written part.
-    Multi-part naming follows the Delta protocol
-    (``<v>.checkpoint.<i>.<n>.parquet``)."""
-    import shutil
-    import uuid as _uuid
+    encoding run in Spark, so driver memory stays bounded at any table
+    size. ``DeltaLog.write_checkpoint`` picks this writer when a replay
+    would not fit on the driver, or when called with ``spark=<session>``.
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    The add/remove state lands in ``ceil(n/500k)`` Spark-written parts.
+    Classic layout: the parts plus one driver-encoded metaData/protocol/
+    domainMetadata part, under Delta's multi-part naming
+    (``<v>.checkpoint.<i>.<n>.parquet``). V2 layout (the table's
+    checkpoint policy): the parts become sidecars and the small actions
+    go to the manifest. Both publish through
+    ``DeltaLog._publish_checkpoint``, the driver writer's step."""
+    import uuid as _uuid
 
     from jodie_spark.tables.log import (
         _CHECKPOINT_SCHEMA,
-        LAST_CHECKPOINT,
-        multipart_checkpoint_file_name,
+        _CP_ACTIONS_PER_PART,
+        _actions_table,
+        _checkpoint_small_actions,
+        _writes_v2_checkpoints,
     )
-    import json as _json
 
     log = DeltaLog(path)
     target = log.latest_version() if version is None else int(version)
     info = log.table_info(target)
 
-    meta_t = T.StructType(
-        [
-            T.StructField("id", T.StringType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("description", T.StringType()),
-            T.StructField(
-                "format",
-                T.StructType(
-                    [
-                        T.StructField("provider", T.StringType()),
-                        T.StructField("options", T.MapType(T.StringType(), T.StringType())),
-                    ]
-                ),
-            ),
-            T.StructField("schemaString", T.StringType()),
-            T.StructField("partitionColumns", T.ArrayType(T.StringType())),
-            T.StructField("configuration", T.MapType(T.StringType(), T.StringType())),
-            T.StructField("createdTime", T.LongType()),
-        ]
-    )
-    proto_t = T.StructType(
-        [
-            T.StructField("minReaderVersion", T.IntegerType()),
-            T.StructField("minWriterVersion", T.IntegerType()),
-            T.StructField("readerFeatures", T.ArrayType(T.StringType())),
-            T.StructField("writerFeatures", T.ArrayType(T.StringType())),
-        ]
-    )
-
-    state = _latest_actions_df(spark, path, max_version=target)
     # checkpointed adds carry dataChange=false (they describe state, not
     # change); un-expired tombstones must survive (protocol requirement —
     # or vacuum could never delete pre-checkpoint removes)
-    domain_t = T.StructType(
-        [
-            T.StructField("domain", T.StringType()),
-            T.StructField("configuration", T.StringType()),
-            T.StructField("removed", T.BooleanType()),
-        ]
-    )
     add_struct = F.struct(
         F.col("add.path").alias("path"),
         F.col("add.partitionValues").alias("partitionValues"),
@@ -374,68 +330,31 @@ def write_checkpoint_spark(
         F.col("add.defaultRowCommitVersion").alias("defaultRowCommitVersion"),
         F.col("add.tags").alias("tags"),
     )
-    out = state.select(
-        F.when(F.col("add").isNotNull(), add_struct).alias("add"),
-        F.col("remove"),
-        F.lit(None).cast(meta_t).alias("metaData"),
-        F.lit(None).cast(proto_t).alias("protocol"),
-        F.lit(None).cast(domain_t).alias("domainMetadata"),
+    out = _latest_actions_df(spark, path, max_version=target).select(
+        F.when(F.col("add").isNotNull(), add_struct).alias("add"), F.col("remove")
     )
     n_actions = out.count()
     n_parts = max(1, -(-n_actions // _CP_ACTIONS_PER_PART))
+    small = _checkpoint_small_actions(
+        info.protocol, info.metadata, log.all_domain_metadata(target).values()
+    )
 
     fs = log._fs
     stage = fs.join(log.table_path, f"_checkpoint_stage_{_uuid.uuid4().hex}")
     try:
         out.repartition(n_parts).write.parquet(fs.spark_path(stage), mode="overwrite")
-        spark_parts = sorted(
+        parts: list[Any] = sorted(
             fs.join(stage, n)
             for n in fs.listdir(stage)
             if n.startswith("part-") and n.endswith(".parquet")
         )
-        # driver-written metadata part: protocol + metaData + live
-        # domain metadata (row-tracking watermark etc.) — constant size
-        meta_rows: list[dict[str, Any]] = [
-            {"protocol": info.protocol},
-            {"metaData": info.metadata},
-        ]
-        for dm in log.all_domain_metadata(target).values():
-            meta_rows.append(
-                {
-                    "domainMetadata": {
-                        "domain": dm.get("domain"),
-                        "configuration": dm.get("configuration"),
-                        "removed": bool(dm.get("removed", False)),
-                    }
-                }
-            )
-        meta_part = fs.join(stage, "metadata-part.parquet")
-        import io as _io
-
-        _buf = _io.BytesIO()
-        pq.write_table(pa.Table.from_pylist(meta_rows, schema=_CHECKPOINT_SCHEMA), _buf)
-        fs.write_atomic(meta_part, _buf.getvalue())
-
-        all_parts = spark_parts + [meta_part]
-        total = len(all_parts)
-        if total == 1:
-            names = [fs.join(log.log_path, f"{target:020d}.checkpoint.parquet")]
+        if _writes_v2_checkpoints(info):
+            log._publish_checkpoint(target, parts, n_actions, small)
         else:
-            names = [
-                fs.join(log.log_path, multipart_checkpoint_file_name(target, i + 1, total))
-                for i in range(total)
-            ]
-        for src, dst in zip(all_parts, names):
-            fs.rename(src, dst)
-        payload: dict[str, Any] = {
-            "version": target,
-            "size": n_actions + len(meta_rows),
-        }
-        if total > 1:
-            payload["parts"] = total
-        fs.write_text_atomic(
-            fs.join(log.log_path, LAST_CHECKPOINT), _json.dumps(payload)
-        )
+            meta_part = _actions_table(_CHECKPOINT_SCHEMA, small)
+            log._publish_checkpoint(
+                target, parts + [meta_part], n_actions + meta_part.num_rows
+            )
     finally:
         fs.rmtree(stage)
     return target
@@ -826,129 +745,3 @@ def get_shuffle_file_metadata(
         fdf,
         unresolved_cols,
     )
-
-
-def write_checkpoint_v2_spark(
-    spark: SparkSession, path: str, version: int | None = None
-) -> int:
-    """V2 checkpoint write (protocol ``v2Checkpoint`` feature): the
-    add/remove state lands in uuid-named SIDECAR parquet files under
-    ``_delta_log/_sidecars/`` (Spark-written, bounded driver memory —
-    same distributed reconstruction as the classic writer), and a
-    single uuid-named manifest ``<v>.checkpoint.<uuid>.parquet``
-    carries checkpointMetadata + sidecar references + protocol +
-    metaData + domainMetadata. The read side
-    (``DeltaLog.checkpoint_part_files`` / ``_read_manifest_actions`` /
-    ``files_df``) already resolves this layout."""
-    import shutil
-    import uuid as _uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    import json as _json
-
-    from jodie_spark.tables.log import LAST_CHECKPOINT
-
-    log = DeltaLog(path)
-    target = log.latest_version() if version is None else int(version)
-    info = log.table_info(target)
-
-    state = _latest_actions_df(spark, path, max_version=target)
-    add_struct = F.struct(
-        F.col("add.path").alias("path"),
-        F.col("add.partitionValues").alias("partitionValues"),
-        F.col("add.size").alias("size"),
-        F.col("add.modificationTime").alias("modificationTime"),
-        F.lit(False).alias("dataChange"),
-        F.col("add.stats").alias("stats"),
-        F.col("add.deletionVector").alias("deletionVector"),
-        F.col("add.baseRowId").alias("baseRowId"),
-        F.col("add.defaultRowCommitVersion").alias("defaultRowCommitVersion"),
-        F.col("add.tags").alias("tags"),
-    )
-    out = state.select(
-        F.when(F.col("add").isNotNull(), add_struct).alias("add"),
-        F.col("remove"),
-    )
-    n_actions = out.count()
-    n_parts = max(1, -(-n_actions // _CP_ACTIONS_PER_PART))
-
-    fs = log._fs
-    sidecar_dir = fs.join(log.log_path, "_sidecars")
-    fs.makedirs(sidecar_dir)
-    stage = fs.join(log.table_path, f"_checkpoint_stage_{_uuid.uuid4().hex}")
-    try:
-        out.repartition(n_parts).write.parquet(fs.spark_path(stage), mode="overwrite")
-        spark_parts = sorted(
-            fs.join(stage, n)
-            for n in fs.listdir(stage)
-            if n.startswith("part-") and n.endswith(".parquet")
-        )
-        sidecars: list[dict[str, Any]] = []
-        for src in spark_parts:
-            name = f"{_uuid.uuid4().hex}.parquet"
-            dst = fs.join(sidecar_dir, name)
-            fs.rename(src, dst)
-            sidecars.append(
-                {
-                    "path": name,
-                    "sizeInBytes": fs.size(dst),
-                    "modificationTime": fs.mtime_ms(dst),
-                }
-            )
-
-        sidecar_t = pa.struct(
-            [
-                ("path", pa.string()),
-                ("sizeInBytes", pa.int64()),
-                ("modificationTime", pa.int64()),
-            ]
-        )
-        cpmeta_t = pa.struct([("version", pa.int64())])
-        from jodie_spark.tables.log import (
-            _DOMAIN_T,
-            _METADATA_T,
-            _PROTOCOL_T,
-        )
-
-        manifest_schema = pa.schema(
-            [
-                ("checkpointMetadata", cpmeta_t),
-                ("sidecar", sidecar_t),
-                ("protocol", _PROTOCOL_T),
-                ("metaData", _METADATA_T),
-                ("domainMetadata", _DOMAIN_T),
-            ]
-        )
-        rows: list[dict[str, Any]] = [
-            {"checkpointMetadata": {"version": target}},
-            {"protocol": info.protocol},
-            {"metaData": info.metadata},
-        ]
-        for dm in log.all_domain_metadata(target).values():
-            rows.append(
-                {
-                    "domainMetadata": {
-                        "domain": dm.get("domain"),
-                        "configuration": dm.get("configuration"),
-                        "removed": bool(dm.get("removed", False)),
-                    }
-                }
-            )
-        rows.extend({"sidecar": sc} for sc in sidecars)
-        manifest = fs.join(
-            log.log_path, f"{target:020d}.checkpoint.{_uuid.uuid4().hex}.parquet"
-        )
-        import io as _io
-
-        _buf = _io.BytesIO()
-        pq.write_table(pa.Table.from_pylist(rows, schema=manifest_schema), _buf)
-        fs.write_atomic(manifest, _buf.getvalue())
-        fs.write_text_atomic(
-            fs.join(log.log_path, LAST_CHECKPOINT),
-            _json.dumps({"version": target, "size": n_actions + len(rows)}),
-        )
-    finally:
-        fs.rmtree(stage)
-    return target

@@ -24,12 +24,13 @@ optimistic-concurrency primitive Delta uses on HDFS/local filesystems.
 from __future__ import annotations
 
 import contextlib
+import io
 import json
 import os
 import threading
 import time
 import uuid
-from typing import Any, Iterator
+from typing import Any, Iterable, Iterator
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -284,6 +285,58 @@ _CHECKPOINT_SCHEMA = pa.schema(
         ("domainMetadata", _DOMAIN_T),
     ]
 )
+# v2 layout: add/remove state in sidecars; the manifest carries the
+# small actions plus one checkpointMetadata row and one row per sidecar
+_SIDECAR_SCHEMA = pa.schema([("add", _ADD_T), ("remove", _REMOVE_T)])
+_MANIFEST_SCHEMA = pa.schema(
+    [
+        ("checkpointMetadata", pa.struct([("version", pa.int64())])),
+        (
+            "sidecar",
+            pa.struct(
+                [
+                    ("path", pa.string()),
+                    ("sizeInBytes", pa.int64()),
+                    ("modificationTime", pa.int64()),
+                ]
+            ),
+        ),
+        ("protocol", _PROTOCOL_T),
+        ("metaData", _METADATA_T),
+        ("domainMetadata", _DOMAIN_T),
+    ]
+)
+# actions per checkpoint parquet file (classic part or v2 sidecar)
+_CP_ACTIONS_PER_PART = 500_000
+
+
+def _actions_table(schema: "pa.Schema", columns: dict[str, Any]) -> "pa.Table":
+    """One action per row: the rows of each ``columns`` entry (a struct
+    array of that column's type) in turn, every other column null."""
+    tables = []
+    for name, arr in columns.items():
+        n = len(arr)
+        tables.append(
+            pa.Table.from_arrays(
+                [arr if f.name == name else pa.nulls(n, f.type) for f in schema],
+                schema=schema,
+            )
+        )
+    return pa.concat_tables(tables)
+
+
+def _checkpoint_small_actions(
+    protocol: dict[str, Any],
+    metadata: dict[str, Any],
+    domains: Iterable[dict[str, Any]],
+) -> dict[str, "pa.Array"]:
+    """The protocol, metaData and live domainMetadata rows of a
+    checkpoint, as columns for :func:`_actions_table`."""
+    return {
+        "protocol": pa.array([protocol], type=_PROTOCOL_T),
+        "metaData": pa.array([metadata], type=_METADATA_T),
+        "domainMetadata": pa.array(list(domains), type=_DOMAIN_T),
+    }
 
 
 def _maps_to_dicts(obj: Any) -> Any:
@@ -438,6 +491,47 @@ def _struct_rows(arr: "pa.ChunkedArray | pa.Array") -> Iterator[dict[str, Any]]:
             yield dict(zip(names, tup))
 
 
+def _widen(chunk: pa.Array, target: pa.DataType) -> pa.Array:
+    """``chunk`` (a struct array whose rows are all valid) as struct
+    type ``target``: each target field takes the chunk's child when it
+    has one (casting scalar-type drift), else a null child; fields the
+    target lacks are dropped.
+
+    pyarrow cannot CAST a struct to a superset struct (cast requires
+    matching field sets), hence by hand. RECURSIVE for struct children
+    (ADVICE r12): a nested struct with width drift across multi-part
+    chunks must widen field-by-field too — cast() on differing struct
+    widths raises ArrowTypeError, which used to crash snapshot load for
+    such foreign checkpoints. A widened nested child keeps the source's
+    validity bitmap (a null nested struct row stays null, not a struct
+    of nulls)."""
+    import pyarrow.compute as pc
+
+    children = []
+    have = {f.name: i for i, f in enumerate(chunk.type)}
+    for f in target:
+        i = have.get(f.name)
+        if i is None:
+            children.append(pa.nulls(len(chunk), f.type))
+            continue
+        child = chunk.field(i)
+        if child.type == f.type:
+            children.append(child)
+        elif pa.types.is_struct(f.type) and pa.types.is_struct(child.type):
+            widened = _widen(child, f.type)
+            if child.null_count:
+                mask = child.is_valid()
+                widened = pa.StructArray.from_arrays(
+                    [widened.field(j) for j in range(widened.type.num_fields)],
+                    fields=list(f.type),
+                    mask=pc.invert(mask),
+                )
+            children.append(widened)
+        else:
+            children.append(child.cast(f.type))
+    return pa.StructArray.from_arrays(children, fields=list(target))
+
+
 class _FileState:
     """Per-path action state (active adds, or tombstones) as a COLUMNAR
     checkpoint base plus a small dict overlay from the JSON log tail.
@@ -449,8 +543,9 @@ class _FileState:
     the checksum verify and file-size operators need are Arrow compute
     over the children, and the full ``path -> payload`` dict
     materializes lazily (once, cached) only for the consumers that
-    genuinely walk every payload — vacuum, fsck, checkpoint write,
-    driver-side DML planning on small logs.
+    genuinely walk every payload — vacuum, fsck, driver-side DML
+    planning on small logs (the checkpoint writer reads the columnar
+    state through :meth:`to_arrow`).
 
     Invariant maintained by the builder (``DeltaLog._snapshot_inner``):
     every overlay path is also in ``dropped``, so base and overlay are
@@ -696,6 +791,25 @@ class _FileState:
                 out.append(p.get(name))
         return n, cols
 
+    def to_arrow(self, typ: "pa.StructType") -> "pa.ChunkedArray":
+        """The whole state as struct type ``typ``: the checkpoint base
+        keep-masked and widened chunk by chunk, then the overlay rows —
+        the checkpoint writer's input. No payload dict is built for a
+        base row, and the dict view is never forced."""
+        chunks: list[pa.Array] = []
+        if self._dict is not None:
+            rows = self._dict.values()
+        else:
+            rows = self._overlay.values()
+            if self._base is not None:
+                base = self._base
+                mask = self._base_keep_mask()
+                if mask is not None:
+                    base = base.filter(mask)
+                chunks = [c if c.type == typ else _widen(c, typ) for c in base.chunks]
+        chunks.append(pa.array(list(rows), type=typ))
+        return pa.chunked_array(chunks, type=typ)
+
     def __len__(self) -> int:
         return self.num_files()
 
@@ -902,30 +1016,43 @@ class DeltaLog:
         }
         return sorted(complete)
 
-    def checkpoint_part_files(self, version: int) -> list[str]:
+    def checkpoint_part_files(
+        self, version: int, names: list[str] | None = None
+    ) -> list[str]:
         """Absolute paths of the file(s) that together hold every action
         of the checkpoint at ``version``: the classic single/multi-part
         parquet files, or — for a V2 checkpoint — the uuid-named
         manifest plus every sidecar parquet it references (sidecars live
-        under ``_delta_log/_sidecars/``)."""
-        single = self._fs.join(self.log_path, checkpoint_file_name(version))
-        if self._fs.isfile(single):
-            return [single]
+        under ``_delta_log/_sidecars/``). ``names``: a listing of the
+        log directory the caller already holds."""
+        if names is None:
+            single = self._fs.join(self.log_path, checkpoint_file_name(version))
+            if self._fs.isfile(single):
+                return [single]
+            names = self._fs.listdir(self.log_path)
+        elif checkpoint_file_name(version) in names:
+            return [self._fs.join(self.log_path, checkpoint_file_name(version))]
         prefix = f"{version:020d}.checkpoint."
-        names = self._fs.listdir(self.log_path)
-        classic = [
-            self._fs.join(self.log_path, n)
-            for n in names
-            if n.startswith(prefix)
-            and n.endswith(".parquet")
-            and n[len(prefix):-len(".parquet")].replace(".", "").isdigit()
-        ]
-        if classic:
-            return sorted(classic)
+        # multi-part sets keyed by part count: a torn set left by a
+        # crashed writer may sit next to a complete set of another
+        # count (the driver and Spark writers split differently), and
+        # reading both would replay every add twice
+        part_sets: dict[int, dict[int, str]] = {}
+        for n in names:
+            if not (n.startswith(prefix) and n.endswith(".parquet")):
+                continue
+            mid = n[len(prefix):-len(".parquet")].split(".")
+            if len(mid) == 2 and all(x.isdigit() for x in mid):
+                part_sets.setdefault(int(mid[1]), {})[int(mid[0])] = n
+        for total, got in sorted(part_sets.items()):
+            if set(got) == set(range(1, total + 1)):
+                return [self._fs.join(self.log_path, got[i]) for i in sorted(got)]
         manifests = sorted(
             self._fs.join(self.log_path, n)
             for n in names
-            if n.startswith(prefix) and (n.endswith(".parquet") or n.endswith(".json"))
+            if n.startswith(prefix)
+            and (n.endswith(".parquet") or n.endswith(".json"))
+            and not n[len(prefix):].split(".")[0].isdigit()
         )
         if not manifests:
             return []
@@ -965,6 +1092,29 @@ class DeltaLog:
         checkpoints = self.list_checkpoint_versions(names)
         candidates = versions + checkpoints
         return max(candidates) if candidates else -1
+
+    def replay_log_bytes(self) -> tuple[int, int]:
+        """``(tail_json_bytes, checkpoint_bytes)`` that a replay of the
+        latest version reads: the commit JSONs above the newest complete
+        checkpoint, and that checkpoint's files — from ONE sized listing
+        (object-store LISTs carry sizes). Commits below the checkpoint
+        and older checkpoints are not counted: the replay never reads
+        them. A v2 checkpoint's sidecars live in ``_sidecars/``, so they
+        are outside the listing and sized one by one."""
+        sizes = {n: max(s, 0) for n, s in self._fs.listdir_sizes(self.log_path)}
+        names = list(sizes)
+        checkpoints = self.list_checkpoint_versions(names)
+        base = max(checkpoints) if checkpoints else -1
+        tail = sum(
+            s for n, s in sizes.items()
+            if n.endswith(".json") and n[:-5].isdigit() and int(n[:-5]) > base
+        )
+        checkpoint = 0
+        if base >= 0:
+            for path in self.checkpoint_part_files(base, names):
+                name = self._fs.basename(path)
+                checkpoint += sizes[name] if name in sizes else self._fs.size(path)
+        return tail, checkpoint
 
     def commit_file_path(self, version: int) -> str:
         return self._fs.join(self.log_path, commit_file_name(version))
@@ -1081,43 +1231,6 @@ class DeltaLog:
                     continue
                 col = col.filter(mask)
                 chunks.extend(col.chunks if isinstance(col, pa.ChunkedArray) else [col])
-
-        def _widen(chunk: pa.Array, target: pa.DataType) -> pa.Array:
-            # pyarrow cannot CAST a struct to a superset struct (cast
-            # requires matching field sets), so widen by hand: take each
-            # target field's child when the chunk has it (casting
-            # scalar-type drift), else a null child. Rows are all valid
-            # here (the path-validity filter ran before this).
-            # RECURSIVE for struct children (ADVICE r12): a nested
-            # struct with width drift across multi-part chunks must
-            # widen field-by-field too — cast() on differing struct
-            # widths raises ArrowTypeError, which used to crash snapshot
-            # load for such foreign checkpoints. A widened nested child
-            # keeps the source's validity bitmap (a null nested struct
-            # row stays null, not a struct of nulls).
-            children = []
-            have = {f.name: i for i, f in enumerate(chunk.type)}
-            for f in target:
-                i = have.get(f.name)
-                if i is None:
-                    children.append(pa.nulls(len(chunk), f.type))
-                    continue
-                child = chunk.field(i)
-                if child.type == f.type:
-                    children.append(child)
-                elif pa.types.is_struct(f.type) and pa.types.is_struct(child.type):
-                    widened = _widen(child, f.type)
-                    if child.null_count:
-                        mask = child.is_valid()
-                        widened = pa.StructArray.from_arrays(
-                            [widened.field(j) for j in range(widened.type.num_fields)],
-                            fields=list(f.type),
-                            mask=pc.invert(mask),
-                        )
-                    children.append(widened)
-                else:
-                    children.append(child.cast(f.type))
-            return pa.StructArray.from_arrays(children, fields=list(target))
 
         def _concat(chunks: list[pa.Array]) -> pa.ChunkedArray | None:
             if not chunks:
@@ -1981,8 +2094,17 @@ class DeltaLog:
                     # delta's post-checkpoint metadata cleanup (30-day
                     # default retention — a no-op on young tables)
                     self.cleanup_expired_logs()
-            except Exception:
-                pass  # checkpointing is an optimization; never fail the commit
+            except Exception as e:
+                # checkpointing is an optimization: the commit stands
+                import warnings
+
+                warnings.warn(
+                    f"{self.table_path}@{version}: checkpoint failed — "
+                    f"{type(e).__name__}: {e} (the commit stands; readers "
+                    f"replay the JSON tail until the next checkpoint)",
+                    RuntimeWarning,
+                    stacklevel=3,
+                )
 
     def cleanup_expired_logs(self, now_ms: int | None = None) -> list[str]:
         """Delete commit JSONs and checkpoints that are (a) older than
@@ -2062,114 +2184,163 @@ class DeltaLog:
         return deleted
 
     def write_checkpoint(self, version: int | None = None, spark: Any = None) -> int:
-        """Checkpoint the state at ``version``.
+        """Checkpoint the state at ``version`` (default: latest).
 
-        With an active SparkSession the reconstruction + parquet
-        encoding run distributed (bounded driver memory at any file
-        count; see distribution.write_checkpoint_spark). The
-        driver-side pyarrow path remains as the no-Spark fallback so
-        the log layer stays usable standalone."""
-        if spark is False:  # force the driver-side pyarrow path (tests)
-            spark = None
-        elif spark is None:
-            try:
+        Layout: classic — one parquet file, or Delta multi-part naming
+        past ``_CP_ACTIONS_PER_PART`` actions — or, when the table asks
+        for it (``delta.checkpointPolicy=v2`` or the ``v2Checkpoint``
+        reader feature), uuid-named sidecars plus a manifest.
+
+        Writer: ``spark=False`` writes on the driver, a SparkSession
+        writes with Spark (``distribution.write_checkpoint_spark``).
+        ``spark=None`` writes on the driver unless the replay would not
+        fit there — the byte gates ``plan_candidate_files`` applies to
+        the same replay: a JSON tail over ``_DRIVER_PLAN_MAX_LOG_BYTES``
+        or a newest checkpoint over ``_DRIVER_COLUMNAR_PLAN_MAX_LOG_BYTES``
+        — and a session is active. The driver writer encodes the
+        columnar ``snapshot()`` state as it stands (checkpoint base
+        masked and widened, JSON-tail overlay, metadata rows): no Spark
+        job, no py4j call, no per-add Python dict."""
+        if spark is None:
+            from jodie_spark.tables.table import (
+                _DRIVER_COLUMNAR_PLAN_MAX_LOG_BYTES,
+                _DRIVER_PLAN_MAX_LOG_BYTES,
+            )
+
+            tail_bytes, checkpoint_bytes = self.replay_log_bytes()
+            if (
+                tail_bytes > _DRIVER_PLAN_MAX_LOG_BYTES
+                or checkpoint_bytes > _DRIVER_COLUMNAR_PLAN_MAX_LOG_BYTES
+            ):
                 from pyspark.sql import SparkSession
 
                 spark = SparkSession.getActiveSession()
-            except Exception:
-                spark = None
-        if spark is not None:
-            from jodie_spark.tables.distribution import (
-                write_checkpoint_spark,
-                write_checkpoint_v2_spark,
-            )
+        if spark is not None and spark is not False:
+            from jodie_spark.tables.distribution import write_checkpoint_spark
 
-            policy = "classic"
-            try:
-                info = self.table_info(version)
-                policy = str(
-                    info.configuration.get(CHECKPOINT_POLICY_PROP, "classic")
-                ).lower()
-                # externally-created v2Checkpoint tables may rely on the
-                # protocol feature alone — keep writing their format
-                if policy != "v2" and "v2Checkpoint" in (
-                    (info.protocol or {}).get("readerFeatures") or []
-                ):
-                    policy = "v2"
-            except Exception:
-                pass
-            if policy == "v2":
-                return write_checkpoint_v2_spark(spark, self.table_path, version)
             return write_checkpoint_spark(spark, self.table_path, version)
         snap = self.snapshot(version)
-        rows: list[dict[str, Any]] = [
-            {"protocol": snap.protocol},
-            {"metaData": snap.metadata},
+        small = _checkpoint_small_actions(
+            snap.protocol, snap.metadata, snap.domain_metadata.values()
+        )
+        adds = snap._require_files().to_arrow(_ADD_T)
+        # checkpointed adds describe state, not change
+        flag = _ADD_T.get_field_index("dataChange")
+        adds = pa.chunked_array(
+            [
+                pa.StructArray.from_arrays(
+                    [
+                        pa.repeat(False, len(c)) if i == flag else c.field(i)
+                        for i in range(_ADD_T.num_fields)
+                    ],
+                    fields=list(_ADD_T),
+                )
+                for c in adds.chunks
+            ],
+            type=_ADD_T,
+        )
+        # un-expired tombstones must survive checkpointing (protocol
+        # requirement) or vacuum can never delete files removed before
+        # the checkpoint
+        state = {"add": adds, "remove": snap._tombstones.to_arrow(_REMOVE_T)}
+        v2 = _writes_v2_checkpoints(snap)
+        if v2:
+            table = _actions_table(_SIDECAR_SCHEMA, state)
+        else:
+            table = _actions_table(_CHECKPOINT_SCHEMA, {**small, **state})
+        parts = [
+            table.slice(i, _CP_ACTIONS_PER_PART)
+            for i in range(0, max(table.num_rows, 1), _CP_ACTIONS_PER_PART)
         ]
-        for add in snap.add_files():
-            dv = add.get("deletionVector")
-            rows.append(
-                {
-                    "add": {
-                        "path": add["path"],
-                        "partitionValues": add.get("partitionValues") or {},
-                        "size": int(add.get("size") or 0),
-                        "modificationTime": int(add.get("modificationTime") or 0),
-                        "dataChange": False,
-                        "stats": add.get("stats"),
-                        "deletionVector": (
-                            {
-                                "storageType": dv.get("storageType"),
-                                "pathOrInlineDv": dv.get("pathOrInlineDv"),
-                                "offset": dv.get("offset"),
-                                "sizeInBytes": dv.get("sizeInBytes"),
-                                "cardinality": dv.get("cardinality"),
-                            }
-                            if dv
-                            else None
-                        ),
-                        "baseRowId": add.get("baseRowId"),
-                        "defaultRowCommitVersion": add.get(
-                            "defaultRowCommitVersion"
-                        ),
-                        "tags": add.get("tags"),
-                    }
-                }
-            )
-        for dm in snap.domain_metadata.values():
-            rows.append(
-                {
-                    "domainMetadata": {
-                        "domain": dm.get("domain"),
-                        "configuration": dm.get("configuration"),
-                        "removed": bool(dm.get("removed", False)),
-                    }
-                }
-            )
-        # un-expired tombstones must survive checkpointing (Delta protocol
-        # requirement) or vacuum can never delete files removed before the
-        # latest checkpoint — a permanent storage leak
-        for rm in snap.tombstones.values():
-            rows.append(
-                {
-                    "remove": {
-                        "path": rm["path"],
-                        "deletionTimestamp": int(rm.get("deletionTimestamp") or 0),
-                        "dataChange": bool(rm.get("dataChange", True)),
-                        "partitionValues": rm.get("partitionValues") or {},
-                        "size": int(rm.get("size") or 0),
-                    }
-                }
-            )
-        table = pa.Table.from_pylist(rows, schema=_CHECKPOINT_SCHEMA)
-        cp_path = self._fs.join(self.log_path, checkpoint_file_name(snap.version))
-        import io as _io
-
-        buf = _io.BytesIO()
-        pq.write_table(table, buf)
-        self._fs.write_atomic(cp_path, buf.getvalue())
-        self._fs.write_text_atomic(
-            self._fs.join(self.log_path, LAST_CHECKPOINT),
-            json.dumps({"version": snap.version, "size": table.num_rows}),
+        self._publish_checkpoint(
+            snap.version, parts, table.num_rows, small if v2 else None
         )
         return snap.version
+
+    def _publish_checkpoint(
+        self,
+        version: int,
+        parts: list[Any],
+        num_actions: int,
+        manifest: dict[str, "pa.Array"] | None = None,
+    ) -> None:
+        """Place a checkpoint's files, then point ``_last_checkpoint``
+        at it — the publish step of both writers.
+
+        ``parts``: the checkpoint's parquet files, each a ``pa.Table``
+        (encoded and written here) or the path of a staged parquet file
+        (renamed into place); ``num_actions`` actions in all. Classic
+        layout when ``manifest`` is None: the parts ARE the checkpoint.
+        V2 layout otherwise: each part becomes a uuid-named sidecar, and
+        the manifest holds ``manifest``'s small-action columns plus a
+        checkpointMetadata row and one row per sidecar.
+
+        Crash safety: a multi-part set counts only once complete, a
+        manifest is one atomic write after every sidecar it names, and
+        ``_last_checkpoint`` goes last — a writer killed at any point
+        leaves the previous checkpoint in charge."""
+        fs = self._fs
+
+        def place(part: Any, dst: str) -> None:
+            if isinstance(part, str):
+                fs.rename(part, dst)
+            else:
+                buf = io.BytesIO()
+                pq.write_table(part, buf)
+                fs.write_atomic(dst, buf.getvalue())
+
+        if manifest is None:
+            if len(parts) == 1:
+                names = [checkpoint_file_name(version)]
+            else:
+                names = [
+                    multipart_checkpoint_file_name(version, i + 1, len(parts))
+                    for i in range(len(parts))
+                ]
+            for part, name in zip(parts, names):
+                place(part, fs.join(self.log_path, name))
+        else:
+            sidecar_dir = fs.join(self.log_path, "_sidecars")
+            fs.makedirs(sidecar_dir)
+            sidecars = []
+            for part in parts:
+                name = f"{uuid.uuid4().hex}.parquet"
+                dst = fs.join(sidecar_dir, name)
+                place(part, dst)
+                sidecars.append(
+                    {"path": name, "sizeInBytes": fs.size(dst),
+                     "modificationTime": fs.mtime_ms(dst)}
+                )
+            table = _actions_table(
+                _MANIFEST_SCHEMA,
+                {
+                    "checkpointMetadata": pa.array(
+                        [{"version": version}],
+                        type=_MANIFEST_SCHEMA.field("checkpointMetadata").type,
+                    ),
+                    **manifest,
+                    "sidecar": pa.array(
+                        sidecars, type=_MANIFEST_SCHEMA.field("sidecar").type
+                    ),
+                },
+            )
+            num_actions += table.num_rows
+            place(
+                table,
+                fs.join(self.log_path, f"{version:020d}.checkpoint.{uuid.uuid4().hex}.parquet"),
+            )
+        payload: dict[str, Any] = {"version": version, "size": num_actions}
+        if manifest is None and len(parts) > 1:
+            payload["parts"] = len(parts)
+        fs.write_text_atomic(fs.join(self.log_path, LAST_CHECKPOINT), json.dumps(payload))
+
+
+def _writes_v2_checkpoints(snap: Snapshot) -> bool:
+    """Whether checkpoints of this table use the v2 layout: the
+    ``delta.checkpointPolicy`` property, or — for externally created
+    tables that rely on the protocol feature alone — ``v2Checkpoint``
+    among the reader features."""
+    policy = str(snap.configuration.get(CHECKPOINT_POLICY_PROP, "classic")).lower()
+    return policy == "v2" or "v2Checkpoint" in (
+        (snap.protocol or {}).get("readerFeatures") or []
+    )

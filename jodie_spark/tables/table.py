@@ -473,6 +473,8 @@ _DRIVER_PLAN_MAX_LOG_BYTES = 4 * 1024 * 1024
 # files_df plan takes over: the arrow base would hold multiple GB on the
 # driver, and a cluster prunes a 10M-file state in parallel.
 _DRIVER_COLUMNAR_PLAN_MAX_LOG_BYTES = 256 * 1024 * 1024
+# (DeltaLog.write_checkpoint applies both byte bounds to the same replay
+# to choose between its driver and Spark writers)
 # ... and only when the arrow pre-mask keeps at most this many files:
 # an unselective plan materializes full stats-bearing payload dicts per
 # survivor, so past this bound the Spark-side plan (stats-free Rows,
@@ -480,30 +482,10 @@ _DRIVER_COLUMNAR_PLAN_MAX_LOG_BYTES = 256 * 1024 * 1024
 _DRIVER_COLUMNAR_PLAN_MAX_SURVIVORS = 100_000
 
 
-def _log_bytes_split(table_path: str) -> tuple[int, int]:
-    """(json_bytes, parquet_bytes) of the ``_delta_log`` directory from
-    ONE sized listing — the two planner gates need them separately: the
-    JSON tail replays driver-side row-by-row, while checkpoint parquet
-    loads columnar."""
-    log = DeltaLog(table_path)
-    json_b = parquet_b = 0
-    try:
-        # sized listing: ONE round trip (object-store LISTs carry
-        # sizes) — was a LIST plus a HEAD per log file, hundreds of
-        # metadata requests per DML plan on a mature table
-        for name, size in log._fs.listdir_sizes(log.log_path):
-            if name.endswith(".json"):
-                json_b += max(size, 0)
-            elif name.endswith(".parquet"):
-                parquet_b += max(size, 0)
-    except OSError:
-        return _DRIVER_PLAN_MAX_LOG_BYTES + 1, 0
-    return json_b, parquet_b
-
-
 def _log_bytes(table_path: str) -> int:
-    json_b, parquet_b = _log_bytes_split(table_path)
-    return json_b + parquet_b
+    """Bytes a replay of the latest version reads: JSON tail plus the
+    newest checkpoint (``DeltaLog.replay_log_bytes``)."""
+    return sum(DeltaLog(table_path).replay_log_bytes())
 
 
 def _schema_has_variant(schema: T.DataType) -> bool:
@@ -552,7 +534,7 @@ def plan_candidate_files(
     file count. Candidates carry no stats strings; row counting
     happens on the cached data read or via a Spark aggregate.
     """
-    json_bytes, parquet_bytes = _log_bytes_split(table_path)
+    json_bytes, parquet_bytes = DeltaLog(table_path).replay_log_bytes()
     log_bytes = json_bytes + parquet_bytes
     if log_bytes <= _DRIVER_PLAN_MAX_LOG_BYTES:
         snap = DeltaLog(table_path).snapshot()

@@ -216,7 +216,7 @@ def test_prefix_fs_full_spark_lifecycle(spark, tmpdir_path):
         assert got == [1, 2, 4, 5, 7, 8]
 
         log = DeltaLog(path)
-        cp = log.write_checkpoint()  # Spark-written checkpoint
+        cp = log.write_checkpoint(spark=spark)  # Spark-written checkpoint
         assert cp == log.latest_version()
         # a fresh handle reconstructs from checkpoint + tail
         assert DeltaTable.forPath(spark, path).toDF().count() == 6

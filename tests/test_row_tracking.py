@@ -48,7 +48,7 @@ def test_row_id_watermark_survives_checkpoint(registered, tmpdir_path):
         p,
         options={"delta.enableRowTracking": "true"},
     )
-    DeltaLog(p).write_checkpoint()
+    DeltaLog(p).write_checkpoint(spark=spark)
     dm = DeltaLog(p).latest_domain_metadata(ROW_TRACKING_DOMAIN)
     assert dm is not None and '"rowIdHighWaterMark": 5' in dm["configuration"]
     write_delta(spark.range(6, 9).selectExpr("id", "id as v"), p, mode="append")
@@ -96,13 +96,13 @@ def test_dv_survives_spark_checkpoint(registered, tmpdir_path):
     write_delta(spark.range(10).selectExpr("id", "id*2 as v").coalesce(1), p)
     t = DeltaTable.forPath(spark, p)
     t.delete("id % 2 = 1", deletion_vectors=True)
-    t.deltaLog.write_checkpoint()
+    t.deltaLog.write_checkpoint(spark=spark)
     t2 = DeltaTable.forPath(spark, p)
     assert any(a.get("deletionVector") for a in t2.snapshot().add_files())
     assert sorted(r["id"] for r in t2.toDF().collect()) == [0, 2, 4, 6, 8]
     # second cycle: checkpoint-seeded state must round-trip the DV again
     t2.delete("id = 0", deletion_vectors=True)
-    t2.deltaLog.write_checkpoint()
+    t2.deltaLog.write_checkpoint(spark=spark)
     t3 = DeltaTable.forPath(spark, p)
     assert sorted(r["id"] for r in t3.toDF().collect()) == [2, 4, 6, 8]
 

@@ -583,3 +583,54 @@ def test_1m_filtered_scan_planning_columnar(spark, tmp_path_factory):
         "id >= 10002000 and id <= 10002519", schema, []
     )
     assert len(adds) == 53 and st._dict is None, "pruned_adds forced the dict view"
+
+
+def test_1m_checkpoint_driver_writer(spark, tmp_path_factory, monkeypatch):
+    """A ``spark=None`` checkpoint of the 1M-add table takes the driver
+    writer — the replay fits the planner's byte gates (one-add tail,
+    checkpoint under the columnar bound) — builds no dict view (as_dict
+    POISONED), runs no Spark job, and replays to the full state. The
+    forced Spark writer on a copy of the same table is timed alongside
+    for SCALE.md."""
+    import shutil
+
+    from jodie_spark.tables import distribution
+    from jodie_spark.tables import log as log_mod
+    from jodie_spark.tables.log import DeltaLog
+
+    root = str(tmp_path_factory.mktemp("soak1mcp"))
+    p = _fabricate_checkpoint_table(spark, root, 1_000_000)
+    q = p + "_spark"
+    shutil.copytree(p, q)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def _poisoned(self):
+        raise AssertionError("as_dict() called — dict view materialized")
+
+    def _no_spark(*args, **kwargs):
+        raise AssertionError("the Spark checkpoint writer was chosen")
+
+    with monkeypatch.context() as m:
+        m.setattr(log_mod._FileState, "as_dict", _poisoned)
+        m.setattr(distribution, "write_checkpoint_spark", _no_spark)
+        jobs0 = int(sched.nextJobId())
+        t0 = time.time()
+        v = DeltaLog(p).write_checkpoint()
+        driver_s = time.time() - t0
+        jobs = int(sched.nextJobId()) - jobs0
+        assert v == 2 and jobs == 0
+        assert DeltaLog(p).list_checkpoint_versions()[-1] == 2
+        t0 = time.time()
+        n = DeltaLog(p).snapshot().num_files()
+        replay_s = time.time() - t0
+    assert n >= 1_000_000 and n == 1_000_003  # 2 real + synthetic + tail
+
+    t0 = time.time()
+    assert DeltaLog(q).write_checkpoint(spark=spark) == 2
+    spark_s = time.time() - t0
+    assert DeltaLog(q).snapshot().num_files() == n
+    print(
+        f"\nSOAK1M checkpoint write: driver={driver_s:.2f}s spark={spark_s:.2f}s "
+        f"(replay off the driver checkpoint {replay_s:.2f}s)"
+    )
+    assert driver_s < 60, f"1M-add driver checkpoint took {driver_s:.1f}s"

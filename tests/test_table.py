@@ -1386,25 +1386,25 @@ def test_drop_feature_v7_no_spurious_legacy_features(spark, tmpdir_path):
     assert rfeat == set(before.get("readerFeatures") or []) - {"v2Checkpoint"}
 
 
-@pytest.mark.parametrize("writer", ["spark", "pyarrow", "v2"])
+@pytest.mark.parametrize("writer", ["spark", "pyarrow", "v2", "v2_spark"])
 def test_checkpoint_preserves_protocol_feature_lists(spark, tmpdir_path, writer):
     """Regression (round 6): the checkpoint schema used to drop
     readerFeatures/writerFeatures, so any snapshot seeded from one of
     OUR checkpoints showed a v7 protocol with no features — a foreign
     reader could then write incompatibly, and feature gates would
-    mis-fire. All three writers (Spark classic, driver-side pyarrow,
-    v2 manifest+sidecars) must round-trip the lists."""
+    mis-fire. Both writers (Spark, driver-side pyarrow) in both layouts
+    (classic, v2 manifest+sidecars) must round-trip the lists."""
     from jodie_spark.tables.log import DeltaLog
 
     p = os.path.join(tmpdir_path, f"ckpt_proto_{writer}")
-    opts = {"delta.checkpointPolicy": "v2"} if writer == "v2" else None
+    opts = {"delta.checkpointPolicy": "v2"} if writer.startswith("v2") else None
     write_delta(spark.range(30).selectExpr("id"), p, options=opts)
     t = DeltaTable.forPath(spark, p)
     t.delete("id % 7 = 0", deletion_vectors=True)  # upgrades to r3/w7 + DV
     before = DeltaTable.forPath(spark, p).snapshot().protocol
     assert "deletionVectors" in before["writerFeatures"]
     log = DeltaLog(p)
-    v = log.write_checkpoint(spark=(False if writer == "pyarrow" else None))
+    v = log.write_checkpoint(spark=(spark if writer.endswith("spark") else False))
     # force the checkpoint to be the snapshot's only protocol source
     for dead in range(v):
         f = log.commit_file_path(dead)

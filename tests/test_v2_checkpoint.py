@@ -1,7 +1,6 @@
-"""V2 (uuid-named manifest + sidecar) checkpoint READ support —
-hand-built fixtures shaped like modern delta-spark output. Writing to
-v2Checkpoint-featured tables stays refused (this engine checkpoints
-classic), so interop is read-only and honest."""
+"""V2 (uuid-named manifest + sidecar) checkpoints: READ support on
+hand-built fixtures shaped like modern delta-spark output, and WRITE
+support (delta.checkpointPolicy=v2) through both checkpoint writers."""
 
 import json
 import os
@@ -146,55 +145,61 @@ def test_v2_checkpoint_write_roundtrip(spark, tmpdir_path):
     from jodie_spark.tables.log import DeltaLog
     from jodie_spark.tables.table import DeltaTable, write_delta
 
-    p = os.path.join(tmpdir_path, "v2w")
-    write_delta(
-        spark.range(20).selectExpr("id", "id * 2 as v").repartition(3),
-        p,
-        options={"delta.checkpointPolicy": "v2"},
-    )
-    t = DeltaTable.forPath(spark, p)
-    t.delete("id >= 15")
-    proto = t.snapshot().protocol
-    assert "v2Checkpoint" in proto["readerFeatures"]
-    v = DeltaLog(p).write_checkpoint()
-    log_dir = os.path.join(p, "_delta_log")
-    manifests = [
-        n for n in os.listdir(log_dir)
-        if n.startswith("%020d.checkpoint." % v) and n.endswith(".parquet")
-    ]
-    assert len(manifests) == 1
-    # uuid-named manifest (not a classic single/multipart name)
-    mid = manifests[0][len("%020d.checkpoint." % v):-len(".parquet")]
-    assert len(mid) == 32 and "." not in mid
-    assert os.path.isdir(os.path.join(log_dir, "_sidecars"))
-    assert os.listdir(os.path.join(log_dir, "_sidecars"))
-    # snapshot + reads seeded from the v2 checkpoint (delete the tail
-    # json to force checkpoint-only reconstruction of state ≤ v)
-    t2 = DeltaTable.forPath(spark, p)
-    assert sorted(r["id"] for r in t2.toDF().collect()) == list(range(15))
-    # another append + re-checkpoint: v2 base + tail, then v2 again
-    write_delta(spark.range(100, 103).selectExpr("id", "id*2 as v"), p, mode="append")
-    DeltaLog(p).write_checkpoint()
-    t3 = DeltaTable.forPath(spark, p)
-    assert sorted(r["id"] for r in t3.toDF().collect()) == list(range(15)) + [100, 101, 102]
+    # both writers: driver (spark=False) and Spark (spark=<session>)
+    for writer in (False, spark):
+        p = os.path.join(tmpdir_path, "v2w_spark" if writer else "v2w_driver")
+        write_delta(
+            spark.range(20).selectExpr("id", "id * 2 as v").repartition(3),
+            p,
+            options={"delta.checkpointPolicy": "v2"},
+        )
+        t = DeltaTable.forPath(spark, p)
+        t.delete("id >= 15")
+        proto = t.snapshot().protocol
+        assert "v2Checkpoint" in proto["readerFeatures"]
+        v = DeltaLog(p).write_checkpoint(spark=writer)
+        log_dir = os.path.join(p, "_delta_log")
+        manifests = [
+            n for n in os.listdir(log_dir)
+            if n.startswith("%020d.checkpoint." % v) and n.endswith(".parquet")
+        ]
+        assert len(manifests) == 1
+        # uuid-named manifest (not a classic single/multipart name)
+        mid = manifests[0][len("%020d.checkpoint." % v):-len(".parquet")]
+        assert len(mid) == 32 and "." not in mid
+        assert os.path.isdir(os.path.join(log_dir, "_sidecars"))
+        assert os.listdir(os.path.join(log_dir, "_sidecars"))
+        # snapshot + reads seeded from the v2 checkpoint (delete the tail
+        # json to force checkpoint-only reconstruction of state ≤ v)
+        t2 = DeltaTable.forPath(spark, p)
+        assert sorted(r["id"] for r in t2.toDF().collect()) == list(range(15))
+        # another append + re-checkpoint: v2 base + tail, then v2 again
+        write_delta(spark.range(100, 103).selectExpr("id", "id*2 as v"), p, mode="append")
+        DeltaLog(p).write_checkpoint(spark=writer)
+        t3 = DeltaTable.forPath(spark, p)
+        assert sorted(r["id"] for r in t3.toDF().collect()) == list(range(15)) + [100, 101, 102]
 
 
 def test_v2_checkpoint_write_preserves_dv_and_domains(spark, tmpdir_path):
     from jodie_spark.tables.log import ROW_TRACKING_DOMAIN, DeltaLog
     from jodie_spark.tables.table import DeltaTable, write_delta
 
-    p = os.path.join(tmpdir_path, "v2dv")
-    write_delta(
-        spark.range(10).selectExpr("id", "id as v").coalesce(1),
-        p,
-        options={
-            "delta.checkpointPolicy": "v2",
-            "delta.enableRowTracking": "true",
-        },
-    )
-    DeltaTable.forPath(spark, p).delete("id % 2 = 1", deletion_vectors=True)
-    DeltaLog(p).write_checkpoint()
-    t = DeltaTable.forPath(spark, p)
-    assert sorted(r["id"] for r in t.toDF().collect()) == [0, 2, 4, 6, 8]
-    dm = DeltaLog(p).latest_domain_metadata(ROW_TRACKING_DOMAIN)
-    assert dm is not None and "rowIdHighWaterMark" in dm["configuration"]
+    for writer in (False, spark):
+        p = os.path.join(tmpdir_path, "v2dv_spark" if writer else "v2dv_driver")
+        write_delta(
+            spark.range(10).selectExpr("id", "id as v").coalesce(1),
+            p,
+            options={
+                "delta.checkpointPolicy": "v2",
+                "delta.enableRowTracking": "true",
+            },
+        )
+        DeltaTable.forPath(spark, p).delete("id % 2 = 1", deletion_vectors=True)
+        v = DeltaLog(p).write_checkpoint(spark=writer)
+        for dead in range(v + 1):  # state must come from the checkpoint
+            os.remove(DeltaLog(p).commit_file_path(dead))
+        t = DeltaTable.forPath(spark, p)
+        assert sorted(r["id"] for r in t.toDF().collect()) == [0, 2, 4, 6, 8]
+        assert any(a.get("deletionVector") for a in t.snapshot().add_files())
+        dm = DeltaLog(p).latest_domain_metadata(ROW_TRACKING_DOMAIN)
+        assert dm is not None and "rowIdHighWaterMark" in dm["configuration"]
