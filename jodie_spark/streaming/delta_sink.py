@@ -207,10 +207,8 @@ def write_stream_merge_to_delta(
     the merge underneath runs several jobs over the source side
     (touched-file discovery, rewrite, metrics), and each would
     otherwise re-scan the streaming source."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from jodie_spark.tables.log import DeltaLog
+    from jodie_spark.tables.merge import quote_ident as q
     from jodie_spark.tables.table import DeltaTable, write_delta
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -228,9 +226,13 @@ def write_stream_merge_to_delta(
                     DeltaTable.forPath(batch_df.sparkSession, path).delete()
                 return
             if sequence_col is not None:
-                w = Window.partitionBy(*keys).orderBy(F.col(sequence_col).desc())
                 batch = (
-                    batch_df.withColumn("__rn__", F.row_number().over(w))
+                    batch_df.selectExpr(
+                        "*",
+                        "row_number() OVER (PARTITION BY "
+                        f"{', '.join(q(k) for k in keys)} "
+                        f"ORDER BY {q(sequence_col)} DESC) AS __rn__",
+                    )
                     .filter("__rn__ = 1")
                     .drop("__rn__")
                 )
@@ -240,9 +242,11 @@ def write_stream_merge_to_delta(
             if not DeltaLog(path).exists():
                 init = batch
                 if delete_col is not None:
-                    init = init.filter(f"not coalesce({delete_col}, false)")
+                    init = init.filter(f"not coalesce({q(delete_col)}, false)")
                 write_delta(
-                    init.select(*data_cols), path, partition_by=partition_by or []
+                    init.selectExpr(*[q(c) for c in data_cols]),
+                    path,
+                    partition_by=partition_by or [],
                 )
                 return
             t = DeltaTable.forPath(batch.sparkSession, path)
@@ -269,19 +273,20 @@ def write_stream_merge_to_delta(
                 # the bare >= evaluate to NULL, leaving the row
                 # permanently un-updatable and silently dropping its
                 # deletes — treat unknown ordering as "apply"
-                guard = f"coalesce(s.{sequence_col} >= t.{sequence_col}, true)"
-            cond = " and ".join(f"t.{k} = s.{k}" for k in keys)
+                sq = q(sequence_col)
+                guard = f"coalesce(s.{sq} >= t.{sq}, true)"
+            cond = " and ".join(f"t.{q(k)} = s.{q(k)}" for k in keys)
             m = t.alias("t").merge(batch.alias("s"), cond)
             if delete_col is not None:
-                dl = f"coalesce(s.{delete_col}, false)"
+                dl = f"coalesce(s.{q(delete_col)}, false)"
                 m = m.whenMatchedDelete(f"{dl} and {guard}" if guard else dl)
                 m = m.whenMatchedUpdate(
                     condition=guard,
-                    set={c: f"s.{c}" for c in data_cols if c not in keys},
+                    set={c: f"s.{q(c)}" for c in data_cols if c not in keys},
                 )
                 m = m.whenNotMatchedInsert(
                     condition=f"not {dl}",
-                    values={c: f"s.{c}" for c in data_cols},
+                    values={c: f"s.{q(c)}" for c in data_cols},
                 )
                 if full_snapshot:
                     m = m.whenNotMatchedBySourceDelete()
@@ -289,7 +294,7 @@ def write_stream_merge_to_delta(
                 m = (
                     m.whenMatchedUpdate(
                         condition=guard,
-                        set={c: f"s.{c}" for c in batch.columns if c not in keys},
+                        set={c: f"s.{q(c)}" for c in batch.columns if c not in keys},
                     ).whenNotMatchedInsertAll()
                 )
                 if full_snapshot:
@@ -298,7 +303,12 @@ def write_stream_merge_to_delta(
                 m = m.whenMatchedUpdateAll().whenNotMatchedInsertAll()
                 if full_snapshot:
                     m = m.whenNotMatchedBySourceDelete()
-            m.execute()
+            # the batch is unique on `keys` by construction (row_number()
+            # = 1 or dropDuplicates) and the condition is key equality,
+            # so one target row never matches two source rows: the
+            # multiple-match guard could never fire, and skipping it
+            # saves its aggregation shuffle every micro-batch
+            m.execute(allow_multiple_matches=True)
         finally:
             batch_df.unpersist()
 

@@ -11,9 +11,11 @@ re-expressed as DataFrame ops so Catalyst plans the joins):
 
 1. **Find touched files** — prune target files with the target-only
    conjuncts of the merge condition (stats/partition skipping, no data
-   read), then LEFT SEMI join target→source on the condition and collect
-   the *distinct file paths* (bounded by #files, never #rows) that
-   contain at least one match.
+   read), then join target→source on the condition and OBSERVE the set
+   of file paths (``collect_set``, bounded by #files, never #rows) that
+   contain at least one match, in one noop action — no shuffle just to
+   deduplicate file names. With the multiple-match check on, the same
+   action counts matches per target row (one aggregation).
 2. **Rewrite** — FULL OUTER join only the touched files against the
    source; apply the first matching WHEN clause per row (Delta clause
    order semantics); untouched files are never read or rewritten.
@@ -772,13 +774,8 @@ class DeltaMergeBuilder:
             hidden, fields = self._lower(schema, talias)
             staged = self._stage_actions(joined, hidden).persist()
 
-            # multiple-match guard on the (file, row_index) identity —
-            # same delete-only exemption as MergeIntoCommand
-            multi_ok = allow_multiple_matches or (
-                len(self._matched) == 1
-                and self._matched[0].kind == "delete"
-                and self._matched[0].condition is None
-            )
+            # multiple-match guard on the (file, row_index) identity
+            multi_ok = self._multiple_matches_allowed(allow_multiple_matches)
             action_counts = {
                 r["__action__"]: r["n"]
                 for r in staged.groupBy("__action__")
@@ -1285,19 +1282,37 @@ class DeltaMergeBuilder:
 
         maybe_auto_compact(t, config=snap.configuration)
 
+    def _multiple_matches_allowed(self, allow_multiple_matches: bool) -> bool:
+        """delta-spark parity: multiple source rows matching one target
+        row make the merge nondeterministic (and pass 2 would emit one
+        output row per match — for merges WITHOUT matched clauses the
+        matched target row is a 'copy' row, so a multi-match would
+        silently DUPLICATE it in the rewrite). Delta allows it only when
+        the sole matched clause is an unconditional DELETE (the row is
+        gone either way) — MergeIntoCommand's
+        isDeleteWithMultipleMatchesAllowed."""
+        return allow_multiple_matches or (
+            len(self._matched) == 1
+            and self._matched[0].kind == "delete"
+            and self._matched[0].condition is None
+        )
+
     def _find_touched(
         self, snap, schema, talias, src, candidates, lineage, allow_multiple_matches
     ) -> list[dict[str, Any]]:
         """Pass 1: the candidate adds holding at least one row the merge
-        changes. The probe is NOT cached: uncached, Spark's column
-        pruning reaches the parquet scan, so it reads only the merge-key
-        columns of the candidate files, and pass 2 re-plans a
-        full-column scan over the TOUCHED files only (MergeIntoCommand's
-        shape). Caching here materialized every column of every
-        candidate row — at scale that is executor memory pressure and a
-        wider read; locally the cache write alone cost more than the
-        re-scan it saved."""
-        from jodie_spark.tables.table import map_touched_paths
+        changes, found by ONE noop action that observes the file set
+        (:func:`~jodie_spark.tables.table.observed_metrics`): the semi
+        join (or, with the multiple-match check on, the inner join with
+        one per-target-row count), unioned with the by-source anti join
+        when by-source clauses exist. A missing observation raises.
+
+        The probe is NOT cached: uncached, Spark's column pruning
+        reaches the parquet scan, so it reads only the merge-key columns
+        of the candidate files, and pass 2 re-plans a full-column scan
+        over the TOUCHED files only (MergeIntoCommand's shape). Caching
+        here materialized every column of every candidate row."""
+        from jodie_spark.tables.table import map_touched_paths, observed_metrics
 
         t = self.table
         if lineage is not None:
@@ -1308,78 +1323,60 @@ class DeltaMergeBuilder:
             probe = t._read_candidates(snap, schema, candidates).withColumn(
                 "__path__", F.input_file_name()
             )
-        # delta-spark parity: multiple source rows matching one target
-        # row make the merge nondeterministic (and pass 2 would emit
-        # one output row per match — for merges WITHOUT matched
-        # clauses the matched target row is a 'copy' row, so a
-        # multi-match would silently DUPLICATE it in the rewrite).
-        # Delta allows it only when the sole matched clause is an
-        # unconditional DELETE (result is deterministic: the row is
-        # gone either way) — same rule as
-        # MergeIntoCommand.isDeleteWithMultipleMatchesAllowed. The
-        # guard must run whenever touched files will be rewritten, not
-        # only when matched clauses exist (by-source-only and slow-path
-        # insert-only merges rewrite copies too).
-        multi_ok = allow_multiple_matches or (
-            len(self._matched) == 1
-            and self._matched[0].kind == "delete"
-            and self._matched[0].condition is None
-        )
-        if not multi_ok:
-            # same shape as MergeIntoCommand.findTouchedFiles — an
-            # inner join with a per-target-row count; both groupBys
-            # partial-aggregate map-side, so the shuffle carries
-            # (t_id, path) pairs, never data columns
-            per_path = (
+        # the multiple-match guard must run whenever touched files will
+        # be rewritten, not only when matched clauses exist (by-source-
+        # only and slow-path insert-only merges rewrite copies too)
+        multi_ok = self._multiple_matches_allowed(allow_multiple_matches)
+        if multi_ok:
+            rows = probe.alias(talias).join(
+                src, F.expr(self.condition), "left_semi"
+            ).select("__path__")
+        else:
+            # same shape as MergeIntoCommand.findTouchedFiles: matches
+            # counted per target row (partial-aggregated map-side, so
+            # the one shuffle carries (t_id, path, count) rows). The
+            # file set is observed above the count: an observation
+            # under the shuffle is dropped when AQE proves the join
+            # empty (empty source)
+            rows = (
                 probe.withColumn("__t_id__", F.monotonically_increasing_id())
                 .alias(talias)
                 .join(src, F.expr(self.condition), "inner")
                 .groupBy("__t_id__", "__path__")
-                .agg(F.count(F.lit(1)).alias("__n__"))
-                .groupBy("__path__")
-                .agg(F.max("__n__").alias("__mx__"))
-                .collect()
+                .agg(F.expr("count(1) AS __n__"))
+                .select("__path__", "__n__")
             )
-            raw_touched = {r["__path__"] for r in per_path}
-            if any(r["__mx__"] > 1 for r in per_path):
-                from jodie_spark.errors import MergeMultipleMatchesError
-
-                raise MergeMultipleMatchesError(
-                    "MERGE: one target row matched multiple source rows "
-                    "while its file must be rewritten; the result would "
-                    "be nondeterministic (or would duplicate the copied "
-                    "target row). Deduplicate the source on the merge "
-                    "key, or pass allow_multiple_matches=True."
-                )
-        else:
-            raw_touched = {
-                r[0]
-                for r in probe.alias(talias)
-                .join(src, F.expr(self.condition), "left_semi")
-                .select("__path__")
-                .distinct()
-                .collect()
-            }
         if self._not_matched_by_source:
-            # files holding UNMATCHED target rows that satisfy some
-            # by-source clause condition must also rewrite — an anti
-            # join against the source, filtered by the OR of the clause
-            # conditions; shuffles (row, path) of the probe only, like
-            # the semi join above
+            # files of UNMATCHED target rows satisfying some by-source
+            # clause condition rewrite too
             bs_cond = " OR ".join(
                 _frag(cl.condition) if cl.condition else "TRUE"
                 for cl in self._not_matched_by_source
             )
-            raw_touched |= {
-                r[0]
-                for r in probe.alias(talias)
+            rows = rows.unionByName(
+                probe.alias(talias)
                 .join(src, F.expr(self.condition), "left_anti")
                 .filter(bs_cond)
-                .select("__path__")
-                .distinct()
-                .collect()
-            }
+                .selectExpr("__path__", *([] if multi_ok else ["1 AS __n__"]))
+            )
+        # only "> 0" is read: a re-executed task cannot turn the count
+        # (nor the file set, a set union) into a wrong answer
+        got = observed_metrics(
+            rows,
+            files="collect_set(__path__)",
+            **({} if multi_ok else {"dups": "count_if(__n__ > 1)"}),
+        )
+        if not multi_ok and got["dups"] > 0:
+            from jodie_spark.errors import MergeMultipleMatchesError
+
+            raise MergeMultipleMatchesError(
+                "MERGE: one target row matched multiple source rows "
+                "while its file must be rewritten; the result would "
+                "be nondeterministic (or would duplicate the copied "
+                "target row). Deduplicate the source on the merge "
+                "key, or pass allow_multiple_matches=True."
+            )
         # raises on any URI that fails to map back to a candidate add —
         # a partial/empty touched set here would re-insert matched
         # source rows as duplicates against an empty rewrite target
-        return map_touched_paths(t.path, candidates, raw_touched)
+        return map_touched_paths(t.path, candidates, set(got["files"] or ()))

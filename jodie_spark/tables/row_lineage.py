@@ -110,11 +110,13 @@ def read_candidates_with_lineage(
     is relative to ``table_path``.
     """
     from jodie_spark.errors import DeltaProtocolError
+    from jodie_spark.fs import scanned_path_key
     from jodie_spark.tables.column_mapping import schema_requests_field_ids
     from jodie_spark.tables.table import (
         _DV_BROADCAST_MAX_POSITIONS,
         _dv_cardinality,
         _field_id_read_session,
+        observed_file_uris,
     )
 
     if schema_requests_field_ids(schema):
@@ -150,12 +152,10 @@ def read_candidates_with_lineage(
     # learn Spark's exact URI spelling for each candidate (one
     # metadata-only job, O(#files)) — string-reconstructing URIs is how
     # silent join misses happen
-    fp_values = [r[0] for r in scan.select("__file__").distinct().collect()]
     lin_rows = []
     dv_rows = []
-    for fp in fp_values:
-        local = urllib.parse.unquote(urllib.parse.urlparse(fp).path)
-        add = by_real.get(os.path.realpath(local))
+    for fp in observed_file_uris(scan.select("__file__"), "__file__"):
+        add = by_real.get(scanned_path_key(fp))
         if add is None:
             raise DeltaProtocolError(
                 f"cannot map scanned file {fp!r} back to a candidate add of "

@@ -18,12 +18,14 @@ import time
 import urllib.parse
 from typing import Any
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jodie_spark.errors import DeltaProtocolError, JodieValidationError
 from jodie_spark.tables.log import CHECKPOINT_PROTECTION_PROP, DeltaLog, Snapshot
+from jodie_spark.tables.merge import _frag, quote_ident, type_ddl
 from jodie_spark.tables.writer import write_data_files, write_metrics
 
 CDF_PROP = "delta.enableChangeDataFeed"
@@ -288,11 +290,11 @@ def _read_external_files_df(
     # collect-and-match as the DV reader — O(#files), never per row;
     # string-reconstructing the URI driver-side is how silent
     # percent-encoding mismatches happen)
-    fp_values = [r[0] for r in scan.select("__fp__").distinct().collect()]
+    from jodie_spark.fs import scanned_path_key
+
     rows = []
-    for fp in fp_values:
-        local = urllib.parse.unquote(urllib.parse.urlparse(fp).path)
-        add = by_real.get(os.path.realpath(local))
+    for fp in observed_file_uris(scan.select("__fp__"), "__fp__"):
+        add = by_real.get(scanned_path_key(fp))
         if add is None:
             raise DeltaProtocolError(
                 f"cannot map scanned file {fp!r} back to an external add "
@@ -321,6 +323,69 @@ def _read_external_files_df(
 _DV_BROADCAST_MAX_POSITIONS = 2_000_000
 
 
+def _drop_dv_positions(
+    df: DataFrame, table_path: str, adds: list[dict[str, Any]], strict: bool
+) -> DataFrame:
+    """``df`` (carrying ``__fp__``/``__ri__``, Spark's file path and row
+    index) minus the rows the ``adds``' deletion vectors delete: ONE
+    Arrow-batched predicate over the BROADCAST raw roaring bitmaps — no
+    extra Spark job, no join. Bitmaps are keyed by the shared path
+    canonicalization (``add_path_key`` / ``scanned_path_key``), so
+    Spark's URI spelling of ``file_path`` is normalized executor-side.
+    ``strict``: a scanned file whose key maps to no add REFUSES (task
+    error) rather than resurrecting deleted rows; otherwise such a file
+    keeps every row."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from jodie_spark.fs import add_path_key, scanned_path_key
+    from jodie_spark.tables.deletion_vectors import (
+        parse_roaring_bitmap_array,
+        read_dv_bytes,
+    )
+
+    bc = df.sparkSession.sparkContext.broadcast(
+        {
+            add_path_key(table_path, a["path"]): (
+                bytes(read_dv_bytes(table_path, a["deletionVector"]))
+                if a.get("deletionVector")
+                else None
+            )
+            for a in adds
+        }
+    )
+
+    def _keep_fn(fp, ri):
+        import numpy as np
+
+        out = np.ones(len(fp), dtype=bool)
+        for val in fp.unique():
+            key = scanned_path_key(val)
+            if strict and key not in bc.value:
+                raise DeltaProtocolError(
+                    f"cannot map scanned file {val!r} back to a "
+                    f"deletion-vector add entry of {table_path}; refusing "
+                    "to resurrect deleted rows"
+                )
+            raw = bc.value.get(key)
+            if raw is None:
+                continue  # add carries no DV: keep every row
+            pos = np.asarray(parse_roaring_bitmap_array(raw), dtype=np.int64)
+            m = (fp == val).values
+            out[m] = ~np.isin(ri[m].values, pos)
+        return pd.Series(out)
+
+    # real annotation objects: `from __future__ import annotations`
+    # stringifies inline hints, which pandas_udf cannot infer
+    _keep_fn.__annotations__ = {
+        "fp": pd.Series,
+        "ri": pd.Series,
+        "return": pd.Series,
+    }
+    _keep = pandas_udf(_keep_fn, T.BooleanType())
+    return df.filter(_keep(F.col("__fp__"), F.col("__ri__")))
+
+
 def _read_dv_files_df(
     spark: SparkSession,
     table_path: str,
@@ -331,15 +396,8 @@ def _read_dv_files_df(
 
     Shape, small DV sets (≤ ``_DV_BROADCAST_MAX_POSITIONS`` deleted
     rows): ONE parquet scan with ``_metadata.file_path`` /
-    ``row_index`` filtered by an Arrow-batched predicate over the
-    BROADCAST raw roaring bitmaps — no extra Spark job, no join. The
-    bitmaps are keyed by the shared path canonicalization
-    (``add_path_key`` / ``scanned_path_key``), so Spark's URI spelling
-    of ``file_path`` is normalized executor-side instead of learned
-    through the old ``distinct(file_path).collect()`` pre-job (which
-    re-scanned every DV'd file once per read). A scanned file whose key
-    maps to no add still REFUSES (task error) rather than resurrecting
-    deleted rows.
+    ``row_index`` filtered by :func:`_drop_dv_positions` (strict: a
+    scanned file that maps to no add refuses).
 
     Large DV sets keep the prior shape: positions decoded
     executor-side from a tiny (path, bytes) frame, exploded, and
@@ -381,58 +439,12 @@ def _read_dv_files_df(
     )
     total = sum(_dv_cardinality(a) for a in adds)
     if total <= _DV_BROADCAST_MAX_POSITIONS:
-        dv_bytes: dict[str, bytes | None] = {
-            key: (
-                bytes(read_dv_bytes(table_path, a["deletionVector"]))
-                if a.get("deletionVector")
-                else None
-            )
-            for key, a in by_real.items()
-        }
-        bc = spark.sparkContext.broadcast(dv_bytes)
-        tpath = table_path
-
-        def _keep_fn(fp, ri):
-            import numpy as np
-
-            out = np.ones(len(fp), dtype=bool)
-            decoded: dict[str, Any] = {}
-            for val in fp.unique():
-                key = scanned_path_key(val)
-                if key not in bc.value:
-                    raise DeltaProtocolError(
-                        f"cannot map scanned file {val!r} back to a "
-                        f"deletion-vector add entry of {tpath}; refusing "
-                        "to resurrect deleted rows"
-                    )
-                raw = bc.value[key]
-                if raw is None:
-                    continue  # add carries no DV: keep every row
-                pos = decoded.get(key)
-                if pos is None:
-                    pos = np.asarray(
-                        parse_roaring_bitmap_array(raw), dtype=np.int64
-                    )
-                    decoded[key] = pos
-                m = (fp == val).values
-                out[m] = ~np.isin(ri[m].values, pos)
-            return pd.Series(out)
-
-        # real annotation objects: `from __future__ import annotations`
-        # stringifies inline hints, which pandas_udf cannot infer
-        _keep_fn.__annotations__ = {
-            "fp": pd.Series,
-            "ri": pd.Series,
-            "return": pd.Series,
-        }
-        _keep = pandas_udf(_keep_fn, T.BooleanType())
-        return scan.filter(_keep(F.col("__fp__"), F.col("__ri__"))).drop(
+        return _drop_dv_positions(scan, table_path, adds, strict=True).drop(
             "__fp__", "__ri__"
         )
 
-    fp_values = [r[0] for r in scan.select("__fp__").distinct().collect()]
     rows = []
-    for fp in fp_values:
+    for fp in observed_file_uris(scan.select("__fp__"), "__fp__"):
         add = by_real.get(scanned_path_key(fp))
         if add is None:
             raise DeltaProtocolError(
@@ -1639,7 +1651,6 @@ class DeltaTable:
         snap = self.deltaLog.table_info()
         self.deltaLog.check_write_allowed(snap, removes_data=True)
         schema = self.schema(snap)
-        mapped = self._mapping_schemas(snap) is not None
         if deletion_vectors and condition is not None:
             self._delete_with_dvs(snap, schema, condition, t0)
             return
@@ -1681,15 +1692,13 @@ class DeltaTable:
             lineage_drop = (
                 ["__lineage_rid__", "__lineage_rcv__"] if lineage is not None else []
             )
-            touched_paths = {
-                r[0]
-                for r in cand_df.filter(F.expr(condition))
-                .select("__file__")
-                .distinct()
-                .collect()
-            }
+            cond = _frag(condition)
+            touched = map_touched_paths(
+                self.path,
+                candidates,
+                observed_file_uris(cand_df.filter(cond), "__file__"),
+            )
             scan_ms = int((time.time() - t_scan) * 1000)
-            touched = map_touched_paths(self.path, candidates, touched_paths)
             if touched:
                 touched_df = self._read_candidates(
                     snap, schema, touched, lineage=lineage
@@ -1703,14 +1712,10 @@ class DeltaTable:
                     touched_df = touched_df.persist()
                 try:
                     obs = Observation()
-                    observed = touched_df.observe(
-                        obs, F.count(F.lit(1)).alias("total")
-                    )
+                    observed = touched_df.observe(obs, F.expr("count(1) AS total"))
                     # surviving (copied) rows keep BOTH their row id and
                     # commit version — spec row-tracking preservation
-                    keep_df = observed.filter(
-                        ~F.expr(condition) | F.expr(condition).isNull()
-                    )
+                    keep_df = observed.filter(f"NOT coalesce({cond}, false)")
                     adds = self._write_rewrite_files(snap, keep_df, lineage=lineage)
                     removes = touched
                     # pre-rewrite row count rides the write job's
@@ -1725,11 +1730,9 @@ class DeltaTable:
                     )
                     deleted_rows = total_before - copied_rows
                     if cdf_on:
-                        deleted_df = (
-                            touched_df.filter(F.expr(condition))
-                            .drop(*lineage_drop)
-                            .withColumn("_change_type", F.lit("delete"))
-                        )
+                        deleted_df = touched_df.filter(cond).drop(
+                            *lineage_drop
+                        ).selectExpr("*", "'delete' AS _change_type")
                         cdc_actions = self._write_cdf_files(deleted_df, snap)
                 finally:
                     if cdf_on:
@@ -1826,65 +1829,14 @@ class DeltaTable:
     def _drop_existing_dv_positions(
         self, df: DataFrame, candidates: list[dict[str, Any]]
     ) -> DataFrame:
-        """``df`` minus rows an existing candidate DV already deleted —
-        the broadcast-bitmap Arrow predicate shape of
-        the former anti-join helper (same keying, same outcome) with NO
-        extra Spark job: the old helper learned the scan's file-path
-        spelling through a distinct().collect() pre-scan of every
-        candidate file before anti-joining exploded positions; here the
-        raw bitmaps broadcast and the spelling normalizes executor-side
-        (``scanned_path_key``). A file with no DV entry keeps all rows,
-        exactly like the old no-positions case. Returns ``df``
-        unchanged when no candidate carries a DV."""
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        from jodie_spark.tables.deletion_vectors import (
-            parse_roaring_bitmap_array,
-            read_dv_bytes,
-        )
-
-        from jodie_spark.fs import add_path_key, scanned_path_key
-
-        table_path = self.path
-        dv_bytes = {
-            add_path_key(table_path, a["path"]): bytes(
-                read_dv_bytes(table_path, a["deletionVector"])
-            )
-            for a in candidates
-            if a.get("deletionVector")
-        }
-        if not dv_bytes:
+        """``df`` minus rows an existing candidate DV already deleted
+        (:func:`_drop_dv_positions`; a candidate without a DV keeps all
+        its rows). Returns ``df`` unchanged when no candidate carries a
+        DV."""
+        dv_adds = [a for a in candidates if a.get("deletionVector")]
+        if not dv_adds:
             return df
-        bc = self.spark.sparkContext.broadcast(dv_bytes)
-
-        def _keep_fn(fp, ri):
-            import numpy as np
-
-            out = np.ones(len(fp), dtype=bool)
-            decoded: dict[str, Any] = {}
-            for val in fp.unique():
-                key = scanned_path_key(val)
-                raw = bc.value.get(key)
-                if raw is None:
-                    continue  # candidate without a DV: keep every row
-                pos = decoded.get(key)
-                if pos is None:
-                    pos = np.asarray(
-                        parse_roaring_bitmap_array(raw), dtype=np.int64
-                    )
-                    decoded[key] = pos
-                m = (fp == val).values
-                out[m] = ~np.isin(ri[m].values, pos)
-            return pd.Series(out)
-
-        _keep_fn.__annotations__ = {
-            "fp": pd.Series,
-            "ri": pd.Series,
-            "return": pd.Series,
-        }
-        _keep = pandas_udf(_keep_fn, T.BooleanType())
-        return df.filter(_keep(F.col("__fp__"), F.col("__ri__")))
+        return _drop_dv_positions(df, self.path, dv_adds, strict=False)
 
     def _write_dvs_for(
         self, matched: DataFrame, candidates: list[dict[str, Any]]
@@ -2307,7 +2259,6 @@ class DeltaTable:
             raise JodieValidationError(
                 f"UPDATE cannot assign identity column(s) {sorted(bad)}"
             )
-        mapped = self._mapping_schemas(snap) is not None
         if deletion_vectors and condition is not None:
             set_exprs = {
                 k: (v if isinstance(v, Column) else F.expr(str(v)))
@@ -2322,15 +2273,17 @@ class DeltaTable:
             schema,
             snap.partition_columns,
         )
-        cond_col = F.expr(condition) if condition else F.lit(True)
+        cond = _frag(condition) if condition else "TRUE"
 
         adds: list[dict[str, Any]] = []
         removes: list[dict[str, Any]] = []
         cdc_actions: list[dict[str, Any]] = []
         lineage_actions: list[dict[str, Any]] = []
         updated_rows = 0
+        scan_ms = 0
 
         if candidates:
+            t_scan = time.time()
             lineage, lineage_actions = self._lineage_setup(snap, candidates)
             # pass 1 probe is NOT cached (column pruning reaches the
             # parquet scan: condition columns + file path only); pass 2
@@ -2346,30 +2299,49 @@ class DeltaTable:
                 cand_df = self._read_candidates(snap, schema, candidates).withColumn(
                     "__file__", F.input_file_name()
                 )
-            touched_df = None
-            cdf_on = False
-            try:
-                raw_touched_paths = {
-                    r[0] for r in cand_df.filter(cond_col).select("__file__").distinct().collect()
-                }
-                touched = map_touched_paths(self.path, candidates, raw_touched_paths)
-                if touched:
-                    touched_df = self._read_candidates(
-                        snap, schema, touched, lineage=lineage
+            touched = map_touched_paths(
+                self.path,
+                candidates,
+                observed_file_uris(cand_df.filter(cond), "__file__"),
+            )
+            scan_ms = int((time.time() - t_scan) * 1000)
+            if touched:
+                touched_df = self._read_candidates(
+                    snap, schema, touched, lineage=lineage
+                )
+                if lineage is not None:
+                    touched_df = touched_df.drop("__file__")
+                # one CAST(CASE …) text per assigned field, as merge
+                # lowers its clauses; a Column-object value travels in
+                # a hidden column evaluated on matched rows only
+                hidden: dict[str, Column] = {}
+                fields = []
+                for f in schema.fields:
+                    q = quote_ident(f.name)
+                    if f.name not in set:
+                        fields.append(q)
+                        continue
+                    v = set[f.name]
+                    if isinstance(v, Column):
+                        h = f"__col{len(hidden)}__"
+                        hidden[h] = F.call_function("if", F.expr(cond), v, F.lit(None))
+                        v = h
+                    else:
+                        v = _frag(str(v))
+                    fields.append(
+                        f"CAST(CASE WHEN {cond} THEN {v} ELSE {q} END"
+                        f" AS {type_ddl(f.dataType)}) AS {q}"
                     )
-                    if lineage is not None:
-                        touched_df = touched_df.drop("__file__")
-                    cdf_on = self.is_cdf_enabled(snap)
-                    if cdf_on:
-                        # CDF re-consumes the touched scan twice (pre
-                        # and post images); cache it for those re-reads
-                        touched_df = touched_df.persist()
-                    set_exprs = {
-                        k: (v if isinstance(v, Column) else F.expr(str(v))) for k, v in set.items()
-                    }
+                staged = touched_df.withColumns(hidden) if hidden else touched_df
+                cdf_on = self.is_cdf_enabled(snap)
+                if cdf_on:
+                    # CDF re-consumes the touched scan twice (pre and
+                    # post images); cache it for those re-reads
+                    staged = staged.persist()
+                try:
                     obs = Observation()
-                    observed = touched_df.observe(
-                        obs, F.sum(F.when(cond_col, 1).otherwise(0)).alias("updated")
+                    observed = staged.observe(
+                        obs, F.expr(f"sum(CASE WHEN {cond} THEN 1 ELSE 0 END) AS updated")
                     )
                     # row tracking: every rewritten row keeps its id;
                     # MODIFIED rows get a NULL materialized commit
@@ -2378,55 +2350,37 @@ class DeltaTable:
                     # rows keep their original version
                     lineage_out = (
                         [
-                            F.col(LIN_RID).alias(LIN_RID),
-                            F.when(cond_col, F.lit(None).cast("long"))
-                            .otherwise(F.col(LIN_RCV))
-                            .alias(LIN_RCV),
+                            LIN_RID,
+                            f"CASE WHEN {cond} THEN CAST(NULL AS BIGINT)"
+                            f" ELSE {LIN_RCV} END AS {LIN_RCV}",
                         ]
                         if lineage is not None
                         else []
                     )
-                    new_df = observed.select(
-                        *[
-                            F.when(cond_col, set_exprs[f.name]).otherwise(F.col(f.name)).alias(f.name)
-                            if f.name in set_exprs
-                            else F.col(f.name)
-                            for f in schema.fields
-                        ],
-                        *lineage_out,
-                    )
                     adds = self._write_rewrite_files(
                         snap,
                         enforce_check_constraints(
-                            apply_generated_columns(new_df, schema),
+                            apply_generated_columns(
+                                observed.selectExpr(*fields, *lineage_out), schema
+                            ),
                             snap.configuration,
                         ),
                         lineage=lineage,
                     )
                     removes = touched
                     updated_rows = int(obs.get["updated"] or 0)
-                    if self.is_cdf_enabled(snap):
-                        pre = (
-                            touched_df.filter(cond_col)
-                            .select(*[F.col(f.name) for f in schema.fields])
-                            .withColumn("_change_type", F.lit("update_preimage"))
+                    if cdf_on:
+                        pre = staged.filter(cond).selectExpr(
+                            *[quote_ident(f.name) for f in schema.fields],
+                            "'update_preimage' AS _change_type",
                         )
-                        post = (
-                            touched_df.filter(cond_col)
-                            .select(
-                                *[
-                                    set_exprs[f.name].alias(f.name)
-                                    if f.name in set_exprs
-                                    else F.col(f.name)
-                                    for f in schema.fields
-                                ]
-                            )
-                            .withColumn("_change_type", F.lit("update_postimage"))
+                        post = staged.filter(cond).selectExpr(
+                            *fields, "'update_postimage' AS _change_type"
                         )
                         cdc_actions = self._write_cdf_files(pre.unionByName(post), snap)
-            finally:
-                if cdf_on and touched_df is not None:
-                    touched_df.unpersist()
+                finally:
+                    if cdf_on:
+                        staged.unpersist()
 
         actions: list[dict[str, Any]] = lineage_actions + list(cdc_actions)
         actions += [{"add": a} for a in adds]
@@ -2453,8 +2407,8 @@ class DeltaTable:
             "numCopiedRows": str(max(0, total_touched - updated_rows)),
             "numAddedChangeFiles": str(len(cdc_actions)),
             "executionTimeMs": str(int((time.time() - t0) * 1000)),
-            "scanTimeMs": "0",
-            "rewriteTimeMs": str(int((time.time() - t0) * 1000)),
+            "scanTimeMs": str(scan_ms),
+            "rewriteTimeMs": str(max(0, int((time.time() - t0) * 1000) - scan_ms)),
         }
         params = {"predicate": condition or ""}
         from jodie_spark.tables.pruning import make_read_checker
@@ -3298,12 +3252,43 @@ def map_touched_paths(
     return [by_abs[p] for p in sorted(normalized)]
 
 
-def _strip_scheme(p: str) -> str:
-    if p.startswith("file:"):
-        p = p[len("file:") :]
-        while p.startswith("//"):
-            p = p[1:]
-    return urllib.parse.unquote(p)
+def observed_metrics(df: DataFrame, **metrics: str) -> dict[str, Any]:
+    """Run ``df`` by ONE noop action while observing ``metrics`` (name →
+    SQL aggregate text) and return their values. Every touched-file and
+    URI-spelling probe runs through here: observing
+    ``collect_set(<file col>)`` finds the files a scan read without a
+    shuffle (a plain scan is one Spark job; ``distinct().collect()`` is
+    two). The action runs in ``df``'s session, which is where the
+    observation fires (the field-id child session on ``mode=id``
+    tables).
+
+    Observe at the TOP of the plan: Spark still reports metrics there
+    over an empty source or a filter that folds to false, but AQE's
+    empty-relation propagation can drop an observation that sits under
+    a shuffle. A missing metric RAISES: read as "no files", it would
+    make a DML rewrite nothing, or a merge re-insert its matched rows
+    as duplicates."""
+    obs = Observation()
+    df.observe(
+        obs, *[F.expr(f"{agg} AS {name}") for name, agg in metrics.items()]
+    ).write.format("noop").mode("overwrite").save()
+    try:
+        got = obs.get
+    except Py4JJavaError:  # no metrics row: the observation was dropped
+        got = {}
+    missing = [name for name in metrics if name not in got]
+    if missing:
+        raise DeltaProtocolError(
+            f"the probe's observation reported no {missing}; refusing to "
+            "treat the scan as having read no files"
+        )
+    return got
+
+
+def observed_file_uris(df: DataFrame, col: str) -> set[str]:
+    """The distinct values of ``col`` — Spark's URI spelling of the files
+    ``df``'s rows came from — through :func:`observed_metrics`."""
+    return set(observed_metrics(df, files=f"collect_set({col})")["files"] or ())
 
 
 # ---------------------------------------------------------------------------
