@@ -36,7 +36,7 @@ from pyspark.sql import types as T
 
 from jodie_spark.errors import DeltaProtocolError, VersionNotFoundError
 from jodie_spark.tables.log import DeltaLog
-from jodie_spark.tables.table import CDF_PROP, DeltaTable
+from jodie_spark.tables.table import CDF_PROP, DeltaTable, scan_parquet
 
 
 def _cdf_enabled(configuration: dict[str, Any]) -> bool:
@@ -155,39 +155,26 @@ def read_cdf(
         return rename_to_logical(df, logical, physical, keep=extra)
 
     read_schema = schema if ms is None else ms[1]
-    scan_spark = spark
-    if ms is not None:
-        from jodie_spark.tables.column_mapping import schema_requests_field_ids
-        from jodie_spark.tables.table import _field_id_read_session
-
-        if schema_requests_field_ids(read_schema):
-            # mode=id tables: data/cdc files resolve by footer field id
-            scan_spark = _field_id_read_session(spark)
-
     if cdc_files:
-        cdc_df = (
-            scan_spark.read.format("parquet")
-            .schema(
-                T.StructType(
-                    list(read_schema.fields)
-                    + [T.StructField("_change_type", T.StringType())]
-                )
-            )
-            .load([p for p, _, _ in cdc_files])
-            .withColumn("___file", F.input_file_name())
+        cdc_df = scan_parquet(
+            spark,
+            [p for p, _, _ in cdc_files],
+            T.StructType(
+                list(read_schema.fields) + [T.StructField("_change_type", T.StringType())]
+            ),
+            cols=["*", "input_file_name() AS ___file"],
         )
         cdc_df = _logical(cdc_df, ("_change_type", "___file"))
         parts.append(_join_version(spark, cdc_df, cdc_files))
     for file_group, change_type in ((insert_files, "insert"), (delete_files, "delete")):
         if not file_group:
             continue
-        grp_df = (
-            scan_spark.read.format("parquet")
-            .option("basePath", path)
-            .schema(read_schema)
-            .load([p for p, _, _ in file_group])
-            .withColumn("_change_type", F.lit(change_type))
-            .withColumn("___file", F.input_file_name())
+        grp_df = scan_parquet(
+            spark,
+            [p for p, _, _ in file_group],
+            read_schema,
+            path,
+            cols=["*", f"'{change_type}' AS _change_type", "input_file_name() AS ___file"],
         )
         grp_df = _logical(grp_df, ("_change_type", "___file"))
         parts.append(_join_version(spark, grp_df, file_group))

@@ -110,19 +110,16 @@ def read_candidates_with_lineage(
     is relative to ``table_path``.
     """
     from jodie_spark.errors import DeltaProtocolError
-    from jodie_spark.fs import scanned_path_key
-    from jodie_spark.tables.column_mapping import schema_requests_field_ids
+    from jodie_spark.fs import add_path_key, scanned_path_key
+    from jodie_spark.tables.merge import quote_ident
     from jodie_spark.tables.table import (
         _DV_BROADCAST_MAX_POSITIONS,
         _dv_cardinality,
-        _field_id_read_session,
+        _spark_paths,
         observed_file_uris,
+        scan_parquet,
     )
 
-    if schema_requests_field_ids(schema):
-        # mode=id physical schema: match parquet columns by footer field
-        # id through the scoped child session (see read_files_df)
-        spark = _field_id_read_session(spark)
     ext_schema = T.StructType(
         list(schema.fields)
         + [
@@ -130,24 +127,15 @@ def read_candidates_with_lineage(
             T.StructField(rcv_col, T.LongType()),
         ]
     )
-    by_real: dict[str, dict[str, Any]] = {}
-    paths = []
-    for a in adds:
-        abs_p = os.path.join(table_path, urllib.parse.unquote(a["path"]))
-        paths.append(abs_p)
-        by_real[os.path.realpath(abs_p)] = a
-    scan = (
-        spark.read.format("parquet")
-        .option("basePath", table_path)
-        .schema(ext_schema)
-        .load(paths)
-        .select(
-            *[F.col(f.name) for f in schema.fields],
-            F.col(rid_col),
-            F.col(rcv_col),
-            F.col("_metadata.file_path").alias("__file__"),
-            F.col("_metadata.row_index").alias("__ri__"),
-        )
+    by_real = {add_path_key(table_path, a["path"]): a for a in adds}
+    base, paths = _spark_paths(table_path, adds)
+    scan = scan_parquet(
+        spark, paths, ext_schema, base,
+        cols=[
+            *(quote_ident(f.name) for f in ext_schema.fields),
+            "_metadata.file_path AS __file__",
+            "_metadata.row_index AS __ri__",
+        ],
     )
     # learn Spark's exact URI spelling for each candidate (one
     # metadata-only job, O(#files)) — string-reconstructing URIs is how
@@ -178,6 +166,7 @@ def read_candidates_with_lineage(
             T.StructField("__dflt_rcv__", T.LongType()),
         ]
     )
+    spark = scan.sparkSession
     out = scan.join(
         F.broadcast(spark.createDataFrame(lin_rows, lin_schema)), "__file__", "left"
     )
@@ -207,14 +196,13 @@ def read_candidates_with_lineage(
             positions = F.broadcast(positions)
         out = out.join(positions, ["__file__", "__ri__"], "left_anti")
 
-    return out.select(
-        *[F.col(f.name) for f in schema.fields],
-        F.col("__file__").alias(file_col),
-        *([F.col("__ri__")] if keep_row_index else []),
-        F.coalesce(F.col(rid_col), F.col("__base_rid__") + F.col("__ri__")).alias(
-            LIN_RID
-        ),
-        F.coalesce(F.col(rcv_col), F.col("__dflt_rcv__")).alias(LIN_RCV),
+    rid, rcv = quote_ident(rid_col), quote_ident(rcv_col)
+    return out.selectExpr(
+        *[quote_ident(f.name) for f in schema.fields],
+        f"__file__ AS {quote_ident(file_col)}",
+        *(["__ri__"] if keep_row_index else []),
+        f"coalesce({rid}, __base_rid__ + __ri__) AS {LIN_RID}",
+        f"coalesce({rcv}, __dflt_rcv__) AS {LIN_RCV}",
     )
 
 

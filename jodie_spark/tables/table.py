@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 import urllib.parse
 from typing import Any
@@ -25,7 +26,7 @@ from pyspark.sql import types as T
 
 from jodie_spark.errors import DeltaProtocolError, JodieValidationError
 from jodie_spark.tables.log import CHECKPOINT_PROTECTION_PROP, DeltaLog, Snapshot
-from jodie_spark.tables.merge import _frag, quote_ident, type_ddl
+from jodie_spark.tables.merge import _frag, _str_lit, quote_ident, type_ddl
 from jodie_spark.tables.writer import write_data_files, write_metrics
 
 CDF_PROP = "delta.enableChangeDataFeed"
@@ -138,8 +139,8 @@ def _schema_from_string(schema_string: str) -> T.StructType:
 
 
 # Runtime confs that shape a parquet scan's semantics: mirrored from the
-# user's session into the field-id reader session on every use, so a
-# mode=id scan behaves like any other scan of that session.
+# user's session into the field-id reader session, so a mode=id scan
+# behaves like any other scan of that session.
 _FID_MIRRORED_CONFS = (
     "spark.sql.session.timeZone",
     "spark.sql.files.maxPartitionBytes",
@@ -162,28 +163,86 @@ def _field_id_read_session(spark: SparkSession) -> SparkSession:
     this child session keeps the conf scoped to the relation: Spark
     builds parquet readers from the RELATION's session, so the returned
     DataFrame keeps id-matching even when unioned/joined/collected from
-    the user's session, whose conf is never touched."""
+    the user's session, whose conf is never touched.
+
+    Every call re-reads the mirrored confs from ``spark`` and sets on
+    the child only those whose value changed since the last call."""
     child = getattr(spark, "_jodie_field_id_session", None)
     if child is None:
         child = spark.newSession()
         child.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+        child._jodie_mirrored_confs = {}
         spark._jodie_field_id_session = child
+    mirrored = child._jodie_mirrored_confs
     for key in _FID_MIRRORED_CONFS:
         try:
-            child.conf.set(key, spark.conf.get(key))
+            value = spark.conf.get(key)
+            if mirrored.get(key) != value:
+                child.conf.set(key, value)
+                mirrored[key] = value
         except Exception:
             pass  # unset / non-runtime conf: leave the child's default
     return child
 
 
+# Spark's file path and row index of each scanned row (the DV
+# coordinate system), as selectExpr text
+_FP_RI = ("_metadata.file_path AS __fp__", "_metadata.row_index AS __ri__")
 
-def _schema_order_select(df: DataFrame, schema: T.StructType) -> DataFrame:
-    """Project to the schema's columns in schema order via ONE
-    selectExpr — per-field F.col() Columns cost 3x the py4j round
-    trips, paid on every candidate/rewrite scan."""
-    return df.selectExpr(
-        *[f"`{f.name.replace('`', '``')}`" for f in schema.fields]
-    )
+# Prepared parquet readers one session keeps, one per (table root,
+# schema) it scans; past the bound the least recently used one goes.
+_SCAN_READERS_MAX = 32
+_SCAN_READERS_LOCK = threading.Lock()
+
+
+def scan_parquet(
+    spark: SparkSession,
+    paths: list[str],
+    schema: T.StructType | None = None,
+    base: str | None = None,
+    cols: list[str] | None = None,
+) -> DataFrame:
+    """The one parquet scan of data files named by the log (never a
+    storage listing); ``paths`` are Spark-plane paths.
+
+    The reader (``format``, ``basePath``, schema) is set up once per
+    (session, ``base``, ``schema``) and kept on the session object, so
+    a repeat scan pays only the ``load``. A schema carrying parquet
+    field ids routes the scan through the field-id child session.
+
+    ``base`` (the table root) gives Hive-style partition-column
+    reconstruction; ``schema`` pins partition-value types and fills
+    columns missing from older files with NULLs. ``cols`` is the
+    projection as SQL text, one ``selectExpr``. Without it the scan is
+    projected to ``schema``'s columns in schema order only where
+    Spark's own order can differ: a ``key=value`` directory below
+    ``base`` is a partition column, which Spark puts after the file
+    columns (or adds, when the schema does not name it). No paths is an
+    empty scan with the schema's columns."""
+    from jodie_spark.tables.column_mapping import schema_requests_field_ids
+
+    if schema is not None and schema_requests_field_ids(schema):
+        spark = _field_id_read_session(spark)
+    key = (base, schema.json() if schema is not None else None)
+    with _SCAN_READERS_LOCK:  # a streaming sink scans from its own thread
+        cache = spark.__dict__.setdefault("_jodie_scan_readers", {})
+        reader = cache.pop(key, None)
+        if reader is None:
+            reader = spark.read.format("parquet")
+            if base is not None:
+                reader = reader.option("basePath", base)
+            if schema is not None:
+                reader = reader.schema(schema)
+            if len(cache) >= _SCAN_READERS_MAX:
+                cache.pop(next(iter(cache)))
+        cache[key] = reader
+    df = reader.load(paths) if paths else reader.load()
+    if cols is None and base is not None and any(
+        "=" in p[len(base):].rpartition("/")[0] for p in paths
+    ):
+        cols = [quote_ident(f.name) for f in schema.fields]
+    return df.selectExpr(*cols) if cols else df
+
 
 def read_files_df(
     spark: SparkSession,
@@ -191,17 +250,22 @@ def read_files_df(
     schema: T.StructType,
     adds: list[dict[str, Any]],
 ) -> DataFrame:
-    """Load the given add-files as one DataFrame.
+    """Load the given add-files as one DataFrame with ``schema``'s
+    columns in schema order.
 
-    The explicit file list (from the log, never a storage listing) plus
-    ``basePath`` gives Hive-style partition-column reconstruction; the
-    explicit schema pins partition-value types and fills columns missing
-    from older files (schema evolution) with nulls.
+    Plain files are one :func:`scan_parquet` of the explicit file list
+    (from the log, never a storage listing) with the table root as
+    ``basePath``: a repeat scan of the same table and schema reuses the
+    session's prepared reader, and the schema-order projection runs
+    only for ``key=value`` (partition) directories. No adds is an empty
+    scan through the same reader (one py4j round trip).
 
-    Files carrying a ``deletionVector`` descriptor take a second scan
-    that anti-joins deleted row indexes (``_metadata.row_index``)
-    before unioning with the plain fast path — see
-    :mod:`jodie_spark.tables.deletion_vectors`.
+    Files outside the table directory (shallow clones) take
+    :func:`_read_external_files_df`; files carrying a ``deletionVector``
+    descriptor take :func:`_read_dv_files_df`, which drops deleted row
+    indexes (``_metadata.row_index``) — see
+    :mod:`jodie_spark.tables.deletion_vectors`. The parts are unioned
+    by name.
     """
     def _is_external(a: dict[str, Any]) -> bool:
         p = urllib.parse.unquote(a["path"])
@@ -209,13 +273,6 @@ def read_files_df(
             os.path.abspath(table_path) + os.sep
         )
 
-    from jodie_spark.tables.column_mapping import schema_requests_field_ids
-
-    if schema_requests_field_ids(schema):
-        # mode=id physical schema: the scan must match parquet columns
-        # by footer field id (foreign writers' column names need not
-        # equal physicalName) — route through the scoped child session
-        spark = _field_id_read_session(spark)
     plain, dv, external = [], [], []
     for a in adds:
         if _dv_cardinality(a):
@@ -230,34 +287,32 @@ def read_files_df(
         else:
             plain.append(a)
     parts: list[DataFrame] = []
-    if plain:
+    if plain or not adds:
         # the facade translates schemed table paths for Spark's Hadoop
         # data plane (identity for local tables)
-        from jodie_spark.fs import get_fs
-
-        _fs = get_fs(table_path)
-        base = _fs.spark_path(table_path)
-        paths = [
-            _fs.spark_path(_fs.join(table_path, urllib.parse.unquote(a["path"])))
-            for a in plain
-        ]
-        df = (
-            spark.read.format("parquet")
-            .option("basePath", base)
-            .schema(schema)
-            .load(paths)
-        )
-        parts.append(_schema_order_select(df, schema))
+        base, paths = _spark_paths(table_path, plain)
+        parts.append(scan_parquet(spark, paths, schema, base))
     if external:
         parts.append(_read_external_files_df(spark, schema, external))
     if dv:
         parts.append(_read_dv_files_df(spark, table_path, schema, dv))
-    if not parts:
-        return spark.createDataFrame([], schema)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def _spark_paths(
+    table_path: str, adds: list[dict[str, Any]]
+) -> tuple[str, list[str]]:
+    """(table root, add files) on Spark's data plane."""
+    from jodie_spark.fs import get_fs
+
+    _fs = get_fs(table_path)
+    return _fs.spark_path(table_path), [
+        _fs.spark_path(_fs.join(table_path, urllib.parse.unquote(a["path"])))
+        for a in adds
+    ]
 
 
 def _dv_cardinality(add: dict[str, Any]) -> int:
@@ -279,13 +334,11 @@ def _read_external_files_df(
     partition."""
     paths = [urllib.parse.unquote(a["path"]) for a in adds]
     by_real = {os.path.realpath(p): a for p, a in zip(paths, adds)}
-    scan = spark.read.format("parquet").load(paths).select(
-        "*", F.col("_metadata.file_path").alias("__fp__")
-    )
+    scan = scan_parquet(spark, paths, cols=["*", "_metadata.file_path AS __fp__"])
     present = set(scan.columns) - {"__fp__"}
     missing = [f for f in schema.fields if f.name not in present]
     if not missing:
-        return _schema_order_select(scan, schema)
+        return scan.selectExpr(*[quote_ident(f.name) for f in schema.fields])
     # map Spark's exact URI spelling back to add entries (same
     # collect-and-match as the DV reader — O(#files), never per row;
     # string-reconstructing the URI driver-side is how silent
@@ -308,11 +361,11 @@ def _read_external_files_df(
     )
     joined = scan.join(F.broadcast(spark.createDataFrame(rows, pv_schema)), "__fp__")
     missing_names = {m.name for m in missing}
-    return joined.select(
+    return joined.selectExpr(
         *[
-            F.col(f.name).cast(f.dataType).alias(f.name)
+            f"CAST({quote_ident(f.name)} AS {type_ddl(f.dataType)}) AS {quote_ident(f.name)}"
             if f.name in missing_names
-            else F.col(f.name)
+            else quote_ident(f.name)
             for f in schema.fields
         ]
     )
@@ -413,29 +466,14 @@ def _read_dv_files_df(
         read_dv_bytes,
     )
 
-    from jodie_spark.fs import add_path_key, get_fs, scanned_path_key
+    from jodie_spark.fs import add_path_key, scanned_path_key
 
-    _fs = get_fs(table_path)
-    by_real: dict[str, dict[str, Any]] = {}
-    paths = []
-    for a in adds:
-        # Spark's Hadoop scan needs the data-plane translation for
-        # schemed tables (identity for local ones); keys use the ONE
-        # shared canonicalization (jodie_spark.fs.add_path_key)
-        paths.append(
-            _fs.spark_path(_fs.join(table_path, urllib.parse.unquote(a["path"])))
-        )
-        by_real[add_path_key(table_path, a["path"])] = a
-    scan = (
-        spark.read.format("parquet")
-        .option("basePath", _fs.spark_path(table_path))
-        .schema(schema)
-        .load(paths)
-        .select(
-            *[F.col(f.name) for f in schema.fields],
-            F.col("_metadata.file_path").alias("__fp__"),
-            F.col("_metadata.row_index").alias("__ri__"),
-        )
+    # keys use the ONE shared canonicalization (jodie_spark.fs.add_path_key)
+    by_real = {add_path_key(table_path, a["path"]): a for a in adds}
+    base, paths = _spark_paths(table_path, adds)
+    scan = scan_parquet(
+        spark, paths, schema, base,
+        cols=[*(quote_ident(f.name) for f in schema.fields), *_FP_RI],
     )
     total = sum(_dv_cardinality(a) for a in adds)
     if total <= _DV_BROADCAST_MAX_POSITIONS:
@@ -465,7 +503,7 @@ def _read_dv_files_df(
         [T.StructField("__fp__", T.StringType()), T.StructField("__dv__", T.BinaryType())]
     )
     positions = (
-        spark.createDataFrame(rows, pos_schema)
+        scan.sparkSession.createDataFrame(rows, pos_schema)
         .select("__fp__", F.explode(_decode(F.col("__dv__"))).alias("__ri__"))
     )
     return scan.join(positions, ["__fp__", "__ri__"], "left_anti").drop(
@@ -1793,32 +1831,11 @@ class DeltaTable:
         columns (the DV coordinate system). With ``snap`` the scan is
         column-mapping-aware: physical-named files read with the
         physical schema, rows surfaced under logical names."""
-        from jodie_spark.tables.column_mapping import schema_requests_field_ids
-
         ms = self._mapping_schemas(snap) if snap is not None else None
-        read_schema = schema if ms is None else ms[1]
-        scan_spark = (
-            _field_id_read_session(self.spark)
-            if schema_requests_field_ids(read_schema)
-            else self.spark
-        )
-        from jodie_spark.fs import get_fs
-
-        _fs = get_fs(self.path)
-        paths = [
-            _fs.spark_path(_fs.join(self.path, urllib.parse.unquote(a["path"])))
-            for a in candidates
-        ]
-        out = (
-            scan_spark.read.format("parquet")
-            .option("basePath", _fs.spark_path(self.path))
-            .schema(read_schema)
-            .load(paths)
-            .select(
-                "*",
-                F.col("_metadata.file_path").alias("__fp__"),
-                F.col("_metadata.row_index").alias("__ri__"),
-            )
+        base, paths = _spark_paths(self.path, candidates)
+        out = scan_parquet(
+            self.spark, paths, schema if ms is None else ms[1], base,
+            cols=["*", *_FP_RI],
         )
         if ms is not None:
             from jodie_spark.tables.column_mapping import rename_to_logical
@@ -3019,9 +3036,12 @@ class OptimizeBuilder:
         )
         def _metrics_df(metrics: dict) -> DataFrame:
             # delta-spark parity: OPTIMIZE returns a metrics row, not
-            # the table data (also keeps the no-op path metadata-only)
-            return t.spark.createDataFrame(
-                [(t.path, metrics)], "path string, metrics map<string,string>"
+            # the table data (also keeps the no-op path metadata-only);
+            # SQL text, not createDataFrame's RDD path
+            kv = ", ".join(f"{_str_lit(k)}, {_str_lit(v)}" for k, v in metrics.items())
+            return t.spark.sql(
+                f"SELECT {_str_lit(t.path)} AS path, "
+                f"CAST(map({kv}) AS map<string,string>) AS metrics"
             )
 
         # zcube signature: logical clustering columns, order-insensitive

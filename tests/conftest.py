@@ -1,6 +1,7 @@
 import shutil
 import sys
 import tempfile
+import threading
 
 import pytest
 
@@ -21,3 +22,37 @@ def tmpdir_path():
     d = tempfile.mkdtemp(prefix="jodie_test_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
+
+
+def py4j_round_trips(spark, fn) -> int:
+    """py4j commands ``fn()`` sends to the JVM from the calling thread,
+    counted on the gateway client the way perfbench's GatewayCounter
+    counts them. Object-release commands (py4j's ``m``) are left out:
+    they follow Python's garbage collector, which frees earlier work's
+    objects at arbitrary points. So are other threads' commands (a
+    streaming query's foreachBatch callback, say)."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    me = threading.get_ident()
+    n = 0
+
+    def counted(command, *args, **kwargs):
+        nonlocal n
+        if threading.get_ident() == me and not command.startswith("m"):
+            n += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counted
+    try:
+        fn()
+    finally:
+        client.send_command = send
+    return n
+
+
+def spark_jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` starts, from the DAG scheduler's job ids."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = int(dag.nextJobId())
+    fn()
+    return int(dag.nextJobId()) - j0

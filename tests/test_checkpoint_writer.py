@@ -16,6 +16,7 @@ import shutil
 
 import pytest
 
+from conftest import py4j_round_trips, spark_jobs
 from jodie_spark.tables import distribution
 from jodie_spark.tables import log as log_mod
 from jodie_spark.tables import table as table_mod
@@ -24,26 +25,11 @@ from jodie_spark.tables.table import DeltaTable, write_delta
 
 
 def _jvm_traffic(spark, fn):
-    """(py4j commands, Spark jobs) of ``fn()``. Object-release commands
-    (py4j's ``m``) are left out: they follow Python's garbage collector,
-    which frees earlier work's objects at arbitrary points."""
-    sc = spark.sparkContext
-    jobs0 = int(sc._jsc.sc().dagScheduler().nextJobId())
-    client = sc._gateway._gateway_client
-    send = client.send_command
-    n = 0
-
-    def counted(command, *args, **kwargs):
-        nonlocal n
-        n += not command.startswith("m")
-        return send(command, *args, **kwargs)
-
-    client.send_command = counted
-    try:
-        fn()
-    finally:
-        client.send_command = send
-    return n, int(sc._jsc.sc().dagScheduler().nextJobId()) - jobs0
+    """(py4j round trips, Spark jobs) of ``fn()``; the job count's own
+    py4j calls happen outside the round-trip count."""
+    calls = []
+    jobs = spark_jobs(spark, lambda: calls.append(py4j_round_trips(spark, fn)))
+    return calls[0], jobs
 
 
 def _rows(spark, p):

@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import py4j_round_trips
 from jodie_spark import sql
 from jodie_spark.errors import JodieValidationError
 from jodie_spark.operators.cdf import read_cdf
@@ -239,27 +240,6 @@ def test_column_assignment_evaluated_only_on_its_clause_rows(spark, tmpdir_path)
     assert _rows(t) == [(1, 10), (2, 5), (3, 5)]
 
 
-def _count_py4j(spark, fn) -> int:
-    """py4j commands ``fn`` sends to the JVM. Object-release commands
-    (py4j's ``m``) are left out: they follow Python's garbage collector,
-    which frees earlier work's objects at arbitrary points."""
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    n = 0
-
-    def counted(command, *args, **kwargs):
-        nonlocal n
-        n += not command.startswith("m")
-        return send(command, *args, **kwargs)
-
-    client.send_command = counted
-    try:
-        fn()
-    finally:
-        client.send_command = send
-    return n
-
-
 def test_star_merge_round_trips_match_string_merge(spark, tmpdir_path):
     """A 6-column updateAll/insertAll merge lowers to the same SQL text as
     its string-assignment form; only the source-row struct costs extra
@@ -288,8 +268,8 @@ def test_star_merge_round_trips_match_string_merge(spark, tmpdir_path):
 
     merge(True, "warm_star")()
     merge(False, "warm_text")()
-    star = _count_py4j(spark, merge(True, "star"))
-    text = _count_py4j(spark, merge(False, "text"))
+    star = py4j_round_trips(spark, merge(True, "star"))
+    text = py4j_round_trips(spark, merge(False, "text"))
     assert star - text <= 10, (star, text)
 
 

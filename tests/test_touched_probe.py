@@ -12,17 +12,10 @@ import pytest
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
+from conftest import py4j_round_trips, spark_jobs
 from jodie_spark.errors import DeltaProtocolError, MergeMultipleMatchesError
 from jodie_spark.operators.cdf import read_cdf
 from jodie_spark.tables.table import DeltaTable, observed_file_uris, write_delta
-
-
-def _jobs(spark, fn):
-    """Spark jobs ``fn()`` starts, from the DAG scheduler's job ids."""
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    j0 = int(dag.nextJobId())
-    fn()
-    return int(dag.nextJobId()) - j0
 
 
 def _kv(spark, tmpdir_path, name="t", files=1, options=None):
@@ -58,10 +51,10 @@ def test_dml_over_one_candidate_file_runs_two_jobs(spark, tmpdir_path, op):
     """Probe (one observed scan) + rewrite; distinct() made it three."""
     t = _kv(spark, tmpdir_path)
     if op == "delete":
-        jobs = _jobs(spark, lambda: t.delete("k = 5"))
+        jobs = spark_jobs(spark, lambda: t.delete("k = 5"))
         assert _rows(t) == [(i, i) for i in range(100) if i != 5]
     else:
-        jobs = _jobs(spark, lambda: t.update("k = 5", {"v": "v + 1000"}))
+        jobs = spark_jobs(spark, lambda: t.update("k = 5", {"v": "v + 1000"}))
         assert _rows(t) == [(i, i + 1000 * (i == 5)) for i in range(100)]
     assert jobs == 2
 
@@ -72,7 +65,7 @@ def test_merge_probe_is_one_job_lighter(spark, tmpdir_path):
     collect. Pinned at the measured count, one below the old 8."""
     t = _kv(spark, tmpdir_path)
     src = spark.createDataFrame([(5, 50), (500, 1)], "k long, v long")
-    assert _jobs(spark, lambda: _upsert(t, src)) == 7
+    assert spark_jobs(spark, lambda: _upsert(t, src)) == 7
     assert _rows(t) == sorted(
         [(i, 50 if i == 5 else i) for i in range(100)] + [(500, 1)]
     )
@@ -117,7 +110,7 @@ def test_by_source_clauses_find_their_files(spark, tmpdir_path):
             .execute()
         )
 
-    assert _jobs(spark, merge) == 10
+    assert spark_jobs(spark, merge) == 10
     assert _rows(t) == [(i, 50 if i == 5 else i) for i in range(90)]
     m = _last_metrics(t)
     assert (m["numTargetFilesRemoved"], m["numTargetRowsDeleted"]) == ("2", "10")
