@@ -10,26 +10,24 @@ Scale design (the reason this module exists): the log is read by
 ``spark.read``, reconciled with a window over path — so a
 million-file table's metadata is a distributed dataset, exactly how
 Delta evaluates data skipping on large tables. File skipping is a
-``filter()`` over parsed stats columns; the driver never materializes
-the file list.
+``filter()`` with an Arrow UDF (:func:`skipping_keep`) that runs the
+driver planner's own kernel in the tasks, over just the
+``partitionValues`` and ``stats`` columns; the driver never
+materializes the file list.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jodie_spark.tables.log import DeltaLog, commit_file_name
-from jodie_spark.tables.pruning import (
-    _coerce,
-    _prefix_upper,
-    _split_top_level,
-    classify_conjunct,
-    split_conjuncts,
-)
+from jodie_spark.tables.pruning import classify_conjunct, split_conjuncts
+from jodie_spark.tables.pruning_arrow import exact_keep_mask
 from jodie_spark.tables.table import DeltaTable
 
 # output column names — parity: reference delta/DeltaConstants.scala:5-31
@@ -362,7 +360,7 @@ def write_checkpoint_spark(
 
 def _stats_schema(table_schema: T.StructType) -> T.StructType:
     """Typed schema for the per-file stats JSON — min/max values typed as
-    their table columns so comparisons are native, not string-ly."""
+    their table columns, for outputs that expose parsed stats."""
     leaf = [f for f in table_schema.fields if not isinstance(f.dataType, (T.StructType, T.ArrayType, T.MapType))]
     mm = T.StructType([T.StructField(f.name, f.dataType) for f in leaf])
     nc = T.StructType([T.StructField(f.name, T.LongType()) for f in leaf])
@@ -376,196 +374,26 @@ def _stats_schema(table_schema: T.StructType) -> T.StructType:
     )
 
 
-def _typed_lit(value: Any, dtype: T.DataType) -> Column | None:
-    """Driver-side coerced literal, or None when the value cannot be
-    represented in the column type. Mirrors pruning._coerce so this
-    Spark-side files filter and the driver-side file_may_match treat
-    un-coercible literals identically (keep the conjunct out, keep the
-    files — ADVICE r10): a bare F.lit(v).cast(dtype) turns unparseable
-    input into a NULL literal, which the partition branches'
-    coalesce(..., False) would escalate into prune-every-file (and
-    under ANSI mode the row filter would error instead of match
-    nothing)."""
-    if value is None:
-        return None
-    if _coerce(value, dtype) is None:
-        return None
-    return F.lit(value).cast(dtype)
+def skipping_keep(
+    condition: str, schema: T.StructType, partition_columns: list[str]
+) -> Column:
+    """Boolean Column over ``files_df`` rows: True when the file may hold
+    rows matching ``condition``. Spark tasks evaluate it with the same
+    kernel the driver planner runs (``pruning_arrow.exact_keep_mask``),
+    as an Arrow scalar UDF, so only ``partitionValues`` and ``stats``
+    cross to Python — one skipping proof whichever side plans."""
 
+    def keep(partition_values, stats):
+        return exact_keep_mask(
+            partition_values, stats, condition, schema, partition_columns
+        )
 
-def _file_filter_column(
-    condition: str, table_schema: T.StructType, partition_columns: list[str]
-) -> tuple[Column, list[str]]:
-    """Build a Column over the parsed files DF that keeps files which
-    *may* contain matching rows (partition pruning + min/max skipping),
-    plus the list of unresolved references. Conservative: unsupported
-    conjuncts keep every file — Delta's skipping contract.
-
-    Partition branches fall back to ``raw IS NOT NULL`` when the typed
-    comparison is NULL: a genuinely NULL partition value can never
-    satisfy a non-null comparison (prune), but a present-yet-uncastable
-    serialization (foreign writer) must keep the file, matching
-    ``pruning.file_may_match``."""
-    columns = [f.name for f in table_schema.fields]
-    field_types = {f.name: f.dataType for f in table_schema.fields}
-    keep = F.lit(True)
-    unresolved: list[str] = []
-    for raw in split_conjuncts(condition):
-        disjuncts = _split_top_level(raw, "or")
-        if len(disjuncts) > 1:
-            # OR tree: a file survives if SOME branch may match —
-            # recursive, same shape as pruning.compile_skipping_predicate
-            branch: Column | None = None
-            for d in disjuncts:
-                k_d, unres_d = _file_filter_column(
-                    d, table_schema, partition_columns
-                )
-                unresolved.extend(unres_d)
-                branch = k_d if branch is None else (branch | k_d)
-            keep = keep & branch
-            continue
-        cj = classify_conjunct(raw, columns)
-        if cj.kind == "unresolved":
-            unresolved.extend([r for r in cj.references if "." in r or r not in columns])
-            continue
-        if cj.column is None or cj.op is None:
-            continue
-        col, op = cj.column, cj.op
-        dtype = field_types.get(col)
-        if dtype is None:
-            continue
-        if cj.kind == "in":
-            vals = [_typed_lit(v, dtype) for v in cj.literal]
-            if not vals or any(v is None for v in vals):
-                continue  # un-coercible / null members — keep every file
-            if col in partition_columns:
-                raw_val = F.element_at(F.col("partitionValues"), col)
-                val = raw_val.try_cast(dtype)
-                keep = keep & F.coalesce(val.isin(*vals), raw_val.isNotNull())
-            else:
-                mn = F.col(f"parsed_stats.minValues.{col}")
-                mx = F.col(f"parsed_stats.maxValues.{col}")
-                any_in_range = F.lit(False)
-                for v in vals:
-                    any_in_range = any_in_range | ((mn <= v) & (mx >= v))
-                keep = keep & F.coalesce(any_in_range, F.lit(True))
-            continue
-        if cj.kind in ("not_equality", "not_in"):
-            raw_lits = [cj.literal] if cj.kind == "not_equality" else list(cj.literal)
-            lits = [_typed_lit(v, dtype) for v in raw_lits]
-            if not lits or any(v is None for v in lits):
-                continue  # un-coercible / null members — keep every file
-            if col in partition_columns:
-                raw_val = F.element_at(F.col("partitionValues"), col)
-                val = raw_val.try_cast(dtype)
-                # NULL partition value: != / NOT IN is NULL, never true
-                # (prune); present-but-uncastable value: typed compare
-                # is impossible, keep the file (matches
-                # pruning.file_may_match). Explicit WHEN ladder — a
-                # coalesce over `val.isNotNull() & ...` evaluates to
-                # FALSE (not NULL) on the uncastable case and would
-                # prune a file that may hold matching rows (ADVICE r11).
-                keep = keep & (
-                    F.when(raw_val.isNull(), F.lit(False))
-                    .when(val.isNull(), F.lit(True))
-                    .otherwise(F.coalesce(~val.isin(*lits), F.lit(True)))
-                )
-            else:
-                mn = F.col(f"parsed_stats.minValues.{col}")
-                mx = F.col(f"parsed_stats.maxValues.{col}")
-                nulls = F.col(f"parsed_stats.nullCount.{col}")
-                nrec = F.col("parsed_stats.numRecords")
-                all_null = nulls.isNotNull() & nrec.isNotNull() & (nulls == nrec)
-                single_excluded = (mn == mx) & mn.isin(*lits)
-                keep = keep & F.coalesce(
-                    ~(all_null | F.coalesce(single_excluded, F.lit(False))),
-                    F.lit(True),
-                )
-            continue
-        if cj.kind == "between":
-            lo, hi = cj.literal
-            lo_l, hi_l = _typed_lit(lo, dtype), _typed_lit(hi, dtype)
-            if lo_l is None or hi_l is None:
-                continue  # NULL / un-coercible bound — keep every file
-            if col in partition_columns:
-                raw_val = F.element_at(F.col("partitionValues"), col)
-                val = raw_val.try_cast(dtype)
-                keep = keep & F.coalesce(
-                    (val >= lo_l) & (val <= hi_l), raw_val.isNotNull()
-                )
-            else:
-                mn = F.col(f"parsed_stats.minValues.{col}")
-                mx = F.col(f"parsed_stats.maxValues.{col}")
-                keep = keep & F.coalesce((mn <= hi_l) & (mx >= lo_l), F.lit(True))
-            continue
-        if cj.kind == "like_prefix":
-            if not isinstance(dtype, T.StringType):
-                continue
-            upper = _prefix_upper(cj.literal)
-            if col in partition_columns:
-                val = F.element_at(F.col("partitionValues"), col)
-                cond = val >= F.lit(cj.literal)
-                if upper is not None:
-                    cond = cond & (val < F.lit(upper))
-                keep = keep & F.coalesce(cond, F.lit(False))
-            else:
-                mn = F.col(f"parsed_stats.minValues.{col}")
-                mx = F.col(f"parsed_stats.maxValues.{col}")
-                cond = mx >= F.lit(cj.literal)
-                if upper is not None:
-                    cond = cond & (mn < F.lit(upper))
-                keep = keep & F.coalesce(cond, F.lit(True))
-            continue
-        lit = None
-        if cj.literal is not None:
-            lit = _typed_lit(cj.literal, dtype)
-            if lit is None:
-                continue  # un-coercible literal — keep every file
-        if col in partition_columns:
-            raw_val = F.element_at(F.col("partitionValues"), col)
-            # try_cast: NULL-on-failure must hold even under ANSI mode
-            # (Spark 4.x default), where a plain cast of a foreign
-            # writer's malformed partition value would throw
-            # CAST_INVALID_INPUT instead of falling back (ADVICE r11)
-            val = raw_val.try_cast(dtype)
-            if op == "is null":
-                # value present (even un-castable) != NULL: decide on raw
-                keep = keep & raw_val.isNull()
-                continue
-            if op == "is not null":
-                keep = keep & raw_val.isNotNull()
-                continue
-            if lit is not None and op in ("=", "==", "<=>"):
-                cond = val == lit
-            elif lit is not None and op in (">", ">=", "<", "<="):
-                cond = {">": val > lit, ">=": val >= lit, "<": val < lit, "<=": val <= lit}[op]
-            else:
-                continue
-            keep = keep & F.coalesce(cond, raw_val.isNotNull())
-            continue
-        mn = F.col(f"parsed_stats.minValues.{col}")
-        mx = F.col(f"parsed_stats.maxValues.{col}")
-        nulls = F.col(f"parsed_stats.nullCount.{col}")
-        nrec = F.col("parsed_stats.numRecords")
-        if op == "is null":
-            cond = (nulls > 0) | nulls.isNull()
-        elif op == "is not null":
-            cond = ~((nulls.isNotNull()) & (nrec.isNotNull()) & (nulls == nrec))
-        elif lit is not None and op in ("=", "==", "<=>"):
-            cond = (mn <= lit) & (mx >= lit)
-        elif lit is not None and op == ">":
-            cond = mx > lit
-        elif lit is not None and op == ">=":
-            cond = mx >= lit
-        elif lit is not None and op == "<":
-            cond = mn < lit
-        elif lit is not None and op == "<=":
-            cond = mn <= lit
-        else:
-            continue
-        # missing stats ⇒ cannot prove non-match ⇒ keep the file
-        keep = keep & F.coalesce(cond, F.lit(True))
-    return keep, unresolved
+    # real annotation objects: `from __future__ import annotations`
+    # stringifies inline hints, which arrow_udf cannot infer
+    keep.__annotations__ = {
+        "partition_values": pa.Array, "stats": pa.Array, "return": pa.Array,
+    }
+    return F.arrow_udf(keep, T.BooleanType())(F.col("partitionValues"), F.col("stats"))
 
 
 def delta_file_stats(
@@ -577,15 +405,12 @@ def delta_file_stats(
     table = DeltaTable.forPath(spark, path)
     snap = table.snapshot()
     schema = table.schema(snap)
-    fdf = files_df(spark, path).withColumn(
-        "parsed_stats", F.from_json("stats", _stats_schema(schema))
-    )
+    fdf = files_df(spark, path)
     if condition:
-        keep, _ = _file_filter_column(condition, schema, snap.partition_columns)
-        fdf = fdf.filter(keep)
+        fdf = fdf.filter(skipping_keep(condition, schema, snap.partition_columns))
     return fdf.select(
         "path", "partitionValues", "size", "modificationTime",
-        F.col("parsed_stats").alias("stats"),
+        F.from_json("stats", _stats_schema(schema)).alias("stats"),
     )
 
 
@@ -668,6 +493,16 @@ def _classify_condition(
     return classes, unresolved_cols
 
 
+def _class_keep(
+    parts: list[str], schema: T.StructType, partition_columns: list[str]
+) -> Column:
+    """Keep column for one predicate class; filterFiles(Nil) keeps
+    every file."""
+    if not parts:
+        return F.lit(True)
+    return skipping_keep(" and ".join(parts), schema, partition_columns)
+
+
 def _fmt(parts: list[str]) -> str:
     return " and ".join(f"({p})" for p in parts) if parts else "Empty"
 
@@ -685,32 +520,24 @@ def get_num_shuffle_files(
         condition, [f.name for f in schema.fields]
     )
 
-    fdf = files_df(spark, path).withColumn(
-        "parsed_stats", F.from_json("stats", _stats_schema(schema))
-    )
-    fdf = fdf.cache()
-    try:
-        total = fdf.count()
-
-        def count_for(parts: list[str]) -> int:
-            if not parts:
-                return total  # filterFiles(Nil) keeps every file
-            keep, _ = _file_filter_column(
-                " and ".join(parts), schema, snap.partition_columns
-            )
-            return fdf.filter(keep).count()
-
-        return {
-            f"{OVERALL} [ {_fmt(classes['overall'])} ]": count_for(classes["overall"]),
-            f"{MIN_MAX} [ {_fmt(classes['minmax'])} ]": count_for(classes["minmax"]),
-            f"{EQUALS} [ {_fmt(classes['equality'])} ]": count_for(classes["equality"]),
-            f"{LEFT_OVER} [ {_fmt(classes['other'])} ]": count_for(classes["other"]),
-            f"{UNRESOLVED} [ Empty ]": total,  # unresolved predicates can't skip
-            TOTAL_NUM_FILES: total,
-            UNRESOLVED_COLS: unresolved_cols,
-        }
-    finally:
-        fdf.unpersist()
+    # one aggregation: every class's count in one pass over files_df
+    row = files_df(spark, path).agg(
+        F.count(F.lit(1)),
+        *(
+            F.count_if(_class_keep(classes[c], schema, snap.partition_columns))
+            for c in ("overall", "minmax", "equality", "other")
+        ),
+    ).collect()[0]
+    total, overall, minmax, equality, other = (int(v) for v in row)
+    return {
+        f"{OVERALL} [ {_fmt(classes['overall'])} ]": overall,
+        f"{MIN_MAX} [ {_fmt(classes['minmax'])} ]": minmax,
+        f"{EQUALS} [ {_fmt(classes['equality'])} ]": equality,
+        f"{LEFT_OVER} [ {_fmt(classes['other'])} ]": other,
+        f"{UNRESOLVED} [ Empty ]": total,  # unresolved predicates can't skip
+        TOTAL_NUM_FILES: total,
+        UNRESOLVED_COLS: unresolved_cols,
+    }
 
 
 def get_shuffle_file_metadata(
@@ -726,15 +553,10 @@ def get_shuffle_file_metadata(
     classes, unresolved_cols = _classify_condition(
         condition, [f.name for f in schema.fields]
     )
-    fdf = files_df(spark, path).withColumn(
-        "parsed_stats", F.from_json("stats", _stats_schema(schema))
-    )
+    fdf = files_df(spark, path)
 
     def files_for(parts: list[str]) -> DataFrame:
-        if not parts:
-            return fdf
-        keep, _ = _file_filter_column(" and ".join(parts), schema, snap.partition_columns)
-        return fdf.filter(keep)
+        return fdf.filter(_class_keep(parts, schema, snap.partition_columns))
 
     return (
         files_for(classes["overall"]),

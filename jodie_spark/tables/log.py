@@ -635,7 +635,8 @@ class _FileState:
         instead of 1M (VERDICT r12 item 1).
 
         ``max_survivors``: selectivity gate for callers with a better
-        fallback plan (the three-tier DML planner): when the ARROW mask
+        fallback plan (``plan_candidate_files``, which can prune in
+        Spark tasks instead): when the ARROW mask
         keeps more than this many base rows — including the mask-is-None
         case where nothing was vectorizable — return None WITHOUT
         materializing any dicts, so an unselective condition on a huge
@@ -2194,10 +2195,10 @@ class DeltaLog:
         Writer: ``spark=False`` writes on the driver, a SparkSession
         writes with Spark (``distribution.write_checkpoint_spark``).
         ``spark=None`` writes on the driver unless the replay would not
-        fit there — the byte gates ``plan_candidate_files`` applies to
-        the same replay: a JSON tail over ``_DRIVER_PLAN_MAX_LOG_BYTES``
-        or a newest checkpoint over ``_DRIVER_COLUMNAR_PLAN_MAX_LOG_BYTES``
-        — and a session is active. The driver writer encodes the
+        fit there — a JSON tail over ``_DRIVER_PLAN_MAX_LOG_BYTES`` or a
+        newest checkpoint over ``_DRIVER_COLUMNAR_PLAN_MAX_LOG_BYTES``,
+        the bounds past which ``plan_candidate_files`` prunes in Spark
+        tasks too — and a session is active. The driver writer encodes the
         columnar ``snapshot()`` state as it stands (checkpoint base
         masked and widened, JSON-tail overlay, metadata rows): no Spark
         job, no py4j call, no per-add Python dict."""

@@ -11,10 +11,11 @@ The evaluator is intentionally conservative: a file is pruned only when
 its stats *prove* no row can match; unsupported conjuncts (LIKE, ORs,
 functions) keep every file — identical to Delta's skipping contract.
 
-Scale note: evaluation is O(#files) driver-side over the reconstructed
-add-list. Delta itself evaluates skipping over a state DataFrame for
-multi-million-file tables; `files_df()` in distribution.py provides that
-Spark-side path for aggregation workloads.
+Scale note: :func:`file_may_match` is the per-add authority. Bulk
+pruning runs it behind a vectorized pre-mask
+(``pruning_arrow.exact_keep_mask``), either on the driver over the
+columnar log state or inside Spark tasks over ``distribution.files_df``
+for multi-million-file tables — one proof on both sides.
 """
 
 from __future__ import annotations

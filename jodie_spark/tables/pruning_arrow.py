@@ -28,12 +28,14 @@ authority:
   ``file_may_match`` itself is called once per UNIQUE value — exact
   Python behavior at O(#distinct) Python cost.
 
-Callers (``_FileState.pruned_adds``) re-run the exact Python predicate
-over the surviving rows, so the final kept set is IDENTICAL to the
-pure-Python path by construction; the fuzz lane
-(tests/test_pruning_arrow.py) checks both the superset property of the
-raw mask and the end-to-end set equality against DuckDB-validated
-generators.
+Callers re-run the exact Python predicate over the surviving rows, so
+the final kept set is IDENTICAL to the pure-Python path by
+construction: ``_FileState.pruned_adds`` on the driver, and
+:func:`exact_keep_mask` — the same two steps as a boolean mask, run
+inside Spark tasks as an Arrow UDF (``distribution.skipping_keep``).
+The fuzz lane (tests/test_pruning_arrow.py) checks both the superset
+property of the raw mask and the end-to-end set equality against
+DuckDB-validated generators.
 
 Parity: delta-core evaluates the same proofs as Catalyst expressions
 over its checkpoint state DataFrame (DataSkippingReader.scala); with no
@@ -55,6 +57,7 @@ from jodie_spark.tables.pruning import (
     _coerce,
     _prefix_upper,
     build_skip_tree,
+    compile_skipping_predicate,
     file_may_match,
 )
 
@@ -242,10 +245,6 @@ class _Ctx:
             "stats": None,
         }
         return file_may_match(add, [cj], self.schema, self.partition_columns)
-
-
-def _all_true(ctx: _Ctx) -> None:
-    return None  # sentinel: caller treats None as all-true
 
 
 def _partition_leaf(cj: Conjunct, ctx: _Ctx) -> "pa.Array":
@@ -449,3 +448,37 @@ def arrow_keep_mask(
         return None if mask is None else _flat(mask)
     except Exception:  # noqa: BLE001
         return None
+
+
+def exact_keep_mask(
+    partition_values: "pa.Array | pa.ChunkedArray",
+    stats: "pa.Array | pa.ChunkedArray",
+    condition: str,
+    schema: T.StructType,
+    partition_columns: list[str],
+) -> "pa.Array":
+    """The exact skipping verdict per file (True = may match) from a
+    batch's ``partitionValues`` map and ``stats`` JSON arrays: the
+    vectorized :func:`arrow_keep_mask` pre-mask, then
+    ``compile_skipping_predicate`` on the rows it keeps — the same two
+    steps as ``_FileState.pruned_adds``, so a Spark task running this
+    over ``files_df`` keeps exactly the files the driver planner keeps."""
+    pv, st = _flat(partition_values), _flat(stats)
+    amask = arrow_keep_mask(
+        pa.StructArray.from_arrays([pv, st], ["partitionValues", "stats"]),
+        condition, schema, partition_columns,
+    )
+    if amask is not None:
+        amask = pc.fill_null(amask, False)  # filter() drops null rows
+        pv, st = pv.filter(amask), st.filter(amask)
+    pred = compile_skipping_predicate(condition, schema, partition_columns)
+    verdicts = pa.array(
+        [
+            pred({"partitionValues": dict(p or ()), "stats": s})
+            for p, s in zip(pv.to_pylist(), st.to_pylist())
+        ],
+        pa.bool_(),
+    )
+    if amask is None:
+        return verdicts
+    return pc.replace_with_mask(amask, amask, verdicts)

@@ -511,24 +511,23 @@ def _read_dv_files_df(
     )
 
 
-# Logs below this many bytes are planned driver-side: the whole state
-# fits in a couple of MB (≈ thousands of files), where Spark-job
-# scheduling overhead (~0.3 s × several jobs per DML op) would dominate.
-# Above it, planning runs distributed over files_df — the path whose
-# cost is independent of file count on the driver.
+# Bounds that pick where plan_candidate_files prunes: on the driver or
+# in Spark tasks (the same kernel either way). Logs below this many bytes plan on the driver unconditionally: the
+# whole state fits in a couple of MB (≈ thousands of files), where
+# Spark-job scheduling overhead (~0.3 s × several jobs per DML op)
+# would dominate. A JSON tail above it always plans in Spark.
 _DRIVER_PLAN_MAX_LOG_BYTES = 4 * 1024 * 1024
-# With a selective condition, driver-side COLUMNAR planning (checkpoint
-# arrow base + pruning_arrow mask, survivors-only dicts) extends to this
-# bound — ~1-2M files of checkpoint parquet. Beyond it the Spark-side
-# files_df plan takes over: the arrow base would hold multiple GB on the
-# driver, and a cluster prunes a 10M-file state in parallel.
+# With a condition, the driver plan extends to logs up to this bound
+# (~1-2M files of checkpoint parquet, loaded as Arrow). Beyond it Spark
+# plans: the arrow base would hold multiple GB on the driver, and a
+# cluster prunes a 10M-file state in parallel.
 _DRIVER_COLUMNAR_PLAN_MAX_LOG_BYTES = 256 * 1024 * 1024
 # (DeltaLog.write_checkpoint applies both byte bounds to the same replay
 # to choose between its driver and Spark writers)
 # ... and only when the arrow pre-mask keeps at most this many files:
 # an unselective plan materializes full stats-bearing payload dicts per
-# survivor, so past this bound the Spark-side plan (stats-free Rows,
-# cluster-side pruning) is the cheaper collect even counting its job
+# survivor, so past this bound the Spark plan (stats-free Rows) is the
+# cheaper collect even counting its job
 _DRIVER_COLUMNAR_PLAN_MAX_SURVIVORS = 100_000
 
 
@@ -566,106 +565,69 @@ def plan_candidate_files(
     schema: T.StructType,
     partition_columns: list[str],
 ) -> list[dict[str, Any]]:
-    """DML file planning, adaptive in log size — three tiers.
+    """DML file planning: the add files that may hold rows matching
+    ``condition``, pruned on the driver or in Spark tasks with the same
+    kernel (``pruning_arrow.exact_keep_mask``), so both sides keep the
+    same files.
 
-    Small logs (< 4 MiB ≈ a few thousand files) replay driver-side and
-    prune with the in-process evaluator — at that size a Spark job per
-    plan costs more than the plan. With a SELECTIVE condition, the
-    driver tier extends to checkpoint-backed logs up to
-    ``_DRIVER_COLUMNAR_PLAN_MAX_LOG_BYTES`` (~1-2M files): snapshot
-    load and pruning both run columnar over the checkpoint arrow base
-    (pruning_arrow), measured ~1.5 s at 1M adds vs ~12 s for the
-    Spark-side plan on the same table — the driver cost is Arrow
-    kernels plus Python dicts for the SURVIVORS only. Beyond that (or
-    with no condition to prune on), stats/partition pruning runs as a
-    ``filter()`` over the Spark-side ``files_df`` metadata DataFrame
-    (the same path the analytics use), so driver work is bounded by
-    the *candidate* set — the rewrite working set — never the table's
-    file count. Candidates carry no stats strings; row counting
-    happens on the cached data read or via a Spark aggregate.
+    The driver plans small logs (< 4 MiB ≈ a few thousand files), where
+    a Spark job costs more than the plan, and, with a SELECTIVE
+    condition, checkpoint-backed logs up to
+    ``_DRIVER_COLUMNAR_PLAN_MAX_LOG_BYTES`` (~1-2M files): snapshot load
+    and pruning run columnar over the checkpoint arrow base, measured
+    ~1.5 s at 1M adds vs ~12 s for the Spark plan on the same table, and
+    only the survivors become Python dicts. Otherwise the kernel runs as
+    an Arrow UDF filter over the Spark-side ``files_df`` metadata
+    DataFrame, so driver work is bounded by the *candidate* set — the
+    rewrite working set — never the table's file count. Candidates
+    carry no stats strings; row counting happens on the cached data
+    read or via a Spark aggregate.
     """
     json_bytes, parquet_bytes = DeltaLog(table_path).replay_log_bytes()
     log_bytes = json_bytes + parquet_bytes
-    if log_bytes <= _DRIVER_PLAN_MAX_LOG_BYTES:
-        snap = DeltaLog(table_path).snapshot()
-        # columnar pre-mask + exact survivors (same result as
-        # prune_files over add_files(), without the full dict view)
-        return snap._require_files().pruned_adds(
-            condition, schema, partition_columns
-        )
     if (
-        # columnar tier: checkpoint parquet loads as Arrow, but the
-        # JSON tail still replays row-by-row — a foreign table with a
-        # huge un-checkpointed tail belongs on the Spark path
-        condition
-        and json_bytes <= _DRIVER_PLAN_MAX_LOG_BYTES
+        # the JSON tail replays row by row even when the checkpoint
+        # loads as Arrow: a huge un-checkpointed tail plans in Spark
+        json_bytes <= _DRIVER_PLAN_MAX_LOG_BYTES
         and log_bytes <= _DRIVER_COLUMNAR_PLAN_MAX_LOG_BYTES
+        and (condition or log_bytes <= _DRIVER_PLAN_MAX_LOG_BYTES)
     ):
         snap = DeltaLog(table_path).snapshot()
-        # selectivity-gated: when the arrow mask can't prove pruning
-        # bites (unselective condition, no stats on the column, nothing
-        # vectorizable), None comes back WITHOUT materializing dicts
-        # and the Spark-side plan below takes over — stats-free
-        # candidate Rows, cluster-side pruning (review r13)
+        # past the small-log bound the plan is selectivity-gated: when
+        # the arrow mask keeps too many files (or nothing vectorizes),
+        # None comes back WITHOUT materializing dicts and the Spark
+        # plan below takes over
         candidates = snap._require_files().pruned_adds(
             condition,
             schema,
             partition_columns,
-            max_survivors=_DRIVER_COLUMNAR_PLAN_MAX_SURVIVORS,
+            max_survivors=(
+                None
+                if log_bytes <= _DRIVER_PLAN_MAX_LOG_BYTES
+                else _DRIVER_COLUMNAR_PLAN_MAX_SURVIVORS
+            ),
         )
         if candidates is not None:
             return candidates
 
-    from jodie_spark.tables.distribution import (
-        _file_filter_column,
-        _stats_schema,
-        files_df,
-    )
+    from jodie_spark.tables.distribution import files_df, skipping_keep
 
     fdf = files_df(spark, table_path)
     if condition:
-        keep, _ = _file_filter_column(condition, schema, partition_columns)
-        fdf = fdf.withColumn(
-            "parsed_stats", F.from_json("stats", _stats_schema(schema))
-        ).filter(keep)
+        fdf = fdf.filter(skipping_keep(condition, schema, partition_columns))
     # deletionVector / row-tracking fields must ride along: dropping a
     # candidate's DV here would resurrect its deleted rows in the CoW
     # rewrite read, and dropping baseRowId breaks row-id preservation
+    optional = ("deletionVector", "baseRowId", "defaultRowCommitVersion", "tags")
     rows = fdf.select(
-        "path",
-        "partitionValues",
-        "size",
-        "modificationTime",
-        "deletionVector",
-        "baseRowId",
-        "defaultRowCommitVersion",
-        "tags",
+        "path", "partitionValues", "size", "modificationTime", *optional
     ).collect()
-    return [
-        {
-            "path": r["path"],
-            "partitionValues": dict(r["partitionValues"] or {}),
-            "size": r["size"],
-            "modificationTime": r["modificationTime"],
-            **(
-                {"deletionVector": r["deletionVector"].asDict()}
-                if r["deletionVector"] is not None
-                else {}
-            ),
-            **(
-                {"baseRowId": r["baseRowId"]}
-                if r["baseRowId"] is not None
-                else {}
-            ),
-            **(
-                {"defaultRowCommitVersion": r["defaultRowCommitVersion"]}
-                if r["defaultRowCommitVersion"] is not None
-                else {}
-            ),
-            **({"tags": dict(r["tags"])} if r["tags"] is not None else {}),
-        }
-        for r in rows
-    ]
+    out = []
+    for r in rows:
+        add = r.asDict(recursive=True)
+        add["partitionValues"] = add["partitionValues"] or {}
+        out.append({k: v for k, v in add.items() if v is not None or k not in optional})
+    return out
 
 
 def planned_num_records(spark: SparkSession, table_path: str, schema: T.StructType) -> int:

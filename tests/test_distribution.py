@@ -4,6 +4,8 @@ rather than byte-exact goldens which are layout-dependent)."""
 
 import os
 
+from conftest import spark_jobs
+
 from jodie_spark.tables.distribution import (
     NUM_RECORDS_DF_COLUMNS,
     SIZE_DF_COLUMNS,
@@ -117,6 +119,19 @@ def test_get_num_shuffle_files_classes(spark, tmpdir_path):
     assert overall <= equals <= total
     assert overall <= minmax <= total
     assert sorted(result[UNRESOLVED_COLS]) == ["snapshot.id", "update.id"]
+    # every class counted in ONE aggregation over files_df, no cache
+    again = {}
+    jobs = spark_jobs(
+        spark,
+        lambda: again.update(
+            get_num_shuffle_files(
+                spark, path,
+                "lastname = 'Travolta' and id >= 2 and id <= 7 and snapshot.id = update.id",
+            )
+        ),
+    )
+    assert again == result
+    assert jobs == 3, jobs
 
 
 def test_zorder_tightens_skipping(spark, tmpdir_path):

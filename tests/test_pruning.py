@@ -260,22 +260,25 @@ def test_truncate_stat_skips_surrogate_range():
     _json.loads(_json.dumps(widened))  # round-trips as strict JSON
 
 
+def _spark_keep(spark, adds, cond, schema, parts) -> list[bool]:
+    """The Spark-side keep column over ``adds``, in row order (by index:
+    ``_add`` gives every file the same path)."""
+    from jodie_spark.tables.distribution import skipping_keep
+
+    fdf = spark.createDataFrame(
+        [(i, a["partitionValues"], a["stats"]) for i, a in enumerate(adds)],
+        "idx int, partitionValues map<string,string>, stats string",
+    )
+    keep = skipping_keep(cond, schema, parts)
+    return [r["k"] for r in fdf.select("idx", keep.alias("k")).orderBy("idx").collect()]
+
+
 def test_uncastable_partition_value_agreement(spark):
     """A present-but-uncastable partition VALUE (foreign writer wrote
     'abc' into an int partition column) must be KEPT by both planners —
     the typed comparison is impossible, so pruning would silently drop
-    rows. Regression for ADVICE r11: the Spark-side not_equality branch
-    evaluated `val.isNotNull() & ~val.isin(...)` to FALSE (never NULL)
-    on the uncastable cast, short-circuiting past the keep-fallback; and
-    plain `.cast` would throw CAST_INVALID_INPUT under ANSI mode instead
-    of yielding NULL (hence try_cast)."""
-    from pyspark.sql import functions as F
-
-    from jodie_spark.tables.distribution import (
-        _file_filter_column,
-        _stats_schema,
-    )
-
+    rows (ADVICE r11). The Spark-side keep column must agree under ANSI
+    mode too, where a cast of the malformed value would throw."""
     schema = T.StructType([
         T.StructField("id", T.IntegerType()),
         T.StructField("p", T.IntegerType()),
@@ -288,10 +291,6 @@ def test_uncastable_partition_value_agreement(spark):
               "nullCount": {"id": 0}}, {"p": "3"}),     # castable
         {"path": "f.parquet", "partitionValues": {"p": None}, "stats": None},
     ]
-    fdf = spark.createDataFrame(
-        [(a["path"], a["partitionValues"], a["stats"]) for a in adds],
-        "path string, partitionValues map<string,string>, stats string",
-    ).withColumn("parsed_stats", F.from_json("stats", _stats_schema(schema)))
 
     was_ansi = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
@@ -306,8 +305,7 @@ def test_uncastable_partition_value_agreement(spark):
             ("p is not null", [True, True, False]),
             ("p is null", [False, False, True]),
         ]:
-            keep, _ = _file_filter_column(cond, schema, parts)
-            got = [r["k"] for r in fdf.select(keep.alias("k")).collect()]
+            got = _spark_keep(spark, adds, cond, schema, parts)
             assert got == expect, f"spark planner {cond!r}: {got} != {expect}"
             cjs = [classify_conjunct(c, ["id", "p"]) for c in split_conjuncts(cond)]
             drv = [file_may_match(a, cjs, schema, parts) for a in adds]
@@ -317,10 +315,10 @@ def test_uncastable_partition_value_agreement(spark):
 
 
 def test_driver_and_spark_planners_agree(spark, tmpdir_path):
-    """The adaptive planner's two implementations (driver-side
-    prune_files, Spark-side _file_filter_column over files_df) must
-    keep identical file sets for the same condition — a divergence
-    means one of them prunes wrongly somewhere."""
+    """The adaptive planner's two sides (driver-side pruned_adds, the
+    Spark-side keep column over files_df) must keep identical file sets
+    for the same condition, and never prune a file holding a matching
+    row."""
     import os
 
     import pyspark.sql.functions as F
@@ -412,6 +410,35 @@ def test_driver_and_spark_planners_agree(spark, tmpdir_path):
                 assert any(mf.endswith(k) or k.endswith(mf) for k in kept_abs), (
                     f"file {mf} with matches pruned under {cond!r}"
                 )
+
+
+def test_spark_plan_py4j_cost_independent_of_condition(spark, tmpdir_path, monkeypatch):
+    """The Spark-side plan ships the condition to the tasks inside one
+    Arrow UDF, so its py4j cost does not grow with the condition: a
+    1-leaf and a 6-leaf AND/OR condition cost the same round trips."""
+    from conftest import py4j_round_trips
+
+    import jodie_spark.tables.table as tm
+    from jodie_spark.tables.table import DeltaTable, write_delta
+
+    path = os.path.join(tmpdir_path, "py4j_plan")
+    df = spark.range(0, 40).selectExpr(
+        "id", "concat('s', id % 3) as s", "cast(id % 2 as string) as p"
+    )
+    write_delta(df.repartition(4), path, partition_by=["p"])
+    schema = DeltaTable.forPath(spark, path).schema()
+    small = "id < 10"
+    large = "(id < 3 or id > 30 or s = 's1') and (p = '1' or id >= 5) and s is not null"
+
+    def cost(cond):
+        def plan():
+            tm.plan_candidate_files(spark, path, cond, schema, ["p"])
+
+        plan()  # warm: the first plan pays one-time setup
+        return py4j_round_trips(spark, plan)
+
+    monkeypatch.setattr(tm, "_DRIVER_PLAN_MAX_LOG_BYTES", 0)  # force the Spark-side plan
+    assert cost(small) == cost(large)
 
 
 # ---------------------------------------------------------------------------
@@ -523,19 +550,18 @@ def test_datasource_translates_in_filter():
 
 
 def test_planner_agreement_randomized(spark):
-    """Seeded randomized sweep: the Spark-side files filter
-    (_file_filter_column) and the driver-side evaluator (file_may_match)
-    must KEEP IDENTICAL file sets for random stats/partition-value adds
-    — including NULL and uncastable partition values — across every
-    conjunct kind (=, <, >=, !=, IN, NOT IN, BETWEEN, LIKE-prefix,
-    IS [NOT] NULL, AND pairs). Deterministic (seed pinned); one files-DF
+    """Seeded randomized sweep: the Spark-side keep column
+    (distribution.skipping_keep), the arrow-columnar driver tier and a
+    per-leaf file_may_match oracle must KEEP IDENTICAL file sets for
+    random stats/partition-value adds — including NULL and uncastable
+    partition values — across every conjunct kind (=, <, >=, !=, IN,
+    NOT IN, BETWEEN, LIKE-prefix, IS [NOT] NULL), AND pairs, OR pairs
+    and (a or b) and c. Deterministic (seed pinned); one files-DF
     evaluation per condition, not per add."""
     import json as _json
     import random
 
-    from pyspark.sql import functions as F
-
-    from jodie_spark.tables.distribution import _file_filter_column, _stats_schema
+    from jodie_spark.tables.distribution import skipping_keep
 
     rng = random.Random(0xC0FFEE)
     schema = T.StructType([
@@ -564,9 +590,9 @@ def test_planner_agreement_randomized(spark):
 
     adds = [rand_add(n) for n in range(60)]
     fdf = spark.createDataFrame(
-        [(a["path"], a["partitionValues"], a["stats"]) for a in adds],
-        "path string, partitionValues map<string,string>, stats string",
-    ).withColumn("parsed_stats", F.from_json("stats", _stats_schema(schema))).cache()
+        [(i, a["partitionValues"], a["stats"]) for i, a in enumerate(adds)],
+        "idx int, partitionValues map<string,string>, stats string",
+    ).cache()
 
     def rand_cond():
         col = rng.choice(["i", "s", "p"])
@@ -597,9 +623,29 @@ def test_planner_agreement_randomized(spark):
             return f"{col} is not null"
         return f"{col} like '{rng.choice(['a', 'b'])}%'" if col == "s" else f"{col} = {lit}"
 
-    conditions = [rand_cond() for _ in range(40)]
-    conditions += [f"({rand_cond()}) and ({rand_cond()})" for _ in range(10)]
     columns = [f.name for f in schema.fields]
+
+    def leaf_kept(cond: str) -> set[int]:
+        cjs = [classify_conjunct(c, columns) for c in split_conjuncts(cond)]
+        return {i for i, a in enumerate(adds) if file_may_match(a, cjs, schema, parts)}
+
+    # (condition, oracle kept set): an OR keeps what either branch
+    # keeps, an AND what both keep
+    cases = []
+    for _ in range(40):
+        c = rand_cond()
+        cases.append((c, leaf_kept(c)))
+    for _ in range(10):
+        x, y = rand_cond(), rand_cond()
+        cases.append((f"({x}) and ({y})", leaf_kept(x) & leaf_kept(y)))
+    for _ in range(10):
+        x, y = rand_cond(), rand_cond()
+        cases.append((f"({x}) or ({y})", leaf_kept(x) | leaf_kept(y)))
+    for _ in range(5):
+        x, y, z = rand_cond(), rand_cond(), rand_cond()
+        cases.append(
+            (f"(({x}) or ({y})) and ({z})", (leaf_kept(x) | leaf_kept(y)) & leaf_kept(z))
+        )
     # third planner (r13): the arrow-columnar tier — the same adds as a
     # checkpoint-style struct base through _FileState.pruned_adds
     # (pruning_arrow mask + exact-evaluator survivors)
@@ -629,19 +675,17 @@ def test_planner_agreement_randomized(spark):
             )
         ]
     )
-    for cond in conditions:
-        keep_col, _ = _file_filter_column(cond, schema, parts)
+    for cond, drv_kept in cases:
+        keep_col = skipping_keep(cond, schema, parts)
         spark_kept = {
-            r["path"] for r in fdf.select("path", keep_col.alias("k")).collect() if r["k"]
+            r["idx"] for r in fdf.select("idx", keep_col.alias("k")).collect() if r["k"]
         }
-        cjs = [classify_conjunct(c, columns) for c in split_conjuncts(cond)]
-        drv_kept = {a["path"] for a in adds if file_may_match(a, cjs, schema, parts)}
         assert spark_kept == drv_kept, (
             f"planner divergence for {cond!r}: spark-only="
             f"{sorted(spark_kept - drv_kept)} driver-only={sorted(drv_kept - spark_kept)}"
         )
         st = _FileState(base, {}, set())
-        arrow_kept = {a["path"] for a in st.pruned_adds(cond, schema, parts)}
+        arrow_kept = {int(a["path"][1:]) for a in st.pruned_adds(cond, schema, parts)}
         assert arrow_kept == drv_kept, (
             f"arrow-tier divergence for {cond!r}: arrow-only="
             f"{sorted(arrow_kept - drv_kept)} driver-only={sorted(drv_kept - arrow_kept)}"
