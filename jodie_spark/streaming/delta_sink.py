@@ -208,7 +208,7 @@ def write_stream_merge_to_delta(
     (touched-file discovery, rewrite, metrics), and each would
     otherwise re-scan the streaming source."""
     from jodie_spark.tables.log import DeltaLog
-    from jodie_spark.tables.merge import quote_ident as q
+    from jodie_spark.tables.merge import num_partitions, quote_ident as q
     from jodie_spark.tables.table import DeltaTable, write_delta
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -225,9 +225,13 @@ def write_stream_merge_to_delta(
                     # full-table delete, one commit)
                     DeltaTable.forPath(batch_df.sparkSession, path).delete()
                 return
+            # a one-partition batch dedups in place: coalesce(1) reports
+            # a single partition, which satisfies the window's (and the
+            # dedup aggregate's) distribution, so no shuffle is planned
+            rows = batch_df.coalesce(1) if num_partitions(batch_df) == 1 else batch_df
             if sequence_col is not None:
                 batch = (
-                    batch_df.selectExpr(
+                    rows.selectExpr(
                         "*",
                         "row_number() OVER (PARTITION BY "
                         f"{', '.join(q(k) for k in keys)} "
@@ -237,7 +241,7 @@ def write_stream_merge_to_delta(
                     .drop("__rn__")
                 )
             else:
-                batch = batch_df.dropDuplicates(keys)
+                batch = rows.dropDuplicates(keys)
             data_cols = [c for c in batch.columns if c != delete_col]
             if not DeltaLog(path).exists():
                 init = batch

@@ -16,15 +16,36 @@ re-expressed as DataFrame ops so Catalyst plans the joins):
    contain at least one match, in one noop action — no shuffle just to
    deduplicate file names. With the multiple-match check on, the same
    action counts matches per target row (one aggregation).
-2. **Rewrite** — FULL OUTER join only the touched files against the
-   source; apply the first matching WHEN clause per row (Delta clause
-   order semantics); untouched files are never read or rewritten.
+2. **Rewrite** only the touched files, applying the first matching WHEN
+   clause per row (Delta clause order semantics); untouched files are
+   never read or rewritten. The rewrite has two shapes:
 
-At scale: pass 1 is a semi join (no row explosion) over the pruned file
-set; pass 2 reads only files that actually change. Both joins are
-planned by Catalyst (broadcast when the source is small, AQE otherwise).
-All row counts come from a single ``Observation`` on the rewrite pass —
-no extra count jobs.
+   - **Full outer join** of the touched files with the source. Spark
+     has no broadcast full outer join, so this shuffles every row of
+     the touched files (and the source).
+   - **Broadcast source** — for a merge with no multiple-match check to
+     run (``allow_multiple_matches=True``, the streaming merge sink, a
+     sole unconditional delete), no by-source clause and inserts that
+     read the source only, when Spark's static rule broadcasts the
+     persisted source (its plan's ``sizeInBytes`` is at most
+     ``spark.sql.autoBroadcastJoinThreshold``; the probe has filled the
+     cache, so the size is real). The source is tagged with ``__sid__``
+     before it is persisted; the probe is the inner join and also
+     observes the matched ``__sid__`` set. The rewrite is touched files
+     LEFT OUTER JOIN the broadcast source — the update, delete and copy
+     rows, no target shuffle, each file's row order kept — unioned with
+     the source rows whose ``__sid__`` is not in that set (one SQL IN
+     list; above ``_MAX_INSERT_FILTER_IDS`` ids the merge takes the
+     full outer join). The output is coalesced to the target scan's
+     partition count, so a one-file target and its inserts stay one
+     file. The union goes through the same staging and lowering text.
+
+Row counts are ``Observation`` s on actions that run anyway: the
+rewrite's write (merge-on-read: its data-file write, and its DV-marks
+action for the multiple-match check). Extra jobs remain in two places:
+on ``mode=id`` tables the source row count is an eager ``count()`` over
+the cache (see ``execute``), and the row-lineage scan learns its file
+URIs in a job of its own.
 """
 
 from __future__ import annotations
@@ -46,6 +67,11 @@ from jodie_spark.tables.writer import write_data_files
 if TYPE_CHECKING:
     from jodie_spark.tables.table import DeltaTable
 
+
+# matched source-row ids above which the broadcast-source rewrite falls
+# back to the full outer join: its insert filter is one SQL IN list,
+# whose parse and plan cost grows with the list (SCALE.md)
+_MAX_INSERT_FILTER_IDS = 10_000
 
 # per-row actions the rewrite pass counts, and their observation labels
 _COUNTS = (
@@ -174,6 +200,42 @@ def _observed(ob: Observation, keys: list[str]) -> dict[str, int]:
         return {k: int(got.get(k) or 0) for k in keys}
     except Exception:
         return {k: 0 for k in keys}
+
+
+# spark.sql.defaultSizeInBytes' default: the size Spark estimates for a
+# plan leaf it has no statistics for (an RDD-backed DataFrame, say)
+_NO_SIZE_ESTIMATE = 2**63 - 1
+
+
+_BYTE_UNITS = {
+    "": 1, "b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50
+}
+
+
+def _broadcast_limit(spark) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes (negative:
+    never broadcast), parsed the way Spark parses a byte-size conf:
+    ``10485760b``, ``10m``, ``10MB``, ``-1``."""
+    text = spark.conf.get("spark.sql.autoBroadcastJoinThreshold").strip().lower()
+    sign, digits, unit = re.fullmatch(r"(-?)(\d+)([a-z]?)b?", text).groups()
+    return (-1 if sign else 1) * int(digits) * _BYTE_UNITS[unit]
+
+
+def _size_estimate(df: DataFrame) -> int:
+    """Spark's size estimate for ``df``: its optimized plan's
+    ``sizeInBytes``, the number the static broadcast rule compares with
+    the threshold. A persisted plan reports its cached bytes once the
+    cache is filled. PySpark has no public handle on plan statistics,
+    hence ``_jdf``."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def num_partitions(df: DataFrame) -> int:
+    """The partition count of ``df``'s plan, computed without running
+    it (do not call it on a plan with an exchange: adaptive execution
+    runs the plan's stages to learn it). ``df.rdd`` would first wrap
+    the plan in a Python-pickling RDD, two more round trips."""
+    return int(df._jdf.rdd().getNumPartitions())
 
 
 def _assign_identities(result: DataFrame, schema, id_generate, keep_cols):
@@ -568,9 +630,10 @@ class DeltaMergeBuilder:
         of :meth:`_lower`. ``has_target=False`` stages the insert-only
         anti join, whose rows have no target side.
 
-        Built as single SQL CASE expressions: clause conditions are
+        Built as SQL text, two ``selectExpr`` calls: clause conditions are
         already SQL strings, and Column-chain construction cost one py4j
-        round trip per node — paid per micro-batch on the streaming
+        round trip per node (a ``withColumns`` map of ``F.expr`` columns
+        about three per column) — paid per micro-batch on the streaming
         sinks."""
         is_t = "__t_exists__ IS NOT NULL" if has_target else "FALSE"
         is_s = "__src__ IS NOT NULL"
@@ -603,15 +666,14 @@ class DeltaMergeBuilder:
             f" WHEN ({is_s}) AND (__i_idx__ >= 0) THEN 'insert'"
             " ELSE 'drop' END"
         )
-        return joined.withColumns(
-            {
-                "__m_idx__": F.expr(_idx_sql(m, f"({is_t}) AND ({is_s})")),
-                "__i_idx__": F.expr(
-                    _idx_sql(self._not_matched, f"({is_s}) AND NOT ({is_t})")
-                ),
-                "__b_idx__": F.expr(_idx_sql(b, f"({is_t}) AND NOT ({is_s})")),
-            }
-        ).withColumns({"__action__": F.expr(action_sql), **hidden})
+        staged = joined.selectExpr(
+            "*",
+            f"{_idx_sql(m, f'({is_t}) AND ({is_s})')} AS __m_idx__",
+            f"{_idx_sql(self._not_matched, f'({is_s}) AND NOT ({is_t})')}"
+            " AS __i_idx__",
+            f"{_idx_sql(b, f'({is_t}) AND NOT ({is_s})')} AS __b_idx__",
+        ).selectExpr("*", f"{action_sql} AS __action__")
+        return staged.withColumns(hidden) if hidden else staged
 
     def _lower(
         self, schema, talias: str, has_target: bool = True
@@ -774,36 +836,34 @@ class DeltaMergeBuilder:
             hidden, fields = self._lower(schema, talias)
             staged = self._stage_actions(joined, hidden).persist()
 
-            # multiple-match guard on the (file, row_index) identity
-            multi_ok = self._multiple_matches_allowed(allow_multiple_matches)
-            action_counts = {
-                r["__action__"]: r["n"]
-                for r in staged.groupBy("__action__")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            if not multi_ok:
-                mx = (
-                    staged.filter("__action__ IN ('update', 'delete')")
-                    .groupBy("__fp__", "__ri__")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .agg(F.max("n"))
-                    .collect()[0][0]
-                )
-                if mx is not None and int(mx) > 1:
-                    from jodie_spark.errors import MergeMultipleMatchesError
-
-                    raise MergeMultipleMatchesError(
-                        "MERGE: one target row matched multiple source rows "
-                        "under an update/delete clause; the result would be "
-                        "nondeterministic. Deduplicate the source on the "
-                        "merge key, or pass allow_multiple_matches=True."
-                    )
-
-            dv_marks = staged.filter(
+            # multiple-match guard on the (file, row_index) identity: a
+            # row matched twice is marked once, so the DV-marks action
+            # observes the (row, source row) pairs it marks and the
+            # written bitmaps count the distinct positions. No marks at
+            # all may drop the observation (AQE), which reads as 0 pairs
+            check = not self._multiple_matches_allowed(allow_multiple_matches)
+            pair_obs = Observation()
+            marks = staged.filter(
                 "__action__ IN ('update', 'delete') AND __fp__ IS NOT NULL"
-            ).select("__fp__", "__ri__").distinct()
+            )
+            if check:
+                marks = marks.observe(pair_obs, F.expr("count(1) AS pairs"))
+            dv_marks = marks.select("__fp__", "__ri__").distinct()
             rows = t._write_dvs_for(dv_marks, candidates) if candidates else []
+            marked = sum(int(r["new_card"]) - int(r["old_card"]) for r in rows)
+            if check and rows and _observed(pair_obs, ["pairs"])["pairs"] > marked:
+                from jodie_spark.errors import MergeMultipleMatchesError
+                from jodie_spark.fs import get_fs
+
+                fs = get_fs(t.path)
+                for r in rows:
+                    fs.remove(json.loads(r["desc"])["pathOrInlineDv"])
+                raise MergeMultipleMatchesError(
+                    "MERGE: one target row matched multiple source rows "
+                    "under an update/delete clause; the result would be "
+                    "nondeterministic. Deduplicate the source on the "
+                    "merge key, or pass allow_multiple_matches=True."
+                )
 
             # row tracking: updated rows keep their id, inserts get
             # fresh ids (NULL materialized value + fresh baseRowId);
@@ -819,8 +879,19 @@ class DeltaMergeBuilder:
                     f"CAST(NULL AS BIGINT) AS {quote_ident(lineage[1])}",
                 ]
                 stat_exclude = set(lineage)
-            emitted = staged.filter("__action__ IN ('update', 'insert')").selectExpr(
-                *fields, *lineage_out
+            # the row counts: observed on the write, which always runs,
+            # above the cache and under no shuffle
+            counts_obs = Observation()
+            emitted = (
+                staged.observe(
+                    counts_obs,
+                    *[
+                        F.expr(f"count_if(__action__ = '{a}') AS {a}")
+                        for a in ("update", "delete", "insert")
+                    ],
+                )
+                .filter("__action__ IN ('update', 'insert')")
+                .selectExpr(*fields, *lineage_out)
             )
             adds = write_data_files(
                 enforce_check_constraints(
@@ -843,10 +914,11 @@ class DeltaMergeBuilder:
         )
         actions += pair_actions
         actions += [{"add": a} for a in adds]
+        action_counts = _observed(counts_obs, ["update", "delete", "insert"])
         metrics = {
-            "numTargetRowsUpdated": str(action_counts.get("update", 0)),
-            "numTargetRowsDeleted": str(action_counts.get("delete", 0)),
-            "numTargetRowsInserted": str(action_counts.get("insert", 0)),
+            "numTargetRowsUpdated": str(action_counts["update"]),
+            "numTargetRowsDeleted": str(action_counts["delete"]),
+            "numTargetRowsInserted": str(action_counts["insert"]),
             "numSourceRows": str(
                 _observed(src_obs, ["numSourceRows"])["numSourceRows"]
             ),
@@ -988,6 +1060,19 @@ class DeltaMergeBuilder:
         from jodie_spark.tables.column_mapping import column_mapping_mode
 
         mode_id = mapped and column_mapping_mode(snap.metadata) == "id"
+        # the broadcast-source rewrite (module docstring) serves merges
+        # with no multiple-match check to run, no by-source clause and
+        # inserts that read the source only; whether the source is small
+        # enough is settled once the probe has candidates to scan
+        multi_ok = self._multiple_matches_allowed(allow_multiple_matches)
+        broadcast = bool(
+            multi_ok
+            and self._matched
+            and not self._not_matched_by_source
+            and (not self._not_matched or self._insert_only_fastpath_safe(talias))
+        )
+        limit = _broadcast_limit(spark) if broadcast else -1
+        broadcast = broadcast and limit >= 0
         src_obs = Observation()
         # the source plan is consumed by both passes (find-touched semi
         # join, then the rewrite join); staged sources like Type2Scd's
@@ -997,7 +1082,12 @@ class DeltaMergeBuilder:
             self.source.select("*")
             if mode_id
             else self.source.observe(src_obs, F.expr("count(1) AS numSourceRows"))
-        ).persist()
+        )
+        if broadcast and self._not_matched:
+            # source row ids, fixed by the cache: the probe observes the
+            # matched ones, the rewrite inserts the others
+            cached = cached.withColumn("__sid__", F.monotonically_increasing_id())
+        cached = cached.persist()
         src = self._mark_source(cached)
         staged_cached = False
         try:
@@ -1024,6 +1114,8 @@ class DeltaMergeBuilder:
             )
 
             touched: list[dict[str, Any]] = []
+            matched_sids: list[int] = []
+            n_out = None
             lineage, lineage_actions = t._lineage_setup(snap, candidates)
             insert_only = (
                 not self._matched
@@ -1048,12 +1140,29 @@ class DeltaMergeBuilder:
                     tgt = read_files_df(spark, t.path, schema, []).alias(talias)
                 joined = src.join(tgt, F.expr(self.condition), "left_anti")
             else:
+                # the row-lineage scan joins a broadcast of its own, so
+                # its partition count is not known before it runs
+                broadcast = bool(broadcast and candidates and lineage is None)
+                if broadcast and self._not_matched:
+                    # a merge that inserts observes its matched source
+                    # ids, unless the source is known to be too large to
+                    # broadcast (an RDD-backed source has no estimate
+                    # until the probe fills its cache)
+                    est = _size_estimate(cached)
+                    broadcast = est <= limit or est >= _NO_SIZE_ESTIMATE
                 if candidates and (
                     self._matched or self._not_matched or self._not_matched_by_source
                 ):
-                    touched = self._find_touched(
+                    touched, matched_sids = self._find_touched(
                         snap, schema, talias, src, candidates, lineage,
-                        allow_multiple_matches,
+                        multi_ok, broadcast and bool(self._not_matched),
+                    )
+                    # the probe filled the cache: Spark's static rule now
+                    # sees the source's real size
+                    broadcast = (
+                        broadcast
+                        and len(matched_sids) <= _MAX_INSERT_FILTER_IDS
+                        and _size_estimate(src) <= limit
                     )
                 # -- pass 2: rewrite touched files + insert unmatched rows ----
                 if touched:
@@ -1076,7 +1185,37 @@ class DeltaMergeBuilder:
                         tgt = tgt.withColumn(
                             LIN_RID, F.lit(None).cast("long")
                         ).withColumn(LIN_RCV, F.lit(None).cast("long"))
-                joined = tgt.join(src, F.expr(self.condition), "full_outer")
+                if not broadcast:
+                    joined = tgt.join(src, F.expr(self.condition), "full_outer")
+                else:
+                    # the updated, deleted and copied rows: the static
+                    # rule broadcasts the source (its size was just
+                    # checked), so there is no target shuffle and each
+                    # file keeps its row order
+                    joined = (tgt if touched else tgt.limit(0)).join(
+                        src, F.expr(self.condition), "left_outer"
+                    )
+                    if self._not_matched:
+                        # plus the source rows no candidate row matched,
+                        # with an empty target side (Catalyst folds the
+                        # join away); the union keeps the first side's
+                        # aliases, so the staging text resolves unchanged
+                        new = (
+                            src.filter(
+                                "NOT (__sid__ IN"
+                                f" ({', '.join(map(str, matched_sids))}))"
+                            )
+                            if matched_sids
+                            else src
+                        )
+                        joined = joined.union(
+                            tgt.limit(0).join(
+                                new, F.expr(self.condition), "right_outer"
+                            )
+                        )
+                        # one file per target scan partition: a one-file
+                        # target and its inserts stay one file
+                        n_out = num_partitions(tgt) if touched else 1
             t_rewrite = time.time()
 
             has_target = not insert_only
@@ -1093,8 +1232,8 @@ class DeltaMergeBuilder:
                 ],
             )
             # CDF re-consumes `staged` for the delete/pre/post/insert change
-            # legs; without a cache each leg would re-run the full-outer
-            # join. Non-CDF merges evaluate it once — no cache, no memory
+            # legs; without a cache each leg would re-run the join.
+            # Non-CDF merges evaluate it once — no cache, no memory
             # pressure
             staged_cached = cdf and has_target
             if staged_cached:
@@ -1127,6 +1266,9 @@ class DeltaMergeBuilder:
                 result, id_schema_meta = _assign_identities(
                     result, schema, id_generate, keep_cols
                 )
+
+            if n_out is not None:
+                result = result.coalesce(n_out)
 
             cdc_actions: list[dict[str, Any]] = []
             adds = t._write_rewrite_files(
@@ -1163,6 +1305,8 @@ class DeltaMergeBuilder:
                     change_df = (
                         leg if change_df is None else change_df.unionByName(leg)
                     )
+                if n_out is not None:
+                    change_df = change_df.coalesce(n_out)
                 cdc_actions = t._write_cdf_files(
                     change_df, snap,
                     logical_schema=schema if schema_evolved else None,
@@ -1298,14 +1442,19 @@ class DeltaMergeBuilder:
         )
 
     def _find_touched(
-        self, snap, schema, talias, src, candidates, lineage, allow_multiple_matches
-    ) -> list[dict[str, Any]]:
+        self, snap, schema, talias, src, candidates, lineage, multi_ok, sids
+    ) -> tuple[list[dict[str, Any]], list[int]]:
         """Pass 1: the candidate adds holding at least one row the merge
         changes, found by ONE noop action that observes the file set
         (:func:`~jodie_spark.tables.table.observed_metrics`): the semi
         join (or, with the multiple-match check on, the inner join with
         one per-target-row count), unioned with the by-source anti join
         when by-source clauses exist. A missing observation raises.
+
+        With ``sids`` it is the inner join, which also observes the
+        matched source-row ids (``__sid__``, at most
+        ``_MAX_INSERT_FILTER_IDS + 1`` of them) for the broadcast-source
+        rewrite. Returns (touched adds, matched ids).
 
         The probe is NOT cached: uncached, Spark's column pruning
         reaches the parquet scan, so it reads only the merge-key columns
@@ -1326,8 +1475,9 @@ class DeltaMergeBuilder:
         # the multiple-match guard must run whenever touched files will
         # be rewritten, not only when matched clauses exist (by-source-
         # only and slow-path insert-only merges rewrite copies too)
-        multi_ok = self._multiple_matches_allowed(allow_multiple_matches)
-        if multi_ok:
+        if sids:
+            rows = probe.alias(talias).join(src, F.expr(self.condition), "inner")
+        elif multi_ok:
             rows = probe.alias(talias).join(
                 src, F.expr(self.condition), "left_semi"
             ).select("__path__")
@@ -1361,11 +1511,12 @@ class DeltaMergeBuilder:
             )
         # only "> 0" is read: a re-executed task cannot turn the count
         # (nor the file set, a set union) into a wrong answer
-        got = observed_metrics(
-            rows,
-            files="collect_set(__path__)",
-            **({} if multi_ok else {"dups": "count_if(__n__ > 1)"}),
+        extra = (
+            {"sids": f"slice(collect_set(__sid__), 1, {_MAX_INSERT_FILTER_IDS + 1})"}
+            if sids
+            else {} if multi_ok else {"dups": "count_if(__n__ > 1)"}
         )
+        got = observed_metrics(rows, files="collect_set(__path__)", **extra)
         if not multi_ok and got["dups"] > 0:
             from jodie_spark.errors import MergeMultipleMatchesError
 
@@ -1379,4 +1530,7 @@ class DeltaMergeBuilder:
         # raises on any URI that fails to map back to a candidate add —
         # a partial/empty touched set here would re-insert matched
         # source rows as duplicates against an empty rewrite target
-        return map_touched_paths(t.path, candidates, set(got["files"] or ()))
+        return (
+            map_touched_paths(t.path, candidates, set(got["files"] or ())),
+            list(got.get("sids") or ()),
+        )

@@ -56,3 +56,23 @@ def spark_jobs(spark, fn) -> int:
     j0 = int(dag.nextJobId())
     fn()
     return int(dag.nextJobId()) - j0
+
+
+def executed_plans(spark, fn) -> list[str]:
+    """Physical-plan text of the SQL executions ``fn()`` ran, oldest
+    first, from the session's SQL status store (AQE's final plan where
+    AQE re-planned)."""
+    sc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        sc.listenerBus().waitUntilEmpty()
+        got = store.executionsList()
+        return {
+            int(e.executionId()): e.physicalPlanDescription()
+            for e in (got.apply(i) for i in range(got.size()))
+        }
+
+    before = set(executions())
+    fn()
+    return [p for i, p in sorted(executions().items()) if i not in before]

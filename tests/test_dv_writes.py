@@ -181,6 +181,54 @@ def test_mor_merge_multi_match_guard(spark, table):
     assert table.toDF().count() == 1000  # nothing committed
 
 
+@pytest.mark.parametrize("allow", [False, True])
+def test_mor_merge_counts_are_observations(spark, tmpdir_path, allow):
+    """The action counts ride the data-file write and the multiple-match
+    check the DV-marks action: 8 jobs with the check on or off (13 and
+    10 when both were collect jobs)."""
+    from conftest import spark_jobs
+
+    p = os.path.join(tmpdir_path, "kv")
+    write_delta(spark.range(100).selectExpr("id AS k", "id AS v").coalesce(1), p)
+    t = DeltaTable.forPath(spark, p)
+    src = spark.createDataFrame([(5, 50), (500, 1)], "k long, v long")
+
+    def merge():
+        (
+            t.alias("t").merge(src.alias("s"), "t.k = s.k")
+            .whenMatchedUpdate(set={"v": "s.v"})
+            .whenNotMatchedInsertAll()
+            .execute(deletion_vectors=True, allow_multiple_matches=allow)
+        )
+
+    assert spark_jobs(spark, merge) == 8
+    m = t.history(1).collect()[0]["operationMetrics"]
+    got = tuple(m[f"numTargetRows{a}"] for a in ("Updated", "Deleted", "Inserted"))
+    assert got == ("1", "0", "1")
+    assert sorted(tuple(r) for r in t.toDF().collect()) == sorted(
+        [(i, 50 if i == 5 else i) for i in range(100)] + [(500, 1)]
+    )
+
+
+def test_mor_multi_match_guard_removes_its_dv_files(spark, table):
+    """Two source rows mark one position: the bitmaps hold 2 new
+    positions for 3 marked pairs, so the merge refuses before its
+    commit and deletes the bitmaps it wrote."""
+    from jodie_spark.errors import MergeMultipleMatchesError
+
+    dup = spark.createDataFrame([(5, 1), (5, 2), (6, 3)], ["id", "m"])
+    with pytest.raises(MergeMultipleMatchesError):
+        (
+            table.alias("tg")
+            .merge(dup.alias("s"), "tg.id = s.id")
+            .whenMatchedDelete("s.m = 3")
+            .whenMatchedUpdate(set={"m": "s.m"})
+            .execute(deletion_vectors=True)
+        )
+    assert table.deltaLog.latest_version() == 0
+    assert glob.glob(os.path.join(table.path, "deletion_vectors", "*")) == []
+
+
 def test_mor_merge_stacks_on_mor_delete(spark, table):
     table.delete("m = 3", deletion_vectors=True)  # 900 rows live
     # id=3 is DV-deleted (3 % 10 == 3); id=14 is live
