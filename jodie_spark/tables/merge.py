@@ -212,11 +212,10 @@ _BYTE_UNITS = {
 }
 
 
-def _broadcast_limit(spark) -> int:
-    """``spark.sql.autoBroadcastJoinThreshold`` in bytes (negative:
-    never broadcast), parsed the way Spark parses a byte-size conf:
-    ``10485760b``, ``10m``, ``10MB``, ``-1``."""
-    text = spark.conf.get("spark.sql.autoBroadcastJoinThreshold").strip().lower()
+def conf_bytes(spark, key: str) -> int:
+    """A byte-size conf of ``spark``'s session in bytes, parsed the way
+    Spark parses one: ``10485760b``, ``10m``, ``10MB``, ``-1``."""
+    text = spark.conf.get(key).strip().lower()
     sign, digits, unit = re.fullmatch(r"(-?)(\d+)([a-z]?)b?", text).groups()
     return (-1 if sign else 1) * int(digits) * _BYTE_UNITS[unit]
 
@@ -1071,7 +1070,10 @@ class DeltaMergeBuilder:
             and not self._not_matched_by_source
             and (not self._not_matched or self._insert_only_fastpath_safe(talias))
         )
-        limit = _broadcast_limit(spark) if broadcast else -1
+        # spark.sql.autoBroadcastJoinThreshold: negative never broadcasts
+        limit = (
+            conf_bytes(spark, "spark.sql.autoBroadcastJoinThreshold") if broadcast else -1
+        )
         broadcast = broadcast and limit >= 0
         src_obs = Observation()
         # the source plan is consumed by both passes (find-touched semi

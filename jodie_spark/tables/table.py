@@ -26,7 +26,7 @@ from pyspark.sql import types as T
 
 from jodie_spark.errors import DeltaProtocolError, JodieValidationError
 from jodie_spark.tables.log import CHECKPOINT_PROTECTION_PROP, DeltaLog, Snapshot
-from jodie_spark.tables.merge import _frag, _str_lit, quote_ident, type_ddl
+from jodie_spark.tables.merge import _frag, _str_lit, conf_bytes, quote_ident, type_ddl
 from jodie_spark.tables.writer import write_data_files, write_metrics
 
 CDF_PROP = "delta.enableChangeDataFeed"
@@ -1425,6 +1425,56 @@ class DeltaTable:
             return None, []
         return cols, ([meta_action] if meta_action else [])
 
+    def _touched_files(
+        self,
+        snap: Snapshot,
+        schema: T.StructType,
+        candidates: list[dict[str, Any]],
+        cond: str,
+    ) -> tuple[list[dict[str, Any]], tuple[str, str] | None, list[dict[str, Any]]]:
+        """Pass 1 of a copy-on-write DELETE/UPDATE: the candidate adds
+        the rewrite reads, with :meth:`_lineage_setup`'s row-tracking
+        columns and actions.
+
+        One candidate no larger than ``spark.sql.files.openCostInBytes``
+        (Spark's price of opening a file) is returned as is: the touched
+        set is that file or nothing, and the rewrite's observed match
+        count tells which, so a point DML runs one Spark job. A miss
+        costs a rewrite of the file that the caller discards; the size
+        bound caps that waste. Any other candidate set is probed: one
+        observed scan of the condition columns and the file path, no
+        cache (column pruning then reaches the parquet scan)."""
+        lineage, lineage_actions = self._lineage_setup(snap, candidates)
+        if (
+            len(candidates) == 1
+            and candidates[0].get("size") is not None
+            and int(candidates[0]["size"])
+            <= conf_bytes(self.spark, "spark.sql.files.openCostInBytes")
+        ):
+            return candidates, lineage, lineage_actions
+        if lineage is not None:
+            cand_df = self._read_candidates(snap, schema, candidates, lineage=lineage)
+        else:
+            cand_df = self._read_candidates(snap, schema, candidates).withColumn(
+                "__file__", F.input_file_name()
+            )
+        touched = map_touched_paths(
+            self.path,
+            candidates,
+            observed_file_uris(cand_df.filter(cond), "__file__"),
+        )
+        return touched, lineage, lineage_actions
+
+    def _discard_files(self, adds: list[dict[str, Any]]) -> None:
+        """Delete the data files of ``adds``, written by an operation that
+        will not commit them. Never call it once a commit was attempted:
+        a put-if-absent that raised may still have landed."""
+        from jodie_spark.fs import get_fs
+
+        fs = get_fs(self.path)
+        for a in adds:
+            fs.remove(fs.join(self.path, *urllib.parse.unquote(a["path"]).split("/")))
+
     def _read_candidates(
         self,
         snap: Snapshot,
@@ -1675,28 +1725,15 @@ class DeltaTable:
             deleted_rows = planned_num_records(self.spark, self.path, schema)
         elif candidates:
             t_scan = time.time()
-            lineage, lineage_actions = self._lineage_setup(snap, candidates)
-            # pass 1 probe is NOT cached: uncached, Spark's column
-            # pruning reaches the parquet scan (condition columns +
-            # file path only); pass 2 re-plans a full-column scan over
-            # ONLY the touched adds — same two-scan shape as MERGE.
-            # Caching materialized every column of every candidate row
-            if lineage is not None:
-                cand_df = self._read_candidates(
-                    snap, schema, candidates, lineage=lineage
-                )
-            else:
-                cand_df = self._read_candidates(snap, schema, candidates).withColumn(
-                    "__file__", F.input_file_name()
-                )
+            cond = _frag(condition)
+            # pass 1 finds the touched adds (see _touched_files: one
+            # small candidate skips the probe); pass 2 rewrites a
+            # full-column scan of ONLY those — same shape as MERGE
+            touched, lineage, lineage_actions = self._touched_files(
+                snap, schema, candidates, cond
+            )
             lineage_drop = (
                 ["__lineage_rid__", "__lineage_rcv__"] if lineage is not None else []
-            )
-            cond = _frag(condition)
-            touched = map_touched_paths(
-                self.path,
-                candidates,
-                observed_file_uris(cand_df.filter(cond), "__file__"),
             )
             scan_ms = int((time.time() - t_scan) * 1000)
             if touched:
@@ -1711,29 +1748,38 @@ class DeltaTable:
                     # delete change leg); cache it for that one re-read
                     touched_df = touched_df.persist()
                 try:
+                    # the deleted-row count rides the write job's
+                    # observation — no count job (candidates carry no
+                    # stats strings) — and decides whether it commits
                     obs = Observation()
-                    observed = touched_df.observe(obs, F.expr("count(1) AS total"))
+                    observed = touched_df.observe(
+                        obs, F.expr(f"count_if(coalesce({cond}, false)) AS deleted")
+                    )
                     # surviving (copied) rows keep BOTH their row id and
                     # commit version — spec row-tracking preservation
                     keep_df = observed.filter(f"NOT coalesce({cond}, false)")
                     adds = self._write_rewrite_files(snap, keep_df, lineage=lineage)
-                    removes = touched
-                    # pre-rewrite row count rides the write job's
-                    # observation — no separate count job (candidates
-                    # carry no stats strings)
                     try:
-                        total_before = int(obs.get.get("total") or 0)
-                    except Exception:
-                        total_before = touched_df.count()
-                    copied_rows = sum(
-                        int(json.loads(a["stats"]).get("numRecords") or 0) for a in adds
-                    )
-                    deleted_rows = total_before - copied_rows
-                    if cdf_on:
-                        deleted_df = touched_df.filter(cond).drop(
-                            *lineage_drop
-                        ).selectExpr("*", "'delete' AS _change_type")
-                        cdc_actions = self._write_cdf_files(deleted_df, snap)
+                        deleted_rows = observation_values(obs, ["deleted"], "rewrite")[
+                            "deleted"
+                        ]
+                        if deleted_rows:
+                            removes = touched
+                            copied_rows = sum(
+                                int(json.loads(a["stats"]).get("numRecords") or 0)
+                                for a in adds
+                            )
+                            if cdf_on:
+                                deleted_df = touched_df.filter(cond).drop(
+                                    *lineage_drop
+                                ).selectExpr("*", "'delete' AS _change_type")
+                                cdc_actions = self._write_cdf_files(deleted_df, snap)
+                    except BaseException:
+                        self._discard_files(adds)
+                        raise
+                    if not removes:  # no row matched: nothing to commit
+                        self._discard_files(adds)
+                        adds = []
                 finally:
                     if cdf_on:
                         touched_df.unpersist()
@@ -2263,25 +2309,11 @@ class DeltaTable:
 
         if candidates:
             t_scan = time.time()
-            lineage, lineage_actions = self._lineage_setup(snap, candidates)
-            # pass 1 probe is NOT cached (column pruning reaches the
-            # parquet scan: condition columns + file path only); pass 2
-            # re-plans a full-column scan over ONLY the touched adds —
-            # same two-scan shape as MERGE and DELETE
-            if lineage is not None:
-                from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
-
-                cand_df = self._read_candidates(
-                    snap, schema, candidates, lineage=lineage
-                )
-            else:
-                cand_df = self._read_candidates(snap, schema, candidates).withColumn(
-                    "__file__", F.input_file_name()
-                )
-            touched = map_touched_paths(
-                self.path,
-                candidates,
-                observed_file_uris(cand_df.filter(cond), "__file__"),
+            # pass 1 finds the touched adds (see _touched_files); pass 2
+            # rewrites a full-column scan of ONLY those — same shape as
+            # MERGE and DELETE
+            touched, lineage, lineage_actions = self._touched_files(
+                snap, schema, candidates, cond
             )
             scan_ms = int((time.time() - t_scan) * 1000)
             if touched:
@@ -2320,13 +2352,15 @@ class DeltaTable:
                 try:
                     obs = Observation()
                     observed = staged.observe(
-                        obs, F.expr(f"sum(CASE WHEN {cond} THEN 1 ELSE 0 END) AS updated")
+                        obs, F.expr(f"count_if(coalesce({cond}, false)) AS updated")
                     )
                     # row tracking: every rewritten row keeps its id;
                     # MODIFIED rows get a NULL materialized commit
                     # version (readers fall back to the add's
                     # defaultRowCommitVersion = this commit), copied
                     # rows keep their original version
+                    from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
+
                     lineage_out = (
                         [
                             LIN_RID,
@@ -2346,17 +2380,30 @@ class DeltaTable:
                         ),
                         lineage=lineage,
                     )
-                    removes = touched
-                    updated_rows = int(obs.get["updated"] or 0)
-                    if cdf_on:
-                        pre = staged.filter(cond).selectExpr(
-                            *[quote_ident(f.name) for f in schema.fields],
-                            "'update_preimage' AS _change_type",
-                        )
-                        post = staged.filter(cond).selectExpr(
-                            *fields, "'update_postimage' AS _change_type"
-                        )
-                        cdc_actions = self._write_cdf_files(pre.unionByName(post), snap)
+                    try:
+                        # the match count decides whether the rewrite commits
+                        updated_rows = observation_values(obs, ["updated"], "rewrite")[
+                            "updated"
+                        ]
+                        if updated_rows:
+                            removes = touched
+                            if cdf_on:
+                                pre = staged.filter(cond).selectExpr(
+                                    *[quote_ident(f.name) for f in schema.fields],
+                                    "'update_preimage' AS _change_type",
+                                )
+                                post = staged.filter(cond).selectExpr(
+                                    *fields, "'update_postimage' AS _change_type"
+                                )
+                                cdc_actions = self._write_cdf_files(
+                                    pre.unionByName(post), snap
+                                )
+                    except BaseException:
+                        self._discard_files(adds)
+                        raise
+                    if not removes:  # no row matched: nothing to commit
+                        self._discard_files(adds)
+                        adds = []
                 finally:
                     if cdf_on:
                         staged.unpersist()
@@ -3247,22 +3294,29 @@ def observed_metrics(df: DataFrame, **metrics: str) -> dict[str, Any]:
     Observe at the TOP of the plan: Spark still reports metrics there
     over an empty source or a filter that folds to false, but AQE's
     empty-relation propagation can drop an observation that sits under
-    a shuffle. A missing metric RAISES: read as "no files", it would
-    make a DML rewrite nothing, or a merge re-insert its matched rows
-    as duplicates."""
+    a shuffle. A missing metric raises (:func:`observation_values`)."""
     obs = Observation()
     df.observe(
         obs, *[F.expr(f"{agg} AS {name}") for name, agg in metrics.items()]
     ).write.format("noop").mode("overwrite").save()
+    return observation_values(obs, list(metrics), "probe")
+
+
+def observation_values(obs: Observation, names: list[str], what: str) -> dict[str, Any]:
+    """The metrics ``obs`` reported after its action ran, every one of
+    ``names`` present. A missing metric RAISES: the probe's file set and
+    a DML rewrite's match count decide what commits, and read as "no
+    files" or 0 they would make a DML commit nothing, or a merge
+    re-insert its matched rows as duplicates."""
     try:
         got = obs.get
     except Py4JJavaError:  # no metrics row: the observation was dropped
         got = {}
-    missing = [name for name in metrics if name not in got]
+    missing = [name for name in names if name not in got]
     if missing:
         raise DeltaProtocolError(
-            f"the probe's observation reported no {missing}; refusing to "
-            "treat the scan as having read no files"
+            f"the {what}'s observation reported no {missing}; refusing to "
+            "read it as nothing matched"
         )
     return got
 

@@ -1,3 +1,5 @@
+import contextlib
+import os
 import shutil
 import sys
 import tempfile
@@ -50,6 +52,16 @@ def py4j_round_trips(spark, fn) -> int:
     return n
 
 
+def parquet_files(path) -> list[str]:
+    """The parquet files under ``path``, relative to it, sorted."""
+    return sorted(
+        os.path.relpath(os.path.join(d, f), path)
+        for d, _, fs in os.walk(path)
+        for f in fs
+        if f.endswith(".parquet")
+    )
+
+
 def spark_jobs(spark, fn) -> int:
     """Spark jobs ``fn()`` starts, from the DAG scheduler's job ids."""
     dag = spark.sparkContext._jsc.sc().dagScheduler()
@@ -76,3 +88,18 @@ def executed_plans(spark, fn) -> list[str]:
     before = set(executions())
     fn()
     return [p for i, p in sorted(executions().items()) if i not in before]
+
+
+@contextlib.contextmanager
+def session_conf(spark, key: str, value: str):
+    """``spark``'s runtime conf ``key`` set to ``value`` inside the block,
+    its earlier value (or its unset state) restored after."""
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)

@@ -89,8 +89,9 @@ def test_stream_merge_upsert_and_delete(spark, tmpdir_path):
             keys=["k"],
             sequence_col="seq",
             delete_col="deleted",
+            available_now=True,
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)  # the available-now query stopped
 
     # batch 1: inserts incl. an out-of-order duplicate (seq decides)
     write_delta(

@@ -1,7 +1,9 @@
 """Touched-file probes observe the file set instead of shuffling it:
-DELETE/UPDATE find their files in one Spark job and MERGE in one
-aggregation, a missing observation refuses instead of reading as "no
-files", and the multiple-match guard still fires. DELETE/UPDATE
+DELETE/UPDATE over one small candidate file skip the probe (the
+rewrite's observed match count decides), over more files they find
+their files in one Spark job, MERGE finds them in one aggregation, a
+missing observation refuses instead of reading as "no files" or "no
+matches", and the multiple-match guard still fires. DELETE/UPDATE
 rewrites are SQL text, so user fragments, Column values and casts
 survive them. The streaming merge sink quotes every name it embeds."""
 
@@ -12,10 +14,13 @@ import pytest
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
-from conftest import py4j_round_trips, spark_jobs
+from conftest import parquet_files, py4j_round_trips, session_conf, spark_jobs
 from jodie_spark.errors import DeltaProtocolError, MergeMultipleMatchesError
 from jodie_spark.operators.cdf import read_cdf
 from jodie_spark.tables.table import DeltaTable, observed_file_uris, write_delta
+
+
+OPEN_COST = "spark.sql.files.openCostInBytes"
 
 
 def _kv(spark, tmpdir_path, name="t", files=1, options=None):
@@ -47,8 +52,9 @@ def _upsert(t, src, **kwargs):
 
 
 @pytest.mark.parametrize("op", ["delete", "update"])
-def test_dml_over_one_candidate_file_runs_two_jobs(spark, tmpdir_path, op):
-    """Probe (one observed scan) + rewrite; distinct() made it three."""
+def test_dml_over_one_candidate_file_runs_one_job(spark, tmpdir_path, op):
+    """The rewrite alone: the probe (one observed scan) made it two,
+    distinct() three."""
     t = _kv(spark, tmpdir_path)
     if op == "delete":
         jobs = spark_jobs(spark, lambda: t.delete("k = 5"))
@@ -56,7 +62,7 @@ def test_dml_over_one_candidate_file_runs_two_jobs(spark, tmpdir_path, op):
     else:
         jobs = spark_jobs(spark, lambda: t.update("k = 5", {"v": "v + 1000"}))
         assert _rows(t) == [(i, i + 1000 * (i == 5)) for i in range(100)]
-    assert jobs == 2
+    assert jobs == 1
 
 
 def test_merge_probe_is_one_job_lighter(spark, tmpdir_path):
@@ -147,18 +153,28 @@ def test_empty_source_and_false_condition_touch_nothing(spark, tmpdir_path, join
 
 def test_missing_file_set_observation_refuses(spark, tmpdir_path, monkeypatch):
     """A result without the metric must never read as "no touched
-    files": DELETE would rewrite nothing, MERGE would re-insert its
-    matched rows as duplicates."""
+    files" or "no matched rows": DELETE/UPDATE would commit nothing,
+    MERGE would re-insert its matched rows as duplicates. Checked with
+    the one file under the single-pass bound (the rewrite's observation
+    refuses) and over it (a 1-byte open cost: the probe's refuses). The
+    refusal comes before the commit, so the rewrite's files are
+    deleted."""
     t = _kv(spark, tmpdir_path)
-    monkeypatch.setattr(Observation, "get", property(lambda self: {}))
-    with pytest.raises(DeltaProtocolError, match="observation"):
-        t.delete("k = 5")
+    before = parquet_files(t.path)
     src = spark.createDataFrame([(5, 50)], "k long, v long")
-    with pytest.raises(DeltaProtocolError, match="observation"):
-        _upsert(t, src)
-    monkeypatch.undo()
-    assert t.deltaLog.latest_version() == 0
-    assert _rows(t) == [(i, i) for i in range(100)]
+    for cost in (spark.conf.get(OPEN_COST), "1b"):
+        with session_conf(spark, OPEN_COST, cost):
+            monkeypatch.setattr(Observation, "get", property(lambda self: {}))
+            with pytest.raises(DeltaProtocolError, match="observation"):
+                t.delete("k = 5")
+            with pytest.raises(DeltaProtocolError, match="observation"):
+                t.update("k = 5", {"v": "0"})
+            with pytest.raises(DeltaProtocolError, match="observation"):
+                _upsert(t, src)
+            monkeypatch.undo()
+        assert t.deltaLog.latest_version() == 0
+        assert _rows(t) == [(i, i) for i in range(100)]
+        assert parquet_files(t.path) == before
 
 
 def test_column_mapping_id_delete_and_merge(spark, tmpdir_path):
