@@ -1,42 +1,61 @@
-"""Change Data Feed: reader + failure-scenario recovery.
+"""Change Data Feed: the change-feed planner, the batch reader, and
+failure-scenario recovery.
 
 Parity: reference ChangeDataFeedHelper.scala:18-377. The reference
 delegates the read itself to Delta's CDF reader
 (``option("readChangeFeed","true")``); this engine rebuilds it on the
-log protocol:
+log protocol. :func:`change_files` is the one classifier of a commit's
+change files, shared by :func:`read_cdf` and the ``jodie_delta``
+change-feed readers (``sources/datasource.py``):
 
-- versions with ``cdc`` actions → read their ``_change_data`` parquet
+- versions with ``cdc`` actions → their ``_change_data`` parquet
   (rows already carry ``_change_type``);
-- versions without ``cdc`` actions → synthesize ``insert`` rows from
-  dataChange ``add`` files and ``delete`` rows from dataChange
-  ``remove`` files (which survive until vacuum) — the same synthesis
-  Delta's CDCReader performs for plain appends, full-table deletes,
-  overwrites, and RESTORE;
+- versions without ``cdc`` actions → ``insert`` rows from dataChange
+  ``add`` files and ``delete`` rows from dataChange ``remove`` files
+  (which survive until vacuum) — the same synthesis Delta's CDCReader
+  performs for plain appends, full-table deletes, overwrites, and
+  RESTORE. A file's deletion vector applies: rows it deletes are not
+  change rows;
 - a version inside the range where CDF is *disabled* (tracked by
   replaying ``metaData`` configuration changes) raises, matching
   Delta's DeltaAnalysisException failure mode the recovery helpers
   exist to work around.
 
-Scale: all change/add files across the whole version range are read in
-two Spark scans (one for cdc files, one for add files); per-file commit
-version/timestamp attach via a broadcast join on file path — never a
-per-version read loop over data.
+:func:`version_range` resolves the starting/ending version and
+timestamp options for every change-feed and stream reader.
+
+Scale: :func:`read_cdf` reads each kind of change file in one Spark
+scan (a path one kind serves twice adds a scan), never a per-version
+read loop over data. Commit version and
+timestamp attach per file by a broadcast join on Spark's spelling of
+the file path, learned from one observed metadata-only job and mapped
+to log entries through the shared path canonicalization
+(``jodie_spark.fs.add_path_key`` / ``scanned_path_key``).
 """
 
 from __future__ import annotations
 
-import os
 import urllib.parse
+from collections import Counter
 from functools import reduce
-from typing import Any
+from typing import Any, Iterator, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jodie_spark.errors import DeltaProtocolError, VersionNotFoundError
+from jodie_spark.fs import add_path_key, get_fs, scanned_path_key
+from jodie_spark.tables.column_mapping import rename_to_logical
 from jodie_spark.tables.log import DeltaLog
-from jodie_spark.tables.table import CDF_PROP, DeltaTable, scan_parquet
+from jodie_spark.tables.table import (
+    _FP_RI,
+    CDF_PROP,
+    DeltaTable,
+    _drop_dv_positions,
+    observed_file_uris,
+    scan_parquet,
+)
 
 
 def _cdf_enabled(configuration: dict[str, Any]) -> bool:
@@ -55,6 +74,108 @@ def _to_ts_ms(ts) -> int:
     return int(float(ts) * 1000)
 
 
+def version_range(
+    log: DeltaLog,
+    starting_version=None,
+    starting_timestamp=None,
+    ending_version=None,
+    ending_timestamp=None,
+) -> tuple[int | None, int | None]:
+    """(first, last) commit version a change-feed or stream read covers,
+    from delta-spark's ``startingVersion``/``startingTimestamp`` and
+    ``endingVersion``/``endingTimestamp`` options. A version is taken as
+    given; a starting timestamp resolves to the earliest commit at or
+    after it, an ending timestamp to the newest commit at or before it.
+    An end with neither option is None, and so is a start."""
+
+    def resolve(version, timestamp, at_or_after: bool) -> int | None:
+        if version is not None:
+            return int(version)
+        if timestamp is not None:
+            return log.version_at_timestamp(_to_ts_ms(timestamp), at_or_after=at_or_after)
+        return None
+
+    return (
+        resolve(starting_version, starting_timestamp, True),
+        resolve(ending_version, ending_timestamp, False),
+    )
+
+
+# log action → the kind of change rows its file holds
+_CHANGE_KINDS = {"cdc": "cdc", "add": "insert", "remove": "delete"}
+
+
+class ChangeFile(NamedTuple):
+    """One file of a commit's change feed."""
+
+    kind: str  # 'cdc' | 'insert' | 'delete'
+    path: str  # table-relative, percent-encoded as in the log
+    partition_values: dict[str, str]
+    dv: dict | None  # deletion vector: the rows it deletes are not changes
+    size: int
+    version: int
+    ts_ms: int
+
+
+def change_files(log: DeltaLog, start_v: int, end_v: int) -> Iterator[tuple[int, list[ChangeFile]]]:
+    """``(v, change files of commit v)`` for each commit in ``(start_v,
+    end_v]``, in log order: a commit that wrote ``cdc`` actions serves
+    those (its adds and removes are not read), any other its dataChange
+    adds as ``insert`` and its dataChange removes as ``delete`` files.
+
+    Raises on a version past 0 written with CDF off (``metaData``
+    toggles are tracked through the range), and when a ``cdc`` file or
+    a removed data file has been deleted (vacuumed): their rows cannot
+    be served. Lazy: a caller that stops early reads no further
+    commits."""
+    if start_v + 1 > end_v:
+        return
+    fs = get_fs(log.table_path)
+    # the configuration at the first version served: its own metaData
+    # (if any) sets the same state again below
+    enabled = _cdf_enabled(log.table_info(max(start_v + 1, 0)).configuration)
+    for v in range(start_v + 1, end_v + 1):
+        actions = log.read_actions(v)
+        ci = next((a["commitInfo"] for a in actions if "commitInfo" in a), {})
+        ts = int(ci.get("inCommitTimestamp") or ci.get("timestamp") or 0)
+        cdc: list[ChangeFile] = []
+        data: list[ChangeFile] = []
+        for a in actions:
+            if a.get("metaData"):
+                enabled = _cdf_enabled(a["metaData"].get("configuration"))
+            for key, kind in _CHANGE_KINDS.items():
+                f = a.get(key)
+                if f and (key == "cdc" or f.get("dataChange", True)):
+                    (cdc if key == "cdc" else data).append(
+                        ChangeFile(
+                            kind,
+                            f["path"],
+                            f.get("partitionValues") or {},
+                            f.get("deletionVector"),
+                            int(f.get("size") or 0),
+                            v,
+                            ts,
+                        )
+                    )
+        if v > 0 and not enabled:
+            raise DeltaProtocolError(
+                f"Error getting change data for version {v}: change data was "
+                f"not recorded ({CDF_PROP} is disabled)."
+            )
+        files = cdc or data
+        for f in files:
+            # a remove-only commit (full-table delete, overwrite, RESTORE)
+            # writes no cdc files: its delete rows come from the removed
+            # data files, which stay on disk until vacuum
+            p = fs.join(log.table_path, urllib.parse.unquote(f.path))
+            if f.kind != "insert" and not fs.isfile(p):
+                what = "change data" if f.kind == "cdc" else "removed data"
+                raise FileNotFoundError(
+                    f"{what} file {p} for version {v} has been deleted (vacuumed?)"
+                )
+        yield v, files
+
+
 def read_cdf(
     spark: SparkSession,
     path: str,
@@ -66,71 +187,19 @@ def read_cdf(
     """Change rows between versions (inclusive) with ``_change_type``,
     ``_commit_version``, ``_commit_timestamp``. Timestamps resolve to
     versions the way delta-spark's startingTimestamp/endingTimestamp
-    options do (newest commit at-or-before).
+    options do (see :func:`version_range`).
     Parity: ChangeDataFeedHelper.scala:371-377."""
     table = DeltaTable.forPath(spark, path)
     log = table.deltaLog
-    if starting_version is None:
-        if starting_timestamp is None:
-            raise ValueError("read_cdf needs starting_version or starting_timestamp")
-        starting_version = log.version_at_timestamp(
-            _to_ts_ms(starting_timestamp), at_or_after=True
-        )
-    if ending_version is None:
-        ending_version = (
-            log.latest_version()
-            if ending_timestamp is None
-            else log.version_at_timestamp(_to_ts_ms(ending_timestamp))
-        )
-    schema = table.schema(table.snapshot(ending_version))
-
-    start_snap = table.snapshot(starting_version)  # raises VersionNotFoundError if gone
-    enabled = _cdf_enabled(start_snap.configuration)
-
-    cdc_files: list[tuple[str, int, int]] = []  # (abspath, version, ts)
-    insert_files: list[tuple[str, int, int]] = []
-    delete_files: list[tuple[str, int, int]] = []
-    for v in range(starting_version, ending_version + 1):
-        actions = log.read_actions(v)
-        ci = next((a["commitInfo"] for a in actions if "commitInfo" in a), {})
-        ts = int(ci.get("inCommitTimestamp") or ci.get("timestamp") or 0)
-        has_cdc = False
-        adds: list[str] = []
-        removes: list[str] = []
-        for a in actions:
-            if "metaData" in a and a["metaData"]:
-                enabled = _cdf_enabled(a["metaData"].get("configuration"))
-            elif "cdc" in a and a["cdc"]:
-                has_cdc = True
-                p = os.path.join(path, urllib.parse.unquote(a["cdc"]["path"]))
-                if not os.path.isfile(p):
-                    raise FileNotFoundError(
-                        f"change data file {p} for version {v} has been deleted (vacuumed?)"
-                    )
-                cdc_files.append((p, v, ts))
-            elif "add" in a and a["add"] and a["add"].get("dataChange", True):
-                adds.append(os.path.join(path, urllib.parse.unquote(a["add"]["path"])))
-            elif "remove" in a and a["remove"] and a["remove"].get("dataChange", True):
-                removes.append(os.path.join(path, urllib.parse.unquote(a["remove"]["path"])))
-        if v > 0 and not enabled:
-            raise DeltaProtocolError(
-                f"Error getting change data for range [{starting_version}, "
-                f"{ending_version}] as change data was not recorded for version {v}. "
-                f"{CDF_PROP} is disabled."
-            )
-        if not has_cdc:
-            insert_files.extend((p, v, ts) for p in adds)
-            # remove-only commits (full-table delete, overwrite, RESTORE)
-            # write no cdc files; their delete rows come from the removed
-            # data files, which remain on disk until vacuum
-            for p in removes:
-                if not os.path.isfile(p):
-                    raise FileNotFoundError(
-                        f"removed data file {p} needed to synthesize delete change "
-                        f"rows for version {v} has been deleted (vacuumed?)"
-                    )
-                delete_files.append((p, v, ts))
-
+    start, end = version_range(
+        log, starting_version, starting_timestamp, ending_version, ending_timestamp
+    )
+    if start is None:
+        raise ValueError("read_cdf needs starting_version or starting_timestamp")
+    if end is None:
+        end = log.latest_version()
+    end_info = log.table_info(end)
+    schema = table.schema(end_info)
     out_schema = T.StructType(
         list(schema.fields)
         + [
@@ -139,72 +208,69 @@ def read_cdf(
             T.StructField("_commit_timestamp", T.TimestampType()),
         ]
     )
-    parts: list[DataFrame] = []
+    # one scan per (kind, occurrence): a path served twice by one kind
+    # (re-added by RESTORE) is scanned once per occurrence, so each
+    # scan maps a file to exactly one version and deletion vector
+    legs: dict[tuple[str, int], list[ChangeFile]] = {}
+    seen: Counter = Counter()
+    for _, files in change_files(log, start - 1, end):
+        for f in files:
+            legs.setdefault((f.kind, seen[f.kind, f.path]), []).append(f)
+            seen[f.kind, f.path] += 1
+    if not legs:
+        return spark.createDataFrame([], out_schema)
 
     # column-mapped tables store physical names in data/cdc files —
     # scan physical, rename back to logical (a logical-schema scan
     # would silently return all-null columns)
-    ms = table._mapping_schemas(table.snapshot(ending_version))
-
-    def _logical(df: DataFrame, extra: tuple[str, ...]) -> DataFrame:
-        if ms is None:
-            return df
-        from jodie_spark.tables.column_mapping import rename_to_logical
-
-        logical, physical = ms
-        return rename_to_logical(df, logical, physical, keep=extra)
-
+    ms = table._mapping_schemas(end_info)
     read_schema = schema if ms is None else ms[1]
-    if cdc_files:
-        cdc_df = scan_parquet(
-            spark,
-            [p for p, _, _ in cdc_files],
-            T.StructType(
-                list(read_schema.fields) + [T.StructField("_change_type", T.StringType())]
-            ),
-            cols=["*", "input_file_name() AS ___file"],
-        )
-        cdc_df = _logical(cdc_df, ("_change_type", "___file"))
-        parts.append(_join_version(spark, cdc_df, cdc_files))
-    for file_group, change_type in ((insert_files, "insert"), (delete_files, "delete")):
-        if not file_group:
-            continue
-        grp_df = scan_parquet(
-            spark,
-            [p for p, _, _ in file_group],
-            read_schema,
-            path,
-            cols=["*", f"'{change_type}' AS _change_type", "input_file_name() AS ___file"],
-        )
-        grp_df = _logical(grp_df, ("_change_type", "___file"))
-        parts.append(_join_version(spark, grp_df, file_group))
+    cdc_schema = T.StructType(
+        list(read_schema.fields) + [T.StructField("_change_type", T.StringType())]
+    )
+    fs = get_fs(path)
+    base = fs.spark_path(path)
+    scans: list[DataFrame] = []
+    for i, ((kind, _), leg) in enumerate(legs.items()):
+        paths = [fs.spark_path(fs.join(path, urllib.parse.unquote(f.path))) for f in leg]
+        extra = [*_FP_RI, f"{i} AS ___leg"]
+        if kind == "cdc":
+            scan = scan_parquet(spark, paths, cdc_schema, cols=["*", *extra])
+        else:
+            scan = scan_parquet(
+                spark, paths, read_schema, base, cols=["*", f"'{kind}' AS _change_type", *extra]
+            )
+        scans.append(scan)
 
-    if not parts:
-        return spark.createDataFrame([], out_schema)
-    result = reduce(lambda a, b: a.unionByName(b), parts)
-    return result.select([f.name for f in out_schema.fields])
-
-
-def _join_version(
-    spark: SparkSession, df: DataFrame, files: list[tuple[str, int, int]]
-) -> DataFrame:
-    """Attach (_commit_version, _commit_timestamp) per file via a
-    broadcast join on the normalized file path."""
-    # join on the part-file basename (UUID-unique) — keeps the match
-    # entirely JVM-side, no Python UDF in the read path
+    # Spark's spelling of each scanned file, one metadata-only job
+    uris = observed_file_uris(
+        reduce(lambda a, b: a.union(b), [s.select("__fp__") for s in scans]), "__fp__"
+    )
+    key_of = {u: scanned_path_key(u) for u in uris}
+    versions = []
+    parts: list[DataFrame] = []
+    for i, (scan, leg) in enumerate(zip(scans, legs.values())):
+        by_key = {add_path_key(path, f.path): f for f in leg}
+        versions += [
+            (i, u, f.version, f.ts_ms) for u, k in key_of.items() if (f := by_key.get(k))
+        ]
+        if any(f.dv for f in leg):
+            scan = _drop_dv_positions(
+                scan, path, [{"path": f.path, "deletionVector": f.dv} for f in leg], strict=False
+            )
+        if ms is not None:
+            scan = rename_to_logical(
+                scan, ms[0], ms[1], keep=("_change_type", "__fp__", "___leg")
+            )
+        parts.append(scan)
     mapping = spark.createDataFrame(
-        [(os.path.basename(p), v, ts) for p, v, ts in files],
-        "___name string, _commit_version long, ___ts_ms long",
+        versions, "___leg int, __fp__ string, _commit_version long, ___ts_ms long"
     )
     return (
-        df.withColumn("___name", F.element_at(F.split(F.col("___file"), "/"), -1))
-        .drop("___file")
-        .join(F.broadcast(mapping), "___name")
-        .withColumn(
-            "_commit_timestamp",
-            F.timestamp_millis(F.col("___ts_ms")),
-        )
-        .drop("___name", "___ts_ms")
+        reduce(lambda a, b: a.unionByName(b), parts)
+        .join(F.broadcast(mapping), ["___leg", "__fp__"])
+        .withColumn("_commit_timestamp", F.timestamp_millis(F.col("___ts_ms")))
+        .select([f.name for f in out_schema.fields])
     )
 
 
@@ -341,8 +407,8 @@ class ChangeDataFeedHelper:
                             "CDF might have been disabled between versions"
                         )
                 continue
-            p = os.path.join(self.path, urllib.parse.unquote(cdc[0]["path"]))
-            if os.path.isfile(p):
+            fs = get_fs(self.path)
+            if fs.isfile(fs.join(self.path, urllib.parse.unquote(cdc[0]["path"]))):
                 # vacuum deletes oldest-first: the first surviving CDC file
                 # guarantees all later versions' files survive too
                 version_to_query = v

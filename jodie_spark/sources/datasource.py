@@ -273,16 +273,6 @@ def _data_path(table_path: str, rel: str) -> str:
     return fs.executor_path(fs.join(table_path, rel))
 
 
-def _data_isfile(table_path: str, rel: str) -> tuple[str, bool]:
-    """(joined executor path, driver-side existence) for a table-
-    relative data file — one facade resolution for both answers."""
-    from jodie_spark.fs import get_fs
-
-    fs = get_fs(table_path)
-    joined = fs.join(table_path, rel)
-    return fs.executor_path(joined), fs.isfile(joined)
-
-
 def _open_parquet(path: str):
     """Executor-side parquet source: local paths pass straight to
     pyarrow; schemed URIs (real object stores) open through the facade
@@ -725,8 +715,8 @@ class JodieDeltaBatchReader(DataSourceReader):
 class _CdfFilePartition(InputPartition):
     """One change-bearing file of one commit: a ``cdc`` file (rows carry
     their own ``_change_type``), or a data file synthesized as all-
-    ``insert`` / all-``delete`` rows (the same rules the batch
-    ``read_cdf`` operator applies — see operators/cdf.py:84-131)."""
+    ``insert`` / all-``delete`` rows (``operators.cdf.change_files``
+    classifies them for this reader and the batch ``read_cdf``)."""
 
     def __init__(
         self,
@@ -767,97 +757,36 @@ def _cdf_schema(table_schema: StructType) -> StructType:
 def _cdf_partitions(
     path: str, start_v: int, end_v: int, threshold: int | None = None
 ) -> "list[InputPartition]":
-    """Driver-side: classify each commit in ``(start_v, end_v]`` into
-    change-bearing file partitions, enforcing CDF coverage the same way
-    delta-spark's CDCReader does (raises when a version in range has no
-    recorded change data and CDF was off)."""
-    from jodie_spark.errors import DeltaProtocolError
-    from jodie_spark.operators.cdf import CDF_PROP, _cdf_enabled
+    """Driver-side: the change files of the commits in ``(start_v,
+    end_v]`` (``operators.cdf.change_files``, which enforces CDF
+    coverage the way delta-spark's CDCReader does) as file partitions."""
+    from jodie_spark.operators.cdf import change_files
     from jodie_spark.tables.log import DeltaLog
 
-    log = DeltaLog(path)
     if start_v + 1 > end_v:
         return []
-    # table_info() is metadata-only (no driver-side file-list build) —
-    # we only need the starting configuration/schema here, never files.
-    start_info = log.table_info(max(start_v, 0))
-    enabled = _cdf_enabled(start_info.configuration)
+    log = DeltaLog(path)
     # physical names resolve against the END schema — renames move
     # logical names only, physical names are stable, and the reader's
     # output schema is the latest logical one
     name_map, field_ids = _logical_physical_map(log.table_info(end_v).metadata)
     out: list[_CdfFilePartition] = []
     sizes: list[int] = []
-    for v in range(start_v + 1, end_v + 1):
-        actions = log.read_actions(v)
-        ci = next((a["commitInfo"] for a in actions if "commitInfo" in a), {})
-        ts = int(ci.get("inCommitTimestamp") or ci.get("timestamp") or 0)
-        has_cdc = False
-        adds: list[dict] = []
-        removes: list[dict] = []
-        for a in actions:
-            if "metaData" in a and a["metaData"]:
-                enabled = _cdf_enabled(a["metaData"].get("configuration"))
-            elif "cdc" in a and a["cdc"]:
-                has_cdc = True
-                p, ok = _data_isfile(path, urllib.parse.unquote(a["cdc"]["path"]))
-                if not ok:
-                    raise FileNotFoundError(
-                        f"change data file {p} for version {v} has been "
-                        "deleted (vacuumed?)"
-                    )
-                out.append(
-                    _CdfFilePartition(
-                        p, "cdc", v, ts, a["cdc"].get("partitionValues") or {}, path
-                    )
-                )
-                sizes.append(int(a["cdc"].get("size") or 0))
-            elif "add" in a and a["add"] and a["add"].get("dataChange", True):
-                adds.append(a["add"])
-            elif "remove" in a and a["remove"] and a["remove"].get("dataChange", True):
-                removes.append(a["remove"])
-        if v > 0 and not enabled:
-            raise DeltaProtocolError(
-                f"jodie_delta CDF stream: change data was not recorded for "
-                f"version {v} ({CDF_PROP} is disabled)"
+    for _, files in change_files(log, start_v, end_v):
+        for f in files:
+            part = _CdfFilePartition(
+                _data_path(path, urllib.parse.unquote(f.path)),
+                f.kind,
+                f.version,
+                f.ts_ms,
+                f.partition_values,
+                path,
+                f.dv,
             )
-        if has_cdc:
-            continue
-        for ad in adds:
-            out.append(
-                _CdfFilePartition(
-                    _data_path(path, urllib.parse.unquote(ad["path"])),
-                    "insert",
-                    v,
-                    ts,
-                    ad.get("partitionValues") or {},
-                    path,
-                    ad.get("deletionVector"),
-                )
-            )
-            sizes.append(int(ad.get("size") or 0))
-        for rm in removes:
-            p, ok = _data_isfile(path, urllib.parse.unquote(rm["path"]))
-            if not ok:
-                raise FileNotFoundError(
-                    f"removed data file {p} needed to synthesize delete "
-                    f"change rows for version {v} has been deleted (vacuumed?)"
-                )
-            out.append(
-                _CdfFilePartition(
-                    p,
-                    "delete",
-                    v,
-                    ts,
-                    rm.get("partitionValues") or {},
-                    path,
-                    rm.get("deletionVector"),
-                )
-            )
-            sizes.append(int(rm.get("size") or 0))
-    for part in out:
-        part.name_map = name_map
-        part.field_ids = field_ids
+            part.name_map = name_map
+            part.field_ids = field_ids
+            out.append(part)
+            sizes.append(f.size)
     # a long replay (startingVersion=0 over a mature history) would
     # otherwise plan one task per change file — pack like the plain
     # readers (order preserved: _commit_version rides each row anyway)
@@ -909,13 +838,30 @@ def _read_cdf_file_batches(
         yield pa.RecordBatch.from_arrays(arrays, schema=target)
 
 
-class JodieDeltaCdfStreamReader(DataSourceStreamReader):
-    """Streaming change-data-feed source — the delta-spark
-    ``readStream.option("readChangeFeed","true")`` equivalent. Offsets
-    are commit versions; each micro-batch delivers the change rows of
-    the commits in ``(start, end]``. With no ``startingVersion`` the
-    stream begins after the version current at start (new changes
-    only, delta parity); pass ``startingVersion`` to replay history."""
+class _VersionCursorStreamReader(DataSourceStreamReader):
+    """Shared offset handling of the two ``jodie_delta`` stream readers.
+    Offsets are commit versions ``{"version": v}``; the micro-batch
+    ``(start, end]`` serves the commits after ``start`` up to ``end``.
+    A subclass gives its default start offset, the files each commit
+    serves (:meth:`_commit_files`) and the partition plan.
+
+    ``maxFilesPerTrigger`` bounds how far ``latestOffset`` advances, at
+    COMMIT granularity: a commit larger than the budget still ships
+    whole. Python sources have no admission-control hook, so the reader
+    keeps the budget walk's start itself: a cursor at the highest
+    version any offset it returned or was handed (``initialOffset``,
+    ``latestOffset``, ``partitions``, ``commit``) named. It never moves
+    back, and a backwards ``partitions`` range raises, so the order
+    Spark calls these in cannot re-serve a commit.
+
+    Spark 4.1 calls ``latestOffset`` before ``initialOffset`` on a fresh
+    query, and replays the checkpointed offset ``C`` as
+    ``partitions(C, C)`` before it on a restart. Under
+    ``Trigger.AvailableNow`` that first ``latestOffset`` is the run's
+    target, so it is never bounded: the first micro-batch of a query
+    takes every commit present, and bounding starts with the next one.
+    A reader told its start by ``initialOffset`` first bounds from its
+    first ``latestOffset`` on."""
 
     def __init__(self, options, schema: StructType):
         self.path = _opt_path(options)
@@ -925,85 +871,95 @@ class JodieDeltaCdfStreamReader(DataSourceStreamReader):
         self.starting_version = options.get("startingVersion")
         self.starting_timestamp = options.get("startingTimestamp")
         mft = options.get("maxFilesPerTrigger")
-        # commit-granular rate limiting, same contract as the plain
-        # stream reader (an over-budget commit still ships whole; the
-        # first post-restart batch is unbounded)
         if mft is not None and int(mft) < 1:
             raise ValueError(f"Invalid maxFilesPerTrigger: {mft}")
         self.max_files = int(mft) if mft is not None else None
-        self._pos: dict | None = None
+        self._pos: int | None = None  # highest version planned or served
+        self._bounded = False  # latestOffset applies maxFilesPerTrigger
+
+    def _advance(self, version: int) -> None:
+        self._pos = version if self._pos is None else max(self._pos, version)
+
+    def _default_offset(self, log) -> dict:
+        raise NotImplementedError
+
+    def _commit_files(self, log, start_v: int, end_v: int) -> Iterator[tuple[int, list]]:
+        """``(v, files commit v serves)`` for each commit in ``(start_v,
+        end_v]``, lazily: the one source of what a batch plans and what
+        the budget counts."""
+        raise NotImplementedError
+
+    def _plan(self, log, start: dict, end_v: int) -> Sequence[InputPartition]:
+        raise NotImplementedError
 
     def initialOffset(self) -> dict:
+        from jodie_spark.operators.cdf import version_range
         from jodie_spark.tables.log import DeltaLog
 
-        if self.starting_version is not None:
-            self._pos = {"version": int(self.starting_version) - 1}
-        elif self.starting_timestamp is not None:
-            # delta parity: earliest commit at-or-after the timestamp
-            from jodie_spark.operators.cdf import _to_ts_ms
-
-            v = DeltaLog(self.path).version_at_timestamp(
-                _to_ts_ms(self.starting_timestamp), at_or_after=True
-            )
-            self._pos = {"version": v - 1}
-        else:
-            self._pos = {"version": DeltaLog(self.path).latest_version()}
-        return self._pos
+        log = DeltaLog(self.path)
+        start, _ = version_range(log, self.starting_version, self.starting_timestamp)
+        offset = {"version": start - 1} if start is not None else self._default_offset(log)
+        self._bounded = self._bounded or not offset.get("snapshot")
+        self._advance(offset["version"])
+        return offset
 
     def latestOffset(self) -> dict:
         from jodie_spark.tables.log import DeltaLog
 
         log = DeltaLog(self.path)
-        latest = log.latest_version()
-        if self.max_files is None:
-            return {"version": latest}
-        pos = self._pos
-        if pos is None:
-            self._pos = {"version": latest}
-            return self._pos
-        start_v = int(pos["version"])
-        budget = self.max_files
-        end_v = start_v
-        v = start_v + 1
-        while v <= latest:
-            try:
-                actions = log.read_actions(v)
-            except FileNotFoundError:
+        latest = end_v = log.latest_version()
+        if self.max_files is not None and self._bounded:
+            budget, end_v = self.max_files, self._pos
+            for v, files in self._commit_files(log, self._pos, latest):
+                if len(files) > budget and end_v > self._pos:
+                    break  # budget spent and we already advanced
+                budget -= len(files)
                 end_v = v
-                v += 1
-                continue
-            # count what _cdf_partitions will actually serve: cdc
-            # files when the commit wrote change data (its adds are
-            # NOT read), else dataChange adds (inserts) + dataChange
-            # removes (each read in full to synthesize delete rows)
-            n_cdc = sum(1 for a in actions if a.get("cdc"))
-            if n_cdc:
-                n = n_cdc
-            else:
-                n = sum(
-                    1
-                    for a in actions
-                    if (a.get("add") and a["add"].get("dataChange", True))
-                    or (a.get("remove") and a["remove"].get("dataChange", True))
-                )
-            if n > budget and end_v > start_v:
-                break
-            budget -= n
-            end_v = v
-            v += 1
-            if budget <= 0:
-                break
-        self._pos = {"version": end_v}
-        return self._pos
+                if budget <= 0:
+                    break
+        self._bounded = True
+        self._advance(end_v)
+        return {"version": end_v}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        return _cdf_partitions(self.path, int(start["version"]), int(end["version"]))
+        from jodie_spark.tables.log import DeltaLog
+
+        start_v, end_v = int(start["version"]), int(end["version"])
+        if end_v < start_v:
+            raise ValueError(
+                f"jodie_delta stream: offset range ({start_v}, {end_v}] runs backwards"
+            )
+        parts = [] if end_v == start_v else self._plan(DeltaLog(self.path), start, end_v)
+        self._advance(end_v)
+        return parts
+
+    def commit(self, end: dict) -> None:
+        # log-backed source: nothing to clean up, only the cursor moves
+        self._advance(int(end["version"]))
+
+
+class JodieDeltaCdfStreamReader(_VersionCursorStreamReader):
+    """Streaming change-data-feed source — the delta-spark
+    ``readStream.option("readChangeFeed","true")`` equivalent. Each
+    micro-batch delivers the change rows of the commits in ``(start,
+    end]``; ``maxFilesPerTrigger`` counts change files (see
+    :class:`_VersionCursorStreamReader`). With no ``startingVersion``
+    the stream begins after the version current at start (new changes
+    only, delta parity); pass ``startingVersion`` to replay history."""
+
+    def _default_offset(self, log) -> dict:
+        return {"version": log.latest_version()}
+
+    def _commit_files(self, log, start_v: int, end_v: int) -> Iterator[tuple[int, list]]:
+        from jodie_spark.operators.cdf import change_files
+
+        return change_files(log, start_v, end_v)
+
+    def _plan(self, log, start: dict, end_v: int) -> Sequence[InputPartition]:
+        return _cdf_partitions(self.path, int(start["version"]), end_v)
 
     def read(self, partition: "_CdfFilePartition | _FileBatchPartition"):
         yield from _read_cdf_packed(partition, self.schema)
-
-    def commit(self, end: dict) -> None:
-        pass  # log-backed source: nothing to clean up
 
 
 class JodieDeltaCdfBatchReader(DataSourceReader):
@@ -1013,35 +969,25 @@ class JodieDeltaCdfBatchReader(DataSourceReader):
     same coverage rules as the streaming reader."""
 
     def __init__(self, options, schema: StructType):
-        self.path = _opt_path(options)
-        self.schema = schema
+        from jodie_spark.operators.cdf import version_range
         from jodie_spark.tables.log import DeltaLog
 
-        if options.get("startingVersion") is not None:
-            self.start_v = int(options.get("startingVersion"))
-        elif options.get("startingTimestamp") is not None:
-            from jodie_spark.operators.cdf import _to_ts_ms
-
-            self.start_v = DeltaLog(self.path).version_at_timestamp(
-                _to_ts_ms(options["startingTimestamp"]), at_or_after=True
-            )
-        else:
+        self.path = _opt_path(options)
+        self.schema = schema
+        self.start_v, self.end_v = version_range(
+            DeltaLog(self.path),
+            options.get("startingVersion"),
+            options.get("startingTimestamp"),
+            options.get("endingVersion"),
+            options.get("endingTimestamp"),
+        )
+        if self.start_v is None:
             raise ValueError(
                 "readChangeFeed batch reads require startingVersion "
                 "or startingTimestamp"
             )
         bt = options.get("filesPerTaskThreshold")
         self._batch_threshold = int(bt) if bt is not None else None
-        if options.get("endingVersion") is not None:
-            self.end_v = int(options["endingVersion"])
-        elif options.get("endingTimestamp") is not None:
-            from jodie_spark.operators.cdf import _to_ts_ms
-
-            self.end_v = DeltaLog(self.path).version_at_timestamp(
-                _to_ts_ms(options["endingTimestamp"])
-            )
-        else:
-            self.end_v = None
 
     def partitions(self) -> Sequence[InputPartition]:
         from jodie_spark.tables.log import DeltaLog
@@ -1057,7 +1003,7 @@ class JodieDeltaCdfBatchReader(DataSourceReader):
         yield from _read_cdf_packed(partition, self.schema)
 
 
-class JodieDeltaStreamReader(DataSourceStreamReader):
+class JodieDeltaStreamReader(_VersionCursorStreamReader):
     """Plain (non-CDF) streaming source over the native Delta log.
 
     Remove-handling options — delta-spark DeltaSource parity, each a
@@ -1073,19 +1019,12 @@ class JodieDeltaStreamReader(DataSourceStreamReader):
     - ``skipChangeCommits``: any commit containing dataChange removes
       is skipped ENTIRELY (its adds are not served).
 
-    ``maxFilesPerTrigger`` rate-limits how far ``latestOffset``
-    advances per micro-batch, at COMMIT granularity (a single commit
-    larger than the budget still ships whole — this source's offsets
-    are versions, not file indexes). The initial full-snapshot batch
-    is served whole; after a checkpoint restart the first planned
-    batch is unbounded (the reader cannot see the checkpointed offset
-    until it plans once), then bounding resumes."""
+    ``maxFilesPerTrigger`` counts the adds a commit serves; offsets and
+    the cursor are :class:`_VersionCursorStreamReader`'s. The default
+    start is the full snapshot, served whole as the first batch."""
 
     def __init__(self, options, schema: StructType):
-        self.path = _opt_path(options)
-        if not self.path:
-            raise ValueError("jodie_delta requires a path: .load('/table/path')")
-        self.schema = schema
+        super().__init__(options, schema)
 
         def _flag(name: str) -> bool:
             return str(options.get(name, "false")).lower() == "true"
@@ -1093,89 +1032,44 @@ class JodieDeltaStreamReader(DataSourceStreamReader):
         self.ignore_changes = _flag("ignoreChanges")
         self.ignore_deletes = _flag("ignoreDeletes")
         self.skip_change_commits = _flag("skipChangeCommits")
-        mft = options.get("maxFilesPerTrigger")
-        if mft is not None and int(mft) < 1:
-            raise ValueError(f"Invalid maxFilesPerTrigger: {mft}")
-        self.max_files = int(mft) if mft is not None else None
-        self._pos: dict | None = None  # rate-limiter cursor
-        self.starting_version = options.get("startingVersion")
-        self.starting_timestamp = options.get("startingTimestamp")
 
-    def initialOffset(self) -> dict:
-        # default: full-snapshot first batch (explicit "snapshot"
-        # sentinel — NOT a bare version number, because
-        # startingVersion=0 also encodes as version -1 and must replay
-        # commit 0 through the per-commit adds path, preserving the
-        # remove-detection error that ignoreChanges gates);
-        # startingVersion/startingTimestamp replay from a specific
-        # commit instead, delta parity (timestamp = earliest commit
-        # at-or-after)
-        if self.starting_version is not None:
-            self._pos = {"version": int(self.starting_version) - 1}
-            return self._pos
-        if self.starting_timestamp is not None:
-            from jodie_spark.operators.cdf import _to_ts_ms
-            from jodie_spark.tables.log import DeltaLog
+    def _default_offset(self, log) -> dict:
+        # full-snapshot first batch: an explicit "snapshot" sentinel,
+        # NOT a bare version number, because startingVersion=0 also
+        # encodes as version -1 and must replay commit 0 through the
+        # per-commit adds path, preserving the remove-detection error
+        # that ignoreChanges gates
+        return {"version": -1, "snapshot": True}
 
-            v = DeltaLog(self.path).version_at_timestamp(
-                _to_ts_ms(self.starting_timestamp), at_or_after=True
-            )
-            self._pos = {"version": v - 1}
-            return self._pos
-        self._pos = {"version": -1, "snapshot": True}
-        return self._pos
-
-    def latestOffset(self) -> dict:
-        from jodie_spark.tables.log import DeltaLog
-
-        log = DeltaLog(self.path)
-        latest = log.latest_version()
-        if self.max_files is None:
-            return {"version": latest}
-        pos = self._pos
-        if pos is None or pos.get("snapshot"):
-            # snapshot first batch ships whole; an unknown restart
-            # cursor plans one unbounded batch, then bounding resumes
-            self._pos = {"version": latest}
-            return self._pos
-        start_v = int(pos["version"])
-        budget = self.max_files
-        end_v = start_v
-        v = start_v + 1
-        while v <= latest:
+    def _commit_files(self, log, start_v: int, end_v: int) -> Iterator[tuple[int, list]]:
+        for v in range(start_v + 1, end_v + 1):
             try:
                 actions = log.read_actions(v)
             except FileNotFoundError:
-                end_v = v
-                v += 1
+                yield v, []
                 continue
-            n = sum(
-                1
+            removes = [
+                a["remove"]
                 for a in actions
-                if a.get("add") and a["add"].get("dataChange", True)
-            )
-            if self.skip_change_commits and any(
-                a.get("remove") and a["remove"].get("dataChange", True)
-                for a in actions
-            ):
-                n = 0  # partitions() drops this commit wholesale
-            if n > budget and end_v > start_v:
-                break  # budget spent and we already advanced
-            budget -= n
-            end_v = v
-            v += 1
-            if budget <= 0:
-                break
-        self._pos = {"version": end_v}
-        return self._pos
+                if a.get("remove") and a["remove"].get("dataChange", True)
+            ]
+            adds = [
+                a["add"] for a in actions if a.get("add") and a["add"].get("dataChange", True)
+            ]
+            if removes:
+                if self.skip_change_commits:
+                    adds = []  # change commit skipped wholesale
+                elif not self.ignore_changes and not (self.ignore_deletes and not adds):
+                    raise RuntimeError(
+                        f"jodie_delta stream: version {v} removed data file "
+                        f"{removes[0]['path']}; streaming sources require "
+                        "append-only history (ignoreDeletes tolerates "
+                        "delete-only commits; ignoreChanges serves rewrites; "
+                        "skipChangeCommits drops change commits entirely)"
+                    )
+            yield v, adds
 
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        from jodie_spark.tables.log import DeltaLog
-
-        log = DeltaLog(self.path)
-        start_v, end_v = int(start["version"]), int(end["version"])
-        if end_v < 0 or end_v <= start_v:
-            return []
+    def _plan(self, log, start: dict, end_v: int) -> Sequence[InputPartition]:
         # Checkpoint back-compat: offsets persisted before the explicit
         # sentinel landed encode the default-start snapshot as a BARE
         # {"version": -1}. When no startingVersion/startingTimestamp is
@@ -1185,17 +1079,12 @@ class JodieDeltaStreamReader(DataSourceStreamReader):
         # With startingVersion=0 set, the options ARE present on
         # restart too, so the bare -1 correctly replays commit 0.
         legacy_snapshot = (
-            start_v == -1
+            int(start["version"]) == -1
             and "snapshot" not in start
             and self.starting_version is None
             and self.starting_timestamp is None
         )
         if start.get("snapshot") or legacy_snapshot:
-            # first batch of a no-startingVersion stream: the whole
-            # snapshot at end_v. startingVersion=0 does NOT land here
-            # (its offset is {"version": -1} WITHOUT the sentinel) —
-            # it replays commit 0 onward below, so historical removes
-            # still trip the ignoreChanges gate, delta parity
             # projected/streamed like the batch reader: the initial
             # 1M-file micro-batch must not materialize 1M payload dicts
             adds = list(
@@ -1204,36 +1093,11 @@ class JodieDeltaStreamReader(DataSourceStreamReader):
                 )
             )
         else:
-            adds = []
-            for v in range(start_v + 1, end_v + 1):
-                try:
-                    actions = log.read_actions(v)
-                except FileNotFoundError:
-                    continue
-                v_removes = [
-                    a["remove"]
-                    for a in actions
-                    if a.get("remove") and a["remove"].get("dataChange", True)
-                ]
-                v_adds = [
-                    a["add"]
-                    for a in actions
-                    if a.get("add") and a["add"].get("dataChange", True)
-                ]
-                if v_removes:
-                    if self.skip_change_commits:
-                        continue  # change commit skipped wholesale
-                    if not self.ignore_changes and not (
-                        self.ignore_deletes and not v_adds
-                    ):
-                        raise RuntimeError(
-                            f"jodie_delta stream: version {v} removed data file "
-                            f"{v_removes[0]['path']}; streaming sources require "
-                            "append-only history (ignoreDeletes tolerates "
-                            "delete-only commits; ignoreChanges serves rewrites; "
-                            "skipChangeCommits drops change commits entirely)"
-                        )
-                adds.extend(v_adds)
+            adds = [
+                a
+                for _, served in self._commit_files(log, int(start["version"]), end_v)
+                for a in served
+            ]
         name_map, field_ids = _logical_physical_map(log.table_info(end_v).metadata)
 
         def make_fp(a: dict) -> _FilePartition:
@@ -1256,9 +1120,6 @@ class JodieDeltaStreamReader(DataSourceStreamReader):
 
     def read(self, partition: "_FilePartition | _FileBatchPartition"):
         yield from _read_packed(partition, self.schema)
-
-    def commit(self, end: dict) -> None:
-        pass  # log-backed source: nothing to clean up
 
 
 # ---------------------------------------------------------------------------
@@ -1444,7 +1305,7 @@ class JodieDeltaWriter(DataSourceWriter):
     def commit(self, messages) -> None:
         import time
 
-        from jodie_spark.tables.log import DeltaLog
+        from jodie_spark.tables.log import REMOVE_COLUMNS, DeltaLog, remove_action
 
         log = DeltaLog(self.path)
         now_ms = int(time.time() * 1000)
@@ -1468,16 +1329,7 @@ class JodieDeltaWriter(DataSourceWriter):
             actions = list(adds)
             if self.overwrite:
                 actions += [
-                    {
-                        "remove": {
-                            "path": a["path"],
-                            "deletionTimestamp": now_ms,
-                            "dataChange": True,
-                            "partitionValues": a.get("partitionValues") or {},
-                            "size": a.get("size"),
-                        }
-                    }
-                    for a in snap.iter_adds(("path", "partitionValues", "size"))
+                    remove_action(a, now_ms) for a in snap.iter_adds(REMOVE_COLUMNS)
                 ]
             log.commit(
                 snap.version,
@@ -1573,7 +1425,7 @@ class JodieDeltaStreamWriter(DataSourceStreamWriter):
     def _commit_with_txn(self, messages) -> None:
         import time
 
-        from jodie_spark.tables.log import DeltaLog
+        from jodie_spark.tables.log import REMOVE_COLUMNS, DeltaLog, remove_action
 
         log = DeltaLog(self.path)
         now_ms = int(time.time() * 1000)
@@ -1598,16 +1450,7 @@ class JodieDeltaStreamWriter(DataSourceStreamWriter):
             log.check_write_allowed(snap, removes_data=self.overwrite)
             if self.overwrite:
                 actions += [
-                    {
-                        "remove": {
-                            "path": a["path"],
-                            "deletionTimestamp": now_ms,
-                            "dataChange": True,
-                            "partitionValues": a.get("partitionValues") or {},
-                            "size": a.get("size"),
-                        }
-                    }
-                    for a in snap.iter_adds(("path", "partitionValues", "size"))
+                    remove_action(a, now_ms) for a in snap.iter_adds(REMOVE_COLUMNS)
                 ]
             log.commit(
                 snap.version,

@@ -81,6 +81,7 @@ _REMOVE_SCHEMA = T.StructType(
         T.StructField("dataChange", T.BooleanType()),
         T.StructField("partitionValues", T.MapType(T.StringType(), T.StringType())),
         T.StructField("size", T.LongType()),
+        T.StructField("deletionVector", _DV_SCHEMA),
     ]
 )
 _ACTION_SCHEMA = T.StructType(
@@ -142,21 +143,21 @@ def _latest_actions_df(
 
         str_map = T.MapType(T.StringType(), T.StringType())
 
-        def dv_struct() -> Column:
+        def dv_struct(parent: str) -> Column:
             # nested optional struct: project subfield-by-subfield so an
             # external checkpoint's wider/narrower DV struct still reads
             parent_ok = (
-                "add" in cp.columns
-                and isinstance(cp.schema["add"].dataType, T.StructType)
-                and "deletionVector" in cp.schema["add"].dataType.names
+                parent in cp.columns
+                and isinstance(cp.schema[parent].dataType, T.StructType)
+                and "deletionVector" in cp.schema[parent].dataType.names
             )
             if not parent_ok:
                 return F.lit(None).cast(_DV_SCHEMA).alias("deletionVector")
-            dvt = cp.schema["add"].dataType["deletionVector"].dataType
+            dvt = cp.schema[parent].dataType["deletionVector"].dataType
 
             def dsub(name: str, dtype: T.DataType) -> Column:
                 col = (
-                    F.col(f"add.deletionVector.{name}")
+                    F.col(f"{parent}.deletionVector.{name}")
                     if isinstance(dvt, T.StructType) and name in dvt.names
                     else F.lit(None)
                 )
@@ -164,7 +165,7 @@ def _latest_actions_df(
 
             inner = F.struct(*[dsub(f.name, f.dataType) for f in _DV_SCHEMA.fields])
             return F.when(
-                F.col("add.deletionVector").isNotNull(), inner
+                F.col(f"{parent}.deletionVector").isNotNull(), inner
             ).alias("deletionVector")
 
         add_struct = F.struct(
@@ -174,7 +175,7 @@ def _latest_actions_df(
             sub("add", "modificationTime", T.LongType()),
             sub("add", "dataChange", T.BooleanType()),
             sub("add", "stats", T.StringType()),
-            dv_struct(),
+            dv_struct("add"),
             sub("add", "baseRowId", T.LongType()),
             sub("add", "defaultRowCommitVersion", T.LongType()),
             sub("add", "tags", str_map),
@@ -185,6 +186,7 @@ def _latest_actions_df(
             sub("remove", "dataChange", T.BooleanType()),
             sub("remove", "partitionValues", str_map),
             sub("remove", "size", T.LongType()),
+            dv_struct("remove"),
         )
         if cp is not None:
             has_add = "add" in cp.columns

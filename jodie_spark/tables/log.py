@@ -204,6 +204,28 @@ def multipart_checkpoint_file_name(version: int, part: int, parts: int) -> str:
     return f"{version:020d}.checkpoint.{part:010d}.{parts:010d}.parquet"
 
 
+# the add fields a remove carries: project these in a remove sweep
+REMOVE_COLUMNS = ("path", "partitionValues", "size", "deletionVector")
+
+
+def remove_action(add: dict[str, Any], now_ms: int, data_change: bool = True) -> dict[str, Any]:
+    """The ``remove`` action retiring ``add``. A logical file is (path,
+    deletion vector), so the remove names the add's ``deletionVector``
+    when it has one; without one the key is left out."""
+    action = {
+        "remove": {
+            "path": add["path"],
+            "deletionTimestamp": now_ms,
+            "dataChange": data_change,
+            "partitionValues": add.get("partitionValues") or {},
+            "size": add.get("size"),
+        }
+    }
+    if add.get("deletionVector"):
+        action["remove"]["deletionVector"] = add["deletionVector"]
+    return action
+
+
 # ---------------------------------------------------------------------------
 # checkpoint parquet schema (explicit, so map columns round-trip as maps)
 # ---------------------------------------------------------------------------
@@ -250,6 +272,8 @@ _REMOVE_T = pa.struct(
         ("dataChange", pa.bool_()),
         ("partitionValues", _STR_MAP),
         ("size", pa.int64()),
+        # a tombstone names the logical file it retired: (path, DV)
+        ("deletionVector", _DV_T),
     ]
 )
 _METADATA_T = pa.struct(

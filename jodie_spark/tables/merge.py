@@ -61,6 +61,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from jodie_spark.errors import JodieValidationError
+from jodie_spark.tables.log import remove_action
 from jodie_spark.tables.pruning import split_conjuncts, _referenced_names
 from jodie_spark.tables.writer import write_data_files
 
@@ -1363,18 +1364,7 @@ class DeltaMergeBuilder:
             actions.append({"metaData": meta})
         actions += list(cdc_actions)
         actions += [{"add": a} for a in adds]
-        actions += [
-            {
-                "remove": {
-                    "path": r["path"],
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                    "partitionValues": r.get("partitionValues") or {},
-                    "size": r.get("size"),
-                }
-            }
-            for r in touched
-        ]
+        actions += [remove_action(r, now_ms) for r in touched]
         metrics = {
             "numSourceRows": str(num_source_rows),
             "numTargetRowsInserted": str(counts["inserted"]),

@@ -25,7 +25,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jodie_spark.errors import DeltaProtocolError, JodieValidationError
-from jodie_spark.tables.log import CHECKPOINT_PROTECTION_PROP, DeltaLog, Snapshot
+from jodie_spark.tables.log import (
+    CHECKPOINT_PROTECTION_PROP,
+    REMOVE_COLUMNS,
+    DeltaLog,
+    Snapshot,
+    remove_action,
+)
 from jodie_spark.tables.merge import _frag, _str_lit, conf_bytes, quote_ident, type_ddl
 from jodie_spark.tables.writer import write_data_files, write_metrics
 
@@ -1787,18 +1793,7 @@ class DeltaTable:
         actions: list[dict[str, Any]] = lineage_actions + list(cdc_actions)
         actions += [{"add": a} for a in adds]
         now_ms = int(time.time() * 1000)
-        actions += [
-            {
-                "remove": {
-                    "path": r["path"],
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                    "partitionValues": r.get("partitionValues") or {},
-                    "size": r.get("size"),
-                }
-            }
-            for r in removes
-        ]
+        actions += [remove_action(r, now_ms) for r in removes]
         metrics = {
             "numRemovedFiles": str(len(removes)),
             "numAddedFiles": str(len(adds)),
@@ -2016,22 +2011,7 @@ class DeltaTable:
             new_add["deletionVector"] = desc
             new_add["dataChange"] = True
             adds.append(new_add)
-            removes.append(
-                {
-                    "remove": {
-                        "path": add["path"],
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                        "partitionValues": add.get("partitionValues") or {},
-                        "size": add.get("size"),
-                        **(
-                            {"deletionVector": add["deletionVector"]}
-                            if add.get("deletionVector")
-                            else {}
-                        ),
-                    }
-                }
-            )
+            removes.append(remove_action(add, now_ms))
         return removes + [{"add": a} for a in adds], changed, dv_bytes
 
     def _delete_with_dvs(
@@ -2411,18 +2391,7 @@ class DeltaTable:
         actions: list[dict[str, Any]] = lineage_actions + list(cdc_actions)
         actions += [{"add": a} for a in adds]
         now_ms = int(time.time() * 1000)
-        actions += [
-            {
-                "remove": {
-                    "path": r["path"],
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                    "partitionValues": r.get("partitionValues") or {},
-                    "size": r.get("size"),
-                }
-            }
-            for r in removes
-        ]
+        actions += [remove_action(r, now_ms) for r in removes]
         total_touched = sum(
             int(json.loads(a["stats"]).get("numRecords") or 0) for a in removes if a.get("stats")
         )
@@ -2578,34 +2547,13 @@ class DeltaTable:
             if current.files[p].get("deletionVector") != target.files[p].get(
                 "deletionVector"
             ):
-                actions.append(
-                    {
-                        "remove": {
-                            "path": p,
-                            "deletionTimestamp": now_ms,
-                            "dataChange": True,
-                            "partitionValues": current.files[p].get("partitionValues")
-                            or {},
-                            "size": current.files[p].get("size"),
-                        }
-                    }
-                )
+                actions.append(remove_action(current.files[p], now_ms))
                 add = dict(target.files[p])
                 add["dataChange"] = True
                 actions.append({"add": add})
-        for p in current_paths - target_paths:
-            rm = current.files[p]
-            actions.append(
-                {
-                    "remove": {
-                        "path": p,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                        "partitionValues": rm.get("partitionValues") or {},
-                        "size": rm.get("size"),
-                    }
-                }
-            )
+        actions += [
+            remove_action(current.files[p], now_ms) for p in current_paths - target_paths
+        ]
         metrics = {
             "numRestoredFiles": str(len(target_paths - current_paths)),
             "numRemovedFiles": str(len(current_paths - target_paths)),
@@ -2670,19 +2618,7 @@ class DeltaTable:
             a["dataChange"] = False
         now_ms = int(time.time() * 1000)
         actions: list[dict[str, Any]] = lineage_actions + [{"add": a} for a in adds]
-        actions += [
-            {
-                "remove": {
-                    "path": a["path"],
-                    "deletionTimestamp": now_ms,
-                    "dataChange": False,
-                    "partitionValues": a.get("partitionValues") or {},
-                    "size": a.get("size"),
-                    "deletionVector": a["deletionVector"],
-                }
-            }
-            for a in dv_adds
-        ]
+        actions += [remove_action(a, now_ms, data_change=False) for a in dv_adds]
         self.deltaLog.commit(
             snap.version,
             actions,
@@ -2752,23 +2688,12 @@ class DeltaTable:
                     missing_rel.add(rel)
         missing: list[dict[str, Any]] = []
         if missing_rel:  # healthy tables never pay a second pass
-            for add in snap.iter_adds(("path", "partitionValues", "size")):
+            for add in snap.iter_adds(REMOVE_COLUMNS):
                 if add["path"] in missing_rel:
                     missing.append(add)
         if not dry_run and missing:
             now_ms = int(time.time() * 1000)
-            actions = [
-                {
-                    "remove": {
-                        "path": a["path"],
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                        "partitionValues": a.get("partitionValues") or {},
-                        "size": a.get("size"),
-                    }
-                }
-                for a in missing
-            ]
+            actions = [remove_action(a, now_ms) for a in missing]
             self.deltaLog.commit(
                 snap.version,
                 actions,
@@ -3146,18 +3071,7 @@ class OptimizeBuilder:
                 )
         now_ms = int(time.time() * 1000)
         actions = lineage_actions + [{"add": a} for a in adds]
-        actions += [
-            {
-                "remove": {
-                    "path": r["path"],
-                    "deletionTimestamp": now_ms,
-                    "dataChange": False,
-                    "partitionValues": r.get("partitionValues") or {},
-                    "size": r.get("size"),
-                }
-            }
-            for r in files
-        ]
+        actions += [remove_action(r, now_ms, data_change=False) for r in files]
         metrics = {
             "numRemovedFiles": str(len(files)),
             "numAddedFiles": str(len(adds)),
@@ -3995,20 +3909,8 @@ def write_delta(
             meta["partitionColumns"] = eff_partition
             actions.append({"metaData": meta})
         actions += [{"add": a} for a in adds]
-        actions += [
-            {
-                "remove": {
-                    "path": r["path"],
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                    "partitionValues": r.get("partitionValues") or {},
-                    "size": r.get("size"),
-                }
-            }
-            # projected: the overwrite's remove sweep needs 3 fields per
-            # current file, not the stats payloads
-            for r in snap.iter_adds(("path", "partitionValues", "size"))
-        ]
+        # projected: the overwrite's remove sweep needs no stats payloads
+        actions += [remove_action(r, now_ms) for r in snap.iter_adds(REMOVE_COLUMNS)]
         log.commit(
             snap.version,
             actions,

@@ -103,3 +103,44 @@ def session_conf(spark, key: str, value: str):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
+
+
+def drive_stream_reader(reader, restart_from=None, available_now=False, triggers=3):
+    """Drive a ``DataSourceStreamReader`` in the order Spark 4.1 calls it,
+    without a query. Returns the rows of each micro-batch Spark would
+    run (lists of dicts, read in-process) and the last end offset.
+
+    A fresh query (``restart_from`` None) calls ``latestOffset``, then
+    ``initialOffset``, then ``partitions(initial, latest)``. A restart
+    from the checkpointed end offset ``C`` calls ``partitions(C, C)``,
+    then ``latestOffset``. Under ``available_now`` that one
+    ``latestOffset`` is the run's target; otherwise ``triggers``
+    processing-time triggers follow, each a ``latestOffset`` and a
+    micro-batch when the offset moved. A micro-batch ends with
+    ``commit(end)``."""
+
+    def batch(start, end):
+        rows = [
+            row
+            for part in reader.partitions(start, end)
+            for record_batch in reader.read(part)
+            for row in record_batch.to_pylist()
+        ]
+        reader.commit(end)
+        return rows
+
+    if restart_from is None:
+        latest = reader.latestOffset()
+        start = reader.initialOffset()
+    else:
+        start = restart_from
+        reader.partitions(start, start)
+        latest = reader.latestOffset()
+    batches = []
+    for i in range(1 if available_now else 1 + triggers):
+        if i:
+            latest = reader.latestOffset()
+        if latest != start:
+            batches.append(batch(start, latest))
+            start = latest
+    return batches, start
