@@ -48,11 +48,13 @@ from jodie_spark.errors import DeltaProtocolError, VersionNotFoundError
 from jodie_spark.fs import add_path_key, get_fs, scanned_path_key
 from jodie_spark.tables.column_mapping import rename_to_logical
 from jodie_spark.tables.log import DeltaLog
+from jodie_spark.tables.merge import quote_ident
 from jodie_spark.tables.table import (
     _FP_RI,
     CDF_PROP,
     DeltaTable,
     _drop_dv_positions,
+    _dv_bitmaps,
     observed_file_uris,
     scan_parquet,
 )
@@ -254,10 +256,9 @@ def read_cdf(
         versions += [
             (i, u, f.version, f.ts_ms) for u, k in key_of.items() if (f := by_key.get(k))
         ]
-        if any(f.dv for f in leg):
-            scan = _drop_dv_positions(
-                scan, path, [{"path": f.path, "deletionVector": f.dv} for f in leg], strict=False
-            )
+        bc = _dv_bitmaps(spark, path, [{"path": f.path, "deletionVector": f.dv} for f in leg])
+        if bc is not None:
+            scan = _drop_dv_positions(scan, path, bc, strict=False)
         if ms is not None:
             scan = rename_to_logical(
                 scan, ms[0], ms[1], keep=("_change_type", "__fp__", "___leg")
@@ -270,7 +271,7 @@ def read_cdf(
         reduce(lambda a, b: a.unionByName(b), parts)
         .join(F.broadcast(mapping), ["___leg", "__fp__"])
         .withColumn("_commit_timestamp", F.timestamp_millis(F.col("___ts_ms")))
-        .select([f.name for f in out_schema.fields])
+        .selectExpr(*[quote_ident(f.name) for f in out_schema.fields])
     )
 
 

@@ -19,11 +19,18 @@ Everything here follows the public spec (delta.io PROTOCOL.md,
   then each 32-bit RoaringBitmap in the standard interoperable
   portable serialization (RoaringFormatSpec: array / bitmap / run
   containers), the array index supplying the high 32 bits;
-- string payloads (inline bitmaps, UUIDs) use RFC 1924 base85 — the
-  same alphabet as Python's ``base64.b85encode``.
+- string payloads (inline bitmaps, UUIDs) use Delta's base85, which
+  is Z85 (ZeroMQ RFC 32: 4 big-endian bytes per 5 characters) with the
+  input zero-padded to whole 4-byte blocks — not RFC 1924, the alphabet
+  of Python's ``base64.b85encode``. The spec's example ``u`` reference
+  ``ab^-aqEH.-t@S}K{vb[*k^`` names ``ab/deletion_vector_d2c639aa-8816-
+  431a-aaf6-d3fe2512ff61.bin``.
 
-The serializer exists for fixtures and tests (this engine's own DML
-never writes DVs); the parser is the production read path.
+Merge-on-read DELETE, UPDATE and MERGE write DVs through the
+serializer (``DeltaTable._write_dvs_for``), as relative ``u``
+descriptors under the table's ``deletion_vectors/`` directory, so a
+copied or moved table keeps them; the parser is the read path. ``p``
+and ``i`` descriptors other writers commit read the same way.
 """
 
 from __future__ import annotations
@@ -36,6 +43,8 @@ import zlib
 from typing import Any
 
 MAGIC = 1681511377
+# the directory, under the table root, where this engine writes DVs
+DV_DIR = "deletion_vectors"
 _SERIAL_COOKIE = 12347
 _SERIAL_COOKIE_NO_RUNCONTAINER = 12346
 _NO_OFFSET_THRESHOLD = 4
@@ -45,6 +54,28 @@ _FORMAT_VERSION = 1
 
 class DeletionVectorError(ValueError):
     pass
+
+
+# Z85 and RFC 1924 give the same digit values in different alphabets,
+# so Z85 is the stdlib base85 codec through a character translation
+_Z85 = "0123456789abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ.-:+=^!/*?&<>()[]{}@%$#"
+_RFC1924 = "0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz!#$%&()*+-;<=>?@^_`{|}~"
+_TO_Z85 = str.maketrans(_RFC1924, _Z85)
+_FROM_Z85 = str.maketrans(_Z85, _RFC1924)
+_UUID_CHARS = 20
+
+
+def z85_encode(data: bytes) -> str:
+    """Delta's base85: Z85 of ``data`` zero-padded to whole 4-byte blocks."""
+    return base64.b85encode(data, pad=True).decode("ascii").translate(_TO_Z85)
+
+
+def z85_decode(text: str) -> bytes:
+    """Inverse of :func:`z85_encode`, padding included (the caller knows
+    the payload's length)."""
+    if len(text) % 5 or not set(text) <= set(_Z85):
+        raise DeletionVectorError(f"not a Z85 string: {text!r}")
+    return base64.b85decode(text.translate(_FROM_Z85))
 
 
 # ---------------------------------------------------------------------------
@@ -204,8 +235,8 @@ def dv_absolute_path(table_path: str, descriptor: dict[str, Any]) -> str | None:
         return ref
     if st != "u":
         raise DeletionVectorError(f"unknown DV storageType {st!r}")
-    prefix, encoded_uuid = ref[:-20], ref[-20:]
-    u = _uuid.UUID(bytes=base64.b85decode(encoded_uuid))
+    prefix, encoded_uuid = ref[:-_UUID_CHARS], ref[-_UUID_CHARS:]
+    u = _uuid.UUID(bytes=z85_decode(encoded_uuid))
     name = f"deletion_vector_{u}.bin"
     return os.path.join(table_path, prefix, name) if prefix else os.path.join(
         table_path, name
@@ -218,12 +249,12 @@ def read_dv_bytes(table_path: str, descriptor: dict[str, Any]) -> bytes:
     size = int(descriptor["sizeInBytes"])
     path = dv_absolute_path(table_path, descriptor)
     if path is None:
-        data = base64.b85decode(descriptor["pathOrInlineDv"])
-        if len(data) != size:
+        data = z85_decode(descriptor["pathOrInlineDv"])
+        if not size <= len(data) < size + 4:
             raise DeletionVectorError(
                 f"inline DV length {len(data)} != sizeInBytes {size}"
             )
-        return data
+        return data[:size]
     offset = int(descriptor.get("offset") or 1)
     from jodie_spark.fs import get_fs
 
@@ -244,34 +275,37 @@ def read_dv_bytes(table_path: str, descriptor: dict[str, Any]) -> bytes:
     return data
 
 
-def write_dv_file(path: str, positions: list[int], **ser_kw: Any) -> dict[str, Any]:
-    """Write a DV file and return the descriptor fields that reference
-    it as storageType='p'. Routes through the storage facade so a
-    schemed path (object store, executor-side) works; local paths are
-    a plain open()."""
-    data = serialize_roaring_bitmap_array(sorted(positions), **ser_kw)
+def write_dv_file(table_path: str, positions: list[int]) -> dict[str, Any]:
+    """Write ``positions`` as a DV file under the table's :data:`DV_DIR`
+    (``deletion_vector_<uuid>.bin``) and return its relative ``u``
+    descriptor, which :func:`dv_absolute_path` resolves against
+    whatever root the table sits in. Routes through the storage facade
+    so a schemed path (object store, executor-side) works; local paths
+    are a plain open()."""
+    data = serialize_roaring_bitmap_array(sorted(positions))
     payload = (
         bytes([_FORMAT_VERSION])
         + struct.pack(">i", len(data))
         + data
         + struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF)
     )
+    u = _uuid.uuid4()
+    dv_dir = table_path.rstrip("/") + "/" + DV_DIR
+    path = f"{dv_dir}/deletion_vector_{u}.bin"
     from jodie_spark.fs import get_fs, path_scheme
 
     if path_scheme(path) is None:
         # implicit-dir parity with the object-store branch: a store
         # whose data plane translates to a local root (the S3-semantics
         # fake) never makedirs driver-side, so create parents here
-        parent = os.path.dirname(path)
-        if parent:
-            os.makedirs(parent, exist_ok=True)
+        os.makedirs(dv_dir, exist_ok=True)
         with open(path, "wb") as fh:
             fh.write(payload)
     else:
         get_fs(path).write_atomic(path, payload)
     return {
-        "storageType": "p",
-        "pathOrInlineDv": path,
+        "storageType": "u",
+        "pathOrInlineDv": DV_DIR + z85_encode(u.bytes),
         "offset": 1,
         "sizeInBytes": len(data),
         "cardinality": len(positions),
@@ -283,7 +317,7 @@ def inline_descriptor(positions: list[int], **ser_kw: Any) -> dict[str, Any]:
     data = serialize_roaring_bitmap_array(sorted(positions), **ser_kw)
     return {
         "storageType": "i",
-        "pathOrInlineDv": base64.b85encode(data).decode("ascii"),
+        "pathOrInlineDv": z85_encode(data),
         "sizeInBytes": len(data),
         "cardinality": len(positions),
     }

@@ -114,10 +114,9 @@ def _gc_paused() -> Iterator[None]:
 SUPPORTED_WRITER_VERSIONS = {1, 2, 3, 4, 5, 6, 7}
 # deletionVectors: reads honor DVs (tables/deletion_vectors.py),
 # rewrite-DML reads through the DV filter and drops the DV with the
-# rewritten file, delete(deletion_vectors=True) writes them.
-# columnMapping: full DML surface in both modes; mapped tables take
-# the copy-on-write rewrite path (the DV coordinate scan is
-# physical-name-only).
+# rewritten file, merge-on-read DELETE/UPDATE/MERGE write them.
+# columnMapping: full DML surface in both modes; a merge-on-read MERGE
+# on a mapped table takes the copy-on-write path.
 SUPPORTED_WRITER_FEATURES = {
     "appendOnly", "timestampNtz", "checkConstraints",
     "generatedColumns", "changeDataFeed", "deletionVectors",

@@ -1,4 +1,4 @@
-"""MERGE INTO: copy-on-write merge over the native Delta log.
+"""MERGE INTO: copy-on-write or merge-on-read merge over the native Delta log.
 
 Parity targets (call shapes this builder must accept):
 - reference Type2Scd.scala:63-80 — ``whenMatched(cond).updateExpr(map)``
@@ -40,18 +40,27 @@ re-expressed as DataFrame ops so Catalyst plans the joins):
      partition count, so a one-file target and its inserts stay one
      file. The union goes through the same staging and lowering text.
 
+Merge-on-read (``execute(deletion_vectors=True)``) joins the source
+with the candidates' coordinate scan, the same
+``_read_candidates(coords=True)`` DELETE and UPDATE use; its DV-marks
+action writes the bitmaps (``DeltaTable._write_dvs_for``) and only the
+updated and inserted rows are written as files. A ``mode=id`` table
+takes copy-on-write instead (its scan's child session never completes
+the source-row observation; see ``execute``).
+
 Row counts are ``Observation`` s on actions that run anyway: the
 rewrite's write (merge-on-read: its data-file write, and its DV-marks
 action for the multiple-match check). Extra jobs remain in two places:
 on ``mode=id`` tables the source row count is an eager ``count()`` over
-the cache (see ``execute``), and the row-lineage scan learns its file
-URIs in a job of its own.
+the cache (see ``execute``), and on row-tracking tables every
+row-lineage scan of candidate files (the probe, the rewrite, the
+coordinate scan) learns its file URIs in a job of its own; a scan of no
+files runs none.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import re
 import time
 from dataclasses import dataclass, field
@@ -63,7 +72,6 @@ from pyspark.sql import functions as F
 from jodie_spark.errors import JodieValidationError
 from jodie_spark.tables.log import remove_action
 from jodie_spark.tables.pruning import split_conjuncts, _referenced_names
-from jodie_spark.tables.writer import write_data_files
 
 if TYPE_CHECKING:
     from jodie_spark.tables.table import DeltaTable
@@ -162,6 +170,44 @@ def _align_sql(expr: str, src_type, dst_type, depth: int = 0) -> str:
             f"transform(map_values({expr}), {v} -> {inner}))"
         )
     return f"CAST({expr} AS {type_ddl(dst_type)})"
+
+
+def lower_assignments(
+    schema, branches: list[tuple[str, dict[str, Any]]], keep: str | None = ""
+) -> tuple[dict[str, Column], list[str]]:
+    """The one assignment lowering, for MERGE and UPDATE: SQL text
+    selecting every field of ``schema`` as ``CAST(CASE WHEN <branch>
+    THEN <value> … ELSE <kept> END AS <ddl>) AS <name>``. ``branches``
+    are ``(branch_sql, assignments)`` pairs whose conditions are
+    mutually exclusive, so WHEN order is free; an assignment value is
+    SQL text or a Column. The kept value is the field qualified by
+    ``keep`` (``""`` unqualified), or NULL when ``keep`` is None.
+
+    A Column value travels in a hidden column, ``if(<its branch>,
+    <Column>, NULL)``, which the caller adds before selecting the text:
+    it is evaluated only on its own branch's rows (under ANSI mode it
+    may raise on others). Returns (hidden columns, field texts)."""
+    hidden: dict[str, Column] = {}
+    fields = []
+    for fld in schema.fields:
+        q = quote_ident(fld.name)
+        ddl = type_ddl(fld.dataType)
+        whens = []
+        for branch, assignments in branches:
+            if fld.name not in assignments:
+                continue
+            v = assignments[fld.name]
+            if isinstance(v, Column):
+                h = f"__col{len(hidden)}__"
+                hidden[h] = F.call_function("if", F.expr(branch), v, F.lit(None))
+                v = h
+            else:
+                v = _frag(v)
+            whens.append(f" WHEN {branch} THEN CAST({v} AS {ddl})")
+        kept = "NULL" if keep is None else f"{keep}{q}"
+        case = f"CASE{''.join(whens)} ELSE {kept} END" if whens else kept
+        fields.append(f"CAST({case} AS {ddl}) AS {q}")
+    return hidden, fields
 
 
 def resolve_assignment_keys(
@@ -678,24 +724,14 @@ class DeltaMergeBuilder:
     def _lower(
         self, schema, talias: str, has_target: bool = True
     ) -> tuple[dict[str, Column], list[str]]:
-        """The merge's one lowering: SQL text selecting every output
-        field as ``CAST(CASE … END AS <ddl>) AS <name>``, applying the
-        first matching clause's assignment (the branch conditions are
-        mutually exclusive — ``__m_idx__``/``__b_idx__``/``__i_idx__``
-        pin the clause — so WHEN order is free). Rows no branch covers
-        keep the target value: copies, updates that do not assign the
-        field, and inserts (whose target side is NULL).
-
-        Star clauses read the source row's fields from ``__src__`` (see
-        :meth:`_mark_source`). A Column-object assignment travels in a
-        ``hidden`` column, added next to ``__action__`` by
-        :meth:`_stage_actions`, as ``if(<its branch>, <Column>, NULL)``:
-        it is evaluated only on its own clause's rows (under ANSI mode
-        it may raise on others).
-
-        The output text therefore depends only on the clauses and the
-        target schema."""
-        hidden: dict[str, Column] = {}
+        """The merge's clauses through :func:`lower_assignments`: one
+        branch per update or insert clause, pinned by ``__m_idx__``/
+        ``__b_idx__``/``__i_idx__``. Rows no branch covers keep the
+        target value: copies, updates that do not assign the field, and
+        inserts (whose target side is NULL). Star clauses assign the
+        source row's fields from ``__src__`` (see :meth:`_mark_source`).
+        The hidden columns are added next to ``__action__`` by
+        :meth:`_stage_actions`."""
         src_types: dict[str, Any] = {}
         if any(cl.star for cl in self._matched + self._not_matched):
             # updateAll/insertAll expand over the SOURCE columns
@@ -718,38 +754,24 @@ class DeltaMergeBuilder:
             ]
             + [(f"__i_idx__ = {k}", cl) for k, cl in enumerate(self._not_matched)]
         )
-        fields = []
-        for fld in schema.fields:
-            q = quote_ident(fld.name)
-            ddl = type_ddl(fld.dataType)
-            whens = []
-            for branch, cl in clauses:
-                if cl.star:
-                    if fld.name not in src_types:
-                        continue
+        branches = [
+            (
+                branch,
+                {
                     # structs align by FIELD NAME, recursively — never
                     # through Spark's positional struct cast
-                    val = _align_sql(
-                        f"__src__.{q}", src_types[fld.name], fld.dataType
+                    f.name: _align_sql(
+                        f"__src__.{quote_ident(f.name)}", src_types[f.name], f.dataType
                     )
-                elif fld.name in cl.assignments:
-                    v = cl.assignments[fld.name]
-                    if isinstance(v, Column):
-                        h = f"__col{len(hidden)}__"
-                        hidden[h] = F.call_function(
-                            "if", F.expr(branch), v, F.lit(None)
-                        )
-                        v = h
-                    else:
-                        v = _frag(v)
-                    val = f"CAST({v} AS {ddl})"
-                else:
-                    continue
-                whens.append(f" WHEN {branch} THEN {val}")
-            keep = f"{talias}.{q}" if has_target else "NULL"
-            case = f"CASE{''.join(whens)} ELSE {keep} END" if whens else keep
-            fields.append(f"CAST({case} AS {ddl}) AS {q}")
-        return hidden, fields
+                    for f in schema.fields
+                    if f.name in src_types
+                }
+                if cl.star
+                else cl.assignments,
+            )
+            for branch, cl in clauses
+        ]
+        return lower_assignments(schema, branches, f"{talias}." if has_target else None)
 
     def _execute_mor(
         self, allow_multiple_matches: bool, t0: float, snap, schema
@@ -761,11 +783,13 @@ class DeltaMergeBuilder:
 
         Same clause-order semantics and multiple-match guard as the
         copy-on-write path (shared ``_stage_actions`` resolution); the
-        target side is the raw candidate scan with ``row_index``
-        coordinates, anti-filtered by existing DVs so already-deleted
-        rows neither match nor resurrect.
+        target side is the coordinate scan of the candidates
+        (:meth:`~jodie_spark.tables.table.DeltaTable._read_candidates`
+        with ``coords``), whose rows existing DVs deleted neither match
+        nor resurrect.
         """
         from jodie_spark.tables.table import (
+            _dv_bitmaps,
             apply_generated_columns,
             enforce_check_constraints,
             plan_candidate_files,
@@ -788,6 +812,7 @@ class DeltaMergeBuilder:
         t_rewrite = time.time()
 
         lineage, lineage_actions = t._lineage_setup(snap, candidates)
+        old_dvs = _dv_bitmaps(spark, t.path, candidates)
         src_obs = Observation()
         cached = self.source.observe(
             src_obs, F.expr("count(1) AS numSourceRows")
@@ -795,43 +820,13 @@ class DeltaMergeBuilder:
         src = self._mark_source(cached)
         staged = None
         try:
-            if candidates and lineage is not None:
-                # lineage scan masks existing DV positions itself and
-                # resolves each row's preserved id
-                from jodie_spark.tables.row_lineage import (
-                    read_candidates_with_lineage,
+            tgt = (
+                t._read_candidates(
+                    snap, schema, candidates, lineage=lineage, coords=True, old_dvs=old_dvs
                 )
-
-                raw = read_candidates_with_lineage(
-                    spark,
-                    t.path,
-                    schema,
-                    candidates,
-                    *lineage,
-                    file_col="__fp__",
-                    keep_row_index=True,
-                )
-                tgt = raw.withColumn("__t_exists__", F.lit(True)).alias(talias)
-            elif candidates:
-                raw = t._dv_scan(candidates, schema)
-                raw = t._drop_existing_dv_positions(raw, candidates)
-                tgt = raw.withColumn("__t_exists__", F.lit(True)).alias(talias)
-            else:
-                tgt = (
-                    spark.createDataFrame([], schema)
-                    .withColumn("__fp__", F.lit(None).cast("string"))
-                    .withColumn("__ri__", F.lit(None).cast("long"))
-                    .withColumn("__t_exists__", F.lit(True))
-                    .alias(talias)
-                )
-                if lineage is not None:
-                    from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
-
-                    tgt = (
-                        tgt.withColumn(LIN_RID, F.lit(None).cast("long"))
-                        .withColumn(LIN_RCV, F.lit(None).cast("long"))
-                        .alias(talias)
-                    )
+                .withColumn("__t_exists__", F.lit(True))
+                .alias(talias)
+            )
             joined = tgt.join(src, F.expr(self.condition), "full_outer")
             hidden, fields = self._lower(schema, talias)
             staged = self._stage_actions(joined, hidden).persist()
@@ -849,15 +844,16 @@ class DeltaMergeBuilder:
             if check:
                 marks = marks.observe(pair_obs, F.expr("count(1) AS pairs"))
             dv_marks = marks.select("__fp__", "__ri__").distinct()
-            rows = t._write_dvs_for(dv_marks, candidates) if candidates else []
+            rows = t._write_dvs_for(dv_marks, old_dvs) if candidates else []
             marked = sum(int(r["new_card"]) - int(r["old_card"]) for r in rows)
             if check and rows and _observed(pair_obs, ["pairs"])["pairs"] > marked:
                 from jodie_spark.errors import MergeMultipleMatchesError
                 from jodie_spark.fs import get_fs
+                from jodie_spark.tables.deletion_vectors import dv_absolute_path
 
                 fs = get_fs(t.path)
                 for r in rows:
-                    fs.remove(json.loads(r["desc"])["pathOrInlineDv"])
+                    fs.remove(dv_absolute_path(t.path, json.loads(r["desc"])))
                 raise MergeMultipleMatchesError(
                     "MERGE: one target row matched multiple source rows "
                     "under an update/delete clause; the result would be "
@@ -870,15 +866,10 @@ class DeltaMergeBuilder:
             # every emitted row carries this commit's version (NULL
             # materialized → defaultRowCommitVersion fallback)
             lineage_out = []
-            stat_exclude = None
             if lineage is not None:
-                from jodie_spark.tables.row_lineage import LIN_RID
+                from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
 
-                lineage_out = [
-                    f"{LIN_RID} AS {quote_ident(lineage[0])}",
-                    f"CAST(NULL AS BIGINT) AS {quote_ident(lineage[1])}",
-                ]
-                stat_exclude = set(lineage)
+                lineage_out = [LIN_RID, f"CAST(NULL AS BIGINT) AS {LIN_RCV}"]
             # the row counts: observed on the write, which always runs,
             # above the cache and under no shuffle
             counts_obs = Observation()
@@ -893,14 +884,12 @@ class DeltaMergeBuilder:
                 .filter("__action__ IN ('update', 'insert')")
                 .selectExpr(*fields, *lineage_out)
             )
-            adds = write_data_files(
+            adds = t._write_rewrite_files(
+                snap,
                 enforce_check_constraints(
                     apply_generated_columns(emitted, schema), snap.configuration
                 ),
-                t.path,
-                snap.partition_columns,
-                stat_exclude=stat_exclude,
-                table_config=snap.configuration,
+                lineage=lineage,
             )
 
         finally:
@@ -972,9 +961,14 @@ class DeltaMergeBuilder:
             snap,
             removes_data=bool(self._matched or self._not_matched_by_source),
         )
+        from jodie_spark.tables.column_mapping import column_mapping_mode
+
         mapped = t._mapping_schemas(snap) is not None
-        if mapped:
-            deletion_vectors = False  # DV coordinate scan is physical-name; CoW instead
+        mode_id = mapped and column_mapping_mode(snap.metadata) == "id"
+        if mode_id:
+            # merge-on-read observes the source rows, which a mode=id
+            # scan's child session never completes (see below)
+            deletion_vectors = False
         schema = t.schema(snap)
         cdf = t.is_cdf_enabled(snap)
         schema_evolved = False
@@ -1057,9 +1051,6 @@ class DeltaMergeBuilder:
         # job over the cache. The staged-counts observation below is
         # safe either way: it attaches to the target-derived plan, the
         # same session the write executes on.
-        from jodie_spark.tables.column_mapping import column_mapping_mode
-
-        mode_id = mapped and column_mapping_mode(snap.metadata) == "id"
         # the broadcast-source rewrite (module docstring) serves merges
         # with no multiple-match check to run, no by-source clause and
         # inserts that read the source only; whether the source is small

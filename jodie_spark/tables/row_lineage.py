@@ -97,13 +97,15 @@ def read_candidates_with_lineage(
     rid_col: str,
     rcv_col: str,
     file_col: str = "__file__",
-    keep_row_index: bool = False,
+    coords: bool = False,
 ) -> DataFrame:
     """Scan candidate files returning the table columns plus
     ``__file__`` (Spark's URI spelling, for touched-file discovery) and
     the resolved lineage columns ``__lineage_rid__`` /
     ``__lineage_rcv__``. Deletion-vector'd rows are dropped (indexes
-    are pre-mask physical positions, so survivors keep their ids).
+    are pre-mask physical positions, so survivors keep their ids) —
+    except with ``coords``, which keeps ``__ri__`` and leaves that to
+    the caller's coordinate filter (``DeltaTable._read_candidates``).
 
     Returns None-equivalent situations (external/cloned file refs) are
     the CALLER's job to rule out — this function assumes every add path
@@ -138,11 +140,12 @@ def read_candidates_with_lineage(
         ],
     )
     # learn Spark's exact URI spelling for each candidate (one
-    # metadata-only job, O(#files)) — string-reconstructing URIs is how
-    # silent join misses happen
+    # metadata-only job, O(#files); none for no adds) —
+    # string-reconstructing URIs is how silent join misses happen
     lin_rows = []
     dv_rows = []
-    for fp in observed_file_uris(scan.select("__file__"), "__file__"):
+    uris = observed_file_uris(scan.select("__file__"), "__file__") if adds else ()
+    for fp in uris:
         add = by_real.get(scanned_path_key(fp))
         if add is None:
             raise DeltaProtocolError(
@@ -152,7 +155,7 @@ def read_candidates_with_lineage(
         lin_rows.append(
             (fp, add.get("baseRowId"), add.get("defaultRowCommitVersion"))
         )
-        if _dv_cardinality(add):
+        if _dv_cardinality(add) and not coords:
             from jodie_spark.tables.deletion_vectors import read_dv_bytes
 
             dv_rows.append(
@@ -200,7 +203,7 @@ def read_candidates_with_lineage(
     return out.selectExpr(
         *[quote_ident(f.name) for f in schema.fields],
         f"__file__ AS {quote_ident(file_col)}",
-        *(["__ri__"] if keep_row_index else []),
+        *(["__ri__"] if coords else []),
         f"coalesce({rid}, __base_rid__ + __ri__) AS {LIN_RID}",
         f"coalesce({rcv}, __dflt_rcv__) AS {LIN_RCV}",
     )

@@ -17,9 +17,11 @@ import os
 import threading
 import time
 import urllib.parse
+from dataclasses import dataclass, field
 from typing import Any
 
 from py4j.protocol import Py4JJavaError
+from pyspark import Broadcast
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -382,37 +384,43 @@ def _read_external_files_df(
 _DV_BROADCAST_MAX_POSITIONS = 2_000_000
 
 
+def _dv_bitmaps(
+    spark: SparkSession, table_path: str, adds: list[dict[str, Any]]
+) -> Broadcast | None:
+    """The raw roaring bitmaps of the ``adds``' deletion vectors, read
+    once on the driver (through the facade, whatever their descriptor)
+    and broadcast once, keyed by ``add_path_key``; None when no add
+    carries one."""
+    from jodie_spark.fs import add_path_key
+    from jodie_spark.tables.deletion_vectors import read_dv_bytes
+
+    raw = {
+        add_path_key(table_path, a["path"]): bytes(
+            read_dv_bytes(table_path, a["deletionVector"])
+        )
+        for a in adds
+        if a.get("deletionVector")
+    }
+    return spark.sparkContext.broadcast(raw) if raw else None
+
+
 def _drop_dv_positions(
-    df: DataFrame, table_path: str, adds: list[dict[str, Any]], strict: bool
+    df: DataFrame, table_path: str, bc: Broadcast, strict: bool
 ) -> DataFrame:
     """``df`` (carrying ``__fp__``/``__ri__``, Spark's file path and row
-    index) minus the rows the ``adds``' deletion vectors delete: ONE
-    Arrow-batched predicate over the BROADCAST raw roaring bitmaps — no
-    extra Spark job, no join. Bitmaps are keyed by the shared path
-    canonicalization (``add_path_key`` / ``scanned_path_key``), so
-    Spark's URI spelling of ``file_path`` is normalized executor-side.
-    ``strict``: a scanned file whose key maps to no add REFUSES (task
-    error) rather than resurrecting deleted rows; otherwise such a file
-    keeps every row."""
+    index) minus the rows deleted by the bitmaps of ``bc``
+    (:func:`_dv_bitmaps`): ONE Arrow-batched predicate over the
+    broadcast — no extra Spark job, no join. Spark's URI spelling of
+    ``file_path`` is normalized executor-side by the shared path
+    canonicalization (``add_path_key`` / ``scanned_path_key``).
+    ``strict``: a scanned file whose key maps to no bitmap REFUSES
+    (task error) rather than resurrecting deleted rows; otherwise such
+    a file keeps every row."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    from jodie_spark.fs import add_path_key, scanned_path_key
-    from jodie_spark.tables.deletion_vectors import (
-        parse_roaring_bitmap_array,
-        read_dv_bytes,
-    )
-
-    bc = df.sparkSession.sparkContext.broadcast(
-        {
-            add_path_key(table_path, a["path"]): (
-                bytes(read_dv_bytes(table_path, a["deletionVector"]))
-                if a.get("deletionVector")
-                else None
-            )
-            for a in adds
-        }
-    )
+    from jodie_spark.fs import scanned_path_key
+    from jodie_spark.tables.deletion_vectors import parse_roaring_bitmap_array
 
     def _keep_fn(fp, ri):
         import numpy as np
@@ -428,7 +436,7 @@ def _drop_dv_positions(
                 )
             raw = bc.value.get(key)
             if raw is None:
-                continue  # add carries no DV: keep every row
+                continue  # no DV on this file: keep every row
             pos = np.asarray(parse_roaring_bitmap_array(raw), dtype=np.int64)
             m = (fp == val).values
             out[m] = ~np.isin(ri[m].values, pos)
@@ -483,7 +491,8 @@ def _read_dv_files_df(
     )
     total = sum(_dv_cardinality(a) for a in adds)
     if total <= _DV_BROADCAST_MAX_POSITIONS:
-        return _drop_dv_positions(scan, table_path, adds, strict=True).drop(
+        bc = _dv_bitmaps(spark, table_path, adds)
+        return _drop_dv_positions(scan, table_path, bc, strict=True).drop(
             "__fp__", "__ri__"
         )
 
@@ -661,6 +670,94 @@ def planned_num_records(spark: SparkSession, table_path: str, schema: T.StructTy
         .collect()[0]
     )
     return int(row[0] or 0)
+
+
+@dataclass
+class _DmlOp:
+    """One DELETE (``fields`` None) or UPDATE through
+    :meth:`DeltaTable._dml`: what its write step reads, and what the
+    step leaves for the commit."""
+
+    snap: Snapshot
+    schema: T.StructType
+    condition: str | None
+    # UPDATE: lower_assignments' field texts and hidden Column values
+    fields: list[str] | None = None
+    hidden: dict[str, Column] = field(default_factory=dict)
+    t_rewrite: float = 0.0  # when the scan phase (planning, probe) ended
+    changed: int = 0  # rows deleted or updated
+    removes: list[dict[str, Any]] = field(default_factory=list)  # whole files
+    adds: list[dict[str, Any]] = field(default_factory=list)  # data files written
+    dv_rows: list[Any] = field(default_factory=list)  # one per vector written
+    dv_actions: list[dict[str, Any]] = field(default_factory=list)
+    dv_bytes: int = 0
+    cdc: list[dict[str, Any]] = field(default_factory=list)
+    lineage_actions: list[dict[str, Any]] = field(default_factory=list)
+
+    @property
+    def cond(self) -> str:
+        return _frag(self.condition) if self.condition else "TRUE"
+
+    def project(self, rows: DataFrame, lineage: tuple[str, str] | None) -> DataFrame:
+        """The rows a write step writes: DELETE keeps the rows the
+        condition does not match, UPDATE selects the assignment text.
+        Row tracking: every written row keeps its id; an updated row's
+        commit version is NULL (readers fall back to the add's
+        ``defaultRowCommitVersion``, this commit), a copied one keeps
+        its own."""
+        if self.fields is None:
+            return rows.filter(f"NOT coalesce({self.cond}, false)")
+        from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
+
+        lineage_out = (
+            [
+                LIN_RID,
+                f"CASE WHEN {self.cond} THEN CAST(NULL AS BIGINT)"
+                f" ELSE {LIN_RCV} END AS {LIN_RCV}",
+            ]
+            if lineage is not None
+            else []
+        )
+        return enforce_check_constraints(
+            apply_generated_columns(
+                rows.selectExpr(*self.fields, *lineage_out), self.schema
+            ),
+            self.snap.configuration,
+        )
+
+    def change_rows(self, rows: DataFrame) -> DataFrame:
+        """Change rows from ``rows`` (a scan holding the matched rows):
+        DELETE's ``delete`` rows, UPDATE's pre and post images."""
+        names = [quote_ident(f.name) for f in self.schema.fields]
+        hit = rows.filter(self.cond)
+        if self.fields is None:
+            return hit.selectExpr(*names, "'delete' AS _change_type")
+        return hit.selectExpr(*names, "'update_preimage' AS _change_type").unionByName(
+            hit.selectExpr(*self.fields, "'update_postimage' AS _change_type")
+        )
+
+    def metrics(self, t0: float) -> dict[str, str]:
+        """One operationMetrics key set per op, whichever the write mode.
+        Copied rows are the written rows minus the updated ones, from the
+        written files' stats — candidates planned in Spark carry none."""
+        written = sum(int(json.loads(a["stats"]).get("numRecords") or 0) for a in self.adds)
+        now = time.time()
+        metrics = {
+            "numRemovedFiles": len(self.removes),
+            "numAddedFiles": len(self.adds),
+            "numDeletedRows" if self.fields is None else "numUpdatedRows": self.changed,
+            "numCopiedRows": written - (0 if self.fields is None else self.changed),
+            "numDeletionVectorsAdded": len(self.dv_rows),
+            "numDeletionVectorsUpdated": sum(1 for r in self.dv_rows if int(r["old_card"]) > 0),
+            "numAddedChangeFiles": len(self.cdc),
+            "numRemovedBytes": sum(int(r.get("size") or 0) for r in self.removes),
+            "numAddedBytes": self.dv_bytes + sum(int(a.get("size") or 0) for a in self.adds),
+            "executionTimeMs": int((now - t0) * 1000),
+            # snapshot, candidate planning and the touched-file probe
+            "scanTimeMs": int((self.t_rewrite - t0) * 1000),
+            "rewriteTimeMs": int((now - self.t_rewrite) * 1000),
+        }
+        return {k: str(v) for k, v in metrics.items()}
 
 
 class DeltaTable:
@@ -1487,6 +1584,8 @@ class DeltaTable:
         schema: T.StructType,
         candidates: list[dict[str, Any]],
         lineage: tuple[str, str] | None = None,
+        coords: bool = False,
+        old_dvs: Broadcast | None = None,
     ) -> DataFrame:
         """Scan candidate adds returning LOGICAL-named rows: on mapped
         tables the parquet files (and partition dirs) carry physical
@@ -1502,45 +1601,54 @@ class DeltaTable:
 
         With ``lineage`` the scan resolves each row's preserved
         ``__lineage_rid__/__lineage_rcv__`` (and exposes ``__file__``),
-        masking DV'd rows — see :mod:`jodie_spark.tables.row_lineage`."""
+        masking DV'd rows — see :mod:`jodie_spark.tables.row_lineage`.
+
+        ``coords`` is the merge-on-read coordinate scan: each row
+        carries ``__fp__``/``__ri__`` (Spark's file path and row index,
+        the deletion-vector coordinates) in place of ``__file__``, and
+        rows an existing deletion vector deleted are dropped, so they
+        neither match nor come back. ``old_dvs`` is the candidates'
+        :func:`_dv_bitmaps` when the caller holds it already (the DV
+        write merges the same bitmaps); it is read here otherwise."""
         from jodie_spark.tables.column_mapping import (
             column_mapping_mode,
+            rename_to_logical,
             to_physical_schema,
         )
 
         mode = column_mapping_mode(snap.metadata)
-        ms = (
-            (schema, to_physical_schema(schema, with_field_ids=(mode == "id")))
+        physical = (
+            to_physical_schema(schema, with_field_ids=(mode == "id"))
             if mode in ("name", "id")
-            else None
+            else schema
         )
-        if lineage is None:
-            if ms is None:
-                return read_files_df(self.spark, self.path, schema, candidates)
-            from jodie_spark.tables.column_mapping import rename_to_logical
-
-            logical, physical = ms
-            df = read_files_df(self.spark, self.path, physical, candidates)
-            return rename_to_logical(df, logical, physical)
-        from jodie_spark.tables.row_lineage import (
-            LIN_RCV,
-            LIN_RID,
-            read_candidates_with_lineage,
-        )
-
-        if ms is None:
-            return read_candidates_with_lineage(
-                self.spark, self.path, schema, candidates, *lineage
+        keep: tuple[str, ...] = ("__fp__", "__ri__") if coords else ()
+        if lineage is not None:
+            from jodie_spark.tables.row_lineage import (
+                LIN_RCV,
+                LIN_RID,
+                read_candidates_with_lineage,
             )
-        from jodie_spark.tables.column_mapping import rename_to_logical
 
-        logical, physical = ms
-        df = read_candidates_with_lineage(
-            self.spark, self.path, physical, candidates, *lineage
-        )
-        return rename_to_logical(
-            df, logical, physical, keep=("__file__", LIN_RID, LIN_RCV)
-        )
+            df = read_candidates_with_lineage(
+                self.spark, self.path, physical, candidates, *lineage,
+                file_col="__fp__" if coords else "__file__",
+                coords=coords,
+            )
+            keep = (keep or ("__file__",)) + (LIN_RID, LIN_RCV)
+        elif coords:
+            base, paths = _spark_paths(self.path, candidates)
+            df = scan_parquet(self.spark, paths, physical, base, cols=["*", *_FP_RI])
+        else:
+            df = read_files_df(self.spark, self.path, physical, candidates)
+        if coords:
+            if old_dvs is None:
+                old_dvs = _dv_bitmaps(self.spark, self.path, candidates)
+            if old_dvs is not None:
+                df = _drop_dv_positions(df, self.path, old_dvs, strict=False)
+        if physical is schema:
+            return df
+        return rename_to_logical(df, schema, physical, keep=keep)
 
     def _write_rewrite_files(
         self,
@@ -1689,240 +1797,235 @@ class DeltaTable:
         return actions
 
     def delete(self, condition: str | None = None, deletion_vectors: bool = False) -> None:
-        """Copy-on-write DELETE with stats-based file skipping: files whose
-        stats prove no match are never read or rewritten.
+        """DELETE the rows matching ``condition`` (every row when None),
+        through :meth:`_dml`. Files whose stats prove no match are never
+        read. Copy-on-write: the touched files are rewritten without the
+        deleted rows; a full-table delete drops whole files, which is
+        already O(metadata).
 
-        ``deletion_vectors=True`` switches to merge-on-read DELETE: instead
-        of rewriting every touched file, the matched row indexes are
-        written as roaring-bitmap deletion vectors and the files are
-        re-added with a DV descriptor — a delete that touches 1% of the
-        rows in every file goes from rewriting the whole table to writing
-        tiny bitmaps (the Delta deletionVectors feature; the table's
-        protocol is upgraded on first use). Composes with CDF (delete
-        change rows are written from the matched scan) ; full-table
-        deletes keep the copy-on-write path (dropping whole files is
-        already O(metadata)).
-        """
+        ``deletion_vectors=True`` with a condition deletes merge-on-read:
+        the matched row indexes are written as roaring-bitmap deletion
+        vectors and the files are re-added with the descriptor, so a
+        delete that touches 1% of the rows in every file writes tiny
+        bitmaps instead of the whole table (the Delta deletionVectors
+        feature; the table's protocol is upgraded on first use)."""
+        self._dml(condition, None, deletion_vectors)
+
+    def update(
+        self,
+        condition: str | None,
+        set: dict[str, Any],  # noqa: A002
+        deletion_vectors: bool = False,
+    ) -> None:
+        """UPDATE the rows matching ``condition`` (every row when None),
+        through :meth:`_dml`: ``set`` maps a column to its new value, as
+        SQL text or a Column. Copy-on-write: the touched files are
+        rewritten with the updated rows, with the same file skipping as
+        :meth:`delete`.
+
+        ``deletion_vectors=True`` with a condition updates merge-on-read:
+        the matched rows are marked in deletion vectors and ONLY their
+        updated copies are written as new files — untouched rows are
+        never rewritten. Both modes record change rows on CDF tables."""
+        self._dml(condition, set, deletion_vectors)
+
+    def _dml(
+        self,
+        condition: str | None,
+        assignments: dict[str, Any] | None,
+        deletion_vectors: bool,
+    ) -> None:
+        """The one DELETE/UPDATE pipeline (``assignments`` None is a
+        DELETE), the Delta paper's flow: plan the candidate files from
+        the log, find and write the matching rows, then ONE commit of
+        the remove/add pairs, change rows and metrics, whose read set is
+        the planning condition.
+
+        Only the write step depends on the mode: merge-on-read
+        (:meth:`_dml_merge_on_read`) with ``deletion_vectors`` and a
+        condition, else copy-on-write (:meth:`_dml_copy_on_write`). The
+        ops differ only in the row projection (:class:`_DmlOp`)."""
+        from jodie_spark.tables.merge import lower_assignments
+        from jodie_spark.tables.pruning import make_read_checker
+
         t0 = time.time()
         snap = self.deltaLog.table_info()
         self.deltaLog.check_write_allowed(snap, removes_data=True)
         schema = self.schema(snap)
-        if deletion_vectors and condition is not None:
-            self._delete_with_dvs(snap, schema, condition, t0)
-            return
-        candidates = plan_candidate_files(
-            self.spark,
-            self.path,
-            self._planning_condition(snap, condition),
-            schema,
-            snap.partition_columns,
-        )
+        d = _DmlOp(snap, schema, condition)
+        if assignments is not None:
+            from jodie_spark.tables.identity import identity_columns_of
+            from jodie_spark.tables.merge import resolve_assignment_keys
 
-        removes: list[dict[str, Any]] = []
-        adds: list[dict[str, Any]] = []
-        cdc_actions: list[dict[str, Any]] = []
-        lineage_actions: list[dict[str, Any]] = []
-        deleted_rows = 0
-        copied_rows = 0
-        scan_ms = 0
-
-        if condition is None:
-            removes = candidates
-            deleted_rows = planned_num_records(self.spark, self.path, schema)
-        elif candidates:
-            t_scan = time.time()
-            cond = _frag(condition)
-            # pass 1 finds the touched adds (see _touched_files: one
-            # small candidate skips the probe); pass 2 rewrites a
-            # full-column scan of ONLY those — same shape as MERGE
-            touched, lineage, lineage_actions = self._touched_files(
-                snap, schema, candidates, cond
+            assignments = resolve_assignment_keys(
+                assignments, [f.name for f in schema.fields], "UPDATE"
             )
-            lineage_drop = (
-                ["__lineage_rid__", "__lineage_rcv__"] if lineage is not None else []
-            )
-            scan_ms = int((time.time() - t_scan) * 1000)
-            if touched:
-                touched_df = self._read_candidates(
-                    snap, schema, touched, lineage=lineage
+            bad = [k for k in assignments if k in identity_columns_of(schema)]
+            if bad:
+                raise JodieValidationError(
+                    f"UPDATE cannot assign identity column(s) {sorted(bad)}"
                 )
-                if lineage is not None:
-                    touched_df = touched_df.drop("__file__")
-                cdf_on = self.is_cdf_enabled(snap)
-                if cdf_on:
-                    # CDF consumes the touched scan a second time (the
-                    # delete change leg); cache it for that one re-read
-                    touched_df = touched_df.persist()
-                try:
-                    # the deleted-row count rides the write job's
-                    # observation — no count job (candidates carry no
-                    # stats strings) — and decides whether it commits
-                    obs = Observation()
-                    observed = touched_df.observe(
-                        obs, F.expr(f"count_if(coalesce({cond}, false)) AS deleted")
-                    )
-                    # surviving (copied) rows keep BOTH their row id and
-                    # commit version — spec row-tracking preservation
-                    keep_df = observed.filter(f"NOT coalesce({cond}, false)")
-                    adds = self._write_rewrite_files(snap, keep_df, lineage=lineage)
-                    try:
-                        deleted_rows = observation_values(obs, ["deleted"], "rewrite")[
-                            "deleted"
-                        ]
-                        if deleted_rows:
-                            removes = touched
-                            copied_rows = sum(
-                                int(json.loads(a["stats"]).get("numRecords") or 0)
-                                for a in adds
-                            )
-                            if cdf_on:
-                                deleted_df = touched_df.filter(cond).drop(
-                                    *lineage_drop
-                                ).selectExpr("*", "'delete' AS _change_type")
-                                cdc_actions = self._write_cdf_files(deleted_df, snap)
-                    except BaseException:
-                        self._discard_files(adds)
-                        raise
-                    if not removes:  # no row matched: nothing to commit
-                        self._discard_files(adds)
-                        adds = []
-                finally:
-                    if cdf_on:
-                        touched_df.unpersist()
+            d.hidden, d.fields = lower_assignments(schema, [(d.cond, assignments)])
+        plan_cond = self._planning_condition(snap, condition)
+        candidates = plan_candidate_files(
+            self.spark, self.path, plan_cond, schema, snap.partition_columns
+        )
+        d.t_rewrite = time.time()
+        if deletion_vectors and condition is not None:
+            self._dml_merge_on_read(d, candidates)
+        else:
+            self._dml_copy_on_write(d, candidates)
 
-        actions: list[dict[str, Any]] = lineage_actions + list(cdc_actions)
-        actions += [{"add": a} for a in adds]
+        actions = list(d.lineage_actions)
+        if d.dv_rows:
+            actions += self._dv_protocol_upgrade_actions(snap)
+        actions += d.cdc + d.dv_actions + [{"add": a} for a in d.adds]
         now_ms = int(time.time() * 1000)
-        actions += [remove_action(r, now_ms) for r in removes]
-        metrics = {
-            "numRemovedFiles": str(len(removes)),
-            "numAddedFiles": str(len(adds)),
-            "numDeletedRows": str(deleted_rows),
-            "numCopiedRows": str(copied_rows),
-            "numAddedChangeFiles": str(len(cdc_actions)),
-            "numRemovedBytes": str(sum(int(r.get("size") or 0) for r in removes)),
-            "numAddedBytes": str(sum(int(a.get("size") or 0) for a in adds)),
-            "executionTimeMs": str(int((time.time() - t0) * 1000)),
-            "scanTimeMs": str(scan_ms),
-            "rewriteTimeMs": str(max(0, int((time.time() - t0) * 1000) - scan_ms)),
-        }
-        params = {"predicate": json.dumps([condition] if condition else [])}
-        from jodie_spark.tables.pruning import make_read_checker
-
+        actions += [remove_action(r, now_ms) for r in d.removes]
+        if d.fields is None:
+            op, params = "DELETE", {"predicate": json.dumps([condition] if condition else [])}
+        else:
+            op, params = "UPDATE", {"predicate": condition or ""}
         self.deltaLog.commit(
             snap.version,
             actions,
-            "DELETE",
+            op,
             params,
-            metrics,
-            read_check=make_read_checker(
-                self._planning_condition(snap, condition),
-                schema,
-                snap.partition_columns,
-            ),
+            d.metrics(t0),
+            read_check=make_read_checker(plan_cond, schema, snap.partition_columns),
         )
 
-    # -- deletion-vector (merge-on-read) DML machinery -----------------------
-
-    def _dv_scan(
-        self,
-        candidates: list[dict[str, Any]],
-        schema: T.StructType,
-        snap: Snapshot | None = None,
-    ) -> DataFrame:
-        """Raw scan of candidate files with file-path + row-index metadata
-        columns (the DV coordinate system). With ``snap`` the scan is
-        column-mapping-aware: physical-named files read with the
-        physical schema, rows surfaced under logical names."""
-        ms = self._mapping_schemas(snap) if snap is not None else None
-        base, paths = _spark_paths(self.path, candidates)
-        out = scan_parquet(
-            self.spark, paths, schema if ms is None else ms[1], base,
-            cols=["*", *_FP_RI],
+    def _dml_copy_on_write(
+        self, d: "_DmlOp", candidates: list[dict[str, Any]]
+    ) -> None:
+        """Copy-on-write write step: rewrite the touched files (see
+        :meth:`_touched_files`: one small candidate runs no probe) as
+        :meth:`_DmlOp.project` of their full-column scan. The count of
+        matched rows rides the write job's observation and decides
+        whether the rewrite commits; with no match its files are
+        deleted. A full-table DELETE removes every candidate, reading no
+        data."""
+        if d.condition is None and d.fields is None:
+            d.removes = candidates
+            d.changed = planned_num_records(self.spark, self.path, d.schema)
+            return
+        if not candidates:
+            return
+        touched, lineage, d.lineage_actions = self._touched_files(
+            d.snap, d.schema, candidates, d.cond
         )
-        if ms is not None:
-            from jodie_spark.tables.column_mapping import rename_to_logical
+        d.t_rewrite = time.time()
+        if not touched:
+            return
+        rows = self._read_candidates(d.snap, d.schema, touched, lineage=lineage)
+        if lineage is not None:
+            rows = rows.drop("__file__")
+        if d.hidden:
+            rows = rows.withColumns(d.hidden)
+        cdf_on = self.is_cdf_enabled(d.snap)
+        if cdf_on:
+            # the change rows read the scan again; cache it for that
+            rows = rows.persist()
+        try:
+            obs = Observation()
+            observed = rows.observe(
+                obs, F.expr(f"count_if(coalesce({d.cond}, false)) AS changed")
+            )
+            adds = self._write_rewrite_files(
+                d.snap, d.project(observed, lineage), lineage=lineage
+            )
+            try:
+                d.changed = observation_values(obs, ["changed"], "rewrite")["changed"]
+                if d.changed:
+                    d.removes, d.adds = touched, adds
+                    if cdf_on:
+                        d.cdc = self._write_cdf_files(d.change_rows(rows), d.snap)
+            except BaseException:
+                self._discard_files(adds)
+                raise
+            if not d.changed:  # no row matched: nothing to commit
+                self._discard_files(adds)
+        finally:
+            if cdf_on:
+                rows.unpersist()
 
-            out = rename_to_logical(out, ms[0], ms[1], keep=("__fp__", "__ri__"))
-        return out
+    def _dml_merge_on_read(
+        self, d: "_DmlOp", candidates: list[dict[str, Any]]
+    ) -> None:
+        """Merge-on-read write step: mark the matched rows of the
+        candidates' coordinate scan (:meth:`_read_candidates` with
+        ``coords``) in one deletion vector per touched file, merged with
+        the file's existing one (:meth:`_write_dvs_for`), and re-add each
+        file with it. An UPDATE also writes :meth:`_DmlOp.project` of
+        the matched rows as new files. Untouched rows are never
+        rewritten."""
+        if not candidates:
+            return
+        lineage = None
+        if d.fields is not None:  # the updated copies keep their row ids
+            lineage, d.lineage_actions = self._lineage_setup(d.snap, candidates)
+        old_dvs = _dv_bitmaps(self.spark, self.path, candidates)
+        matched = self._read_candidates(
+            d.snap, d.schema, candidates, lineage=lineage, coords=True, old_dvs=old_dvs
+        ).filter(d.cond)
+        if d.hidden:
+            matched = matched.withColumns(d.hidden)
+        # read by the bitmap write, then the copies and the change rows
+        matched = matched.persist()
+        try:
+            d.dv_rows = self._write_dvs_for(matched, old_dvs)
+            if not d.dv_rows:
+                return
+            d.dv_actions, d.changed, d.dv_bytes = self._dv_action_pairs(
+                candidates, d.dv_rows, int(time.time() * 1000)
+            )
+            if d.fields is not None:
+                d.adds = self._write_rewrite_files(
+                    d.snap, d.project(matched, lineage), lineage=lineage
+                )
+            if self.is_cdf_enabled(d.snap):
+                d.cdc = self._write_cdf_files(d.change_rows(matched), d.snap)
+        finally:
+            matched.unpersist()
 
-    def _drop_existing_dv_positions(
-        self, df: DataFrame, candidates: list[dict[str, Any]]
-    ) -> DataFrame:
-        """``df`` minus rows an existing candidate DV already deleted
-        (:func:`_drop_dv_positions`; a candidate without a DV keeps all
-        its rows). Returns ``df`` unchanged when no candidate carries a
-        DV."""
-        dv_adds = [a for a in candidates if a.get("deletionVector")]
-        if not dv_adds:
-            return df
-        return _drop_dv_positions(df, self.path, dv_adds, strict=False)
+    # -- deletion-vector (merge-on-read) machinery ---------------------------
 
-    def _write_dvs_for(
-        self, matched: DataFrame, candidates: list[dict[str, Any]]
-    ) -> list[Any]:
+    def _write_dvs_for(self, matched: DataFrame, old_dvs: Broadcast | None) -> list[Any]:
         """One ``applyInPandas`` group per touched file serializes and
-        writes the (old ∪ new) position bitmap EXECUTOR-side; the driver
+        writes the (old ∪ new) position bitmap EXECUTOR-side
+        (:func:`~jodie_spark.tables.deletion_vectors.write_dv_file`: a
+        relative ``u`` descriptor under the table's
+        ``deletion_vectors/``, so a copied or moved table keeps its
+        vectors). The old bitmaps are the coordinate scan's broadcast
+        (:func:`_dv_bitmaps`), so each is read once per op. The driver
         receives one descriptor row per file, never a row index."""
-        import uuid as _uuid
-
+        from jodie_spark.fs import get_fs, scanned_path_key
         from jodie_spark.tables.deletion_vectors import (
+            DV_DIR,
             parse_roaring_bitmap_array,
-            read_dv_bytes,
             write_dv_file,
         )
 
-        from jodie_spark.fs import add_path_key, get_fs, scanned_path_key
-        from jodie_spark.tables.deletion_vectors import dv_absolute_path
-
-        _fs = get_fs(self.path)
-        scheme_dv_dir = _fs.join(self.path, "deletion_vectors")
-        _fs.makedirs(scheme_dv_dir)
-        # resolved DRIVER-side: executors write bitmaps and re-read old
-        # ones through paths they can open without the registry; keys
-        # use the shared add_path_key/scanned_path_key canonicalization
-        # — the scan runs on the SPARK plane, so the keys must too
-        exec_table = _fs.executor_path(self.path)
-        exec_dv_dir = _fs.executor_path(scheme_dv_dir)
-        old_desc_by_key = {}
-        for a in candidates:
-            if not a.get("deletionVector"):
-                continue
-            desc = dict(a["deletionVector"])
-            # translate an absolute descriptor path to the executor
-            # plane here, where the registry is available
-            abs_dv = dv_absolute_path(self.path, desc)
-            if abs_dv is not None:
-                desc["pathOrInlineDv"] = _fs.executor_path(abs_dv)
-                desc["storageType"] = "p"
-            old_desc_by_key[add_path_key(self.path, a["path"])] = json.dumps(desc)
+        fs = get_fs(self.path)
+        fs.makedirs(fs.join(self.path, DV_DIR))
+        # executors write through a path they can open without the
+        # driver's file-system registry
+        exec_root = fs.executor_path(self.path)
 
         def _make_dv(pdf):
             import pandas as pd
 
             fp = pdf["__fp__"].iloc[0]
             positions = set(int(x) for x in pdf["__ri__"])
-            old_card = 0
-            old_json = old_desc_by_key.get(scanned_path_key(fp))
-            if old_json:
-                old_desc = json.loads(old_json)
-                old_pos = parse_roaring_bitmap_array(
-                    read_dv_bytes(exec_table, old_desc)
-                )
-                old_card = len(old_pos)
-                positions |= set(old_pos)
-            name = f"dv_{_uuid.uuid4().hex}.bin"
-            desc = write_dv_file(
-                os.path.join(exec_dv_dir, name), sorted(positions)
-            )
-            # the COMMITTED descriptor carries the scheme-plane path —
-            # one process's mount layout must not bake into the log
-            desc["pathOrInlineDv"] = os.path.join(scheme_dv_dir, name)
+            old = old_dvs.value.get(scanned_path_key(fp)) if old_dvs is not None else None
+            old_pos = parse_roaring_bitmap_array(old) if old else []
+            positions |= set(old_pos)
+            desc = write_dv_file(exec_root, sorted(positions))
             return pd.DataFrame(
                 {
                     "fp": [fp],
                     "desc": [json.dumps(desc)],
-                    "old_card": [old_card],
+                    "old_card": [len(old_pos)],
                     "new_card": [len(positions)],
                 }
             )
@@ -2013,413 +2116,6 @@ class DeltaTable:
             adds.append(new_add)
             removes.append(remove_action(add, now_ms))
         return removes + [{"add": a} for a in adds], changed, dv_bytes
-
-    def _delete_with_dvs(
-        self, snap: Snapshot, schema: T.StructType, condition: str, t0: float
-    ) -> None:
-        """Merge-on-read DELETE: per touched file, write a roaring-bitmap
-        DV of the matched row indexes (merged with any existing DV) and
-        re-add the file with the descriptor — no data rewrite. Existing
-        DVs are unioned in, so repeated DV deletes stay idempotent."""
-        candidates = plan_candidate_files(
-            self.spark,
-            self.path,
-            self._planning_condition(snap, condition),
-            schema,
-            snap.partition_columns,
-        )
-        rows: list[Any] = []
-        cdc_actions: list[dict[str, Any]] = []
-        if candidates:
-            scan = self._dv_scan(candidates, schema, snap)
-            scan = self._drop_existing_dv_positions(scan, candidates)
-            matched = scan.filter(F.expr(condition)).persist()
-            try:
-                rows = self._write_dvs_for(matched, candidates)
-                if rows and self.is_cdf_enabled(snap):
-                    cdc_actions = self._write_cdf_files(
-                        matched.select(*[F.col(f.name) for f in schema.fields])
-                        .withColumn("_change_type", F.lit("delete")),
-                        snap,
-                    )
-            finally:
-                matched.unpersist()
-
-        actions = self._dv_protocol_upgrade_actions(snap) if rows else []
-        actions += cdc_actions
-        pair_actions, deleted_rows, dv_bytes = self._dv_action_pairs(
-            candidates, rows, int(time.time() * 1000)
-        )
-        actions += pair_actions
-        metrics = {
-            "numRemovedFiles": "0",
-            "numAddedFiles": "0",
-            "numDeletionVectorsAdded": str(len(rows)),
-            "numDeletionVectorsUpdated": str(
-                sum(1 for r in rows if int(r["old_card"]) > 0)
-            ),
-            "numDeletedRows": str(deleted_rows),
-            "numCopiedRows": "0",
-            "numAddedChangeFiles": str(len(cdc_actions)),
-            "numAddedBytes": str(dv_bytes),
-            "executionTimeMs": str(int((time.time() - t0) * 1000)),
-        }
-        params = {"predicate": json.dumps([condition])}
-        from jodie_spark.tables.pruning import make_read_checker
-
-        self.deltaLog.commit(
-            snap.version,
-            actions,
-            "DELETE",
-            params,
-            metrics,
-            read_check=make_read_checker(
-                self._planning_condition(snap, condition),
-                schema,
-                snap.partition_columns,
-            ),
-        )
-
-    def _update_with_dvs(
-        self,
-        snap: Snapshot,
-        schema: T.StructType,
-        condition: str,
-        set_exprs: dict[str, Column],
-        t0: float,
-    ) -> None:
-        """Merge-on-read UPDATE: DV the matched rows in their files and
-        write ONLY the updated copies as new files — untouched rows are
-        never rewritten. A 1%-of-rows update writes 1% of the data plus
-        tiny bitmaps, instead of rewriting every touched file."""
-        candidates = plan_candidate_files(
-            self.spark,
-            self.path,
-            self._planning_condition(snap, condition),
-            schema,
-            snap.partition_columns,
-        )
-        lineage, lineage_actions = self._lineage_setup(snap, candidates)
-        ms = self._mapping_schemas(snap)
-        rows: list[Any] = []
-        new_adds: list[dict[str, Any]] = []
-        cdc_actions: list[dict[str, Any]] = []
-        if candidates:
-            if lineage is not None:
-                # updated copies move to a new file — their row ids are
-                # preserved by materialization (lineage scan also masks
-                # existing DV positions)
-                from jodie_spark.tables.row_lineage import (
-                    LIN_RCV,
-                    LIN_RID,
-                    read_candidates_with_lineage,
-                )
-
-                scan = read_candidates_with_lineage(
-                    self.spark,
-                    self.path,
-                    schema if ms is None else ms[1],
-                    candidates,
-                    *lineage,
-                    file_col="__fp__",
-                    keep_row_index=True,
-                )
-                if ms is not None:
-                    from jodie_spark.tables.column_mapping import rename_to_logical
-
-                    scan = rename_to_logical(
-                        scan, ms[0], ms[1], keep=("__fp__", "__ri__", LIN_RID, LIN_RCV)
-                    )
-                scan = scan.persist()
-            else:
-                scan = self._dv_scan(candidates, schema, snap).persist()
-            try:
-                matched = scan.filter(F.expr(condition))
-                if lineage is None:
-                    # rows an existing DV already deleted must neither be
-                    # re-counted nor RESURRECTED as updated copies
-                    matched = self._drop_existing_dv_positions(
-                        matched, candidates
-                    )
-                rows = self._write_dvs_for(matched, candidates)
-                if rows:
-                    lineage_out = []
-                    stat_exclude = None
-                    if lineage is not None:
-                        from jodie_spark.tables.row_lineage import LIN_RID
-
-                        # id preserved; commit version NULL → readers
-                        # fall back to this commit's defaultRowCommitVersion
-                        lineage_out = [
-                            F.col(LIN_RID).alias(lineage[0]),
-                            F.lit(None).cast("long").alias(lineage[1]),
-                        ]
-                        stat_exclude = set(lineage)
-                    updated_df = matched.select(
-                        *[
-                            set_exprs[f.name].cast(f.dataType).alias(f.name)
-                            if f.name in set_exprs
-                            else F.col(f.name)
-                            for f in schema.fields
-                        ],
-                        *lineage_out,
-                    )
-                    out_df = enforce_check_constraints(
-                        apply_generated_columns(updated_df, schema),
-                        snap.configuration,
-                    )
-                    if ms is not None:
-                        from jodie_spark.tables.column_mapping import (
-                            rename_to_physical,
-                        )
-
-                        out_df = rename_to_physical(
-                            out_df,
-                            ms[0],
-                            ms[1],
-                            keep=tuple(lineage) if lineage else (),
-                        )
-                    new_adds = write_data_files(
-                        out_df,
-                        self.path,
-                        snap.partition_columns,
-                        stat_exclude=stat_exclude,
-                        table_config=snap.configuration,
-                    )
-                    if self.is_cdf_enabled(snap):
-                        pre = matched.select(
-                            *[F.col(f.name) for f in schema.fields]
-                        ).withColumn("_change_type", F.lit("update_preimage"))
-                        post = updated_df.select(
-                            *[F.col(f.name) for f in schema.fields]
-                        ).withColumn("_change_type", F.lit("update_postimage"))
-                        cdc_actions = self._write_cdf_files(pre.unionByName(post), snap)
-            finally:
-                scan.unpersist()
-
-        actions = self._dv_protocol_upgrade_actions(snap) if rows else []
-        actions = lineage_actions + actions
-        actions += cdc_actions
-        pair_actions, updated_rows, dv_bytes = self._dv_action_pairs(
-            candidates, rows, int(time.time() * 1000)
-        )
-        actions += pair_actions
-        actions += [{"add": a} for a in new_adds]
-        metrics = {
-            "numRemovedFiles": "0",
-            "numAddedFiles": str(len(new_adds)),
-            "numDeletionVectorsAdded": str(len(rows)),
-            "numDeletionVectorsUpdated": str(
-                sum(1 for r in rows if int(r["old_card"]) > 0)
-            ),
-            "numUpdatedRows": str(updated_rows),
-            "numCopiedRows": "0",
-            "numAddedChangeFiles": str(len(cdc_actions)),
-            "numAddedBytes": str(
-                dv_bytes + sum(int(a.get("size") or 0) for a in new_adds)
-            ),
-            "executionTimeMs": str(int((time.time() - t0) * 1000)),
-        }
-        params = {"predicate": condition}
-        from jodie_spark.tables.pruning import make_read_checker
-
-        self.deltaLog.commit(
-            snap.version,
-            actions,
-            "UPDATE",
-            params,
-            metrics,
-            read_check=make_read_checker(
-                self._planning_condition(snap, condition),
-                schema,
-                snap.partition_columns,
-            ),
-        )
-
-    def update(
-        self,
-        condition: str | None,
-        set: dict[str, Any],  # noqa: A002
-        deletion_vectors: bool = False,
-    ) -> None:
-        """Copy-on-write UPDATE with the same file-skipping as delete.
-
-        ``deletion_vectors=True`` switches to merge-on-read: matched rows
-        are DV'd in their files and ONLY their updated copies are written
-        as new files — untouched rows are never rewritten. Falls back to
-        copy-on-write when CDF is enabled (pre/post images need the
-        rewrite scan)."""
-        t0 = time.time()
-        snap = self.deltaLog.table_info()
-        self.deltaLog.check_write_allowed(snap, removes_data=True)
-        schema = self.schema(snap)
-        from jodie_spark.tables.identity import identity_columns_of
-        from jodie_spark.tables.merge import resolve_assignment_keys
-
-        set = resolve_assignment_keys(  # noqa: A001
-            set, [f.name for f in schema.fields], "UPDATE"
-        )
-        bad = [k for k in set if k in identity_columns_of(schema)]
-        if bad:
-            raise JodieValidationError(
-                f"UPDATE cannot assign identity column(s) {sorted(bad)}"
-            )
-        if deletion_vectors and condition is not None:
-            set_exprs = {
-                k: (v if isinstance(v, Column) else F.expr(str(v)))
-                for k, v in set.items()
-            }
-            self._update_with_dvs(snap, schema, condition, set_exprs, t0)
-            return
-        candidates = plan_candidate_files(
-            self.spark,
-            self.path,
-            self._planning_condition(snap, condition),
-            schema,
-            snap.partition_columns,
-        )
-        cond = _frag(condition) if condition else "TRUE"
-
-        adds: list[dict[str, Any]] = []
-        removes: list[dict[str, Any]] = []
-        cdc_actions: list[dict[str, Any]] = []
-        lineage_actions: list[dict[str, Any]] = []
-        updated_rows = 0
-        scan_ms = 0
-
-        if candidates:
-            t_scan = time.time()
-            # pass 1 finds the touched adds (see _touched_files); pass 2
-            # rewrites a full-column scan of ONLY those — same shape as
-            # MERGE and DELETE
-            touched, lineage, lineage_actions = self._touched_files(
-                snap, schema, candidates, cond
-            )
-            scan_ms = int((time.time() - t_scan) * 1000)
-            if touched:
-                touched_df = self._read_candidates(
-                    snap, schema, touched, lineage=lineage
-                )
-                if lineage is not None:
-                    touched_df = touched_df.drop("__file__")
-                # one CAST(CASE …) text per assigned field, as merge
-                # lowers its clauses; a Column-object value travels in
-                # a hidden column evaluated on matched rows only
-                hidden: dict[str, Column] = {}
-                fields = []
-                for f in schema.fields:
-                    q = quote_ident(f.name)
-                    if f.name not in set:
-                        fields.append(q)
-                        continue
-                    v = set[f.name]
-                    if isinstance(v, Column):
-                        h = f"__col{len(hidden)}__"
-                        hidden[h] = F.call_function("if", F.expr(cond), v, F.lit(None))
-                        v = h
-                    else:
-                        v = _frag(str(v))
-                    fields.append(
-                        f"CAST(CASE WHEN {cond} THEN {v} ELSE {q} END"
-                        f" AS {type_ddl(f.dataType)}) AS {q}"
-                    )
-                staged = touched_df.withColumns(hidden) if hidden else touched_df
-                cdf_on = self.is_cdf_enabled(snap)
-                if cdf_on:
-                    # CDF re-consumes the touched scan twice (pre and
-                    # post images); cache it for those re-reads
-                    staged = staged.persist()
-                try:
-                    obs = Observation()
-                    observed = staged.observe(
-                        obs, F.expr(f"count_if(coalesce({cond}, false)) AS updated")
-                    )
-                    # row tracking: every rewritten row keeps its id;
-                    # MODIFIED rows get a NULL materialized commit
-                    # version (readers fall back to the add's
-                    # defaultRowCommitVersion = this commit), copied
-                    # rows keep their original version
-                    from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
-
-                    lineage_out = (
-                        [
-                            LIN_RID,
-                            f"CASE WHEN {cond} THEN CAST(NULL AS BIGINT)"
-                            f" ELSE {LIN_RCV} END AS {LIN_RCV}",
-                        ]
-                        if lineage is not None
-                        else []
-                    )
-                    adds = self._write_rewrite_files(
-                        snap,
-                        enforce_check_constraints(
-                            apply_generated_columns(
-                                observed.selectExpr(*fields, *lineage_out), schema
-                            ),
-                            snap.configuration,
-                        ),
-                        lineage=lineage,
-                    )
-                    try:
-                        # the match count decides whether the rewrite commits
-                        updated_rows = observation_values(obs, ["updated"], "rewrite")[
-                            "updated"
-                        ]
-                        if updated_rows:
-                            removes = touched
-                            if cdf_on:
-                                pre = staged.filter(cond).selectExpr(
-                                    *[quote_ident(f.name) for f in schema.fields],
-                                    "'update_preimage' AS _change_type",
-                                )
-                                post = staged.filter(cond).selectExpr(
-                                    *fields, "'update_postimage' AS _change_type"
-                                )
-                                cdc_actions = self._write_cdf_files(
-                                    pre.unionByName(post), snap
-                                )
-                    except BaseException:
-                        self._discard_files(adds)
-                        raise
-                    if not removes:  # no row matched: nothing to commit
-                        self._discard_files(adds)
-                        adds = []
-                finally:
-                    if cdf_on:
-                        staged.unpersist()
-
-        actions: list[dict[str, Any]] = lineage_actions + list(cdc_actions)
-        actions += [{"add": a} for a in adds]
-        now_ms = int(time.time() * 1000)
-        actions += [remove_action(r, now_ms) for r in removes]
-        total_touched = sum(
-            int(json.loads(a["stats"]).get("numRecords") or 0) for a in removes if a.get("stats")
-        )
-        metrics = {
-            "numRemovedFiles": str(len(removes)),
-            "numAddedFiles": str(len(adds)),
-            "numUpdatedRows": str(updated_rows),
-            "numCopiedRows": str(max(0, total_touched - updated_rows)),
-            "numAddedChangeFiles": str(len(cdc_actions)),
-            "executionTimeMs": str(int((time.time() - t0) * 1000)),
-            "scanTimeMs": str(scan_ms),
-            "rewriteTimeMs": str(max(0, int((time.time() - t0) * 1000) - scan_ms)),
-        }
-        params = {"predicate": condition or ""}
-        from jodie_spark.tables.pruning import make_read_checker
-
-        self.deltaLog.commit(
-            snap.version,
-            actions,
-            "UPDATE",
-            params,
-            metrics,
-            read_check=make_read_checker(
-                self._planning_condition(snap, condition),
-                schema,
-                snap.partition_columns,
-            ),
-        )
 
     def merge(self, source: DataFrame, condition: str) -> "DeltaMergeBuilder":
         from jodie_spark.tables.merge import DeltaMergeBuilder
@@ -2849,9 +2545,8 @@ class DeltaTable:
         # the data path with a NEW merged DV, orphaning the previous
         # .bin — their references die with the cleared tombstone, so
         # sweep the DV directory against the LIVE descriptor set
-        from jodie_spark.tables.deletion_vectors import dv_absolute_path
-
         from jodie_spark.fs import path_scheme as _scheme_of
+        from jodie_spark.tables.deletion_vectors import DV_DIR, dv_absolute_path
 
         def _dv_plane(p: str) -> str:
             # descriptors written through executor-translated paths are
@@ -2867,7 +2562,7 @@ class DeltaTable:
             p = dv_absolute_path(self.path, a["deletionVector"])
             if p:
                 live_dvs.add(_dv_plane(fs.abspath(p)))
-        dv_dir = fs.join(self.path, "deletion_vectors")
+        dv_dir = fs.join(self.path, DV_DIR)
         orphan_dvs = []
         if fs.isdir(dv_dir):
             for name in fs.listdir(dv_dir):

@@ -24,7 +24,6 @@ Every byte layout here is transcribed from the public spec
 
 from __future__ import annotations
 
-import base64
 import json
 import os
 import struct
@@ -163,10 +162,25 @@ def serialize_dv(positions: list[int]) -> bytes:
     return bytes(out)
 
 
+_Z85 = "0123456789abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ.-:+=^!/*?&<>()[]{}@%$#"
+
+
+def z85(data: bytes) -> str:
+    """Delta's base85 (Z85, ZeroMQ RFC 32), written out digit by digit:
+    each 4-byte big-endian block, zero-padded at the end, becomes 5
+    characters, most significant first."""
+    data += bytes(-len(data) % 4)
+    out = []
+    for i in range(0, len(data), 4):
+        v = int.from_bytes(data[i : i + 4], "big")
+        out += [_Z85[v // 85**k % 85] for k in range(4, -1, -1)]
+    return "".join(out)
+
+
 def write_dv(table: str, positions: list[int], prefix: str = "") -> dict:
     """On-disk 'u'-storage DV exactly as delta-spark lays it out:
     ``<prefix>/deletion_vector_<uuid>.bin``, descriptor ref =
-    prefix + base85(uuid bytes)."""
+    prefix + Z85(uuid bytes)."""
     u = uuid.uuid4()
     data = serialize_dv(positions)
     rel_dir = os.path.join(table, prefix) if prefix else table
@@ -179,7 +193,7 @@ def write_dv(table: str, positions: list[int], prefix: str = "") -> dict:
         fh.write(struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF))
     return {
         "storageType": "u",
-        "pathOrInlineDv": prefix + base64.b85encode(u.bytes).decode(),
+        "pathOrInlineDv": prefix + z85(u.bytes),
         "offset": 1,
         "sizeInBytes": len(data),
         "cardinality": len(positions),

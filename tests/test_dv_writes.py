@@ -5,6 +5,8 @@ import os
 
 import pytest
 
+from conftest import py4j_round_trips, spark_jobs
+from jodie_spark.tables.deletion_vectors import dv_absolute_path
 from jodie_spark.tables.table import DeltaTable, write_delta
 
 
@@ -257,13 +259,13 @@ def test_vacuum_sweeps_orphaned_dv_files(spark, table):
     listed = table.vacuum(retention_hours=0, dry_run=True)
     assert any("deletion_vectors" in p for p in listed)
     table.vacuum(retention_hours=0)
-    live = {
-        a["deletionVector"]["pathOrInlineDv"]
+    live = [
+        a["deletionVector"]
         for a in table.snapshot().add_files()
         if a.get("deletionVector")
-    }
+    ]
     remaining = set(glob.glob(dv_dir + "/*.bin"))
-    assert remaining == {p for p in live}  # only live DVs survive
+    assert remaining == {dv_absolute_path(table.path, d) for d in live}
     assert table.toDF().count() == 800  # reads intact after the sweep
 
 
@@ -368,3 +370,179 @@ def test_mor_dml_on_column_mapped_table(spark, tmpdir_path):
     assert not any(a.get("deletionVector") for a in t2.snapshot().add_files())
     rows = sorted((r["id"], r["val"]) for r in t2.toDF().collect())
     assert rows == [(0, 0), (2, 102), (4, 4), (6, 6), (8, 8)]
+
+
+def test_mor_dml_on_cdf_table_with_a_dotted_column_name(spark, tmpdir_path):
+    """Change rows name every column as quoted text: a column named
+    ``a.b`` is one column, not a field of ``a``."""
+    from jodie_spark.operators.cdf import read_cdf
+
+    p = os.path.join(tmpdir_path, "dotted")
+    write_delta(
+        spark.createDataFrame([(i, i) for i in range(10)], "k long, `a.b` long"),
+        p,
+        options={"delta.enableChangeDataFeed": "true"},
+    )
+    t = DeltaTable.forPath(spark, p)
+    t.delete("k = 1", deletion_vectors=True)
+    t.update("k = 2", {"a.b": "`a.b` + 100"}, deletion_vectors=True)
+    assert sorted(tuple(r) for r in t.toDF().collect()) == sorted(
+        (i, i + 100 * (i == 2)) for i in range(10) if i != 1
+    )
+    changes = sorted(
+        (r["_commit_version"], r["_change_type"], r["k"], r["a.b"])
+        for r in read_cdf(spark, p, 1, 2).collect()
+    )
+    assert changes == [
+        (1, "delete", 1, 1),
+        (2, "update_postimage", 2, 102),
+        (2, "update_preimage", 2, 2),
+    ]
+
+
+@pytest.mark.parametrize("op, jobs, round_trips", [("delete", 3, 90), ("update", 4, 100)])
+def test_mor_dml_counts_pinned(spark, tmpdir_path, op, jobs, round_trips):
+    """Spark jobs and py4j round trips of one merge-on-read DML over a
+    one-file table: the bitmap write's grouping, and for UPDATE the
+    write of the updated copy."""
+    def run(name, count):
+        p = os.path.join(tmpdir_path, name)
+        write_delta(spark.range(100).selectExpr("id AS k", "id AS v").coalesce(1), p)
+        t = DeltaTable.forPath(spark, p)
+        if op == "delete":
+            n = count(spark, lambda: t.delete("k = 5", deletion_vectors=True))
+            want = [(i, i) for i in range(100) if i != 5]
+        else:
+            n = count(spark, lambda: t.update("k = 5", {"v": "v + 1000"}, deletion_vectors=True))
+            want = [(i, i + 1000 * (i == 5)) for i in range(100)]
+        assert sorted(tuple(r) for r in t.toDF().collect()) == want
+        return n
+
+    assert run("jobs", spark_jobs) == jobs
+    assert run("py4j", py4j_round_trips) == round_trips
+
+
+def test_dvs_follow_a_copied_table(spark, tmpdir_path):
+    """Deletion vectors are named relative to the table root (the
+    spec's ``u`` descriptor), so a copy of the table directory reads
+    its own bitmaps once the original is gone, takes a further DV
+    delete, and vacuum sweeps the bitmap that delete superseded."""
+    import shutil
+
+    src = os.path.join(tmpdir_path, "src")
+    write_delta(spark.range(20).selectExpr("id AS k").coalesce(1), src)
+    DeltaTable.forPath(spark, src).delete("k < 3", deletion_vectors=True)
+    (add,) = DeltaTable.forPath(spark, src).snapshot().add_files()
+    desc = add["deletionVector"]
+    assert desc["storageType"] == "u"
+    assert os.path.isfile(dv_absolute_path(src, desc))
+    assert os.path.dirname(dv_absolute_path(src, desc)) == os.path.join(src, "deletion_vectors")
+
+    dst = os.path.join(tmpdir_path, "dst")
+    shutil.copytree(src, dst)
+    shutil.rmtree(src)
+    t = DeltaTable.forPath(spark, dst)
+    assert sorted(r["k"] for r in t.toDF().collect()) == list(range(3, 20))
+    t.delete("k = 10", deletion_vectors=True)
+    want = [k for k in range(3, 20) if k != 10]
+    assert sorted(r["k"] for r in t.toDF().collect()) == want
+    assert len(glob.glob(os.path.join(dst, "deletion_vectors", "*.bin"))) == 2
+    t.vacuum(retention_hours=0)
+    (add,) = t.snapshot().add_files()
+    assert glob.glob(os.path.join(dst, "deletion_vectors", "*.bin")) == [
+        dv_absolute_path(dst, add["deletionVector"])
+    ]
+    assert sorted(r["k"] for r in t.toDF().collect()) == want
+
+
+def test_absolute_dv_descriptor_still_reads_and_merges(spark, tmpdir_path):
+    """A ``p`` (absolute path) descriptor, as older writers commit it,
+    reads, and a further DV delete unions it into a new bitmap."""
+    from jodie_spark.tables.deletion_vectors import write_dv_file
+    from jodie_spark.tables.log import remove_action
+
+    elsewhere = os.path.join(tmpdir_path, "elsewhere")
+    rel = write_dv_file(elsewhere, [0, 4])
+    desc = {**rel, "storageType": "p", "pathOrInlineDv": dv_absolute_path(elsewhere, rel)}
+
+    p = os.path.join(tmpdir_path, "abs")
+    write_delta(spark.range(10).selectExpr("id AS k").coalesce(1), p)
+    t = DeltaTable.forPath(spark, p)
+    t.delete("k = 0", deletion_vectors=True)  # upgrades the protocol
+    snap = t.snapshot()
+    (add,) = snap.add_files()
+    t.deltaLog.commit(
+        snap.version,
+        [remove_action(add, 0), {"add": {**add, "deletionVector": desc}}],
+        "DELETE",
+    )
+    assert sorted(r["k"] for r in t.toDF().collect()) == [1, 2, 3, 5, 6, 7, 8, 9]
+    t.delete("k = 7", deletion_vectors=True)
+    assert sorted(r["k"] for r in t.toDF().collect()) == [1, 2, 3, 5, 6, 8, 9]
+
+
+def test_dv_references_use_delta_base85():
+    """Delta's base85 is Z85: the spec's example ``u`` reference names
+    the spec's file, the engine's references agree with an independent
+    Z85 encoder, and inline bitmaps of any length round-trip (the
+    payload zero-padded to whole 4-byte blocks, cut at sizeInBytes)."""
+    import tempfile
+    import uuid
+
+    from jodie_spark.tables.deletion_vectors import (
+        DeletionVectorError,
+        inline_descriptor,
+        parse_roaring_bitmap_array,
+        read_dv_bytes,
+        write_dv_file,
+    )
+    from tests.interop_golden import z85
+
+    spec = {"storageType": "u", "pathOrInlineDv": "ab^-aqEH.-t@S}K{vb[*k^"}
+    assert dv_absolute_path("/t", spec) == (
+        "/t/ab/deletion_vector_d2c639aa-8816-431a-aaf6-d3fe2512ff61.bin"
+    )
+    with tempfile.TemporaryDirectory() as root:
+        desc = write_dv_file(root, [3, 1])
+        name = os.path.basename(dv_absolute_path(root, desc))
+        u = uuid.UUID(name[len("deletion_vector_") : -len(".bin")])
+        assert desc["pathOrInlineDv"] == "deletion_vectors" + z85(u.bytes)
+        assert parse_roaring_bitmap_array(read_dv_bytes(root, desc)) == [1, 3]
+    for positions in ([], [7], [0, 2, 1 << 33], list(range(50))):
+        d = inline_descriptor(positions)
+        assert d["pathOrInlineDv"] == z85(read_dv_bytes("/unused", d))
+        assert parse_roaring_bitmap_array(read_dv_bytes("/unused", d)) == positions
+    with pytest.raises(DeletionVectorError, match="Z85"):
+        dv_absolute_path("/t", {"storageType": "u", "pathOrInlineDv": "~" * 20})
+
+
+def test_mor_merge_on_name_mapped_table(spark, tmpdir_path):
+    """Merge-on-read MERGE keeps its deletion vectors on a mode=name
+    table (only mode=id takes copy-on-write) and leaves the rows a
+    copy-on-write MERGE of a twin table leaves."""
+    def run(name, dv):
+        p = os.path.join(tmpdir_path, name)
+        write_delta(
+            spark.range(10).selectExpr("id", "id AS v").coalesce(1),
+            p,
+            options={"delta.columnMapping.mode": "name"},
+        )
+        t = DeltaTable.forPath(spark, p)
+        t.rename_column("v", "val")
+        src = spark.createDataFrame([(2, 0), (3, 1), (42, 0)], "id long, op long")
+        (
+            DeltaTable.forPath(spark, p).alias("t")
+            .merge(src.alias("s"), "t.id = s.id")
+            .whenMatchedDelete("s.op = 1")
+            .whenMatchedUpdate(set={"val": "t.val + 100"})
+            .whenNotMatchedInsert(values={"id": "s.id", "val": "s.op"})
+            .execute(deletion_vectors=dv)
+        )
+        t = DeltaTable.forPath(spark, p)
+        dvs = [a for a in t.snapshot().add_files() if a.get("deletionVector")]
+        return sorted((r["id"], r["val"]) for r in t.toDF().collect()), dvs
+
+    rows, dvs = run("mor", True)
+    assert dvs and dvs[0]["deletionVector"]["cardinality"] == 2
+    assert (rows, []) == run("cow", False)
+    assert rows == sorted([(i, i) for i in range(10) if i not in (2, 3)] + [(2, 102), (42, 0)])

@@ -836,7 +836,6 @@ def _mk_dv_table(tmpdir_path, name="dvt"):
     """Hand-built DV table: three files of ids 0-9 / 10-19 / 20-29;
     file 0 has an on-disk 'u'-storage DV deleting {1,3,5}, file 1 an
     inline DV deleting {10,19} (relative ids 0 and 9), file 2 no DV."""
-    import base64
     import json
     import struct
     import uuid as uuid_mod
@@ -849,6 +848,7 @@ def _mk_dv_table(tmpdir_path, name="dvt"):
         inline_descriptor,
         serialize_roaring_bitmap_array,
     )
+    from tests.interop_golden import z85
 
     path = os.path.join(tmpdir_path, name)
     log_dir = os.path.join(path, "_delta_log")
@@ -877,7 +877,7 @@ def _mk_dv_table(tmpdir_path, name="dvt"):
                 fh.write(struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF))
             add["deletionVector"] = {
                 "storageType": "u",
-                "pathOrInlineDv": base64.b85encode(u.bytes).decode("ascii"),
+                "pathOrInlineDv": z85(u.bytes),
                 "offset": 1,
                 "sizeInBytes": len(data),
                 "cardinality": 3,
@@ -929,6 +929,7 @@ def test_deletion_vector_read(spark, tmpdir_path):
 def test_deletion_vector_roundtrip_formats(spark, tmpdir_path):
     from jodie_spark.tables.deletion_vectors import (
         DeletionVectorError,
+        dv_absolute_path,
         parse_roaring_bitmap_array,
         read_dv_bytes,
         serialize_roaring_bitmap_array,
@@ -947,9 +948,9 @@ def test_deletion_vector_roundtrip_formats(spark, tmpdir_path):
             serialize_roaring_bitmap_array(c, use_runs=True)
         ) == c
 
-    p = os.path.join(tmpdir_path, "dv.bin")
-    desc = write_dv_file(p, [7, 8, 9])
-    assert parse_roaring_bitmap_array(read_dv_bytes("/unused", desc)) == [7, 8, 9]
+    desc = write_dv_file(tmpdir_path, [7, 8, 9])
+    assert parse_roaring_bitmap_array(read_dv_bytes(tmpdir_path, desc)) == [7, 8, 9]
+    p = dv_absolute_path(tmpdir_path, desc)
 
     # corrupted checksum is refused, not silently parsed
     with open(p, "r+b") as fh:
@@ -958,7 +959,7 @@ def test_deletion_vector_roundtrip_formats(spark, tmpdir_path):
         fh.seek(6)
         fh.write(bytes([b[0] ^ 0xFF]))
     with pytest.raises(DeletionVectorError, match="checksum"):
-        read_dv_bytes("/unused", desc)
+        read_dv_bytes(tmpdir_path, desc)
 
 
 def test_idempotent_txn_writes(spark, tmpdir_path):
