@@ -664,10 +664,7 @@ def convert_iceberg_to_delta(spark, path: str):
         "configuration": {},
         "createdTime": int(time.time() * 1000),
     }
-    actions = [
-        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-        {"metaData": metadata},
-    ] + [{"add": a} for a in adds]
+    actions = [{"metaData": metadata}] + [{"add": a} for a in adds]
     log.commit(
         -1,
         actions,

@@ -100,9 +100,6 @@ def convert_to_delta(
         "configuration": {},
         "createdTime": int(time.time() * 1000),
     }
-    actions = [
-        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-        {"metaData": meta},
-    ] + [{"add": a} for a in adds]
+    actions = [{"metaData": meta}] + [{"add": a} for a in adds]
     log.commit(-1, actions, "CONVERT", {"numFiles": str(len(adds))}, write_metrics(adds))
     return DeltaTable.forPath(spark, path)

@@ -1278,19 +1278,22 @@ def _validate_as_given_write(path: str, schema: StructType) -> list[str]:
     return [f.name for f in table_schema.fields if not f.nullable]
 
 
-class JodieDeltaWriter(DataSourceWriter):
-    """Executors write parquet files straight into the table directory;
-    the driver commits the adds atomically — the same
-    write-then-commit shape every Delta writer uses, so a failed job
-    leaves only unreferenced files (cleaned by vacuum), never a
-    half-visible table."""
+class _FilesWriter:
+    """What the batch and the streaming writer share. Executors write
+    parquet files straight into the table directory; the driver commits
+    their adds atomically — the same write-then-commit shape every Delta
+    writer uses, so a failed job leaves only unreferenced files (which
+    ``abort`` deletes, or vacuum later), never a half-visible table."""
 
     def __init__(self, options, schema: StructType, overwrite: bool):
         self.path = _opt_path(options)
         if not self.path:
-            raise ValueError("jodie_delta requires a path: .save('/table/path')")
+            raise ValueError(
+                "jodie_delta requires a path: .save('/table/path') or "
+                ".start('/table/path')"
+            )
         self.schema = schema
-        self.overwrite = overwrite
+        self.overwrite = bool(overwrite)
         self.not_null_cols = _validate_as_given_write(self.path, schema)
         # resolved driver-side; executors write without the registry
         from jodie_spark.fs import get_fs
@@ -1302,7 +1305,11 @@ class JodieDeltaWriter(DataSourceWriter):
             iterator, self.data_path, self.schema, self.not_null_cols
         )
 
-    def commit(self, messages) -> None:
+    def _commit(self, messages, txn: dict[str, Any] | None = None) -> None:
+        """One commit of the written files: their adds, the removes of
+        every live file when overwriting, the ``metaData`` of a create
+        (whose protocol ``DeltaLog.commit`` derives) and, for a stream
+        batch, its ``txn`` action."""
         import time
 
         from jodie_spark.tables.log import REMOVE_COLUMNS, DeltaLog, remove_action
@@ -1323,21 +1330,16 @@ class JodieDeltaWriter(DataSourceWriter):
             for m in messages
             if m is not None
         ]
+        actions = ([{"txn": txn}] if txn else []) + adds
         if log.exists():
             snap = log.snapshot()
             log.check_write_allowed(snap, removes_data=self.overwrite)
-            actions = list(adds)
             if self.overwrite:
                 actions += [
                     remove_action(a, now_ms) for a in snap.iter_adds(REMOVE_COLUMNS)
                 ]
-            log.commit(
-                snap.version,
-                actions,
-                "WRITE",
-                {"mode": "Overwrite" if self.overwrite else "Append", "partitionBy": "[]"},
-                {"numFiles": str(len(adds))},
-            )
+            read_version = snap.version
+            mode = "Overwrite" if self.overwrite else "Append"
         else:
             meta = {
                 "id": str(uuid.uuid4()),
@@ -1347,151 +1349,61 @@ class JodieDeltaWriter(DataSourceWriter):
                 "configuration": {},
                 "createdTime": now_ms,
             }
-            log.commit(
-                -1,
-                [
-                    {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-                    {"metaData": meta},
-                ]
-                + adds,
-                "WRITE",
-                {"mode": "ErrorIfExists", "partitionBy": "[]"},
-                {"numFiles": str(len(adds))},
-            )
+            actions.insert(0, {"metaData": meta})
+            read_version, mode = -1, "ErrorIfExists"
+        if txn is None:
+            operation, params = "WRITE", {"mode": mode, "partitionBy": "[]"}
+        else:
+            operation = "STREAMING UPDATE"
+            params = {
+                "outputMode": "Complete" if self.overwrite else "Append",
+                "queryId": txn["appId"],
+            }
+        log.commit(read_version, actions, operation, params, {"numFiles": str(len(adds))})
 
-    def abort(self, messages) -> None:
+    def abort(self, messages, batchId: int | None = None) -> None:  # noqa: N803
+        from jodie_spark.fs import get_fs
+
+        _fs = get_fs(self.path)
         for m in messages:
             if m is not None:
                 try:
-                    from jodie_spark.fs import get_fs
-
-                    _fs = get_fs(self.path)
                     _fs.remove(_fs.join(self.path, m.rel_path))
                 except OSError:
                     pass
 
 
-class JodieDeltaStreamWriter(DataSourceStreamWriter):
+class JodieDeltaWriter(_FilesWriter, DataSourceWriter):
+    """Batch writer: one commit per write job."""
+
+    def commit(self, messages) -> None:
+        self._commit(messages)
+
+
+class JodieDeltaStreamWriter(_FilesWriter, DataSourceStreamWriter):
     """Streaming sink with Delta's exactly-once contract: every
     micro-batch commit carries a ``txn`` action ``(appId, version=
     batchId)``; a replayed batch (restart after commit, before
     checkpoint ack) sees its batchId already recorded and skips the
     commit, deleting its orphaned files. Set a stable ``appId`` option
-    per logical stream."""
+    per logical stream. ``outputMode("complete")`` arrives as
+    overwrite=True: each batch replaces the table contents
+    (aggregation sinks)."""
 
     def __init__(self, options, schema: StructType, overwrite: bool):
-        self.path = _opt_path(options)
-        if not self.path:
-            raise ValueError("jodie_delta requires a path: .start('/table/path')")
-        self.schema = schema
+        super().__init__(options, schema, overwrite)
         self.app_id = options.get("appid", options.get("appId", "jodie_delta_stream"))
-        # outputMode("complete") arrives as overwrite=True: each batch
-        # replaces the table contents (aggregation sinks)
-        self.overwrite = bool(overwrite)
-        self.not_null_cols = _validate_as_given_write(self.path, schema)
-        from jodie_spark.fs import get_fs
 
-        self.data_path = get_fs(self.path).executor_path(self.path)
-
-    def write(self, iterator) -> _WroteFile:
-        return _write_partition_file(
-            iterator, self.data_path, self.schema, self.not_null_cols
-        )
-
-    def _last_committed_batch(self) -> int:
+    def commit(self, messages, batchId: int) -> None:  # noqa: N803
         from jodie_spark.tables.log import DeltaLog
 
         log = DeltaLog(self.path)
-        if not log.exists():
-            return -1
-        # newest-first with early exit: batch ids are monotone in commit
-        # order for one appId, so the first txn found IS the latest —
-        # steady-state cost is O(1) commits scanned per micro-batch
-        for v in sorted(log.list_commit_versions(), reverse=True):
-            for a in log.read_actions(v):
-                txn = a.get("txn")
-                if txn and txn.get("appId") == self.app_id:
-                    return int(txn.get("version", -1))
-        return -1
-
-    def commit(self, messages, batchId: int) -> None:  # noqa: N803
-        if self._last_committed_batch() >= batchId:
+        last = log.latest_txn_version(self.app_id) if log.exists() else None
+        if last is not None and last >= batchId:
             # duplicate replay of an already-committed batch
             self.abort(messages, batchId)
             return
-        self._txn_action = {"txn": {"appId": self.app_id, "version": int(batchId)}}
-        self._commit_with_txn(messages)
-
-    def _commit_with_txn(self, messages) -> None:
-        import time
-
-        from jodie_spark.tables.log import REMOVE_COLUMNS, DeltaLog, remove_action
-
-        log = DeltaLog(self.path)
-        now_ms = int(time.time() * 1000)
-        adds = [
-            {
-                "add": {
-                    "path": m.rel_path,
-                    "partitionValues": {},
-                    "size": int(m.size),
-                    "modificationTime": now_ms,
-                    "dataChange": True,
-                    "stats": m.stats,
-                }
-            }
-            for m in messages
-            if m is not None
-        ]
-        actions = [self._txn_action] + adds
-        mode = "Complete" if self.overwrite else "Append"
-        if log.exists():
-            snap = log.snapshot()
-            log.check_write_allowed(snap, removes_data=self.overwrite)
-            if self.overwrite:
-                actions += [
-                    remove_action(a, now_ms) for a in snap.iter_adds(REMOVE_COLUMNS)
-                ]
-            log.commit(
-                snap.version,
-                actions,
-                "STREAMING UPDATE",
-                {"outputMode": mode, "queryId": self.app_id},
-                {"numFiles": str(len(adds))},
-            )
-        else:
-            import uuid as _uuid
-
-            meta = {
-                "id": str(_uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(self.schema.jsonValue()),
-                "partitionColumns": [],
-                "configuration": {},
-                "createdTime": now_ms,
-            }
-            log.commit(
-                -1,
-                [
-                    {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-                    {"metaData": meta},
-                ]
-                + actions,
-                "STREAMING UPDATE",
-                {"outputMode": mode, "queryId": self.app_id},
-                {"numFiles": str(len(adds))},
-            )
-
-    def abort(self, messages, batchId: int) -> None:  # noqa: N803
-        for m in messages:
-            if m is not None:
-                try:
-                    from jodie_spark.fs import get_fs
-
-                    _fs = get_fs(self.path)
-                    _fs.remove(_fs.join(self.path, m.rel_path))
-                except OSError:
-                    pass
+        self._commit(messages, {"appId": self.app_id, "version": int(batchId)})
 
 
 # ---------------------------------------------------------------------------
@@ -1513,7 +1425,7 @@ class JodieDeltaDataSource(DataSource):
     def schema(self) -> StructType:
         from pyspark.sql import types as T
 
-        from jodie_spark.tables.log import DeltaLog
+        from jodie_spark.tables.log import DeltaLog, held_features
 
         path = _opt_path(self.options)
         if not path:
@@ -1531,9 +1443,7 @@ class JodieDeltaDataSource(DataSource):
             version = log.version_at_timestamp(int(ts.timestamp() * 1000))
         info = log.table_info(int(version) if version is not None else None)
         base = StructType.fromJson(json.loads(info.schema_string))
-        from jodie_spark.tables.table import _schema_has_variant
-
-        if _schema_has_variant(base):
+        if "variantType" in held_features(info.protocol)[1]:
             raise ValueError(
                 "the jodie_delta datasource reads data files with pyarrow, "
                 "which cannot decode the VARIANT parquet logical type; read "

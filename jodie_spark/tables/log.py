@@ -98,15 +98,14 @@ def _gc_paused() -> Iterator[None]:
             if _GC_PAUSE_DEPTH == 0 and _GC_PAUSE_WAS_ENABLED:
                 gc.enable()
 
-# Writer features this engine honors when COMMITTING. Writing to a
-# table whose protocol demands features we don't implement (CHECK
-# constraints, generated columns, identity columns, deletion vectors,
-# row tracking...) would silently violate the table's invariants for
-# every other engine reading it. appendOnly IS implemented (enforced in
-# DML); invariants accepted because tables this engine creates never
-# carry delta.invariants.
-# v3 = CHECK constraints, which this engine enforces on every write
-# path (tables/table.py enforce_check_constraints)
+# Writer features this engine honors when COMMITTING: check_write_allowed
+# refuses any table whose protocol names a writer feature outside this
+# set, because writing through it would silently break the table's
+# contract for every other engine. Which features a table NEEDS is
+# decided in one place, required_protocol below, which DeltaLog.commit
+# applies to every commit that can change the answer.
+# invariants: accepted because this engine refuses writes only when the
+# schema actually declares delta.invariants (check_write_allowed).
 # v5 = legacy column-mapping protocol (implies v4's features +
 # columnMapping; every write path — append/overwrite/rewrite-DML/CDF,
 # including MERGE withSchemaEvolution — projects to physical names via
@@ -161,6 +160,223 @@ EXPIRED_CLEANUP_PROP = "delta.enableExpiredLogCleanup"
 CHECKSUM_VALIDATION_PROP = "jodie.checksumValidation"  # "warn" (default) | "strict"
 CHECKPOINT_PROTECTION_PROP = "delta.requireCheckpointProtectionBeforeVersion"
 DEFAULT_LOG_RETENTION_MS = 30 * 24 * 3600 * 1000  # "interval 30 days"
+CDF_PROP = "delta.enableChangeDataFeed"
+CLUSTERING_DOMAIN = "delta.clustering"
+
+# -- the protocol rule ------------------------------------------------------
+
+DEFAULT_PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
+# legacy writer features → the writer version that first implies each
+# (PROTOCOL.md "Table Features": 2 appendOnly+invariants, 3
+# checkConstraints, 4 changeDataFeed+generatedColumns, 5 columnMapping,
+# 6 identityColumns)
+_LEGACY_WRITER_FEATURES = {
+    "appendOnly": 2, "invariants": 2, "checkConstraints": 3,
+    "changeDataFeed": 4, "generatedColumns": 4, "columnMapping": 5,
+    "identityColumns": 6,
+}
+# features listed on the reader side too once a table is at reader 3
+_READER_WRITER_FEATURES = {
+    "columnMapping", "deletionVectors", "v2Checkpoint", "typeWidening",
+    "variantType", "timestampNtz",
+}
+# table property set to "true" → the features it needs
+_PROPERTY_FEATURES = {
+    APPEND_ONLY_PROP: ("appendOnly",),
+    CDF_PROP: ("changeDataFeed",),
+    "delta.enableDeletionVectors": ("deletionVectors",),
+    ROW_TRACKING_PROP: ("rowTracking", "domainMetadata"),
+    ICT_PROP: ("inCommitTimestamp",),
+    "delta.enableTypeWidening": ("typeWidening",),
+}
+# schema field-metadata key → the feature a field carrying it needs
+_FIELD_METADATA_FEATURES = {
+    "delta.generationExpression": "generatedColumns",
+    "delta.identity.start": "identityColumns",
+    "CURRENT_DEFAULT": "allowColumnDefaults",
+    "delta.typeChanges": "typeWidening",
+}
+# schema type name → the feature a column of that type needs
+_TYPE_FEATURES = {"variant": "variantType", "timestamp_ntz": "timestampNtz"}
+
+
+def legacy_implied_features(
+    proto: dict[str, Any] | None,
+) -> tuple[set[str], set[str]]:
+    """(writer_features, reader_features) a legacy protocol implies by
+    its version numbers (writer < 7, reader 2 → columnMapping).
+
+    Every move to reader 3 / writer 7 writes these out: dropping e.g.
+    columnMapping from a reader-2/writer-5 table's new protocol would
+    make external readers treat physical-named columns as logical ones.
+    A protocol already at writer 7 (resp. reader 3) implies nothing: its
+    lists are the only source of truth, so expanding the legacy map
+    there would resurrect features the table never declared."""
+    p = proto or {}
+    writer = int(p.get("minWriterVersion") or 2)
+    wf = (
+        {f for f, v in _LEGACY_WRITER_FEATURES.items() if v <= writer}
+        if writer < 7
+        else set()
+    )
+    rf = {"columnMapping"} if int(p.get("minReaderVersion") or 1) == 2 else set()
+    return wf, rf
+
+
+def held_features(proto: dict[str, Any] | None) -> tuple[set[str], set[str]]:
+    """(writer_features, reader_features) a protocol holds: its explicit
+    lists plus what its legacy version numbers imply."""
+    p = proto or {}
+    implied_w, implied_r = legacy_implied_features(p)
+    return (
+        set(p.get("writerFeatures") or []) | implied_w,
+        set(p.get("readerFeatures") or []) | implied_r,
+    )
+
+
+def dropped_protocol(proto: dict[str, Any], feature: str) -> dict[str, Any]:
+    """DROP FEATURE's downgrade of ``proto``: writer 7 lists (the legacy
+    features its versions imply written out, as delta's
+    upgrade-then-drop flow does) without ``feature``, plus
+    checkpointProtection. The one protocol a caller lowers by hand;
+    ``required_protocol`` still adds whatever the drop's metadata needs."""
+    wfeat, rfeat = held_features(proto)
+    out: dict[str, Any] = {
+        "minReaderVersion": int(proto.get("minReaderVersion") or 1),
+        "minWriterVersion": 7,
+        "writerFeatures": sorted((wfeat - {feature}) | {"checkpointProtection"}),
+    }
+    rfeat.discard(feature)
+    if proto.get("readerFeatures") is not None or rfeat:
+        out["minReaderVersion"] = max(out["minReaderVersion"], 3)
+        out["readerFeatures"] = sorted(rfeat)
+    return out
+
+
+def _action_features(action: dict[str, Any]) -> tuple[str, ...]:
+    """Features one action needs: a deletion vector on an add, or a
+    ``delta.clustering`` domain naming at least one column."""
+    add = action.get("add")
+    if add is not None:
+        return ("deletionVectors",) if add.get("deletionVector") else ()
+    dm = action.get("domainMetadata")
+    if (
+        dm
+        and dm.get("domain") == CLUSTERING_DOMAIN
+        and not dm.get("removed")
+        and json.loads(dm.get("configuration") or "{}").get("clusteringColumns")
+    ):
+        return ("clustering", "domainMetadata")
+    return ()
+
+
+def _metadata_features(metadata: dict[str, Any]) -> set[str]:
+    """Features a metaData action's configuration and schema need."""
+    conf = metadata.get("configuration") or {}
+    out: set[str] = set()
+    for key, features in _PROPERTY_FEATURES.items():
+        if str(conf.get(key, "false")).lower() == "true":
+            out.update(features)
+    if any(k.startswith("delta.constraints.") for k in conf):
+        out.add("checkConstraints")
+    if str(conf.get("delta.columnMapping.mode", "none")).lower() in ("name", "id"):
+        out.add("columnMapping")
+    if str(conf.get(CHECKPOINT_POLICY_PROP, "classic")).lower() == "v2":
+        out.add("v2Checkpoint")
+    if CHECKPOINT_PROTECTION_PROP in conf:
+        out.add("checkpointProtection")
+
+    def walk(t: Any) -> None:
+        if isinstance(t, str):
+            if t in _TYPE_FEATURES:
+                out.add(_TYPE_FEATURES[t])
+        elif isinstance(t, dict):
+            for f in t.get("fields") or []:
+                out.update(
+                    feature
+                    for key, feature in _FIELD_METADATA_FEATURES.items()
+                    if key in (f.get("metadata") or {})
+                )
+                walk(f.get("type"))
+            for key in ("elementType", "keyType", "valueType"):
+                walk(t.get(key))
+
+    if metadata.get("schemaString"):
+        walk(json.loads(metadata["schemaString"]))
+    return out
+
+
+def required_protocol(
+    base: dict[str, Any] | None,
+    metadata: dict[str, Any] | None,
+    actions: list[dict[str, Any]],
+) -> dict[str, Any]:
+    """The protocol a commit needs: ``base`` (the read version's
+    protocol, or the one the commit passes; None means a create's
+    (1,2)), raised to cover every feature its ``metadata`` and
+    ``actions`` need. ``base`` itself comes back when it already covers
+    them. Features are only ever added, never removed.
+
+    ============================================  ==============================
+    needs                                         feature
+    ============================================  ==============================
+    ``delta.appendOnly=true``                     appendOnly
+    a ``delta.constraints.*`` property            checkConstraints
+    ``delta.enableChangeDataFeed=true``           changeDataFeed
+    ``delta.columnMapping.mode`` name or id       columnMapping (reader+writer)
+    ``delta.enableDeletionVectors=true``          deletionVectors (reader+writer)
+    ``delta.enableRowTracking=true``              rowTracking, domainMetadata
+    ``delta.checkpointPolicy=v2``                 v2Checkpoint (reader+writer)
+    ``delta.enableInCommitTimestamps=true``       inCommitTimestamp
+    ``delta.enableTypeWidening=true``             typeWidening (reader+writer)
+    ``delta.requireCheckpointProtection...``      checkpointProtection
+    a field with a generation expression          generatedColumns
+    a field with ``delta.identity.start``         identityColumns
+    a field with ``CURRENT_DEFAULT``              allowColumnDefaults
+    a field with ``delta.typeChanges``            typeWidening (reader+writer)
+    a variant column (at any depth)               variantType (reader+writer)
+    a timestamp_ntz column (at any depth)         timestampNtz (reader+writer)
+    a ``delta.clustering`` domain with columns    clustering, domainMetadata
+    an add carrying a deletion vector             deletionVectors (reader+writer)
+    ============================================  ==============================
+
+    How it raises: the features ``base`` holds are its explicit lists
+    plus what its legacy version numbers imply. When those fall short
+    only by legacy writer features (appendOnly, invariants,
+    checkConstraints, changeDataFeed, generatedColumns,
+    identityColumns) and ``base`` is a legacy protocol, minWriterVersion
+    rises to the lowest version that covers them (2, 3, 4 or 6).
+    Otherwise the result is writer 7 — and reader 3 when any reader
+    feature is held or needed — with the legacy-implied features
+    written out. columnMapping always takes that second form."""
+    base = base or dict(DEFAULT_PROTOCOL)
+    needed = _metadata_features(metadata) if metadata else set()
+    for a in actions:
+        needed.update(_action_features(a))
+    have_w, have_r = held_features(base)
+    missing_w = needed - have_w
+    missing_r = (needed & _READER_WRITER_FEATURES) - have_r
+    if not missing_w and not missing_r:
+        return base
+    writer = int(base.get("minWriterVersion") or 2)
+    bumpable = _LEGACY_WRITER_FEATURES.keys() - {"columnMapping"}
+    if writer < 7 and not missing_r and missing_w <= bumpable:
+        return {
+            **base,
+            "minWriterVersion": max(
+                writer, *(_LEGACY_WRITER_FEATURES[f] for f in missing_w)
+            ),
+        }
+    reader_features = have_r | (needed & _READER_WRITER_FEATURES)
+    out: dict[str, Any] = {
+        "minReaderVersion": int(base.get("minReaderVersion") or 1),
+        "minWriterVersion": 7,
+    }
+    if reader_features or out["minReaderVersion"] >= 3:
+        out["minReaderVersion"] = 3
+        out["readerFeatures"] = sorted(reader_features)
+    out["writerFeatures"] = sorted(have_w | needed)
+    return out
 
 _INTERVAL_UNITS_MS = {
     "millisecond": 1, "second": 1000, "minute": 60_000, "hour": 3_600_000,
@@ -187,6 +403,18 @@ def parse_interval_ms(s: str | None, default_ms: int) -> int:
     if unit not in _INTERVAL_UNITS_MS:
         return default_ms
     return int(n * _INTERVAL_UNITS_MS[unit])
+
+
+def _is_v2_manifest(name: str) -> bool:
+    """``<version>.checkpoint.<uuid>.parquet|json`` — a v2 checkpoint's
+    manifest, not a classic single or multi-part checkpoint file."""
+    head, sep, rest = name.partition(".checkpoint.")
+    return (
+        bool(sep)
+        and head.isdigit()
+        and rest.endswith((".parquet", ".json"))
+        and not rest.split(".")[0].isdigit()
+    )
 
 
 def commit_file_name(version: int) -> str:
@@ -972,11 +1200,13 @@ class DeltaLog:
         self._fs = get_fs(path)
         self.table_path = self._fs.abspath(strip_file_scheme(path))
         self.log_path = self._fs.join(self.table_path, LOG_DIR)
-        # (version, configuration) of the last table_info consulted by
-        # commit()'s row-tracking gate — config changes always write a
-        # metaData action at a NEWER version, so caching by version is
+        # (version, configuration, protocol) of the last table_info
+        # consulted by commit() — config and protocol changes always
+        # write an action at a NEWER version, so caching by version is
         # sound and spares DML-heavy callers a log scan per commit
-        self._commit_config_cache: tuple[int, dict[str, str], bool] | None = None
+        self._commit_config_cache: (
+            tuple[int, dict[str, str], dict[str, Any] | None] | None
+        ) = None
         # versions whose .crc failed verification this process: suppresses
         # repeat warnings and blocks the incremental checksum chain from
         # seeding off drifted numbers. NEVER persisted — the read path
@@ -1711,6 +1941,14 @@ class DeltaLog:
         ``blind_append`` overrides the ``commitInfo.isBlindAppend``
         stamp; by default it is inferred — adds only, no removes /
         metaData / protocol, and no declared read set.
+
+        The commit's protocol comes from :func:`required_protocol`,
+        applied here and nowhere else, to every commit carrying a
+        metaData action, a ``delta.clustering`` domain with columns or
+        a deletion-vectored add: the read version's protocol (a passed
+        protocol action, or (1,2) for a create) raised to what the
+        commit needs, inserted when it differs. Callers pass a protocol
+        only to lower one (DROP FEATURE) or copy one (CLONE).
         """
         self._fs.makedirs(self.log_path)
         version = read_version + 1
@@ -1726,25 +1964,37 @@ class DeltaLog:
         proto_in_commit = next(
             (a["protocol"] for a in actions if a.get("protocol")), None
         )
-        ict_feature = "inCommitTimestamp" in (
-            (proto_in_commit or {}).get("writerFeatures") or []
+        # only these commits can need a feature the protocol lacks
+        derive = meta_in_commit is not None or any(
+            _action_features(a) for a in actions
         )
         config = (meta_in_commit or {}).get("configuration")
-        if config is None and read_version >= 0:
+        protocol = proto_in_commit
+        if read_version >= 0 and (config is None or (derive and protocol is None)):
             cached = self._commit_config_cache
             if cached is not None and cached[0] == read_version:
-                config = cached[1]
-                ict_feature = ict_feature or cached[2]
+                read_config, read_protocol = cached[1], cached[2]
             else:
                 try:
                     info = self.table_info(read_version)
-                    config = info.configuration
-                    ict_feature = ict_feature or "inCommitTimestamp" in (
-                        (info.protocol or {}).get("writerFeatures") or []
-                    )
+                    read_config, read_protocol = info.configuration, info.protocol
                 except Exception:
-                    config = {}
-                self._commit_config_cache = (read_version, config, ict_feature)
+                    if derive:
+                        raise  # never derive a protocol from a guessed base
+                    read_config, read_protocol = {}, None
+                self._commit_config_cache = (read_version, read_config, read_protocol)
+            config = read_config if config is None else config
+            protocol = read_protocol if protocol is None else protocol
+        if derive:
+            needed = required_protocol(protocol, meta_in_commit, actions)
+            if needed != protocol:
+                actions = [{"protocol": needed}] + [
+                    a for a in actions if not a.get("protocol")
+                ]
+                protocol = needed
+        ict_feature = "inCommitTimestamp" in (
+            (protocol or {}).get("writerFeatures") or []
+        )
         rt_adds: list[dict[str, Any]] = []
         if str((config or {}).get(ROW_TRACKING_PROP, "false")).lower() == "true":
             new_adds = [
@@ -1921,7 +2171,7 @@ class DeltaLog:
                 version = latest + 1
         # the table's config at `version` is now known — prime the cache
         # so the NEXT commit (reading at `version`) skips its log scan
-        self._commit_config_cache = (version, dict(config or {}), ict_enabled)
+        self._commit_config_cache = (version, dict(config or {}), protocol)
         self._write_version_checksum(version, actions)
         self._maybe_checkpoint(version, config)
         return version
@@ -2143,8 +2393,11 @@ class DeltaLog:
         ``delta.requireCheckpointProtectionBeforeVersion`` are only
         deleted once a checkpoint at-or-above that version exists.
         Sidecar files are reference-counted against the surviving
-        manifests (external writers may share them across checkpoints).
-        Returns the deleted paths."""
+        manifests (external writers may share them across checkpoints):
+        one that no surviving manifest names goes once it is older than
+        the cutoff — the sidecars of an expired checkpoint, and those a
+        v2 checkpoint writer left behind when it died before its
+        manifest. Returns the deleted paths."""
         info = self.table_info()
         cfg = info.configuration
         retention = parse_interval_ms(
@@ -2153,9 +2406,7 @@ class DeltaLog:
         now = int(time.time() * 1000) if now_ms is None else int(now_ms)
         cutoff = now - retention
         cps = self.list_checkpoint_versions()
-        if not cps:
-            return []
-        newest_cp = max(cps)
+        newest_cp = max(cps, default=-1)
         require = int(cfg.get(CHECKPOINT_PROTECTION_PROP) or 0)
 
         def protected(v: int) -> bool:
@@ -2184,27 +2435,32 @@ class DeltaLog:
                 self._fs.remove(quarantined)
                 deleted.append(quarantined)
 
-        removable = [
-            v
-            for v in cps
-            if v < newest_cp
-            and not protected(v)
-            and expired(self.checkpoint_part_files(v))
-        ]
-        kept_sidecars = {
-            p
-            for v in cps
-            if v not in removable
-            for p in self.checkpoint_part_files(v)
-            if "/_sidecars/" in p.replace(os.sep, "/")
-        }
-        for v in removable:
-            for p in self.checkpoint_part_files(v):
-                if "/_sidecars/" in p.replace(os.sep, "/"):
-                    if p in kept_sidecars or not self._fs.isfile(p):
-                        continue
-                self._fs.remove(p)
-                deleted.append(p)
+        for v in cps:
+            parts = self.checkpoint_part_files(v)
+            if v < newest_cp and not protected(v) and expired(parts):
+                for p in parts:
+                    if "/_sidecars/" not in p.replace(os.sep, "/"):  # swept below
+                        self._fs.remove(p)
+                        deleted.append(p)
+        sidecar_dir = self._fs.join(self.log_path, "_sidecars")
+        sidecars = self._fs.listdir(sidecar_dir)
+        if sidecars:
+            referenced = {  # by file name: they all live in _sidecars/
+                a["sidecar"]["path"].rsplit("/", 1)[-1]
+                for n in self._fs.listdir(self.log_path)
+                if _is_v2_manifest(n)
+                for a in self._read_manifest_actions(self._fs.join(self.log_path, n))
+                if (a.get("sidecar") or {}).get("path")
+            }
+            for n in sidecars:
+                p = self._fs.join(sidecar_dir, n)
+                if (
+                    n not in referenced
+                    and self._fs.isfile(p)
+                    and self._fs.mtime_ms(p) <= cutoff
+                ):
+                    self._fs.remove(p)
+                    deleted.append(p)
         return deleted
 
     def write_checkpoint(self, version: int | None = None, spark: Any = None) -> int:

@@ -379,17 +379,21 @@ def _merge_struct_types(tgt_dt, src_dt, allow_widening: bool = True):
 def _annotate_type_changes(old_schema, new_schema, table_version):
     """Post-evolution pass: every leaf whose type differs between the
     pre- and post-evolution schema gets a ``delta.typeChanges`` entry
-    on its field metadata (the typeWidening feature's audit record,
-    same shape the append path writes). Returns (annotated_schema,
-    any_widened)."""
+    on the field metadata of its nearest struct field (the typeWidening
+    feature's audit record, same shape the append path writes). A
+    widened array element or map value records on its enclosing field
+    with a ``fieldPath`` (``element``, ``value``, ``element.element``,
+    ...), as PROTOCOL.md "Type Change Metadata" lays out. Returns
+    (annotated_schema, any_widened)."""
     from pyspark.sql import types as T
 
     widened = False
 
-    def walk_type(old_dt, new_dt):
+    def walk_type(old_dt, new_dt, path, changes):
         """Recurse containers so a struct field added INSIDE an
         array/map element is evolution, not a bogus 'array→array'
         widening record."""
+        nonlocal widened
         if isinstance(old_dt, T.StructType) and isinstance(new_dt, T.StructType):
             old_by = {f.name: f for f in old_dt.fields}
             return T.StructType(
@@ -400,46 +404,36 @@ def _annotate_type_changes(old_schema, new_schema, table_version):
             )
         if isinstance(old_dt, T.ArrayType) and isinstance(new_dt, T.ArrayType):
             return T.ArrayType(
-                walk_type(old_dt.elementType, new_dt.elementType),
+                walk_type(
+                    old_dt.elementType, new_dt.elementType, path + ["element"], changes
+                ),
                 new_dt.containsNull,
             )
         if isinstance(old_dt, T.MapType) and isinstance(new_dt, T.MapType):
             return T.MapType(
                 new_dt.keyType,
-                walk_type(old_dt.valueType, new_dt.valueType),
+                walk_type(old_dt.valueType, new_dt.valueType, path + ["value"], changes),
                 new_dt.valueContainsNull,
             )
         if old_dt != new_dt:
-            # widened ATOMIC element inside an array/map: the protocol
-            # upgrade must still happen (readers need upcast capability)
-            # even though the audit record has no StructField to ride
-            nonlocal widened
             widened = True
+            change = {
+                "fromType": old_dt.typeName(),
+                "toType": new_dt.typeName(),
+                "tableVersion": table_version,
+            }
+            if path:
+                change["fieldPath"] = ".".join(path)
+            changes.append(change)
         return new_dt
 
     def walk_field(old_f, new_f):
-        nonlocal widened
-        if isinstance(new_f.dataType, (T.StructType, T.ArrayType, T.MapType)):
-            return T.StructField(
-                new_f.name,
-                walk_type(old_f.dataType, new_f.dataType),
-                new_f.nullable,
-                new_f.metadata,
-            )
-        if old_f.dataType != new_f.dataType:
-            widened = True
-            md = dict(new_f.metadata or {})
-            changes = list(md.get("delta.typeChanges") or [])
-            changes.append(
-                {
-                    "fromType": old_f.dataType.typeName(),
-                    "toType": new_f.dataType.typeName(),
-                    "tableVersion": table_version,
-                }
-            )
-            md["delta.typeChanges"] = changes
-            return T.StructField(new_f.name, new_f.dataType, new_f.nullable, md)
-        return new_f
+        changes: list[dict] = []
+        dt = walk_type(old_f.dataType, new_f.dataType, [], changes)
+        md = dict(new_f.metadata or {})
+        if changes:
+            md["delta.typeChanges"] = list(md.get("delta.typeChanges") or []) + changes
+        return T.StructField(new_f.name, dt, new_f.nullable, md)
 
     old_by = {f.name: f for f in old_schema.fields}
     fields = [
@@ -896,8 +890,7 @@ class DeltaMergeBuilder:
             cached.unpersist()
         rewrite_ms = int((time.time() - t_rewrite) * 1000)
 
-        actions = t._dv_protocol_upgrade_actions(snap) if rows else []
-        actions = lineage_actions + actions
+        actions = list(lineage_actions)
         pair_actions, changed_rows, dv_bytes = t._dv_action_pairs(
             candidates, rows, int(time.time() * 1000)
         )
@@ -973,7 +966,6 @@ class DeltaMergeBuilder:
         cdf = t.is_cdf_enabled(snap)
         schema_evolved = False
         evolved_conf: dict[str, str] | None = None
-        type_widened = False
         if self._schema_evolution and any(
             c.star for c in self._matched + self._not_matched
         ):
@@ -995,7 +987,7 @@ class DeltaMergeBuilder:
                 schema, self.source.schema, allow_widening=widening_ok
             )
             if nested_changed:
-                merged_schema, type_widened = _annotate_type_changes(
+                merged_schema, _ = _annotate_type_changes(
                     schema, merged_schema, snap.version + 1
                 )
                 schema = merged_schema
@@ -1320,25 +1312,6 @@ class DeltaMergeBuilder:
 
         now_ms = int(time.time() * 1000)
         actions: list[dict[str, Any]] = list(lineage_actions)
-        if type_widened:
-            # same upgrade the append path's mergeSchema widening does:
-            # typeWidening is a reader+writer feature (old files carry
-            # the narrow type; readers must be upcast-capable)
-            from jodie_spark.tables.table import _legacy_implied_features
-
-            proto = dict(snap.protocol or {})
-            _, impl_r = _legacy_implied_features(proto, snap.configuration)
-            rfeat = set(proto.get("readerFeatures") or []) | impl_r
-            upgrade = t._writer_feature_upgrade_actions(snap, {"typeWidening"})
-            if upgrade:
-                up = upgrade[0]["protocol"]
-            else:
-                up = dict(proto)
-                upgrade = [{"protocol": up}]
-            up["minReaderVersion"] = 3
-            up["readerFeatures"] = sorted(rfeat | {"typeWidening"})
-            if up != snap.protocol:
-                actions = upgrade + actions
         if schema_evolved or id_schema_meta is not None:
             meta = dict(snap.metadata)
             meta["schemaString"] = (

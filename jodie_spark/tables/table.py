@@ -17,6 +17,7 @@ import os
 import threading
 import time
 import urllib.parse
+import warnings
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -28,22 +29,31 @@ from pyspark.sql import types as T
 
 from jodie_spark.errors import DeltaProtocolError, JodieValidationError
 from jodie_spark.tables.log import (
+    CDF_PROP,
     CHECKPOINT_PROTECTION_PROP,
+    CLUSTERING_DOMAIN,
     REMOVE_COLUMNS,
     DeltaLog,
     Snapshot,
+    dropped_protocol,
+    held_features,
     remove_action,
 )
-from jodie_spark.tables.merge import _frag, _str_lit, conf_bytes, quote_ident, type_ddl
+from jodie_spark.tables.merge import (
+    _annotate_type_changes,
+    _frag,
+    _str_lit,
+    conf_bytes,
+    quote_ident,
+    type_ddl,
+)
 from jodie_spark.tables.writer import write_data_files, write_metrics
 
-CDF_PROP = "delta.enableChangeDataFeed"
 CHANGE_DATA_DIR = "_change_data"
 RESERVED_WRITER_OPTIONS = {
     "mergeSchema", "overwriteSchema", "maxRecordsPerFile", "txnAppId", "txnVersion"
 }
 CONSTRAINT_PREFIX = "delta.constraints."
-CLUSTERING_DOMAIN = "delta.clustering"
 
 # delta typeWidening: safe widenings (narrow, wide) — integral chain plus
 # float->double; parquet files written at the narrow type stay readable
@@ -60,6 +70,32 @@ def _can_widen(narrow: T.DataType, wide: T.DataType) -> bool:
     return (narrow.typeName(), wide.typeName()) in _WIDENINGS
 
 
+def _widen(
+    schema: T.StructType, types: dict[str, T.DataType], table_version: int
+) -> T.StructType:
+    """``schema`` with the named top-level columns widened to ``types``,
+    each change recorded in its field's ``delta.typeChanges``."""
+    wide = T.StructType(
+        [
+            T.StructField(f.name, types.get(f.name, f.dataType), f.nullable, f.metadata)
+            for f in schema.fields
+        ]
+    )
+    return _annotate_type_changes(schema, wide, table_version)[0]
+
+
+def _clustering_domain(columns: list[str]) -> dict[str, Any]:
+    """The ``delta.clustering`` domainMetadata action naming
+    ``columns`` (removed when there are none)."""
+    return {
+        "domainMetadata": {
+            "domain": CLUSTERING_DOMAIN,
+            "configuration": json.dumps({"clusteringColumns": [[c] for c in columns]}),
+            "removed": not columns,
+        }
+    }
+
+
 def check_constraints(configuration: dict[str, str] | None) -> dict[str, str]:
     """name → expression for every ``delta.constraints.*`` property."""
     return {
@@ -67,47 +103,6 @@ def check_constraints(configuration: dict[str, str] | None) -> dict[str, str]:
         for k, v in (configuration or {}).items()
         if k.startswith(CONSTRAINT_PREFIX)
     }
-
-
-def _legacy_implied_features(
-    proto: dict[str, Any] | None, configuration: dict[str, str] | None = None
-) -> tuple[set[str], set[str]]:
-    """(writer_features, reader_features) implied by a legacy protocol
-    version (Delta PROTOCOL.md feature mapping: writer 2 → appendOnly+
-    invariants, 3 → checkConstraints, 4 → changeDataFeed+generatedColumns,
-    5 → columnMapping, 6 → identityColumns; reader 2 → columnMapping).
-
-    Every upgrade to reader 3 / writer 7 must carry these into the
-    explicit feature lists — dropping e.g. columnMapping from a
-    reader-2/writer-5 table's upgraded protocol would make external
-    readers treat physical-named columns as logical ones.
-
-    A protocol that is ALREADY at writer 7 (resp. reader 3) implies
-    nothing by version number: its feature lists are the sole, explicit
-    source of truth (PROTOCOL.md table-features rules). Expanding the
-    legacy map there would resurrect features the table never declared
-    — e.g. DROP FEATURE on a v7 table would commit a downgrade protocol
-    carrying spurious appendOnly/invariants/columnMapping entries and
-    lock out foreign readers that gate on them."""
-    p = proto or {}
-    old_writer = int(p.get("minWriterVersion") or 2)
-    old_reader = int(p.get("minReaderVersion") or 1)
-    wf: set[str] = set()
-    if old_writer < 7:
-        if old_writer >= 2:
-            wf.update({"appendOnly", "invariants"})
-        if old_writer >= 3 or check_constraints(configuration):
-            wf.add("checkConstraints")
-        if old_writer >= 4:
-            wf.update({"changeDataFeed", "generatedColumns"})
-        if old_writer >= 5:
-            wf.add("columnMapping")
-        if old_writer >= 6:
-            wf.add("identityColumns")
-    rf: set[str] = set()
-    if old_reader == 2:
-        rf.add("columnMapping")
-    return wf, rf
 
 
 def enforce_check_constraints(df: DataFrame, configuration: dict[str, str] | None) -> DataFrame:
@@ -135,7 +130,7 @@ def enforce_nullability(df: DataFrame, schema: T.StructType) -> DataFrame:
             continue
         df = df.filter(
             F.assert_true(
-                F.col(f.name).isNotNull(),
+                F.col(quote_ident(f.name)).isNotNull(),
                 F.lit(f"NOT NULL constraint violated for column: {f.name}"),
             ).isNull()
         )
@@ -550,27 +545,6 @@ def _log_bytes(table_path: str) -> int:
     """Bytes a replay of the latest version reads: JSON tail plus the
     newest checkpoint (``DeltaLog.replay_log_bytes``)."""
     return sum(DeltaLog(table_path).replay_log_bytes())
-
-
-def _schema_has_variant(schema: T.DataType) -> bool:
-    """True when any (possibly nested) field is Spark 4's VariantType —
-    such tables require the variantType reader+writer feature."""
-    vt = getattr(T, "VariantType", None)
-    if vt is None:  # older Spark: the type cannot occur
-        return False
-
-    def walk(dt: T.DataType) -> bool:
-        if isinstance(dt, vt):
-            return True
-        if isinstance(dt, T.StructType):
-            return any(walk(f.dataType) for f in dt.fields)
-        if isinstance(dt, T.ArrayType):
-            return walk(dt.elementType)
-        if isinstance(dt, T.MapType):
-            return walk(dt.keyType) or walk(dt.valueType)
-        return False
-
-    return walk(schema)
 
 
 def plan_candidate_files(
@@ -1028,10 +1002,9 @@ class DeltaTable:
         type widening along the typeWidening chain (int→long,
         float→double, ...). Existing files keep the narrow physical
         type — every read path up-casts per file — so no data rewrites;
-        the commit records delta.typeChanges on the field and upgrades
-        the protocol with the reader+writer typeWidening feature, same
-        as the append path's mergeSchema widening. Anything off the
-        safe chain refuses."""
+        the commit records delta.typeChanges on the field, which the
+        commit's protocol rule answers with the reader+writer
+        typeWidening feature. Anything off the safe chain refuses."""
         snap = self.snapshot()
         schema = self.schema(snap)
         names = {f.name.lower(): f.name for f in schema.fields}
@@ -1052,45 +1025,11 @@ class DeltaTable:
                 f"{dtype.simpleString()}: only safe widenings "
                 f"(byte/short/int→long, float→double) are supported"
             )
-        fields = []
-        for f in schema.fields:
-            if f.name == actual:
-                changes = list((f.metadata or {}).get("delta.typeChanges") or [])
-                changes.append(
-                    {
-                        "fromType": old.typeName(),
-                        "toType": dtype.typeName(),
-                        "tableVersion": snap.version + 1,
-                    }
-                )
-                fields.append(
-                    T.StructField(
-                        f.name, dtype, f.nullable,
-                        {**(f.metadata or {}), "delta.typeChanges": changes},
-                    )
-                )
-            else:
-                fields.append(f)
         meta = dict(snap.metadata)
-        meta["schemaString"] = T.StructType(fields).json()
-        actions: list[dict[str, Any]] = []
-        proto = dict(snap.protocol or {})
-        _, impl_r = _legacy_implied_features(proto, snap.configuration)
-        rfeat = set(proto.get("readerFeatures") or []) | impl_r
-        upgrade = self._writer_feature_upgrade_actions(snap, {"typeWidening"})
-        if upgrade:
-            up = upgrade[0]["protocol"]
-        else:
-            up = dict(proto)
-            upgrade = [{"protocol": up}]
-        up["minReaderVersion"] = 3
-        up["readerFeatures"] = sorted(rfeat | {"typeWidening"})
-        if up != snap.protocol:
-            actions += upgrade
-        actions.append({"metaData": meta})
+        meta["schemaString"] = _widen(schema, {actual: dtype}, snap.version + 1).json()
         self.deltaLog.commit(
             snap.version,
-            actions,
+            [{"metaData": meta}],
             "CHANGE COLUMN",
             {"column": actual, "toType": dtype.typeName()},
         )
@@ -1151,22 +1090,14 @@ class DeltaTable:
             )
         snap = self.deltaLog.table_info()
         self.deltaLog.check_write_allowed(snap, removes_data=False)
-        proto = dict(snap.protocol or {})
-        # legacy protocols (writer < 7) imply features by version number:
-        # expand them first, exactly like delta's upgrade-then-drop flow
-        impl_w, impl_r = _legacy_implied_features(proto, snap.configuration)
-        wfeat = set(proto.get("writerFeatures") or []) | impl_w
-        rfeat = set(proto.get("readerFeatures") or []) | impl_r
-        if feature not in wfeat and feature not in rfeat:
+        held_w, held_r = held_features(snap.protocol)
+        if feature not in held_w and feature not in held_r:
             raise DeltaProtocolError(
                 f"feature {feature!r} is not present in the table protocol"
             )
         if feature == "deletionVectors":
             self.reorg_purge()  # own commits; re-read state below
             snap = self.deltaLog.table_info()
-            proto = dict(snap.protocol or {})
-            wfeat = set(proto.get("writerFeatures") or [])
-            rfeat = set(proto.get("readerFeatures") or [])
 
         meta = dict(snap.metadata)
         conf = dict(meta.get("configuration") or {})
@@ -1175,21 +1106,12 @@ class DeltaTable:
         conf.update(spec.get("set_props", {}))
         conf[CHECKPOINT_PROTECTION_PROP] = str(snap.version + 1)
         meta["configuration"] = conf
-
-        wfeat.discard(feature)
-        rfeat.discard(feature)
-        wfeat.add("checkpointProtection")
-        new_proto: dict[str, Any] = {
-            "minReaderVersion": int(proto.get("minReaderVersion") or 1),
-            "minWriterVersion": 7,
-            "writerFeatures": sorted(wfeat),
-        }
-        if proto.get("readerFeatures") is not None or rfeat:
-            new_proto["minReaderVersion"] = max(new_proto["minReaderVersion"], 3)
-            new_proto["readerFeatures"] = sorted(rfeat)
         committed = self.deltaLog.commit(
             snap.version,
-            [{"metaData": meta}, {"protocol": new_proto}],
+            [
+                {"metaData": meta},
+                {"protocol": dropped_protocol(snap.protocol or {}, feature)},
+            ],
             "DROP FEATURE",
             {"featureName": feature},
         )
@@ -1197,8 +1119,15 @@ class DeltaTable:
         # replay the feature-bearing history
         try:
             self.deltaLog.write_checkpoint(committed)
-        except Exception:
-            pass  # the drop itself stands; the next interval checkpoint heals
+        except Exception as e:
+            # best effort: the drop stands; the next interval checkpoint heals
+            warnings.warn(
+                f"{self.path}@{committed}: post-drop checkpoint failed — "
+                f"{type(e).__name__}: {e} (the drop stands; fresh readers "
+                f"replay the feature-bearing history until the next checkpoint)",
+                RuntimeWarning,
+                stacklevel=2,
+            )
 
     # -- CHECK constraints ---------------------------------------------------
 
@@ -1208,10 +1137,10 @@ class DeltaTable:
         Validates the expression resolves against the table schema and
         that every EXISTING row satisfies it (one distributed scan —
         the same full validation delta-spark performs), then persists
-        it as a ``delta.constraints.<name>`` property and raises the
-        writer protocol to 3 (the version that mandates constraint
-        enforcement). Subsequent writes/updates/merges through this
-        engine fail loudly on violating rows."""
+        it as a ``delta.constraints.<name>`` property, which the
+        commit's protocol rule answers with the checkConstraints writer
+        feature. Subsequent writes/updates/merges through this engine
+        fail loudly on violating rows."""
         snap = self.snapshot()
         key = CONSTRAINT_PREFIX + name
         existing = {k.lower() for k in snap.configuration}
@@ -1238,15 +1167,9 @@ class DeltaTable:
         conf = dict(meta.get("configuration") or {})
         conf[key] = expression
         meta["configuration"] = conf
-        actions: list[dict[str, Any]] = []
-        proto = dict(snap.protocol or {})
-        if int(proto.get("minWriterVersion") or 2) < 3:
-            proto["minWriterVersion"] = 3
-            actions.append({"protocol": proto})
-        actions.append({"metaData": meta})
         self.deltaLog.commit(
             snap.version,
-            actions,
+            [{"metaData": meta}],
             "ADD CONSTRAINT",
             {"name": name, "expr": expression},
         )
@@ -1282,37 +1205,12 @@ class DeltaTable:
 
         return column_mapping_mode(self.snapshot().metadata)
 
-    def _mapping_protocol_upgrade_actions(self, snap: Snapshot) -> list[dict[str, Any]]:
-        """Protocol action raising the table to reader 3 / writer 7 with
-        the columnMapping feature (same shape as the deletionVectors
-        upgrade: existing features are preserved, legacy implied
-        features carried)."""
-        proto = dict(snap.protocol or {})
-        features = set(proto.get("writerFeatures") or [])
-        if int(proto.get("minReaderVersion") or 1) >= 3 and "columnMapping" in features:
-            return []
-        impl_w, impl_r = _legacy_implied_features(proto, snap.configuration)
-        reader_features = set(proto.get("readerFeatures") or []) | impl_r
-        reader_features.add("columnMapping")
-        features |= impl_w
-        features.add("columnMapping")
-        return [
-            {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(reader_features),
-                    "writerFeatures": sorted(features),
-                }
-            }
-        ]
-
     def enable_column_mapping(self) -> None:
         """Upgrade the table to ``delta.columnMapping.mode = name``:
         every field (incl. nested struct fields) gets a column id and a
         physical name equal to its current logical name, so existing
-        data files keep resolving; the protocol rises to reader 3 /
-        writer 7 with the ``columnMapping`` feature. No-op when already
+        data files keep resolving; the commit's protocol rule adds the
+        ``columnMapping`` feature. No-op when already
         enabled. This is the delta-spark upgrade path (PROTOCOL.md
         "Column Mapping"); RENAME/DROP COLUMN require it."""
         from jodie_spark.tables.column_mapping import (
@@ -1342,7 +1240,7 @@ class DeltaTable:
         meta["schemaString"] = new_schema.json()
         self.deltaLog.commit(
             snap.version,
-            self._mapping_protocol_upgrade_actions(snap) + [{"metaData": meta}],
+            [{"metaData": meta}],
             "SET TBLPROPERTIES",
             {"properties": json.dumps({MODE_KEY: "name"})},
         )
@@ -1877,8 +1775,6 @@ class DeltaTable:
             self._dml_copy_on_write(d, candidates)
 
         actions = list(d.lineage_actions)
-        if d.dv_rows:
-            actions += self._dv_protocol_upgrade_actions(snap)
         actions += d.cdc + d.dv_actions + [{"add": a} for a in d.adds]
         now_ms = int(time.time() * 1000)
         actions += [remove_action(r, now_ms) for r in d.removes]
@@ -2039,54 +1935,6 @@ class DeltaTable:
             .collect()  # one row per TOUCHED FILE — bounded by #files
         )
 
-    def _writer_feature_upgrade_actions(
-        self, snap: Snapshot, needed: set[str]
-    ) -> list[dict[str, Any]]:
-        """Protocol action raising the table to writer v7 with ``needed``
-        writer features, when not already there (legacy implied features
-        carried over, delta-spark upgrade semantics)."""
-        proto = dict(snap.protocol or {})
-        have = set(proto.get("writerFeatures") or [])
-        old_writer = int(proto.get("minWriterVersion") or 2)
-        if old_writer >= 7 and needed <= have:
-            return []
-        impl_w, impl_r = _legacy_implied_features(proto, snap.configuration)
-        features = have | needed | impl_w
-        new_proto: dict[str, Any] = {
-            "minReaderVersion": int(proto.get("minReaderVersion") or 1),
-            "minWriterVersion": 7,
-            "writerFeatures": sorted(features),
-        }
-        if proto.get("readerFeatures") is not None or new_proto["minReaderVersion"] >= 3:
-            new_proto["readerFeatures"] = sorted(
-                set(proto.get("readerFeatures") or []) | impl_r
-            )
-        return [{"protocol": new_proto}]
-
-    def _dv_protocol_upgrade_actions(self, snap: Snapshot) -> list[dict[str, Any]]:
-        """Protocol action raising the table to reader 3 / writer 7 with
-        the deletionVectors feature, when not already there. The upgrade
-        carries legacy implied features (delta-spark upgrade semantics)."""
-        proto = dict(snap.protocol or {})
-        features = set(proto.get("writerFeatures") or [])
-        if int(proto.get("minReaderVersion") or 1) >= 3 and "deletionVectors" in features:
-            return []
-        impl_w, impl_r = _legacy_implied_features(proto, snap.configuration)
-        reader_features = set(proto.get("readerFeatures") or []) | impl_r
-        reader_features.add("deletionVectors")
-        features |= impl_w
-        features.add("deletionVectors")
-        return [
-            {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(reader_features),
-                    "writerFeatures": sorted(features),
-                }
-            }
-        ]
-
     def _dv_action_pairs(
         self, candidates: list[dict[str, Any]], rows: list[Any], now_ms: int
     ) -> tuple[list[dict[str, Any]], int, int]:
@@ -2148,27 +1996,9 @@ class DeltaTable:
             raise JodieValidationError(
                 "cannot CLUSTER BY a Hive-partitioned table"
             )
-        upgrade = (
-            self._writer_feature_upgrade_actions(
-                snap, {"clustering", "domainMetadata"}
-            )
-            if columns
-            else []
-        )
         self.deltaLog.commit(
             snap.version,
-            upgrade
-            + [
-                {
-                    "domainMetadata": {
-                        "domain": CLUSTERING_DOMAIN,
-                        "configuration": json.dumps(
-                            {"clusteringColumns": [[c] for c in columns]}
-                        ),
-                        "removed": not columns,
-                    }
-                }
-            ],
+            [_clustering_domain(columns)],
             "CLUSTER BY",
             {"clusterBy": json.dumps(columns)},
             {},
@@ -2827,7 +2657,8 @@ def maybe_auto_compact(
     50, override with jodie.autoCompact.minNumFiles) files smaller
     than the target size, run a bin-packing OPTIMIZE. The count runs
     Spark-side over files_df — never a driver file-list replay. Errors
-    never fail the triggering write (compaction is an optimization).
+    never fail the triggering write (compaction is an optimization);
+    they warn.
     ``config``: the triggering operation's snapshot configuration —
     passing it skips a redundant log replay (the knob check reads at
     the transaction's own snapshot, delta-spark's behavior)."""
@@ -2847,7 +2678,17 @@ def maybe_auto_compact(
             return False
         table.optimize().executeCompaction(target_file_size)
         return True
-    except Exception:
+    except Exception as e:
+        try:
+            at = f"{table.path}@{table.deltaLog.latest_version()}"
+        except Exception:  # the log itself may be what failed
+            at = table.path
+        warnings.warn(
+            f"{at}: auto compaction failed — {type(e).__name__}: {e} "
+            "(the triggering write stands)",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         return False
 
 
@@ -2981,7 +2822,7 @@ def apply_generated_columns(df: DataFrame, schema: T.StructType) -> DataFrame:
         else:
             df = df.filter(
                 F.assert_true(
-                    F.col(name).eqNullSafe(computed),
+                    F.col(quote_ident(name)).eqNullSafe(computed),
                     F.lit(
                         f"generated column {name} does not match its "
                         f"generation expression ({expr})"
@@ -3075,24 +2916,15 @@ def write_delta(
         properties = {
             k: str(v) for k, v in options.items() if k not in RESERVED_WRITER_OPTIONS
         }
-        if generated_columns:
-            # compute absent generated columns, then embed the
-            # expressions in the schema's field metadata (the protocol's
-            # storage location) so future writes honor them
-            for name, expr in generated_columns.items():
-                if name not in df.columns:
-                    df = df.withColumn(name, F.expr(expr))
-            df = df.select(
-                *[
-                    F.col(f.name).alias(
-                        f.name,
-                        metadata={**(f.metadata or {}), GENERATION_EXPR_KEY: generated_columns[f.name]},
-                    )
-                    if f.name in generated_columns
-                    else F.col(f.name)
-                    for f in df.schema.fields
-                ]
-            )
+        # column → field metadata to stamp: generation expressions,
+        # identity specs and CURRENT_DEFAULT live in the schema's field
+        # metadata (the protocol's storage location), so later writes
+        # honor them
+        stamps: dict[str, dict[str, Any]] = {}
+        for name, expr in (generated_columns or {}).items():
+            if name not in df.columns:
+                df = df.withColumn(name, F.expr(expr))
+            stamps.setdefault(name, {})[GENERATION_EXPR_KEY] = expr
         if identity_columns:
             from jodie_spark.tables.identity import (
                 assign_identity_values,
@@ -3112,7 +2944,7 @@ def write_delta(
                     # pure DDL create (empty relation with the identity
                     # column declared): no values were provided — assign
                     # normally, keeping the declared column order
-                    order = list(df.columns)
+                    order = [F.col(quote_ident(c)) for c in df.columns]
                     if known_empty:
                         # assign_identity_values' empty-input result
                         # (NULL column, no watermark) without its count job
@@ -3139,47 +2971,27 @@ def write_delta(
                         )
                 else:
                     df, hwm = assign_identity_values(df, name, start, step)
-                md = identity_field_metadata(start, step, allow, hwm)
-                df = df.select(
-                    *[
-                        F.col(f.name).alias(
-                            f.name, metadata={**(f.metadata or {}), **md}
-                        )
-                        if f.name == name
-                        else F.col(f.name)
-                        for f in df.schema.fields
-                    ]
+                stamps.setdefault(name, {}).update(
+                    identity_field_metadata(start, step, allow, hwm)
                 )
-        if column_defaults:
-            # stamp CURRENT_DEFAULT into field metadata (delta
-            # allowColumnDefaults); a column absent from a later append
-            # fills with its default expression instead of null
-            missing_cd = [c for c in column_defaults if c not in df.columns]
-            if missing_cd:
-                raise JodieValidationError(
-                    f"column_defaults for columns not in data: {missing_cd}"
-                )
+        missing_cd = [c for c in column_defaults or {} if c not in df.columns]
+        if missing_cd:
+            raise JodieValidationError(
+                f"column_defaults for columns not in data: {missing_cd}"
+            )
+        for name, expr in (column_defaults or {}).items():
+            stamps.setdefault(name, {})[COLUMN_DEFAULT_KEY] = expr
+        if stamps:
             df = df.select(
                 *[
-                    F.col(f.name).alias(
-                        f.name,
-                        metadata={
-                            **(f.metadata or {}),
-                            COLUMN_DEFAULT_KEY: column_defaults[f.name],
-                        },
+                    F.col(quote_ident(f.name)).alias(
+                        f.name, metadata={**(f.metadata or {}), **stamps[f.name]}
                     )
-                    if f.name in column_defaults
-                    else F.col(f.name)
+                    if f.name in stamps
+                    else F.col(quote_ident(f.name))
                     for f in df.schema.fields
                 ]
             )
-        writer_version = 2
-        if check_constraints(properties):
-            writer_version = 3
-        if generated_columns:
-            writer_version = 4
-        if identity_columns:
-            writer_version = 6
         mapping_mode = str(properties.get("delta.columnMapping.mode", "none"))
         if mapping_mode not in ("none", "name"):
             raise DeltaProtocolError(
@@ -3253,84 +3065,12 @@ def write_delta(
                 raise JodieValidationError(
                     f"cluster_by columns not in data: {missing_cc}"
                 )
-        v2_policy = (
-            str(properties.get("delta.checkpointPolicy", "classic")).lower() == "v2"
+        actions = (
+            [{"metaData": meta}]
+            + ([_clustering_domain(cluster_by)] if cluster_by else [])
+            + txn_actions
+            + [{"add": a} for a in adds]
         )
-        from jodie_spark.tables.log import ICT_PROP
-
-        ict = str(properties.get(ICT_PROP, "false")).lower() == "true"
-        has_variant = _schema_has_variant(df.schema)
-        if (
-            mapping_mode == "name"
-            or row_tracking
-            or cluster_by
-            or v2_policy
-            or ict
-            or column_defaults
-            or has_variant
-        ):
-            wf = {"appendOnly"}
-            rf: set[str] = set()
-            if mapping_mode == "name":
-                wf.add("columnMapping")
-                rf.add("columnMapping")
-            if row_tracking:
-                # fresh row-id blocks per commit; watermark rides the
-                # delta.rowTracking domainMetadata (assigned in
-                # DeltaLog.commit)
-                wf.update({"rowTracking", "domainMetadata"})
-            if cluster_by:
-                wf.update({"clustering", "domainMetadata"})
-            if v2_policy:
-                wf.add("v2Checkpoint")
-                rf.add("v2Checkpoint")
-            if ict:
-                wf.add("inCommitTimestamp")
-            if column_defaults:
-                wf.add("allowColumnDefaults")
-            if has_variant:
-                # variant is a reader+writer table feature (PROTOCOL.md
-                # "Variant Data Type"): old readers cannot decode the
-                # binary group
-                wf.add("variantType")
-                rf.add("variantType")
-            if check_constraints(properties):
-                wf.add("checkConstraints")
-            if generated_columns:
-                wf.add("generatedColumns")
-            if identity_columns:
-                wf.add("identityColumns")
-            if str(properties.get("delta.enableChangeDataFeed", "false")).lower() == "true":
-                wf.add("changeDataFeed")
-            protocol: dict[str, Any] = {
-                "minReaderVersion": 3 if rf else 1,
-                "minWriterVersion": 7,
-                "writerFeatures": sorted(wf),
-            }
-            if rf:
-                protocol["readerFeatures"] = sorted(rf)
-            protocol_action = {"protocol": protocol}
-        else:
-            protocol_action = {
-                "protocol": {"minReaderVersion": 1, "minWriterVersion": writer_version}
-            }
-        cluster_actions: list[dict[str, Any]] = []
-        if cluster_by:
-            cluster_actions = [
-                {
-                    "domainMetadata": {
-                        "domain": CLUSTERING_DOMAIN,
-                        "configuration": json.dumps(
-                            {"clusteringColumns": [[c] for c in cluster_by]}
-                        ),
-                        "removed": False,
-                    }
-                }
-            ]
-        actions = [
-            protocol_action,
-            {"metaData": meta},
-        ] + cluster_actions + txn_actions + [{"add": a} for a in adds]
         log.commit(
             -1,
             actions,
@@ -3402,7 +3142,7 @@ def write_delta(
             if f.dataType == tt:
                 continue
             if _can_widen(f.dataType, tt):
-                df = df.withColumn(f.name, F.col(f.name).cast(tt))
+                df = df.withColumn(f.name, F.col(quote_ident(f.name)).cast(tt))
             elif _can_widen(tt, f.dataType) and merge_schema and widening_ok:
                 widened[f.name] = f.dataType
             else:
@@ -3421,28 +3161,7 @@ def write_delta(
                     f"type {tt.simpleString()}{hint}"
                 )
         if widened:
-            fields = []
-            for f in table_schema.fields:
-                if f.name in widened:
-                    changes = list((f.metadata or {}).get("delta.typeChanges") or [])
-                    changes.append(
-                        {
-                            "fromType": f.dataType.typeName(),
-                            "toType": widened[f.name].typeName(),
-                            "tableVersion": snap.version + 1,
-                        }
-                    )
-                    fields.append(
-                        T.StructField(
-                            f.name,
-                            widened[f.name],
-                            f.nullable,
-                            {**(f.metadata or {}), "delta.typeChanges": changes},
-                        )
-                    )
-                else:
-                    fields.append(f)
-            table_schema = T.StructType(fields)
+            table_schema = _widen(table_schema, widened, snap.version + 1)
         new_schema = table_schema
         if extra:
             new_schema = T.StructType(
@@ -3451,7 +3170,7 @@ def write_delta(
         defaults = column_defaults_of(table_schema)
         aligned = df.select(
             *[
-                F.col(f.name)
+                F.col(quote_ident(f.name))
                 if f.name in df_cols
                 else (
                     # absent column with a declared default: fill with
@@ -3501,27 +3220,6 @@ def write_delta(
             )
         adds = write_data_files(out_df, path, snap.partition_columns)
         actions = txn_actions + [{"add": a} for a in adds]
-        if widened:
-            # typeWidening is a reader+writer table feature: old files
-            # carry the narrow type, so readers must be upcast-capable
-            proto = dict(snap.protocol or {})
-            # bumping minReaderVersion to 3 makes readerFeatures the
-            # sole source of reader capabilities — carry reader-v2's
-            # implied columnMapping alongside existing features
-            _, impl_r = _legacy_implied_features(proto, snap.configuration)
-            rfeat = set(proto.get("readerFeatures") or []) | impl_r
-            upgrade = table._writer_feature_upgrade_actions(
-                snap, {"typeWidening"}
-            )
-            if upgrade:
-                up = upgrade[0]["protocol"]
-            else:
-                up = dict(proto)
-                upgrade = [{"protocol": up}]
-            up["minReaderVersion"] = 3
-            up["readerFeatures"] = sorted(rfeat | {"typeWidening"})
-            if up != snap.protocol:
-                actions = upgrade + actions
         if extra or widened or _id_schema is not None:
             meta = dict(snap.metadata)
             meta["schemaString"] = new_schema.json()

@@ -276,6 +276,48 @@ def test_driver_checkpoint_survives_a_crash_after_each_published_file(
         assert _rows(spark, p) == rows
 
 
+def test_cleanup_deletes_orphan_sidecars_of_a_killed_v2_checkpoint(
+    spark, tmpdir_path, monkeypatch
+):
+    """A v2 checkpoint writer killed after its first sidecar leaves a
+    sidecar no manifest names. Metadata cleanup deletes it once it is
+    past the retention cutoff; a fresh unreferenced sidecar (a
+    checkpoint being written right now) and the sidecars a surviving
+    manifest names stay, however old."""
+    monkeypatch.setattr(log_mod, "_CP_ACTIONS_PER_PART", 4)  # several sidecars
+    p = os.path.join(tmpdir_path, "t")
+    v = _rich_table(spark, p, "v2")
+    rows = _rows(spark, p)
+    fs_cls = type(DeltaLog(p)._fs)
+    real = fs_cls.write_atomic
+
+    def dying(self, path, data):
+        real(self, path, data)
+        raise _Crash(path)
+
+    with monkeypatch.context() as m:
+        m.setattr(fs_cls, "write_atomic", dying)
+        with pytest.raises(_Crash) as crash:
+            DeltaLog(p).write_checkpoint(spark=False)
+    orphan = str(crash.value)
+    assert "_sidecars" in orphan
+    log = DeltaLog(p)
+    assert log.write_checkpoint(spark=False) == v
+    referenced = [f for f in log.checkpoint_part_files(v) if "_sidecars" in f]
+    assert referenced and orphan not in referenced
+    fresh = os.path.join(os.path.dirname(orphan), "fresh-unreferenced.parquet")
+    shutil.copyfile(orphan, fresh)
+
+    month_ago = log_mod.time.time() - 31 * 24 * 3600
+    for f in [orphan, *referenced]:
+        os.utime(f, (month_ago, month_ago))
+    deleted = log.cleanup_expired_logs()
+    assert orphan in deleted and not os.path.exists(orphan)
+    assert os.path.exists(fresh)
+    assert all(os.path.exists(f) for f in referenced)
+    assert _rows(spark, p) == rows
+
+
 def test_planner_gate_ignores_commits_below_the_checkpoint(spark, tmpdir_path):
     """More than 4 MiB of commits sit below the newest checkpoint, the
     tail is small: the replay reads little, so DML planning stays on the

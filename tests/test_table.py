@@ -1180,26 +1180,51 @@ def test_auto_compact_off_by_default(spark, tmpdir_path):
     assert len(t.snapshot().add_files()) == 4
 
 
-def test_protocol_upgrades_carry_legacy_implied_features(spark):
+def test_auto_compact_failure_warns_and_keeps_the_write(spark, tmpdir_path, monkeypatch):
+    """Auto compaction is best effort: a failure leaves the triggering
+    append committed and says so in a RuntimeWarning naming table@version."""
+    import jodie_spark.tables.table as table_mod
+
+    p = os.path.join(tmpdir_path, "autocompact_fails")
+    write_delta(
+        spark.createDataFrame([(0,)], "k int"),
+        p,
+        options={
+            "delta.autoOptimize.autoCompact": "true",
+            "jodie.autoCompact.minNumFiles": "2",
+        },
+    )
+
+    def broken(self, target_file_size=None):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(table_mod.OptimizeBuilder, "executeCompaction", broken)
+    with pytest.warns(
+        RuntimeWarning, match=r"@1: auto compaction failed — OSError: disk full"
+    ):
+        write_delta(spark.createDataFrame([(1,)], "k int"), p, mode="append")
+    t = DeltaTable.forPath(spark, p)
+    assert t.history(1).collect()[0]["operation"] == "WRITE"
+    assert sorted(r["k"] for r in t.toDF().collect()) == [0, 1]
+
+
+def test_protocol_upgrades_carry_legacy_implied_features():
     """ADVICE r3: an upgrade from reader 2 / writer 5 must carry the
     legacy-implied columnMapping (writer AND reader side) + invariants,
-    or external readers treat physical-named columns as logical ones."""
-    from jodie_spark.tables.log import Snapshot
-    from jodie_spark.tables.table import DeltaTable, _legacy_implied_features
+    or external readers treat physical-named columns as logical ones.
+    Every upgrade now comes from the one rule, log.required_protocol."""
+    from jodie_spark.tables.log import legacy_implied_features, required_protocol
 
-    snap = Snapshot(
-        version=0,
-        metadata={"configuration": {}},
-        protocol={"minReaderVersion": 2, "minWriterVersion": 5},
-        files={},
-    )
-    wf, rf = _legacy_implied_features(snap.protocol, snap.configuration)
+    def meta(**conf):
+        return {"configuration": conf, "schemaString": '{"type":"struct","fields":[]}'}
+
+    base = {"minReaderVersion": 2, "minWriterVersion": 5}
+    wf, rf = legacy_implied_features(base)
     assert {"appendOnly", "invariants", "checkConstraints", "changeDataFeed",
             "generatedColumns", "columnMapping"} <= wf
     assert rf == {"columnMapping"}
 
-    t = DeltaTable.__new__(DeltaTable)  # helpers only touch snap
-    up = t._writer_feature_upgrade_actions(snap, {"typeWidening"})[0]["protocol"]
+    up = required_protocol(base, meta(**{"delta.enableTypeWidening": "true"}), [])
     assert "columnMapping" in up["writerFeatures"]
     assert "invariants" in up["writerFeatures"]
     # reader stays at 2 here, so readerFeatures may be absent — but if
@@ -1207,22 +1232,27 @@ def test_protocol_upgrades_carry_legacy_implied_features(spark):
     if up["minReaderVersion"] >= 3:
         assert "columnMapping" in up.get("readerFeatures", [])
 
-    dv = t._dv_protocol_upgrade_actions(snap)[0]["protocol"]
+    dv_add = {"add": {"path": "f.parquet", "deletionVector": {"storageType": "u"}}}
+    dv = required_protocol(base, None, [dv_add])
     assert dv["minReaderVersion"] == 3
     assert "columnMapping" in dv["readerFeatures"]
     assert "columnMapping" in dv["writerFeatures"]
     assert "identityColumns" not in dv["writerFeatures"]  # writer 5 < 6
 
-    cm = t._mapping_protocol_upgrade_actions(snap)[0]["protocol"]
+    # (2,5) already holds columnMapping: a mapping-only need keeps it;
+    # with a writer-7 need alongside, columnMapping is written out
+    assert required_protocol(base, meta(**{"delta.columnMapping.mode": "name"}), []) == base
+    cm = required_protocol(
+        base,
+        meta(**{"delta.columnMapping.mode": "name", "delta.enableRowTracking": "true"}),
+        [],
+    )
     assert "columnMapping" in cm["readerFeatures"]
     assert "invariants" in cm["writerFeatures"]
 
     # writer 6 additionally implies identityColumns
-    snap6 = Snapshot(
-        version=0, metadata={"configuration": {}},
-        protocol={"minReaderVersion": 2, "minWriterVersion": 6}, files={},
-    )
-    up6 = t._writer_feature_upgrade_actions(snap6, {"typeWidening"})[0]["protocol"]
+    base6 = {"minReaderVersion": 2, "minWriterVersion": 6}
+    up6 = required_protocol(base6, meta(**{"delta.enableTypeWidening": "true"}), [])
     assert "identityColumns" in up6["writerFeatures"]
 
 
@@ -1319,6 +1349,31 @@ def test_drop_feature_deletion_vectors(spark, tmpdir_path):
     # a full-rewrite feature refuses with the reason
     with pytest.raises(DeltaProtocolError, match="not supported"):
         t2.drop_feature("columnMapping")
+
+
+def test_drop_feature_checkpoint_failure_warns(spark, tmpdir_path, monkeypatch):
+    """The post-drop checkpoint is best effort: when it fails the drop
+    stands, and a RuntimeWarning names table@version and the error."""
+    from jodie_spark.tables.log import DeltaLog
+
+    p = os.path.join(tmpdir_path, "drop_ckpt_fails")
+    write_delta(
+        spark.range(5).selectExpr("id"),
+        p,
+        options={"delta.enableChangeDataFeed": "true"},
+    )
+
+    def broken(self, version=None, spark=None):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(DeltaLog, "write_checkpoint", broken)
+    with pytest.warns(
+        RuntimeWarning, match=r"@1: post-drop checkpoint failed — OSError: disk full"
+    ):
+        DeltaTable.forPath(spark, p).drop_feature("changeDataFeed")
+    snap = DeltaTable.forPath(spark, p).snapshot()
+    assert snap.version == 1
+    assert "changeDataFeed" not in (snap.protocol.get("writerFeatures") or [])
 
 
 def test_drop_feature_v2_checkpoint_and_cdf(spark, tmpdir_path):
@@ -1443,3 +1498,45 @@ def test_restore_timestamp_as_of(spark, tmpdir_path):
 
     with _pytest.raises(JodieValidationError, match="version or timestamp"):
         DeltaTable.forPath(spark, p).restore()
+
+
+def test_write_delta_on_dotted_column_names(spark, tmpdir_path):
+    """A column named ``a.b`` is one name, never a struct path, on every
+    write_delta path: create with a NOT NULL column, append (with a
+    narrower incoming type up-cast), and create with generated columns
+    and column defaults stamped into the field metadata."""
+    from pyspark.sql import types as T
+
+    p = os.path.join(tmpdir_path, "dotted")
+    schema = T.StructType(
+        [T.StructField("k", T.LongType(), False), T.StructField("a.b", T.LongType(), False)]
+    )
+    write_delta(spark.createDataFrame([(1, 10)], schema), p)
+    write_delta(spark.createDataFrame([(2, 20)], schema), p, mode="append")
+    write_delta(
+        spark.createDataFrame([(3, 30)], "k long, `a.b` int"), p, mode="append"
+    )
+    t = DeltaTable.forPath(spark, p)
+    assert sorted(tuple(r) for r in t.toDF().collect()) == [(1, 10), (2, 20), (3, 30)]
+    assert not t.schema()["a.b"].nullable
+
+    g = os.path.join(tmpdir_path, "dotted_generated")
+    write_delta(
+        spark.createDataFrame([(1, 5)], "`x.y` long, `d.e` long"),
+        g,
+        generated_columns={"g.h": "`x.y` * 2"},
+        column_defaults={"d.e": "7"},
+    )
+    write_delta(
+        spark.createDataFrame([(2, 2, 4)], "`x.y` long, `d.e` long, `g.h` long"),
+        g,
+        mode="append",
+    )
+    write_delta(spark.createDataFrame([(3,)], "`x.y` long"), g, mode="append")
+    t = DeltaTable.forPath(spark, g)
+    fields = {f.name: f.metadata for f in t.schema().fields}
+    assert fields["g.h"]["delta.generationExpression"] == "`x.y` * 2"
+    assert fields["d.e"]["CURRENT_DEFAULT"] == "7"
+    assert sorted(tuple(r) for r in t.toDF().select("`x.y`", "`d.e`", "`g.h`").collect()) == [
+        (1, 5, 2), (2, 2, 4), (3, 7, 6)
+    ]
