@@ -15,10 +15,11 @@ re-expressed as DataFrame ops so Catalyst plans the joins):
    of file paths (``collect_set``, bounded by #files, never #rows) that
    contain at least one match, in one noop action — no shuffle just to
    deduplicate file names. With the multiple-match check on, the same
-   action counts matches per target row (one aggregation).
+   action counts matches per target row (one aggregation). The one-task
+   rewrite below runs no probe.
 2. **Rewrite** only the touched files, applying the first matching WHEN
    clause per row (Delta clause order semantics); untouched files are
-   never read or rewritten. The rewrite has two shapes:
+   never read or rewritten. The rewrite has three shapes:
 
    - **Full outer join** of the touched files with the source. Spark
      has no broadcast full outer join, so this shuffles every row of
@@ -39,6 +40,22 @@ re-expressed as DataFrame ops so Catalyst plans the joins):
      full outer join). The output is coalesced to the target scan's
      partition count, so a one-file target and its inserts stay one
      file. The union goes through the same staging and lowering text.
+   - **One task** — when skipping leaves one candidate no larger than
+     ``spark.sql.files.openCostInBytes`` (``one_small_candidate``, the
+     rule DELETE/UPDATE use) and Spark's static estimate of the source
+     is at most ``spark.sql.autoBroadcastJoinThreshold``, the touched
+     set is that file or nothing. There is no probe and no cache: the
+     candidate FULL OUTER JOIN the source, each side coalesced to one
+     partition, is a sort-merge join with no exchange and no broadcast,
+     so join, staging, lowering and write run as one job of one task.
+     The write's observation counts the target rows the merge touches,
+     and with the multiple-match check on, the target rows matched more
+     than once (a window over a target row id, coalesced to one
+     partition too); the source row count is an observation on the
+     source in the same job. A refusal or a miss deletes the written
+     files; a miss then commits what the probe path commits when
+     nothing is touched, the inserts alone rewritten over an empty
+     target. The output is sorted by the join key.
 
 Merge-on-read (``execute(deletion_vectors=True)``) joins the source
 with the candidates' coordinate scan, the same
@@ -51,8 +68,8 @@ the source-row observation; see ``execute``).
 Row counts are ``Observation`` s on actions that run anyway: the
 rewrite's write (merge-on-read: its data-file write, and its DV-marks
 action for the multiple-match check). Extra jobs remain in two places:
-on ``mode=id`` tables the source row count is an eager ``count()`` over
-the cache (see ``execute``), and on row-tracking tables every
+on ``mode=id`` tables the source row count is an eager ``count()`` of
+the source (see ``execute``), and on row-tracking tables every
 row-lineage scan of candidate files (the probe, the rewrite, the
 coordinate scan) learns its file URIs in a job of its own; a scan of no
 files runs none.
@@ -66,6 +83,7 @@ import time
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING, Any
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -239,6 +257,19 @@ def resolve_assignment_keys(
     return out
 
 
+def _multiple_matches_error():
+    """The refusal of a merge in which one target row matched more than
+    one source row."""
+    from jodie_spark.errors import MergeMultipleMatchesError
+
+    return MergeMultipleMatchesError(
+        "MERGE: one target row matched multiple source rows while its "
+        "file must be rewritten; the result would be nondeterministic "
+        "(or would duplicate the copied target row). Deduplicate the "
+        "source on the merge key, or pass allow_multiple_matches=True."
+    )
+
+
 def _observed(ob: Observation, keys: list[str]) -> dict[str, int]:
     """Observed metrics, zero when Catalyst's empty-relation propagation
     optimized the observed subtree away (e.g. empty source)."""
@@ -247,6 +278,20 @@ def _observed(ob: Observation, keys: list[str]) -> dict[str, int]:
         return {k: int(got.get(k) or 0) for k in keys}
     except Exception:
         return {k: 0 for k in keys}
+
+
+def _source_rows(obs: Observation, source: DataFrame) -> int:
+    """``numSourceRows``: the source's observation, else a count of the
+    source (over its cache when the merge persisted it). A probe whose
+    join comes out empty lets AQE fold the source scan away, and the
+    observation with it, which used to read as 0 source rows."""
+    try:
+        got = obs.get
+    except Py4JJavaError:  # no metrics row: the observation was dropped
+        got = {}
+    if "numSourceRows" in got:
+        return int(got["numSourceRows"])
+    return source.count()
 
 
 # spark.sql.defaultSizeInBytes' default: the size Spark estimates for a
@@ -265,6 +310,20 @@ def conf_bytes(spark, key: str) -> int:
     text = spark.conf.get(key).strip().lower()
     sign, digits, unit = re.fullmatch(r"(-?)(\d+)([a-z]?)b?", text).groups()
     return (-1 if sign else 1) * int(digits) * _BYTE_UNITS[unit]
+
+
+def one_small_candidate(spark, candidates: list[dict[str, Any]]) -> bool:
+    """The single-file rule of copy-on-write DML and MERGE: one candidate
+    add no larger than ``spark.sql.files.openCostInBytes`` (Spark's
+    price of opening a file). Its touched set is that file or nothing,
+    so the rewrite runs without a probe and its own observation tells
+    which; a miss wastes one rewrite of the file, which the bound caps."""
+    return (
+        len(candidates) == 1
+        and candidates[0].get("size") is not None
+        and int(candidates[0]["size"])
+        <= conf_bytes(spark, "spark.sql.files.openCostInBytes")
+    )
 
 
 def _size_estimate(df: DataFrame) -> int:
@@ -937,12 +996,7 @@ class DeltaMergeBuilder:
     def execute(
         self, allow_multiple_matches: bool = False, deletion_vectors: bool = False
     ) -> None:
-        from jodie_spark.tables.table import (
-            apply_generated_columns,
-            enforce_check_constraints,
-            plan_candidate_files,
-            read_files_df,
-        )
+        from jodie_spark.tables.table import plan_candidate_files, read_files_df
 
         t = self.table
         spark = t.spark
@@ -1032,6 +1086,68 @@ class DeltaMergeBuilder:
             self._execute_mor(allow_multiple_matches, t0, snap, schema)
             return
         talias = t._alias or "target"
+        multi_ok = self._multiple_matches_allowed(allow_multiple_matches)
+
+        # -- pass 1: which files contain matched rows? ----------------------
+        # by-source clauses act on UNMATCHED target rows, which live in
+        # files the merge-condition prune would wrongly skip — candidate
+        # planning must see every file then (clause conditions, being
+        # target-only, could prune instead; kept simple and correct)
+        t_scan = time.time()
+        prune_cond = (
+            None
+            if self._not_matched_by_source
+            else self._target_only_condition(talias, out_cols)
+        )
+        candidates = plan_candidate_files(
+            spark,
+            t.path,
+            t._planning_condition(snap, prune_cond),
+            schema,
+            snap.partition_columns,
+        )
+        lineage, lineage_actions = t._lineage_setup(snap, candidates)
+        insert_only = bool(
+            not self._matched
+            and not self._not_matched_by_source
+            and self._not_matched
+            and self._insert_only_fastpath_safe(talias)
+        )
+        # the broadcast-source rewrite (module docstring) serves merges
+        # with no multiple-match check to run, no by-source clause and
+        # inserts that read the source only
+        broadcast = bool(
+            multi_ok
+            and self._matched
+            and not self._not_matched_by_source
+            and (not self._not_matched or self._insert_only_fastpath_safe(talias))
+        )
+        one_task = bool(
+            not insert_only
+            and (self._matched or self._not_matched or self._not_matched_by_source)
+            and one_small_candidate(spark, candidates)
+        )
+        # spark.sql.autoBroadcastJoinThreshold: negative never broadcasts
+        limit = (
+            conf_bytes(spark, "spark.sql.autoBroadcastJoinThreshold")
+            if broadcast or one_task
+            else -1
+        )
+        # the one-task rewrite (module docstring) also needs a source
+        # Spark's static rule would broadcast: an unknown or large one
+        # keeps the other shapes
+        one_task = one_task and limit >= 0 and _size_estimate(self.source) <= limit
+        # whether the source is small enough to broadcast is settled once
+        # the probe has filled the cache. The row-lineage scan joins a
+        # broadcast of its own, so its partition count is not known
+        # before it runs
+        broadcast = bool(
+            broadcast
+            and not one_task
+            and limit >= 0
+            and candidates
+            and lineage is None
+        )
 
         # mode=id target scans run through the field-id CHILD session
         # (read_files_df), and Spark fires observation metrics on the
@@ -1039,31 +1155,11 @@ class DeltaMergeBuilder:
         # is the target/staged side's. An Observation attached to the
         # parent-session SOURCE would never complete there (its .get
         # blocks forever), so on mode=id tables numSourceRows comes
-        # from a count over the persisted source instead — one extra
-        # job over the cache. The staged-counts observation below is
-        # safe either way: it attaches to the target-derived plan, the
-        # same session the write executes on.
-        # the broadcast-source rewrite (module docstring) serves merges
-        # with no multiple-match check to run, no by-source clause and
-        # inserts that read the source only; whether the source is small
-        # enough is settled once the probe has candidates to scan
-        multi_ok = self._multiple_matches_allowed(allow_multiple_matches)
-        broadcast = bool(
-            multi_ok
-            and self._matched
-            and not self._not_matched_by_source
-            and (not self._not_matched or self._insert_only_fastpath_safe(talias))
-        )
-        # spark.sql.autoBroadcastJoinThreshold: negative never broadcasts
-        limit = (
-            conf_bytes(spark, "spark.sql.autoBroadcastJoinThreshold") if broadcast else -1
-        )
-        broadcast = broadcast and limit >= 0
+        # from an eager count of the source instead — one extra job.
+        # The staged-counts observation is safe either way: it attaches
+        # to the target-derived plan, the same session the write
+        # executes on.
         src_obs = Observation()
-        # the source plan is consumed by both passes (find-touched semi
-        # join, then the rewrite join); staged sources like Type2Scd's
-        # union-of-joins are expensive to recompute, so persist for the
-        # duration of the merge
         cached = (
             self.source.select("*")
             if mode_id
@@ -1073,42 +1169,19 @@ class DeltaMergeBuilder:
             # source row ids, fixed by the cache: the probe observes the
             # matched ones, the rewrite inserts the others
             cached = cached.withColumn("__sid__", F.monotonically_increasing_id())
-        cached = cached.persist()
+        if not one_task:
+            # the source plan is consumed by both passes (find-touched
+            # semi join, then the rewrite join); staged sources like
+            # Type2Scd's union-of-joins are expensive to recompute, so
+            # persist for the duration of the merge. The one-task
+            # rewrite reads it once
+            cached = cached.persist()
         src = self._mark_source(cached)
-        staged_cached = False
         try:
             eager_source_rows = cached.count() if mode_id else None
-
-            # -- pass 1: which files contain matched rows? ------------------
-            # by-source clauses act on UNMATCHED target rows, which live
-            # in files the merge-condition prune would wrongly skip —
-            # candidate planning must see every file then (clause
-            # conditions, being target-only, could prune instead; kept
-            # simple and correct)
-            t_scan = time.time()
-            prune_cond = (
-                None
-                if self._not_matched_by_source
-                else self._target_only_condition(talias, out_cols)
-            )
-            candidates = plan_candidate_files(
-                spark,
-                t.path,
-                t._planning_condition(snap, prune_cond),
-                schema,
-                snap.partition_columns,
-            )
-
             touched: list[dict[str, Any]] = []
             matched_sids: list[int] = []
             n_out = None
-            lineage, lineage_actions = t._lineage_setup(snap, candidates)
-            insert_only = (
-                not self._matched
-                and not self._not_matched_by_source
-                and self._not_matched
-                and self._insert_only_fastpath_safe(talias)
-            )
             if insert_only:
                 # insert-only merge (delta-spark optimizeInsertOnlyMerge):
                 # with no matched clause, NO target file ever needs a
@@ -1125,10 +1198,15 @@ class DeltaMergeBuilder:
                 else:
                     tgt = read_files_df(spark, t.path, schema, []).alias(talias)
                 joined = src.join(tgt, F.expr(self.condition), "left_anti")
+            elif one_task:
+                # no probe: the rewrite's observation decides whether
+                # the candidate is touched
+                touched = candidates
+                joined, _ = self._rewrite_join(
+                    snap, schema, talias, src, touched, lineage, one_task=True,
+                    check=not multi_ok,
+                )
             else:
-                # the row-lineage scan joins a broadcast of its own, so
-                # its partition count is not known before it runs
-                broadcast = bool(broadcast and candidates and lineage is None)
                 if broadcast and self._not_matched:
                     # a merge that inserts observes its matched source
                     # ids, unless the source is known to be too large to
@@ -1151,164 +1229,41 @@ class DeltaMergeBuilder:
                         and _size_estimate(src) <= limit
                     )
                 # -- pass 2: rewrite touched files + insert unmatched rows ----
-                if touched:
-                    # fresh scan over ONLY the touched adds — full columns,
-                    # but a file-list-level prune instead of an
-                    # input_file_name filter over every candidate
-                    tgt = t._read_candidates(snap, schema, touched, lineage=lineage)
-                    if lineage is not None:
-                        tgt = tgt.drop("__file__")
-                    tgt = tgt.withColumn("__t_exists__", F.lit(True)).alias(talias)
-                else:
-                    tgt = (
-                        read_files_df(spark, t.path, schema, [])
-                        .withColumn("__t_exists__", F.lit(True))
-                        .alias(talias)
-                    )
-                    if lineage is not None:
-                        from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
-
-                        tgt = tgt.withColumn(
-                            LIN_RID, F.lit(None).cast("long")
-                        ).withColumn(LIN_RCV, F.lit(None).cast("long"))
-                if not broadcast:
-                    joined = tgt.join(src, F.expr(self.condition), "full_outer")
-                else:
-                    # the updated, deleted and copied rows: the static
-                    # rule broadcasts the source (its size was just
-                    # checked), so there is no target shuffle and each
-                    # file keeps its row order
-                    joined = (tgt if touched else tgt.limit(0)).join(
-                        src, F.expr(self.condition), "left_outer"
-                    )
-                    if self._not_matched:
-                        # plus the source rows no candidate row matched,
-                        # with an empty target side (Catalyst folds the
-                        # join away); the union keeps the first side's
-                        # aliases, so the staging text resolves unchanged
-                        new = (
-                            src.filter(
-                                "NOT (__sid__ IN"
-                                f" ({', '.join(map(str, matched_sids))}))"
-                            )
-                            if matched_sids
-                            else src
-                        )
-                        joined = joined.union(
-                            tgt.limit(0).join(
-                                new, F.expr(self.condition), "right_outer"
-                            )
-                        )
-                        # one file per target scan partition: a one-file
-                        # target and its inserts stay one file
-                        n_out = num_partitions(tgt) if touched else 1
+                joined, n_out = self._rewrite_join(
+                    snap, schema, talias, src, touched, lineage, broadcast, matched_sids
+                )
             t_rewrite = time.time()
 
-            has_target = not insert_only
-            hidden, fields = self._lower(schema, talias, has_target)
-            obs = Observation()
-            staged = self._stage_actions(joined, hidden, has_target).observe(
-                obs,
-                *[
-                    F.expr(
-                        f"sum(CASE WHEN __action__ = '{a}' THEN 1 ELSE 0 END)"
-                        f" AS {label}"
-                    )
-                    for a, label in _COUNTS
-                ],
+            rewrite = (
+                snap, schema, talias, not insert_only, lineage, id_generate,
+                schema_evolved, cdf,
             )
-            # CDF re-consumes `staged` for the delete/pre/post/insert change
-            # legs; without a cache each leg would re-run the join.
-            # Non-CDF merges evaluate it once — no cache, no memory
-            # pressure
-            staged_cached = cdf and has_target
-            if staged_cached:
-                staged = staged.persist()
-
-            # row tracking: copied+updated rows keep their id (insert rows
-            # joined from the source side carry NULL → fresh ids via the
-            # add's baseRowId); only copied rows keep their commit version
-            lineage_out = []
-            if lineage is not None:
-                from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
-
-                lineage_out = (
-                    [
-                        LIN_RID,
-                        f"CASE WHEN __action__ = 'copy' THEN {LIN_RCV} END"
-                        f" AS {LIN_RCV}",
-                    ]
-                    if has_target
-                    else [f"CAST(NULL AS BIGINT) AS {c}" for c in (LIN_RID, LIN_RCV)]
-                )
-            result = staged.filter(
-                "__action__ IN ('update', 'copy', 'insert')"
-            ).selectExpr(*fields, *lineage_out)
-            id_schema_meta = None
-            if id_generate:
-                keep_cols = out_cols + (
-                    [LIN_RID, LIN_RCV] if lineage is not None else []
-                )
-                result, id_schema_meta = _assign_identities(
-                    result, schema, id_generate, keep_cols
-                )
-
-            if n_out is not None:
-                result = result.coalesce(n_out)
-
-            cdc_actions: list[dict[str, Any]] = []
-            adds = t._write_rewrite_files(
-                snap,
-                enforce_check_constraints(
-                    apply_generated_columns(result, schema), snap.configuration
-                ),
-                lineage=lineage,
-                logical_schema=schema if schema_evolved else None,
+            adds, cdc_actions, counts, id_schema_meta = self._rewrite(
+                joined, *rewrite, n_out=n_out, one_task=one_task, check=not multi_ok
             )
-            if cdf:
-                # change rows: pre-images carry the target columns,
-                # post-images the merge output columns — same shapes
-                # Delta's MergeIntoCommand records
-                pre = [
-                    f"CAST({talias}.{quote_ident(f.name)} AS {type_ddl(f.dataType)})"
-                    f" AS {quote_ident(f.name)}"
-                    for f in schema.fields
-                ]
-                legs = (
-                    [
-                        ("delete", pre, "delete"),
-                        ("update", pre, "update_preimage"),
-                        ("update", fields, "update_postimage"),
-                    ]
-                    if self._matched or self._not_matched_by_source
-                    else []
-                ) + [("insert", fields, "insert")]
-                change_df = None
-                for action, cols, change in legs:
-                    leg = staged.filter(f"__action__ = '{action}'").selectExpr(
-                        *cols, f"'{change}' AS _change_type"
+            if one_task and not counts["hits"]:
+                # a miss: the candidate is not touched, and the commit is
+                # the probe path's when nothing is (the inserts alone,
+                # rewritten over an empty target — no job without them)
+                touched = []
+                if counts["inserted"]:
+                    joined, _ = self._rewrite_join(
+                        snap, schema, talias, src, [], lineage, one_task=True
                     )
-                    change_df = (
-                        leg if change_df is None else change_df.unionByName(leg)
+                    adds, cdc_actions, counts, id_schema_meta = self._rewrite(
+                        joined, *rewrite
                     )
-                if n_out is not None:
-                    change_df = change_df.coalesce(n_out)
-                cdc_actions = t._write_cdf_files(
-                    change_df, snap,
-                    logical_schema=schema if schema_evolved else None,
-                )
+                else:
+                    counts = dict.fromkeys(counts, 0)
+            num_source_rows = (
+                eager_source_rows
+                if eager_source_rows is not None
+                else _source_rows(src_obs, cached)
+            )
         finally:
-            cached.unpersist()
-            if staged_cached:
-                staged.unpersist()
+            if not one_task:
+                cached.unpersist()
         rewrite_ms = int((time.time() - t_rewrite) * 1000)
-
-        counts = _observed(obs, [label for _, label in _COUNTS])
-        num_source_rows = (
-            eager_source_rows
-            if eager_source_rows is not None
-            else _observed(src_obs, ["numSourceRows"])["numSourceRows"]
-        )
 
         now_ms = int(time.time() * 1000)
         actions: list[dict[str, Any]] = list(lineage_actions)
@@ -1381,6 +1336,212 @@ class DeltaMergeBuilder:
         from jodie_spark.tables.table import maybe_auto_compact
 
         maybe_auto_compact(t, config=snap.configuration)
+
+    def _rewrite_join(
+        self, snap, schema, talias, src, touched, lineage, broadcast=False,
+        matched_sids=(), one_task=False, check=False,
+    ) -> tuple[DataFrame, int | None]:
+        """Pass 2's join of the ``touched`` adds with ``src``, in one of
+        the three rewrite shapes of the module docstring, and the output
+        partition count to coalesce to (None: keep the plan's).
+
+        ``one_task`` coalesces each side to one partition: both report
+        ``SinglePartition``, so Catalyst plans a sort-merge join with no
+        exchange and no broadcast. With ``check`` (the multiple-match
+        check) ``__n__`` counts each target row's matches, a window over
+        the row id ``__t_id__`` that a ``coalesce(1)`` above the join
+        keeps exchange-free too."""
+        t = self.table
+        if touched:
+            # fresh scan over ONLY the touched adds — full columns, but a
+            # file-list-level prune instead of an input_file_name filter
+            # over every candidate
+            tgt = t._read_candidates(snap, schema, touched, lineage=lineage)
+            if lineage is not None:
+                tgt = tgt.drop("__file__")
+        else:
+            from jodie_spark.tables.table import read_files_df
+
+            tgt = read_files_df(t.spark, t.path, schema, [])
+            if lineage is not None:
+                from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
+
+                tgt = tgt.withColumn(
+                    LIN_RID, F.lit(None).cast("long")
+                ).withColumn(LIN_RCV, F.lit(None).cast("long"))
+        if one_task:
+            tgt = tgt.coalesce(1)
+            if check:
+                tgt = tgt.withColumn("__t_id__", F.monotonically_increasing_id())
+        tgt = tgt.withColumn("__t_exists__", F.lit(True)).alias(talias)
+        if one_task:
+            joined = tgt.join(src.coalesce(1), F.expr(self.condition), "full_outer")
+            if check:
+                joined = joined.coalesce(1).selectExpr(
+                    "*", "count(__src__) OVER (PARTITION BY __t_id__) AS __n__"
+                )
+            return joined, None
+        if not broadcast:
+            return tgt.join(src, F.expr(self.condition), "full_outer"), None
+        # the updated, deleted and copied rows: the static rule broadcasts
+        # the source (its size was just checked), so there is no target
+        # shuffle and each file keeps its row order
+        joined = (tgt if touched else tgt.limit(0)).join(
+            src, F.expr(self.condition), "left_outer"
+        )
+        if not self._not_matched:
+            return joined, None
+        # plus the source rows no candidate row matched, with an empty
+        # target side (Catalyst folds the join away); the union keeps the
+        # first side's aliases, so the staging text resolves unchanged
+        new = (
+            src.filter(f"NOT (__sid__ IN ({', '.join(map(str, matched_sids))}))")
+            if matched_sids
+            else src
+        )
+        joined = joined.union(
+            tgt.limit(0).join(new, F.expr(self.condition), "right_outer")
+        )
+        # one file per target scan partition: a one-file target and its
+        # inserts stay one file
+        return joined, num_partitions(tgt) if touched else 1
+
+    def _rewrite(
+        self, joined, snap, schema, talias, has_target, lineage, id_generate,
+        schema_evolved, cdf, n_out=None, one_task=False, check=False,
+    ) -> tuple[list[dict[str, Any]], list[dict[str, Any]], dict[str, int], Any]:
+        """Pass 2's write: stage ``joined`` (:meth:`_stage_actions`), write
+        the lowered output rows as data files, then on CDF tables the
+        change rows. Returns (adds, cdc actions, row counts, the schema
+        carrying new identity high-water marks or None); the counts are
+        observed on the data-file write.
+
+        On the ``one_task`` rewrite the same observation counts ``hits``,
+        the target rows the merge touches (matched, or hit by a by-source
+        clause), and with ``check`` ``dups``, the target rows matching
+        more than one source row. They are read through
+        :func:`~jodie_spark.tables.table.observation_values`, so a
+        missing one raises, and decide before any change row is written:
+        dups refuse the merge, and no hits mean the candidate is not
+        touched (no adds returned). Either way the written files are
+        deleted."""
+        from jodie_spark.tables.table import (
+            apply_generated_columns,
+            enforce_check_constraints,
+            observation_values,
+        )
+
+        t = self.table
+        hidden, fields = self._lower(schema, talias, has_target)
+        aggs = {label: f"count_if(__action__ = '{a}')" for a, label in _COUNTS}
+        if one_task:
+            aggs["hits"] = (
+                "count_if(__t_exists__ IS NOT NULL"
+                " AND (__src__ IS NOT NULL OR __b_idx__ >= 0))"
+            )
+            if check:
+                aggs["dups"] = "count_if(__t_exists__ IS NOT NULL AND __n__ > 1)"
+        obs = Observation()
+        staged = self._stage_actions(joined, hidden, has_target).observe(
+            obs, *[F.expr(f"{agg} AS {name}") for name, agg in aggs.items()]
+        )
+        # CDF re-consumes `staged` for the delete/pre/post/insert change
+        # legs; without a cache each leg would re-run the join. Non-CDF
+        # merges evaluate it once — no cache, no memory pressure
+        staged_cached = cdf and has_target
+        if staged_cached:
+            staged = staged.persist()
+        try:
+            # row tracking: copied+updated rows keep their id (insert
+            # rows joined from the source side carry NULL → fresh ids via
+            # the add's baseRowId); only copied rows keep their commit
+            # version
+            lineage_out = []
+            if lineage is not None:
+                from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
+
+                lineage_out = (
+                    [
+                        LIN_RID,
+                        f"CASE WHEN __action__ = 'copy' THEN {LIN_RCV} END"
+                        f" AS {LIN_RCV}",
+                    ]
+                    if has_target
+                    else [f"CAST(NULL AS BIGINT) AS {c}" for c in (LIN_RID, LIN_RCV)]
+                )
+            result = staged.filter(
+                "__action__ IN ('update', 'copy', 'insert')"
+            ).selectExpr(*fields, *lineage_out)
+            id_schema_meta = None
+            if id_generate:
+                keep_cols = [f.name for f in schema.fields] + (
+                    [LIN_RID, LIN_RCV] if lineage is not None else []
+                )
+                result, id_schema_meta = _assign_identities(
+                    result, schema, id_generate, keep_cols
+                )
+            if n_out is not None:
+                result = result.coalesce(n_out)
+            adds = t._write_rewrite_files(
+                snap,
+                enforce_check_constraints(
+                    apply_generated_columns(result, schema), snap.configuration
+                ),
+                lineage=lineage,
+                logical_schema=schema if schema_evolved else None,
+            )
+            if not one_task:
+                counts = _observed(obs, list(aggs))
+            else:
+                try:
+                    got = observation_values(obs, list(aggs), "rewrite")
+                    if check and got["dups"]:
+                        raise _multiple_matches_error()
+                except BaseException:
+                    t._discard_files(adds)
+                    raise
+                counts = {name: int(got[name]) for name in aggs}
+                if not counts["hits"]:
+                    t._discard_files(adds)
+                    return [], [], counts, None
+
+            cdc_actions: list[dict[str, Any]] = []
+            if cdf:
+                # change rows: pre-images carry the target columns,
+                # post-images the merge output columns — same shapes
+                # Delta's MergeIntoCommand records
+                pre = [
+                    f"CAST({talias}.{quote_ident(f.name)} AS {type_ddl(f.dataType)})"
+                    f" AS {quote_ident(f.name)}"
+                    for f in schema.fields
+                ]
+                legs = (
+                    [
+                        ("delete", pre, "delete"),
+                        ("update", pre, "update_preimage"),
+                        ("update", fields, "update_postimage"),
+                    ]
+                    if self._matched or self._not_matched_by_source
+                    else []
+                ) + [("insert", fields, "insert")]
+                change_df = None
+                for action, cols, change in legs:
+                    leg = staged.filter(f"__action__ = '{action}'").selectExpr(
+                        *cols, f"'{change}' AS _change_type"
+                    )
+                    change_df = (
+                        leg if change_df is None else change_df.unionByName(leg)
+                    )
+                if n_out is not None:
+                    change_df = change_df.coalesce(n_out)
+                cdc_actions = t._write_cdf_files(
+                    change_df, snap,
+                    logical_schema=schema if schema_evolved else None,
+                )
+        finally:
+            if staged_cached:
+                staged.unpersist()
+        return adds, cdc_actions, counts, id_schema_meta
 
     def _multiple_matches_allowed(self, allow_multiple_matches: bool) -> bool:
         """delta-spark parity: multiple source rows matching one target
@@ -1474,15 +1635,7 @@ class DeltaMergeBuilder:
         )
         got = observed_metrics(rows, files="collect_set(__path__)", **extra)
         if not multi_ok and got["dups"] > 0:
-            from jodie_spark.errors import MergeMultipleMatchesError
-
-            raise MergeMultipleMatchesError(
-                "MERGE: one target row matched multiple source rows "
-                "while its file must be rewritten; the result would "
-                "be nondeterministic (or would duplicate the copied "
-                "target row). Deduplicate the source on the merge "
-                "key, or pass allow_multiple_matches=True."
-            )
+            raise _multiple_matches_error()
         # raises on any URI that fails to map back to a candidate add —
         # a partial/empty touched set here would re-insert matched
         # source rows as duplicates against an empty rewrite target

@@ -43,7 +43,7 @@ from jodie_spark.tables.merge import (
     _annotate_type_changes,
     _frag,
     _str_lit,
-    conf_bytes,
+    one_small_candidate,
     quote_ident,
     type_ddl,
 )
@@ -1437,21 +1437,15 @@ class DeltaTable:
         the rewrite reads, with :meth:`_lineage_setup`'s row-tracking
         columns and actions.
 
-        One candidate no larger than ``spark.sql.files.openCostInBytes``
-        (Spark's price of opening a file) is returned as is: the touched
-        set is that file or nothing, and the rewrite's observed match
-        count tells which, so a point DML runs one Spark job. A miss
-        costs a rewrite of the file that the caller discards; the size
-        bound caps that waste. Any other candidate set is probed: one
-        observed scan of the condition columns and the file path, no
-        cache (column pruning then reaches the parquet scan)."""
+        One small candidate (:func:`~jodie_spark.tables.merge.one_small_candidate`)
+        is returned as is: the rewrite's observed match count tells
+        whether it is touched, so a point DML runs one Spark job, and
+        the caller discards the rewrite of a miss. Any other candidate
+        set is probed: one observed scan of the condition columns and
+        the file path, no cache (column pruning then reaches the
+        parquet scan)."""
         lineage, lineage_actions = self._lineage_setup(snap, candidates)
-        if (
-            len(candidates) == 1
-            and candidates[0].get("size") is not None
-            and int(candidates[0]["size"])
-            <= conf_bytes(self.spark, "spark.sql.files.openCostInBytes")
-        ):
+        if one_small_candidate(self.spark, candidates):
             return candidates, lineage, lineage_actions
         if lineage is not None:
             cand_df = self._read_candidates(snap, schema, candidates, lineage=lineage)
@@ -2545,28 +2539,25 @@ class OptimizeBuilder:
             df = read_files_df(t.spark, t.path, read_schema, files)
         total_bytes = sum(int(f.get("size") or 0) for f in files)
         n_out = max(1, -(-total_bytes // target_file_size))
+        mc = None
         if cluster_by and len(cluster_by) > 1:
             # true Z-ORDER: interleaved-bit morton key, so EVERY
             # clustered column gets min/max locality (lexicographic
-            # range clustering only tightens the first column)
+            # range clustering only tightens the first column); None
+            # for a non-numeric column, which falls back to it
             from jodie_spark.tables.zorder import morton_column
 
             mc = morton_column(df, list(cluster_by))
-            if mc is not None:
-                df = (
-                    df.withColumn("__zorder__", mc)
-                    .repartitionByRange(int(n_out), F.col("__zorder__"))
-                    .sortWithinPartitions("__zorder__")
-                    .drop("__zorder__")
-                )
-            else:  # non-numeric column present: lexicographic fallback
-                df = df.repartitionByRange(
-                    int(n_out), *[F.col(c) for c in cluster_by]
-                ).sortWithinPartitions(*[F.col(c) for c in cluster_by])
-        elif cluster_by:
-            df = df.repartitionByRange(int(n_out), *[F.col(c) for c in cluster_by]).sortWithinPartitions(
-                *[F.col(c) for c in cluster_by]
+        if mc is not None:
+            df = (
+                df.withColumn("__zorder__", mc)
+                .repartitionByRange(int(n_out), F.col("__zorder__"))
+                .sortWithinPartitions("__zorder__")
+                .drop("__zorder__")
             )
+        elif cluster_by:
+            keys = [F.col(quote_ident(c)) for c in cluster_by]
+            df = df.repartitionByRange(int(n_out), *keys).sortWithinPartitions(*keys)
         else:
             df = df.coalesce(int(n_out))
         stat_exclude = None
@@ -2974,6 +2965,18 @@ def write_delta(
                 stamps.setdefault(name, {}).update(
                     identity_field_metadata(start, step, allow, hwm)
                 )
+        # refused before any data file is written
+        if cluster_by:
+            if partition_by:
+                raise JodieValidationError(
+                    "cluster_by and partition_by are mutually exclusive "
+                    "(liquid clustering replaces Hive partitioning)"
+                )
+            missing_cc = [c for c in cluster_by if c not in df.columns]
+            if missing_cc:
+                raise JodieValidationError(
+                    f"cluster_by columns not in data: {missing_cc}"
+                )
         missing_cd = [c for c in column_defaults or {} if c not in df.columns]
         if missing_cd:
             raise JodieValidationError(
@@ -3054,17 +3057,6 @@ def write_delta(
                 rid_name, rcv_name = fresh_materialized_names()
                 properties.setdefault(MAT_RID_PROP, rid_name)
                 properties.setdefault(MAT_RCV_PROP, rcv_name)
-        if cluster_by:
-            if partition_by:
-                raise JodieValidationError(
-                    "cluster_by and partition_by are mutually exclusive "
-                    "(liquid clustering replaces Hive partitioning)"
-                )
-            missing_cc = [c for c in cluster_by if c not in df.columns]
-            if missing_cc:
-                raise JodieValidationError(
-                    f"cluster_by columns not in data: {missing_cc}"
-                )
         actions = (
             [{"metaData": meta}]
             + ([_clustering_domain(cluster_by)] if cluster_by else [])

@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from jodie_spark.tables.merge import quote_ident
+
 BITS_PER_COL = 8  # 256 rank buckets per column
 
 _NUMERIC = (
@@ -46,7 +48,7 @@ def morton_column(df: DataFrame, cols: list[str]) -> Column | None:
     schema = {f.name: f.dataType for f in df.schema.fields}
     doubles = []
     for c in cols:
-        d = _as_double(F.col(c), schema[c])
+        d = _as_double(F.col(quote_ident(c)), schema[c])
         if d is None:
             return None
         doubles.append((c, d))

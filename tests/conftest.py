@@ -90,6 +90,13 @@ def executed_plans(spark, fn) -> list[str]:
     return [p for i, p in sorted(executions().items()) if i not in before]
 
 
+def sql_executions(spark, fn) -> int:
+    """SQL executions ``fn()`` registers in the session's status store:
+    one per action, and one per plan Spark builds to answer a question
+    about a DataFrame without running it (its partition count, say)."""
+    return len(executed_plans(spark, fn))
+
+
 @contextlib.contextmanager
 def session_conf(spark, key: str, value: str):
     """``spark``'s runtime conf ``key`` set to ``value`` inside the block,

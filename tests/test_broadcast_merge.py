@@ -11,9 +11,10 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from conftest import executed_plans, spark_jobs
+from conftest import executed_plans, spark_jobs, sql_executions
 from jodie_spark.tables import merge as merge_mod
 from jodie_spark.tables.table import DeltaTable, write_delta
+from test_single_file_merge import _src
 
 
 def _kv(spark, tmpdir_path, name="t", files=1):
@@ -60,18 +61,41 @@ def join_plan(request, spark):
     spark.conf.set(key, old)
 
 
-def test_upsert_allowing_multiple_matches_runs_five_jobs(spark, tmpdir_path):
-    """The probe's jobs, then the rewrite's broadcast and write; the
-    full outer rewrite shuffled both sides (7 jobs)."""
+def test_upsert_allowing_multiple_matches_runs_one_job(spark, tmpdir_path):
+    """One small candidate file and a source Spark sizes as small: no
+    probe, and the rewrite joins both sides in one task, with no
+    exchange and no broadcast. The probe and the broadcast rewrite ran 5
+    jobs; the full outer rewrite before them 7."""
     t = _kv(spark, tmpdir_path)
-    src = spark.createDataFrame([(5, 50), (500, 1)], "k long, v long")
-    assert spark_jobs(spark, lambda: _upsert(t, src, allow_multiple_matches=True)) == 5
+    src = _src(spark, [(5, 50), (500, 1)])
+    plans = []
+    jobs = spark_jobs(
+        spark,
+        lambda: plans.extend(
+            executed_plans(spark, lambda: _upsert(t, src, allow_multiple_matches=True))
+        ),
+    )
+    assert jobs == 1
+    assert "Exchange" not in _write_plan(plans)
     assert _rows(t) == sorted(
         [(i, 50 if i == 5 else i) for i in range(100)] + [(500, 1)]
     )
     m = _last_metrics(t)
     assert (m["numTargetRowsUpdated"], m["numTargetRowsInserted"]) == ("1", "1")
     assert (m["numTargetRowsCopied"], m["numTargetFilesAdded"]) == ("99", "1")
+    assert m["numSourceRows"] == "2"
+
+
+def test_source_of_unknown_size_keeps_the_probe(spark, tmpdir_path):
+    """A ``createDataFrame`` source has no size estimate until the probe
+    fills its cache: the probe's jobs, then the rewrite's broadcast and
+    write."""
+    t = _kv(spark, tmpdir_path)
+    src = spark.createDataFrame([(5, 50), (500, 1)], "k long, v long")
+    assert spark_jobs(spark, lambda: _upsert(t, src, allow_multiple_matches=True)) == 5
+    assert _rows(t) == sorted(
+        [(i, 50 if i == 5 else i) for i in range(100)] + [(500, 1)]
+    )
 
 
 def test_check_on_upsert_keeps_the_full_outer_rewrite(spark, tmpdir_path):
@@ -105,13 +129,24 @@ def test_one_added_file_per_merge(spark, tmpdir_path, files):
     assert len(t.deltaLog.snapshot().add_files()) == files
 
 
-def test_sink_batch_on_one_file_target_runs_six_jobs(spark, tmpdir_path):
-    """A CDC micro-batch with repeated keys: the emptiness check, the
-    probe (cache build, broadcast, noop action) and the rewrite
-    (broadcast, write). The batch dedups in place, with no shuffle, and
-    the merge no longer shuffles the target: 8 jobs before."""
+def test_sink_batch_on_one_file_target_runs_two_jobs(spark, tmpdir_path):
+    """A CDC micro-batch with repeated keys: the emptiness check, then the
+    one-task merge, whose write dedups the batch in place and joins it
+    with the one target file. The probe (cache build, broadcast, noop
+    action) and the broadcast rewrite (broadcast, write) made it 6 jobs,
+    the shuffled rewrite 8. The batch registers 4 SQL executions: the
+    micro-batch's scan of the source, the emptiness check, the sink's
+    partition count of the batch (a plan built and not run) and the
+    write; the broadcast rewrite's partition count of the target scan
+    is gone."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from jodie_spark.sources.datasource import register
     from jodie_spark.streaming.delta_sink import write_stream_merge_to_delta
+    from jodie_spark.tables.log import DeltaLog
 
     register(spark)
     src = os.path.join(tmpdir_path, "src")
@@ -138,14 +173,36 @@ def test_sink_batch_on_one_file_target_runs_six_jobs(spark, tmpdir_path):
         [(3, 5, "c", False), (3, 6, None, True), (4, 7, "d", False), (4, 8, "e", False),
          (201, 9, "m", False), (201, 10, "o", False)],
     ]
+    log = DeltaLog(src)
+
+    def batch(rows):
+        """Commit ``rows`` to the source and wait for their micro-batch.
+        The file is written and committed without Spark, inside the
+        measured window: the running query starts the batch as soon as
+        the commit lands."""
+        name = f"chg-{uuid.uuid4().hex}.parquet"
+        pq.write_table(
+            pa.Table.from_pylist(
+                [dict(zip(("k", "seq", "v", "del"), r)) for r in rows],
+                pa.schema([("k", pa.int64()), ("seq", pa.int64()),
+                           ("v", pa.string()), ("del", pa.bool_())]),
+            ),
+            os.path.join(src, name),
+        )
+        add = {"path": name, "partitionValues": {}, "dataChange": True,
+               "size": os.path.getsize(os.path.join(src, name)), "modificationTime": 0}
+        log.commit(log.latest_version(), [{"add": add}], "WRITE")
+        query.processAllAvailable()
+
     try:
-        jobs = []
+        jobs, executions = [], []
         for rows in batches:
-            write_delta(spark.createDataFrame(rows, ddl).coalesce(1), src, mode="append")
-            jobs.append(spark_jobs(spark, query.processAllAvailable))
+            executions.append(
+                sql_executions(spark, lambda: jobs.append(spark_jobs(spark, lambda: batch(rows))))
+            )
     finally:
         query.stop()
-    assert jobs[1] == 6
+    assert (jobs[1], executions[1]) == (2, 4)
     t = DeltaTable.forPath(spark, dst)
     want = {k: (0, "r") for k in range(100)}
     want.update({1: (2, "b"), 4: (8, "e"), 200: (4, "n"), 201: (10, "o")})

@@ -167,3 +167,35 @@ def test_clustering_domain_survives_checkpoint(spark, tmpdir_path):
     write_delta(spark.range(20, 30).selectExpr("id", "id as v"), p, mode="append")
     DeltaLog(p).write_checkpoint()
     assert DeltaTable.forPath(spark, p).cluster_by() == ["id"]
+
+
+@pytest.mark.parametrize("cols", [["a.b"], ["a.b", "k"], ["s.t", "k"]])
+def test_optimize_clusters_on_dotted_column_names(spark, tmpdir_path, cols):
+    """A clustering column named ``a.b`` is a top-level column, not a
+    struct field: the range clustering, the Z-order key and its string
+    fallback all quote it."""
+    p = os.path.join(tmpdir_path, "dot")
+    df = spark.range(30).selectExpr("id AS k", "29 - id AS `a.b`", "CAST(id AS STRING) AS `s.t`")
+    for part in range(3):  # three files, so compaction has work
+        write_delta(
+            df.filter(f"k % 3 = {part}").coalesce(1),
+            p,
+            **({"cluster_by": cols} if part == 0 else {"mode": "append"}),
+        )
+    t = DeltaTable.forPath(spark, p)
+    t.optimize().executeCompaction()
+    assert t.history(1).collect()[0]["operation"] == "OPTIMIZE"
+    assert sorted(tuple(r) for r in t.toDF().collect()) == sorted(
+        (i, 29 - i, str(i)) for i in range(30)
+    )
+
+
+def test_refused_cluster_by_leaves_no_files(spark, tmpdir_path):
+    p = os.path.join(tmpdir_path, "refused")
+    with pytest.raises(JodieValidationError, match="cluster_by columns not in data"):
+        write_delta(spark.range(3).selectExpr("id AS k"), p, cluster_by=["nope"])
+    with pytest.raises(JodieValidationError, match="mutually exclusive"):
+        write_delta(
+            spark.range(3).selectExpr("id AS k"), p, cluster_by=["k"], partition_by=["k"]
+        )
+    assert not os.path.exists(p) or os.listdir(p) == []

@@ -64,27 +64,34 @@ def test_repeat_scan_of_one_file_costs_six_round_trips(spark, tmpdir_path):
 
 @pytest.mark.parametrize(
     "op, want",
-    [("delete", 34), ("update", 40), ("upsert", 183), ("by_source", 189)],
+    [("delete", 34), ("update", 40), ("upsert", 132), ("by_source", 124),
+     ("upsert_unsized", 189)],
 )
 def test_dml_round_trips_pinned(spark, tmpdir_path, op, want):
     """py4j round trips of one DML over a one-file table, pinned at the
     measured counts: the probe and the rewrite scan share one prepared
     reader, and neither projects. DELETE/UPDATE over one small file run
-    no probe, only the rewrite (62/68 with it). A merge stages its
-    clause indexes and actions in two ``selectExpr`` calls."""
+    no probe, only the rewrite (62/68 with it). So does a merge whose
+    source Spark sizes as small (183/189 with the probe); a
+    ``createDataFrame`` source, which Spark cannot size, keeps the probe
+    and pays for the size check. A merge stages its clause indexes and
+    actions in two ``selectExpr`` calls."""
     t = _kv(spark, tmpdir_path)
-    src = spark.createDataFrame([(5, 50), (500, 1)], "k long, v long")
+    src = spark.sql("SELECT * FROM VALUES (5L, 50L), (500L, 1L) AS s(k, v)")
+    unsized = spark.createDataFrame([(5, 50), (500, 1)], "k long, v long")
     run = {
         "delete": lambda: t.delete("k = 5"),
         "update": lambda: t.update("k = 5", {"v": "v + 1000"}),
         "upsert": lambda: _upsert(t, src),
         "by_source": lambda: _by_source(t, src),
+        "upsert_unsized": lambda: _upsert(t, unsized),
     }[op]
     assert py4j_round_trips(spark, run) == want
     want_rows = {
         "delete": [(i, i) for i in range(100) if i != 5],
         "update": [(i, i + 1000 * (i == 5)) for i in range(100)],
         "upsert": [(i, 50 if i == 5 else i) for i in range(100)] + [(500, 1)],
+        "upsert_unsized": [(i, 50 if i == 5 else i) for i in range(100)] + [(500, 1)],
         "by_source": [(i, 50 if i == 5 else i) for i in range(91)],
     }[op]
     assert _rows(t.toDF()) == sorted(want_rows)

@@ -68,7 +68,10 @@ def test_dml_over_one_candidate_file_runs_one_job(spark, tmpdir_path, op):
 def test_merge_probe_is_one_job_lighter(spark, tmpdir_path):
     """Multiple-match check on: the probe is one noop action (join,
     one per-row count shuffle, result), not two aggregations and a
-    collect. Pinned at the measured count, one below the old 8."""
+    collect. Pinned at the measured count, one below the old 8. The
+    ``createDataFrame`` source has no size estimate, so this one-file
+    merge keeps the probe (a sized source runs no probe: 1 job, see
+    ``test_single_file_merge.py``)."""
     t = _kv(spark, tmpdir_path)
     src = spark.createDataFrame([(5, 50), (500, 1)], "k long, v long")
     assert spark_jobs(spark, lambda: _upsert(t, src)) == 7
