@@ -54,7 +54,7 @@ def with_global_offsets(
     # the existing cache entry instead of re-persisting it (the
     # "already cached" CacheManager warning — VERDICT r12 item 3)
     if not (part.storageLevel.useMemory or part.storageLevel.useDisk):
-        part = part.persist()
+        part = part.cache()
     # phase 2 input: one row per partition (bounded collect, #partitions)
     totals = (
         part.groupBy("__part__")

@@ -309,7 +309,7 @@ def connected_component_reps(
         narrow
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
-        .persist()
+        .cache()
     )
     try:
         lab = (
@@ -640,7 +640,7 @@ def embedding_dedup(
         )
     # both sides of every self-join consume the signature columns —
     # persist so the signature kernels run once, not 2×n_tables times
-    keyed = keyed.persist()
+    keyed = keyed.cache()
     try:
         pairs = None
         for tbl in range(n_tables):

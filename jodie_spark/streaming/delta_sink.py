@@ -88,7 +88,7 @@ def write_stream_scd2_to_delta(
     commit + the stream checkpoint.
 
     Scale shape identical to the batch operator: one join bounded by
-    2×|batch| + one stats-pruned merge; the batch is persisted for the
+    2×|batch| + one stats-pruned merge; the batch is cached for the
     call so the merge's jobs don't re-scan the streaming source."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
@@ -98,7 +98,7 @@ def write_stream_scd2_to_delta(
     from jodie_spark.tables.table import DeltaTable, write_delta
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
+        batch_df = batch_df.cache()
         try:
             if batch_df.isEmpty():
                 return
@@ -108,7 +108,6 @@ def write_stream_scd2_to_delta(
             batch = (
                 batch_df.withColumn("__rn__", F.row_number().over(w))
                 .filter("__rn__ = 1")
-                .drop("__rn__")
                 .select(primary_key, *attr_cols, effective_time_col)
             )
             if not DeltaLog(path).exists():
@@ -203,16 +202,23 @@ def write_stream_merge_to_delta(
     regressing the row. Without the column in the target, within-batch
     last-wins is all that can be promised.
 
-    The micro-batch is persisted for the duration of the sink call:
-    the merge underneath runs several jobs over the source side
-    (touched-file discovery, rewrite, metrics), and each would
-    otherwise re-scan the streaming source."""
+    The micro-batch is cached for the duration of the sink call, and the
+    emptiness check's job fills the cache. The cache is there to give
+    Spark the batch's size, not to save re-scans (the one-task merge
+    reads its source once): a foreachBatch plan has no size estimate,
+    a filled cache has its real one. The merge's one-task gate
+    (``merge._size_estimate``) needs that size, and so does Spark's
+    planning of the one-task join, which leaves two one-partition sides
+    unshuffled only when both are known to be small. Skipping the check
+    leaves the cache unfilled: the merge then probes, and a warm batch
+    into a one-file table runs 6 Spark jobs instead of 2. Do not remove
+    the check or the cache to save a job."""
     from jodie_spark.tables.log import DeltaLog
-    from jodie_spark.tables.merge import num_partitions, quote_ident as q
+    from jodie_spark.tables.merge import num_partitions, quote_ident as q, star_assignments
     from jodie_spark.tables.table import DeltaTable, write_delta
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
+        batch_df = batch_df.cache()
         try:
             if batch_df.isEmpty():
                 if (
@@ -228,21 +234,22 @@ def write_stream_merge_to_delta(
             # a one-partition batch dedups in place: coalesce(1) reports
             # a single partition, which satisfies the window's (and the
             # dedup aggregate's) distribution, so no shuffle is planned
+            # before the merge. Asking plans the batch once and runs no
+            # job; a size check in its place costs more round trips
             rows = batch_df.coalesce(1) if num_partitions(batch_df) == 1 else batch_df
             if sequence_col is not None:
-                batch = (
-                    rows.selectExpr(
-                        "*",
-                        "row_number() OVER (PARTITION BY "
-                        f"{', '.join(q(k) for k in keys)} "
-                        f"ORDER BY {q(sequence_col)} DESC) AS __rn__",
-                    )
-                    .filter("__rn__ = 1")
-                    .drop("__rn__")
-                )
+                # __rn__ stays on the batch: every clause and the first
+                # write name their columns
+                batch = rows.selectExpr(
+                    "*",
+                    "row_number() OVER (PARTITION BY "
+                    f"{', '.join(q(k) for k in keys)} "
+                    f"ORDER BY {q(sequence_col)} DESC) AS __rn__",
+                ).filter("__rn__ = 1")
             else:
                 batch = rows.dropDuplicates(keys)
-            data_cols = [c for c in batch.columns if c != delete_col]
+            batch_schema = batch_df.schema
+            data_cols = [f.name for f in batch_schema.fields if f.name != delete_col]
             if not DeltaLog(path).exists():
                 init = batch
                 if delete_col is not None:
@@ -254,21 +261,23 @@ def write_stream_merge_to_delta(
                 )
                 return
             t = DeltaTable.forPath(batch.sparkSession, path)
-            # target column names come from the snapshot schema, not
+            # target columns come from the snapshot schema, not
             # toDF().columns — building the read DataFrame just to list
             # columns cost a few hundred ms of py4j per micro-batch
-            tgt_cols = [f.name for f in t.schema().fields]
+            tgt_schema = t.schema()
+            tgt_cols = [f.name for f in tgt_schema.fields]
             if schema_evolution:
                 existing = {c.lower() for c in tgt_cols}
                 new_cols = {
                     f.name: f.dataType
-                    for f in batch.schema.fields
+                    for f in batch_schema.fields
                     if f.name != delete_col and f.name.lower() not in existing
                 }
                 if new_cols:
                     t.add_columns(new_cols)
                     t = DeltaTable.forPath(batch.sparkSession, path)
-                    tgt_cols = [f.name for f in t.schema().fields]
+                    tgt_schema = t.schema()
+                    tgt_cols = [f.name for f in tgt_schema.fields]
             # seq guard only when the target materializes the sequence
             # column (otherwise there is nothing to compare against)
             guard = None
@@ -292,21 +301,21 @@ def write_stream_merge_to_delta(
                     condition=f"not {dl}",
                     values={c: f"s.{q(c)}" for c in data_cols},
                 )
-                if full_snapshot:
-                    m = m.whenNotMatchedBySourceDelete()
-            elif guard:
-                m = (
-                    m.whenMatchedUpdate(
-                        condition=guard,
-                        set={c: f"s.{q(c)}" for c in batch.columns if c not in keys},
-                    ).whenNotMatchedInsertAll()
-                )
-                if full_snapshot:
-                    m = m.whenNotMatchedBySourceDelete()
             else:
-                m = m.whenMatchedUpdateAll().whenNotMatchedInsertAll()
-                if full_snapshot:
-                    m = m.whenNotMatchedBySourceDelete()
+                # updateAll/insertAll, spelled out over the batch's own
+                # columns (never __rn__): a star clause would expand over
+                # every column of the merge source
+                star = star_assignments(batch_schema, tgt_schema, "s")
+                m = m.whenMatchedUpdate(
+                    condition=guard,
+                    set=(
+                        {c: f"s.{q(c)}" for c in data_cols if c not in keys}
+                        if guard
+                        else star
+                    ),
+                ).whenNotMatchedInsert(values=star)
+            if full_snapshot:
+                m = m.whenNotMatchedBySourceDelete()
             # the batch is unique on `keys` by construction (row_number()
             # = 1 or dropDuplicates) and the condition is key equality,
             # so one target row never matches two source rows: the

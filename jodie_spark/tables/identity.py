@@ -136,7 +136,7 @@ def assign_identity_values(
     a persisted copy of ``df`` (unpersisted by Spark's LRU later); the
     caller commits the watermark it's told, so the count job and the
     write job MUST see the same rows — hence the persist."""
-    src = df.persist()
+    src = df.cache()
     counts = sorted(
         (r["pid"], r["n"])
         for r in src.groupBy(F.spark_partition_id().alias("pid"))

@@ -83,7 +83,6 @@ import time
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING, Any
 
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -190,6 +189,24 @@ def _align_sql(expr: str, src_type, dst_type, depth: int = 0) -> str:
     return f"CAST({expr} AS {type_ddl(dst_type)})"
 
 
+def star_assignments(source_schema, schema, source: str) -> dict[str, str]:
+    """``updateAll``/``insertAll`` spelled out (delta-spark star
+    semantics): every field of ``schema`` that ``source_schema`` names,
+    assigned the source struct field ``source`` (SQL text) holds.
+    Structs align by FIELD NAME, recursively (:func:`_align_sql`), never
+    through Spark's positional struct cast. A target field the source
+    lacks is not assigned (an update keeps it, an insert writes NULL),
+    and a source field the target lacks is ignored."""
+    src_types = {f.name: f.dataType for f in source_schema.fields}
+    return {
+        f.name: _align_sql(
+            f"{source}.{quote_ident(f.name)}", src_types[f.name], f.dataType
+        )
+        for f in schema.fields
+        if f.name in src_types
+    }
+
+
 def lower_assignments(
     schema, branches: list[tuple[str, dict[str, Any]]], keep: str | None = ""
 ) -> tuple[dict[str, Column], list[str]]:
@@ -271,27 +288,24 @@ def _multiple_matches_error():
 
 
 def _observed(ob: Observation, keys: list[str]) -> dict[str, int]:
-    """Observed metrics, zero when Catalyst's empty-relation propagation
+    """The ``keys`` of an :func:`~jodie_spark.tables.table.observe`
+    observation, zero when Catalyst's empty-relation propagation
     optimized the observed subtree away (e.g. empty source)."""
-    try:
-        got = ob.get
-        return {k: int(got.get(k) or 0) for k in keys}
-    except Exception:
-        return {k: 0 for k in keys}
+    from jodie_spark.tables.table import observed_or_none
+
+    got = observed_or_none(ob) or {}
+    return {k: int(got.get(k) or 0) for k in keys}
 
 
 def _source_rows(obs: Observation, source: DataFrame) -> int:
     """``numSourceRows``: the source's observation, else a count of the
-    source (over its cache when the merge persisted it). A probe whose
+    source (over its cache when the merge cached it). A probe whose
     join comes out empty lets AQE fold the source scan away, and the
     observation with it, which used to read as 0 source rows."""
-    try:
-        got = obs.get
-    except Py4JJavaError:  # no metrics row: the observation was dropped
-        got = {}
-    if "numSourceRows" in got:
-        return int(got["numSourceRows"])
-    return source.count()
+    from jodie_spark.tables.table import observed_or_none
+
+    got = observed_or_none(obs)
+    return int(got["numSourceRows"]) if got is not None else source.count()
 
 
 # spark.sql.defaultSizeInBytes' default: the size Spark estimates for a
@@ -304,25 +318,26 @@ _BYTE_UNITS = {
 }
 
 
-def conf_bytes(spark, key: str) -> int:
-    """A byte-size conf of ``spark``'s session in bytes, parsed the way
-    Spark parses one: ``10485760b``, ``10m``, ``10MB``, ``-1``."""
-    text = spark.conf.get(key).strip().lower()
+def conf_bytes(conf, key: str) -> int:
+    """A byte-size conf of a session's ``RuntimeConfig`` in bytes, parsed
+    the way Spark parses one: ``10485760b``, ``10m``, ``10MB``, ``-1``."""
+    text = conf.get(key).strip().lower()
     sign, digits, unit = re.fullmatch(r"(-?)(\d+)([a-z]?)b?", text).groups()
     return (-1 if sign else 1) * int(digits) * _BYTE_UNITS[unit]
 
 
-def one_small_candidate(spark, candidates: list[dict[str, Any]]) -> bool:
+def one_small_candidate(conf, candidates: list[dict[str, Any]]) -> bool:
     """The single-file rule of copy-on-write DML and MERGE: one candidate
     add no larger than ``spark.sql.files.openCostInBytes`` (Spark's
     price of opening a file). Its touched set is that file or nothing,
     so the rewrite runs without a probe and its own observation tells
-    which; a miss wastes one rewrite of the file, which the bound caps."""
+    which; a miss wastes one rewrite of the file, which the bound caps.
+    ``conf`` is the session's ``RuntimeConfig``."""
     return (
         len(candidates) == 1
         and candidates[0].get("size") is not None
         and int(candidates[0]["size"])
-        <= conf_bytes(spark, "spark.sql.files.openCostInBytes")
+        <= conf_bytes(conf, "spark.sql.files.openCostInBytes")
     )
 
 
@@ -729,49 +744,46 @@ class DeltaMergeBuilder:
         of :meth:`_lower`. ``has_target=False`` stages the insert-only
         anti join, whose rows have no target side.
 
-        Built as SQL text, two ``selectExpr`` calls: clause conditions are
+        Built as SQL text, one ``selectExpr`` call: clause conditions are
         already SQL strings, and Column-chain construction cost one py4j
         round trip per node (a ``withColumns`` map of ``F.expr`` columns
         about three per column) — paid per micro-batch on the streaming
-        sinks."""
+        sinks. The action's CASE spells the clause conditions out again
+        rather than naming the index columns: a lateral column alias
+        resolves only while ``spark.sql.lateralColumnAlias.
+        enableImplicitResolution`` is on."""
         is_t = "__t_exists__ IS NOT NULL" if has_target else "FALSE"
         is_s = "__src__ IS NOT NULL"
+        on_match = f"({is_t}) AND ({is_s})"
+        on_insert = f"({is_s}) AND NOT ({is_t})"
+        on_by_source = f"({is_t}) AND NOT ({is_s})"
 
-        def _idx_sql(clauses: list[_Clause], base: str) -> str:
-            # first matching clause wins: CASE evaluates in clause order
-            whens = "".join(
+        def _first(clauses: list[_Clause], base: str, kinds: bool) -> str:
+            # first matching clause wins: CASE evaluates in clause order;
+            # it yields the clause's index, or with ``kinds`` its kind
+            return "".join(
                 f" WHEN ({base}) AND {_frag(cl.condition) if cl.condition else 'TRUE'}"
-                f" THEN {k}"
+                f" THEN {repr(cl.kind) if kinds else k}"
                 for k, cl in enumerate(clauses)
             )
+
+        def _idx_sql(clauses: list[_Clause], base: str) -> str:
+            whens = _first(clauses, base, kinds=False)
             return f"CASE{whens} ELSE -1 END" if whens else "-1"
 
-        def _in(col: str, clauses: list[_Clause], kind: str) -> str:
-            idxs = [str(k) for k, cl in enumerate(clauses) if cl.kind == kind]
-            return f"{col} IN ({', '.join(idxs)})" if idxs else "FALSE"
-
-        m, b = self._matched, self._not_matched_by_source
+        m, n, b = self._matched, self._not_matched, self._not_matched_by_source
         action_sql = (
-            "CASE"
-            f" WHEN ({is_t}) AND ({is_s}) AND {_in('__m_idx__', m, 'delete')}"
-            " THEN 'delete'"
-            f" WHEN ({is_t}) AND ({is_s}) AND {_in('__m_idx__', m, 'update')}"
-            " THEN 'update'"
-            f" WHEN ({is_t}) AND NOT ({is_s}) AND {_in('__b_idx__', b, 'delete')}"
-            " THEN 'delete'"
-            f" WHEN ({is_t}) AND NOT ({is_s}) AND {_in('__b_idx__', b, 'update')}"
-            " THEN 'update'"
+            f"CASE{_first(m, on_match, True)}{_first(b, on_by_source, True)}"
             f" WHEN {is_t} THEN 'copy'"
-            f" WHEN ({is_s}) AND (__i_idx__ >= 0) THEN 'insert'"
-            " ELSE 'drop' END"
+            f"{_first(n, on_insert, True)} ELSE 'drop' END"
         )
         staged = joined.selectExpr(
             "*",
-            f"{_idx_sql(m, f'({is_t}) AND ({is_s})')} AS __m_idx__",
-            f"{_idx_sql(self._not_matched, f'({is_s}) AND NOT ({is_t})')}"
-            " AS __i_idx__",
-            f"{_idx_sql(b, f'({is_t}) AND NOT ({is_s})')} AS __b_idx__",
-        ).selectExpr("*", f"{action_sql} AS __action__")
+            f"{_idx_sql(m, on_match)} AS __m_idx__",
+            f"{_idx_sql(n, on_insert)} AS __i_idx__",
+            f"{_idx_sql(b, on_by_source)} AS __b_idx__",
+            f"{action_sql} AS __action__",
+        )
         return staged.withColumns(hidden) if hidden else staged
 
     def _lower(
@@ -785,13 +797,13 @@ class DeltaMergeBuilder:
         source row's fields from ``__src__`` (see :meth:`_mark_source`).
         The hidden columns are added next to ``__action__`` by
         :meth:`_stage_actions`."""
-        src_types: dict[str, Any] = {}
+        star: dict[str, str] = {}
         if any(cl.star for cl in self._matched + self._not_matched):
-            # updateAll/insertAll expand over the SOURCE columns
-            # (delta-spark star semantics): a target column absent from
-            # the source keeps its target value on update and inserts
-            # NULL — the shape a schema-evolution merge relies on
-            src_types = {f.name: f.dataType for f in self.source.schema.fields}
+            # updateAll/insertAll expand over the SOURCE columns: a
+            # target column absent from the source keeps its target
+            # value on update and inserts NULL — the shape a
+            # schema-evolution merge relies on
+            star = star_assignments(self.source.schema, schema, "__src__")
         clauses = (
             [
                 (f"__m_idx__ = {k}", cl)
@@ -808,21 +820,7 @@ class DeltaMergeBuilder:
             + [(f"__i_idx__ = {k}", cl) for k, cl in enumerate(self._not_matched)]
         )
         branches = [
-            (
-                branch,
-                {
-                    # structs align by FIELD NAME, recursively — never
-                    # through Spark's positional struct cast
-                    f.name: _align_sql(
-                        f"__src__.{quote_ident(f.name)}", src_types[f.name], f.dataType
-                    )
-                    for f in schema.fields
-                    if f.name in src_types
-                }
-                if cl.star
-                else cl.assignments,
-            )
-            for branch, cl in clauses
+            (branch, star if cl.star else cl.assignments) for branch, cl in clauses
         ]
         return lower_assignments(schema, branches, f"{talias}." if has_target else None)
 
@@ -845,6 +843,7 @@ class DeltaMergeBuilder:
             _dv_bitmaps,
             apply_generated_columns,
             enforce_check_constraints,
+            observe,
             plan_candidate_files,
         )
 
@@ -866,10 +865,8 @@ class DeltaMergeBuilder:
 
         lineage, lineage_actions = t._lineage_setup(snap, candidates)
         old_dvs = _dv_bitmaps(spark, t.path, candidates)
-        src_obs = Observation()
-        cached = self.source.observe(
-            src_obs, F.expr("count(1) AS numSourceRows")
-        ).persist()
+        cached, src_obs = observe(self.source, {"numSourceRows": "count(1)"})
+        cached = cached.cache()
         src = self._mark_source(cached)
         staged = None
         try:
@@ -882,7 +879,7 @@ class DeltaMergeBuilder:
             )
             joined = tgt.join(src, F.expr(self.condition), "full_outer")
             hidden, fields = self._lower(schema, talias)
-            staged = self._stage_actions(joined, hidden).persist()
+            staged = self._stage_actions(joined, hidden).cache()
 
             # multiple-match guard on the (file, row_index) identity: a
             # row matched twice is marked once, so the DV-marks action
@@ -890,12 +887,11 @@ class DeltaMergeBuilder:
             # written bitmaps count the distinct positions. No marks at
             # all may drop the observation (AQE), which reads as 0 pairs
             check = not self._multiple_matches_allowed(allow_multiple_matches)
-            pair_obs = Observation()
             marks = staged.filter(
                 "__action__ IN ('update', 'delete') AND __fp__ IS NOT NULL"
             )
             if check:
-                marks = marks.observe(pair_obs, F.expr("count(1) AS pairs"))
+                marks, pair_obs = observe(marks, {"pairs": "count(1)"})
             dv_marks = marks.select("__fp__", "__ri__").distinct()
             rows = t._write_dvs_for(dv_marks, old_dvs) if candidates else []
             marked = sum(int(r["new_card"]) - int(r["old_card"]) for r in rows)
@@ -925,17 +921,12 @@ class DeltaMergeBuilder:
                 lineage_out = [LIN_RID, f"CAST(NULL AS BIGINT) AS {LIN_RCV}"]
             # the row counts: observed on the write, which always runs,
             # above the cache and under no shuffle
-            counts_obs = Observation()
-            emitted = (
-                staged.observe(
-                    counts_obs,
-                    *[
-                        F.expr(f"count_if(__action__ = '{a}') AS {a}")
-                        for a in ("update", "delete", "insert")
-                    ],
-                )
-                .filter("__action__ IN ('update', 'insert')")
-                .selectExpr(*fields, *lineage_out)
+            emitted, counts_obs = observe(
+                staged,
+                {a: f"count_if(__action__ = '{a}')" for a in ("update", "delete", "insert")},
+            )
+            emitted = emitted.filter("__action__ IN ('update', 'insert')").selectExpr(
+                *fields, *lineage_out
             )
             adds = t._write_rewrite_files(
                 snap,
@@ -996,7 +987,7 @@ class DeltaMergeBuilder:
     def execute(
         self, allow_multiple_matches: bool = False, deletion_vectors: bool = False
     ) -> None:
-        from jodie_spark.tables.table import plan_candidate_files, read_files_df
+        from jodie_spark.tables.table import observe, plan_candidate_files, read_files_df
 
         t = self.table
         spark = t.spark
@@ -1122,14 +1113,15 @@ class DeltaMergeBuilder:
             and not self._not_matched_by_source
             and (not self._not_matched or self._insert_only_fastpath_safe(talias))
         )
+        conf = spark.conf
         one_task = bool(
             not insert_only
             and (self._matched or self._not_matched or self._not_matched_by_source)
-            and one_small_candidate(spark, candidates)
+            and one_small_candidate(conf, candidates)
         )
         # spark.sql.autoBroadcastJoinThreshold: negative never broadcasts
         limit = (
-            conf_bytes(spark, "spark.sql.autoBroadcastJoinThreshold")
+            conf_bytes(conf, "spark.sql.autoBroadcastJoinThreshold")
             if broadcast or one_task
             else -1
         )
@@ -1159,11 +1151,10 @@ class DeltaMergeBuilder:
         # The staged-counts observation is safe either way: it attaches
         # to the target-derived plan, the same session the write
         # executes on.
-        src_obs = Observation()
-        cached = (
-            self.source.select("*")
+        cached, src_obs = (
+            (self.source.select("*"), None)
             if mode_id
-            else self.source.observe(src_obs, F.expr("count(1) AS numSourceRows"))
+            else observe(self.source, {"numSourceRows": "count(1)"})
         )
         if broadcast and self._not_matched:
             # source row ids, fixed by the cache: the probe observes the
@@ -1173,9 +1164,9 @@ class DeltaMergeBuilder:
             # the source plan is consumed by both passes (find-touched
             # semi join, then the rewrite join); staged sources like
             # Type2Scd's union-of-joins are expensive to recompute, so
-            # persist for the duration of the merge. The one-task
+            # cache it for the duration of the merge. The one-task
             # rewrite reads it once
-            cached = cached.persist()
+            cached = cached.cache()
         src = self._mark_source(cached)
         try:
             eager_source_rows = cached.count() if mode_id else None
@@ -1429,6 +1420,7 @@ class DeltaMergeBuilder:
             apply_generated_columns,
             enforce_check_constraints,
             observation_values,
+            observe,
         )
 
         t = self.table
@@ -1441,16 +1433,13 @@ class DeltaMergeBuilder:
             )
             if check:
                 aggs["dups"] = "count_if(__t_exists__ IS NOT NULL AND __n__ > 1)"
-        obs = Observation()
-        staged = self._stage_actions(joined, hidden, has_target).observe(
-            obs, *[F.expr(f"{agg} AS {name}") for name, agg in aggs.items()]
-        )
+        staged, obs = observe(self._stage_actions(joined, hidden, has_target), aggs)
         # CDF re-consumes `staged` for the delete/pre/post/insert change
         # legs; without a cache each leg would re-run the join. Non-CDF
         # merges evaluate it once — no cache, no memory pressure
         staged_cached = cdf and has_target
         if staged_cached:
-            staged = staged.persist()
+            staged = staged.cache()
         try:
             # row tracking: copied+updated rows keep their id (insert
             # rows joined from the source side carry NULL → fresh ids via
@@ -1494,7 +1483,7 @@ class DeltaMergeBuilder:
                 counts = _observed(obs, list(aggs))
             else:
                 try:
-                    got = observation_values(obs, list(aggs), "rewrite")
+                    got = observation_values(obs, "rewrite")
                     if check and got["dups"]:
                         raise _multiple_matches_error()
                 except BaseException:

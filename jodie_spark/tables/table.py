@@ -153,6 +153,45 @@ _FID_MIRRORED_CONFS = (
 )
 
 
+def _session_key(spark: SparkSession) -> str:
+    """The ``sessionUUID`` of the JVM session ``spark`` wraps, asked once
+    per wrapper. Caches of JVM-side objects key on it, not on the Python
+    wrapper: foreachBatch hands every micro-batch a new wrapper of the
+    query's one session, and ``spark.newSession()`` is a new session."""
+    key = spark.__dict__.get("_jodie_session_key")
+    if key is None:
+        key = spark.__dict__["_jodie_session_key"] = str(
+            spark._jsparkSession.sessionUUID()
+        )
+    return key
+
+
+class _Lru:
+    """A bounded map, least recently used entry out first; one lock, as a
+    streaming sink scans from its own thread."""
+
+    def __init__(self, bound: int):
+        self.bound = bound
+        self.lock = threading.Lock()
+        self.items: dict[Any, Any] = {}
+
+    def get_or_make(self, key, make):
+        """The entry of ``key``, made by ``make()`` (under the lock) when
+        there is none."""
+        with self.lock:
+            value = self.items.pop(key, None)
+            if value is None:
+                value = make()
+                if len(self.items) >= self.bound:
+                    self.items.pop(next(iter(self.items)))
+            self.items[key] = value
+            return value
+
+
+# field-id child sessions, one per parent JVM session
+_FID_SESSIONS = _Lru(8)
+
+
 def _field_id_read_session(spark: SparkSession) -> SparkSession:
     """Child session (shared SparkContext, separate SQLConf) with
     ``spark.sql.parquet.fieldId.read.enabled=true``.
@@ -168,14 +207,17 @@ def _field_id_read_session(spark: SparkSession) -> SparkSession:
     DataFrame keeps id-matching even when unioned/joined/collected from
     the user's session, whose conf is never touched.
 
+    The child is kept per parent JVM session (:func:`_session_key`).
     Every call re-reads the mirrored confs from ``spark`` and sets on
     the child only those whose value changed since the last call."""
-    child = getattr(spark, "_jodie_field_id_session", None)
-    if child is None:
+
+    def make() -> SparkSession:
         child = spark.newSession()
         child.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
         child._jodie_mirrored_confs = {}
-        spark._jodie_field_id_session = child
+        return child
+
+    child = _FID_SESSIONS.get_or_make(_session_key(spark), make)
     mirrored = child._jodie_mirrored_confs
     for key in _FID_MIRRORED_CONFS:
         try:
@@ -192,10 +234,10 @@ def _field_id_read_session(spark: SparkSession) -> SparkSession:
 # coordinate system), as selectExpr text
 _FP_RI = ("_metadata.file_path AS __fp__", "_metadata.row_index AS __ri__")
 
-# Prepared parquet readers one session keeps, one per (table root,
-# schema) it scans; past the bound the least recently used one goes.
+# Prepared parquet readers, one per (JVM session, table root, schema)
+# scanned; past the bound the least recently used one goes.
 _SCAN_READERS_MAX = 32
-_SCAN_READERS_LOCK = threading.Lock()
+_SCAN_READERS = _Lru(_SCAN_READERS_MAX)
 
 
 def scan_parquet(
@@ -209,9 +251,12 @@ def scan_parquet(
     storage listing); ``paths`` are Spark-plane paths.
 
     The reader (``format``, ``basePath``, schema) is set up once per
-    (session, ``base``, ``schema``) and kept on the session object, so
-    a repeat scan pays only the ``load``. A schema carrying parquet
-    field ids routes the scan through the field-id child session.
+    (JVM session, ``base``, ``schema``), so a repeat scan pays only the
+    ``load``, a one-path scan one round trip. The key is the JVM
+    session (:func:`_session_key`), so the new wrapper foreachBatch
+    hands each micro-batch finds the reader the last one prepared. A
+    schema carrying parquet field ids routes the scan through the
+    field-id child session.
 
     ``base`` (the table root) gives Hive-style partition-column
     reconstruction; ``schema`` pins partition-value types and fills
@@ -226,20 +271,22 @@ def scan_parquet(
 
     if schema is not None and schema_requests_field_ids(schema):
         spark = _field_id_read_session(spark)
-    key = (base, schema.json() if schema is not None else None)
-    with _SCAN_READERS_LOCK:  # a streaming sink scans from its own thread
-        cache = spark.__dict__.setdefault("_jodie_scan_readers", {})
-        reader = cache.pop(key, None)
-        if reader is None:
-            reader = spark.read.format("parquet")
-            if base is not None:
-                reader = reader.option("basePath", base)
-            if schema is not None:
-                reader = reader.schema(schema)
-            if len(cache) >= _SCAN_READERS_MAX:
-                cache.pop(next(iter(cache)))
-        cache[key] = reader
-    df = reader.load(paths) if paths else reader.load()
+
+    def make():
+        reader = spark.read.format("parquet")
+        if base is not None:
+            reader = reader.option("basePath", base)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader
+
+    reader = _SCAN_READERS.get_or_make(
+        (_session_key(spark), base, schema.json() if schema is not None else None),
+        make,
+    )
+    # a one-path list as a string: a list is built on the JVM side
+    # element by element, five more round trips
+    df = reader.load(paths[0] if len(paths) == 1 else paths) if paths else reader.load()
     if cols is None and base is not None and any(
         "=" in p[len(base):].rpartition("/")[0] for p in paths
     ):
@@ -1445,7 +1492,7 @@ class DeltaTable:
         the file path, no cache (column pruning then reaches the
         parquet scan)."""
         lineage, lineage_actions = self._lineage_setup(snap, candidates)
-        if one_small_candidate(self.spark, candidates):
+        if one_small_candidate(self.spark.conf, candidates):
             return candidates, lineage, lineage_actions
         if lineage is not None:
             cand_df = self._read_candidates(snap, schema, candidates, lineage=lineage)
@@ -1815,17 +1862,16 @@ class DeltaTable:
         cdf_on = self.is_cdf_enabled(d.snap)
         if cdf_on:
             # the change rows read the scan again; cache it for that
-            rows = rows.persist()
+            rows = rows.cache()
         try:
-            obs = Observation()
-            observed = rows.observe(
-                obs, F.expr(f"count_if(coalesce({d.cond}, false)) AS changed")
+            observed, obs = observe(
+                rows, {"changed": f"count_if(coalesce({d.cond}, false))"}
             )
             adds = self._write_rewrite_files(
                 d.snap, d.project(observed, lineage), lineage=lineage
             )
             try:
-                d.changed = observation_values(obs, ["changed"], "rewrite")["changed"]
+                d.changed = observation_values(obs, "rewrite")["changed"]
                 if d.changed:
                     d.removes, d.adds = touched, adds
                     if cdf_on:
@@ -1861,7 +1907,7 @@ class DeltaTable:
         if d.hidden:
             matched = matched.withColumns(d.hidden)
         # read by the bitmap write, then the copies and the change rows
-        matched = matched.persist()
+        matched = matched.cache()
         try:
             d.dv_rows = self._write_dvs_for(matched, old_dvs)
             if not d.dv_rows:
@@ -2722,6 +2768,35 @@ def map_touched_paths(
     return [by_abs[p] for p in sorted(normalized)]
 
 
+# the one struct metric every :func:`observe` observation carries
+_METRICS = "__metrics__"
+
+
+def observe(df: DataFrame, metrics: dict[str, str]) -> tuple[DataFrame, Observation]:
+    """``df`` observing ``metrics`` (name → SQL aggregate text), and the
+    observation. The metrics travel as ONE struct column, ``struct(<agg>
+    AS <name>, …)``: one ``F.expr`` and an empty varargs Seq, where a
+    Column per metric cost three round trips and a Seq element each.
+    Read it with :func:`observation_values`, or with
+    :func:`observed_or_none` where a dropped observation has a meaning."""
+    obs = Observation()
+    body = ", ".join(f"{agg} AS {quote_ident(name)}" for name, agg in metrics.items())
+    return df.observe(obs, F.expr(f"struct({body}) AS {_METRICS}")), obs
+
+
+def observed_or_none(obs: Observation) -> dict[str, Any] | None:
+    """The metrics an :func:`observe` observation reported, or None when
+    it reported none: AQE's empty-relation propagation drops an
+    observation that sits under a shuffle, with the subtree it
+    removes."""
+    try:
+        got = obs.get
+    except Py4JJavaError:  # no metrics row: the observation was dropped
+        return None
+    row = got.get(_METRICS)
+    return None if row is None else row.asDict()
+
+
 def observed_metrics(df: DataFrame, **metrics: str) -> dict[str, Any]:
     """Run ``df`` by ONE noop action while observing ``metrics`` (name →
     SQL aggregate text) and return their values. Every touched-file and
@@ -2736,27 +2811,21 @@ def observed_metrics(df: DataFrame, **metrics: str) -> dict[str, Any]:
     over an empty source or a filter that folds to false, but AQE's
     empty-relation propagation can drop an observation that sits under
     a shuffle. A missing metric raises (:func:`observation_values`)."""
-    obs = Observation()
-    df.observe(
-        obs, *[F.expr(f"{agg} AS {name}") for name, agg in metrics.items()]
-    ).write.format("noop").mode("overwrite").save()
-    return observation_values(obs, list(metrics), "probe")
+    observed, obs = observe(df, metrics)
+    observed.write.format("noop").mode("overwrite").save()
+    return observation_values(obs, "probe")
 
 
-def observation_values(obs: Observation, names: list[str], what: str) -> dict[str, Any]:
-    """The metrics ``obs`` reported after its action ran, every one of
-    ``names`` present. A missing metric RAISES: the probe's file set and
-    a DML rewrite's match count decide what commits, and read as "no
-    files" or 0 they would make a DML commit nothing, or a merge
-    re-insert its matched rows as duplicates."""
-    try:
-        got = obs.get
-    except Py4JJavaError:  # no metrics row: the observation was dropped
-        got = {}
-    missing = [name for name in names if name not in got]
-    if missing:
+def observation_values(obs: Observation, what: str) -> dict[str, Any]:
+    """The metrics an :func:`observe` observation reported after its
+    action ran. A missing report RAISES: the probe's file set and a DML
+    rewrite's match count decide what commits, and read as "no files" or
+    0 they would make a DML commit nothing, or a merge re-insert its
+    matched rows as duplicates."""
+    got = observed_or_none(obs)
+    if got is None:
         raise DeltaProtocolError(
-            f"the {what}'s observation reported no {missing}; refusing to "
+            f"the {what}'s observation reported no metrics; refusing to "
             "read it as nothing matched"
         )
     return got

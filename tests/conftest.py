@@ -14,8 +14,14 @@ sys.path.insert(0, "/root/repo")
 def spark():
     from jodie_spark.session import get_spark
 
+    from jodie_spark.tables.table import _session_key
+
     s = get_spark("jodie_tests", master="local[4]")
     s.conf.set("spark.sql.shuffle.partitions", "4")
+    # the first scan through a session wrapper asks its JVM session's
+    # key once; ask it here, so no pinned round-trip count depends on
+    # which test scanned first
+    _session_key(s)
     yield s
 
 
@@ -27,21 +33,22 @@ def tmpdir_path():
 
 
 def py4j_round_trips(spark, fn) -> int:
-    """py4j commands ``fn()`` sends to the JVM from the calling thread,
-    counted on the gateway client the way perfbench's GatewayCounter
-    counts them. Object-release commands (py4j's ``m``) are left out:
-    they follow Python's garbage collector, which frees earlier work's
-    objects at arbitrary points. So are other threads' commands (a
-    streaming query's foreachBatch callback, say)."""
+    """py4j commands sent to the JVM while ``fn()`` runs, from every
+    thread (a streaming query's foreachBatch callback too), counted on
+    the gateway client the way perfbench's GatewayCounter counts them.
+    Object-release commands (py4j's ``m``) are left out: they follow
+    Python's garbage collector, which frees earlier work's objects at
+    arbitrary points."""
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
-    me = threading.get_ident()
+    lock = threading.Lock()
     n = 0
 
     def counted(command, *args, **kwargs):
         nonlocal n
-        if threading.get_ident() == me and not command.startswith("m"):
-            n += 1
+        if not command.startswith("m"):
+            with lock:
+                n += 1
         return send(command, *args, **kwargs)
 
     client.send_command = counted

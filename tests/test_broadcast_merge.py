@@ -11,7 +11,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from conftest import executed_plans, spark_jobs, sql_executions
+from conftest import executed_plans, py4j_round_trips, spark_jobs, sql_executions
 from jodie_spark.tables import merge as merge_mod
 from jodie_spark.tables.table import DeltaTable, write_delta
 from test_single_file_merge import _src
@@ -138,7 +138,13 @@ def test_sink_batch_on_one_file_target_runs_two_jobs(spark, tmpdir_path):
     micro-batch's scan of the source, the emptiness check, the sink's
     partition count of the batch (a plan built and not run) and the
     write; the broadcast rewrite's partition count of the target scan
-    is gone."""
+    is gone.
+
+    The warm batch's py4j commands (every thread, releases left out)
+    are pinned too, 98: the sink and the merge build few JVM objects
+    per batch (one struct metric per observation, one staging
+    projection, the scan reader an earlier batch of the query's session
+    prepared, no ``drop``, ``cache()`` over ``persist()``)."""
     import uuid
 
     import pyarrow as pa
@@ -194,15 +200,19 @@ def test_sink_batch_on_one_file_target_runs_two_jobs(spark, tmpdir_path):
         log.commit(log.latest_version(), [{"add": add}], "WRITE")
         query.processAllAvailable()
 
+    jobs, executions, commands = [], [], []
+
+    def measured(rows):
+        jobs.append(spark_jobs(
+            spark, lambda: commands.append(py4j_round_trips(spark, lambda: batch(rows)))
+        ))
+
     try:
-        jobs, executions = [], []
         for rows in batches:
-            executions.append(
-                sql_executions(spark, lambda: jobs.append(spark_jobs(spark, lambda: batch(rows))))
-            )
+            executions.append(sql_executions(spark, lambda: measured(rows)))
     finally:
         query.stop()
-    assert (jobs[1], executions[1]) == (2, 4)
+    assert (jobs[1], executions[1], commands[1]) == (2, 4, 98)
     t = DeltaTable.forPath(spark, dst)
     want = {k: (0, "r") for k in range(100)}
     want.update({1: (2, "b"), 4: (8, "e"), 200: (4, "n"), 201: (10, "o")})

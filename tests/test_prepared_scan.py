@@ -1,9 +1,10 @@
 """Prepared scans: every log-driven parquet scan goes through
-``scan_parquet``, which keeps one set-up reader per (session, table
-root, schema) on the session object and projects to schema order only
+``scan_parquet``, which keeps one set-up reader per (JVM session, table
+root, schema) in one bounded cache and projects to schema order only
 where Spark's own column order can differ (``key=value`` directories).
 These tests pin the py4j round trips that buys and check that a cached
-reader never serves a stale schema, another table or another session."""
+reader never serves a stale schema, another table or another session,
+and that every Python wrapper of one session shares it."""
 
 import os
 import shutil
@@ -31,7 +32,14 @@ def _rows(df):
 
 
 def _readers(spark):
-    return spark.__dict__.get("_jodie_scan_readers", {})
+    """The prepared readers of ``spark``'s JVM session, by (table root,
+    schema json)."""
+    key = table_mod._session_key(spark)
+    return {k[1:]: r for k, r in table_mod._SCAN_READERS.items.items() if k[0] == key}
+
+
+def _field_id_session(spark):
+    return table_mod._FID_SESSIONS.items[table_mod._session_key(spark)]
 
 
 def _upsert(t, src):
@@ -52,30 +60,37 @@ def _by_source(t, src):
     )
 
 
-def test_repeat_scan_of_one_file_costs_six_round_trips(spark, tmpdir_path):
-    """The repeat scan pays only the load: PythonUtils lookup, the path
-    list (ArrayList + one add per path), toSeq and load. Building the
-    reader, parsing the schema and a no-op reorder cost 16 more."""
+def test_repeat_scan_of_one_file_costs_one_round_trip(spark, tmpdir_path):
+    """The repeat scan pays only the load of its one path, passed as a
+    string. A path list costs five more (PythonUtils lookup, ArrayList,
+    one add per path, toSeq); building the reader, parsing the schema
+    and a no-op reorder 16 more."""
     t = _kv(spark, tmpdir_path)
     t.toDF()
-    assert py4j_round_trips(spark, t.toDF) == 6
+    assert py4j_round_trips(spark, t.toDF) == 1
     assert _rows(t.toDF()) == [(i, i) for i in range(100)]
 
 
 @pytest.mark.parametrize(
     "op, want",
-    [("delete", 34), ("update", 40), ("upsert", 132), ("by_source", 124),
-     ("upsert_unsized", 189)],
+    [
+        pytest.param("delete", 29, id="delete"),
+        pytest.param("update", 35, id="update"),
+        pytest.param("upsert", 101, id="upsert"),
+        pytest.param("by_source", 93, id="by_source"),
+        pytest.param("upsert_unsized", 155, id="upsert_unsized"),
+    ],
 )
 def test_dml_round_trips_pinned(spark, tmpdir_path, op, want):
     """py4j round trips of one DML over a one-file table, pinned at the
     measured counts: the probe and the rewrite scan share one prepared
-    reader, and neither projects. DELETE/UPDATE over one small file run
-    no probe, only the rewrite (62/68 with it). So does a merge whose
-    source Spark sizes as small (183/189 with the probe); a
-    ``createDataFrame`` source, which Spark cannot size, keeps the probe
-    and pays for the size check. A merge stages its clause indexes and
-    actions in two ``selectExpr`` calls."""
+    reader (built inside the count: each test has its own table), and
+    neither projects. DELETE/UPDATE over one small file run no probe,
+    only the rewrite. So does a merge whose source Spark sizes as small;
+    a ``createDataFrame`` source, which Spark cannot size, keeps the
+    probe and pays for the size check. A merge stages its clause
+    indexes and actions in one ``selectExpr`` and observes each action's
+    metrics as one struct column; a one-path scan loads a string."""
     t = _kv(spark, tmpdir_path)
     src = spark.sql("SELECT * FROM VALUES (5L, 50L), (500L, 1L) AS s(k, v)")
     unsized = spark.createDataFrame([(5, 50), (500, 1)], "k long, v long")
@@ -178,14 +193,59 @@ def test_two_tables_with_one_schema_read_their_own_files(spark, tmpdir_path):
 
 
 def test_new_session_builds_its_own_readers(spark, tmpdir_path):
+    """A reader prepared in one JVM session is never handed to another:
+    ``spark.newSession()`` is a new JVM session, with its own conf."""
     t = _kv(spark, tmpdir_path, n=3)
     t.toDF()
     other = spark.newSession()
     df = DeltaTable.forPath(other, t.path).toDF()
     assert df.sparkSession is other
+    assert df._jdf.sparkSession().sessionUUID() == other._jsparkSession.sessionUUID()
     assert _rows(df) == [(0, 0), (1, 1), (2, 2)]
     mine = {id(r) for r in _readers(spark).values()}
     assert _readers(other) and not mine & {id(r) for r in _readers(other).values()}
+
+
+def test_foreach_batch_wrappers_share_one_reader(spark, tmpdir_path):
+    """foreachBatch hands each micro-batch a new Python wrapper of the
+    query's one JVM session: the second batch's scan finds the reader
+    the first batch prepared and pays only its load."""
+    from pyspark.sql import SparkSession
+
+    t = _kv(spark, tmpdir_path, n=3)
+    feed = os.path.join(tmpdir_path, "feed")
+    for i in range(2):
+        spark.range(i, i + 1).coalesce(1).write.mode("append").parquet(feed)
+    key = (t.path, t.schema().json())
+    seen = []
+
+    def each(batch_df, batch_id):
+        session = batch_df.sparkSession
+        DeltaTable.forPath(session, t.path).toDF()  # asks the session key
+        repeat = py4j_round_trips(
+            session, lambda: DeltaTable.forPath(session, t.path).toDF()
+        )
+        df = DeltaTable.forPath(session, t.path).toDF()
+        seen.append((session, _readers(session)[key], repeat, _rows(df)))
+
+    query = (
+        spark.readStream.schema("id long").option("maxFilesPerTrigger", 1).parquet(feed)
+        .writeStream.foreachBatch(each)
+        .option("checkpointLocation", os.path.join(tmpdir_path, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        query.awaitTermination(120)
+    finally:
+        query.stop()
+    assert len(seen) == 2
+    (first, reader, _, rows), (second, again, repeat, rows_again) = seen
+    assert isinstance(second, SparkSession) and second is not first
+    assert table_mod._session_key(second) == table_mod._session_key(first)
+    assert again is reader
+    assert repeat == 1
+    assert rows == rows_again == [(0, 0), (1, 1), (2, 2)]
 
 
 def test_reader_cache_is_bounded(spark, tmpdir_path):
@@ -256,7 +316,7 @@ def test_mode_id_read_delete_and_merge_match_by_field_id(spark, tmpdir_path):
             .execute()
         )
     assert rows() == [(2, 1.0, "w"), (4, None, "w")]
-    assert _readers(spark._jodie_field_id_session)
+    assert _readers(_field_id_session(spark))
 
 
 def test_field_id_session_sets_only_changed_confs(spark, tmpdir_path):
@@ -264,7 +324,7 @@ def test_field_id_session_sets_only_changed_confs(spark, tmpdir_path):
     ``set``; unchanged confs are read but not set again."""
     t = DeltaTable.forPath(spark, _mk_id_mapped_table(tmpdir_path, spark))
     t.toDF()
-    child = spark._jodie_field_id_session
+    child = _field_id_session(spark)
     steady = py4j_round_trips(spark, t.toDF)
     key = "spark.sql.session.timeZone"
     tz = spark.conf.get(key)

@@ -289,12 +289,17 @@ def test_multiple_matches_refuse_with_no_commit_and_no_file(spark, tmpdir_path, 
 
 def test_missing_observation_refuses(spark, tmpdir_path, monkeypatch):
     """Read as "no hits", a missing observation would drop the merge's
-    changes; it refuses before the commit and deletes what was written."""
+    changes; it refuses before the commit and deletes what was written.
+    The rewrite reads its one struct metric through the raising reader:
+    an empty report refuses, and so does a report without the struct
+    (metric columns of their own are not read)."""
     t = _make(spark, os.path.join(tmpdir_path, "t"), "plain")
     before = parquet_files(t.path)
-    monkeypatch.setattr(Observation, "get", property(lambda self: {}))
-    with pytest.raises(DeltaProtocolError, match="observation"):
-        _upsert(_src(spark, HIT))(t)
-    monkeypatch.undo()
-    assert t.deltaLog.latest_version() == 0
-    assert parquet_files(t.path) == before
+    flat = {"hits": 1, "updated": 1, "deleted": 0, "copied": 0, "inserted": 0}
+    for report in ({}, flat):
+        monkeypatch.setattr(Observation, "get", property(lambda self: report))
+        with pytest.raises(DeltaProtocolError, match="observation"):
+            _upsert(_src(spark, HIT))(t)
+        monkeypatch.undo()
+        assert t.deltaLog.latest_version() == 0
+        assert parquet_files(t.path) == before

@@ -154,6 +154,39 @@ def test_empty_source_and_false_condition_touch_nothing(spark, tmpdir_path, join
         assert removed == "0", op["operation"]
 
 
+def test_dropped_observation_reads_as_zero_or_refuses(spark, tmpdir_path):
+    """An observation under a shuffle is dropped when AQE folds the join
+    above an empty side away. Of the readers of the one struct metric
+    (``observe``), the zero-filling one reads it as zeros, the raising
+    one refuses, and the source-row count counts instead. On the probe
+    path a merge of an empty source, or of one no target row matches,
+    drops its source observation that way; its metrics stay exact."""
+    from jodie_spark.tables.merge import _observed, _source_rows
+    from jodie_spark.tables.table import observation_values, observe
+
+    empty = spark.createDataFrame([], "k long, v long")
+    observed, obs = observe(empty, {"numSourceRows": "count(1)", "ks": "collect_set(k)"})
+    (
+        spark.range(10).withColumnRenamed("id", "k").join(observed, "k")
+        .groupBy("k").count().write.format("noop").mode("overwrite").save()
+    )
+    assert _observed(obs, ["numSourceRows"]) == {"numSourceRows": 0}
+    with pytest.raises(DeltaProtocolError, match="observation"):
+        observation_values(obs, "probe")
+    assert _source_rows(obs, empty) == 0
+
+    t = _kv(spark, tmpdir_path)
+    new_keys = spark.createDataFrame([(500, 1), (501, 2)], "k long, v long")
+    with session_conf(spark, OPEN_COST, "1b"):
+        for src, inserted in ((empty, 0), (new_keys, 2)):
+            _upsert(t, src)
+            m = _last_metrics(t)
+            assert m["numSourceRows"] == m["numTargetRowsInserted"] == str(inserted)
+            assert (m["numTargetRowsUpdated"], m["numTargetRowsCopied"]) == ("0", "0")
+            assert m["numTargetFilesRemoved"] == "0"
+    assert _rows(t) == [(i, i) for i in range(100)] + [(500, 1), (501, 2)]
+
+
 def test_missing_file_set_observation_refuses(spark, tmpdir_path, monkeypatch):
     """A result without the metric must never read as "no touched
     files" or "no matched rows": DELETE/UPDATE would commit nothing,
