@@ -47,6 +47,7 @@ from pyspark.sql import types as T
 from jodie_spark.errors import DeltaProtocolError, VersionNotFoundError
 from jodie_spark.fs import add_path_key, get_fs, scanned_path_key
 from jodie_spark.tables.column_mapping import rename_to_logical
+from jodie_spark.tables.gateway import select_expr
 from jodie_spark.tables.log import DeltaLog
 from jodie_spark.tables.merge import quote_ident
 from jodie_spark.tables.table import (
@@ -267,12 +268,12 @@ def read_cdf(
     mapping = spark.createDataFrame(
         versions, "___leg int, __fp__ string, _commit_version long, ___ts_ms long"
     )
-    return (
+    joined = (
         reduce(lambda a, b: a.unionByName(b), parts)
         .join(F.broadcast(mapping), ["___leg", "__fp__"])
         .withColumn("_commit_timestamp", F.timestamp_millis(F.col("___ts_ms")))
-        .selectExpr(*[quote_ident(f.name) for f in out_schema.fields])
     )
+    return select_expr(joined, *[quote_ident(f.name) for f in out_schema.fields])
 
 
 class ChangeDataFeedHelper:

@@ -19,6 +19,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 
 from jodie_spark.errors import JodieValidationError
+from jodie_spark.tables.gateway import select_expr
 from jodie_spark.tables.table import DeltaTable
 
 
@@ -73,13 +74,13 @@ def type2_generic_upsert(
     updates_attrs = " OR ".join(f"updates.{a} <> base.{a}" for a in attr_col_names)
     staged_attrs = " OR ".join(f"staged_updates.{a} <> base.{a}" for a in attr_col_names)
 
-    staged_part_1 = (
+    changed = (
         updates_df.alias("updates")
         .join(base_table.toDF().alias("base"), primary_key)
         .where(f"base.{is_current_col_name} = true AND ({updates_attrs})")
-        .selectExpr("NULL as mergeKey", "updates.*")
     )
-    staged_part_2 = updates_df.selectExpr(f"{primary_key} as mergeKey", "*")
+    staged_part_1 = select_expr(changed, "NULL as mergeKey", "updates.*")
+    staged_part_2 = select_expr(updates_df, f"{primary_key} as mergeKey", "*")
     staged_updates = staged_part_1.union(staged_part_2)
 
     insert_values = {

@@ -90,11 +90,10 @@ def write_stream_scd2_to_delta(
     Scale shape identical to the batch operator: one join bounded by
     2×|batch| + one stats-pruned merge; the batch is cached for the
     call so the merge's jobs don't re-scan the streaming source."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from jodie_spark.operators.scd import type2_generic_upsert
+    from jodie_spark.tables.gateway import select_expr
     from jodie_spark.tables.log import DeltaLog
+    from jodie_spark.tables.merge import quote_ident as q, type_ddl
     from jodie_spark.tables.table import DeltaTable, write_delta
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -102,23 +101,24 @@ def write_stream_scd2_to_delta(
         try:
             if batch_df.isEmpty():
                 return
-            w = Window.partitionBy(primary_key).orderBy(
-                F.col(effective_time_col).desc()
+            ranked = select_expr(
+                batch_df,
+                "*",
+                f"row_number() OVER (PARTITION BY {q(primary_key)} "
+                f"ORDER BY {q(effective_time_col)} DESC) AS __rn__",
             )
-            batch = (
-                batch_df.withColumn("__rn__", F.row_number().over(w))
-                .filter("__rn__ = 1")
-                .select(primary_key, *attr_cols, effective_time_col)
+            batch = select_expr(
+                ranked.filter("__rn__ = 1"),
+                *[q(c) for c in (primary_key, *attr_cols, effective_time_col)],
             )
             if not DeltaLog(path).exists():
-                init = batch.select(
-                    primary_key,
-                    *attr_cols,
-                    F.lit(True).alias(is_current_col),
-                    F.col(effective_time_col),
-                    F.lit(None)
-                    .cast(batch.schema[effective_time_col].dataType)
-                    .alias(end_time_col),
+                end_type = type_ddl(batch.schema[effective_time_col].dataType)
+                init = select_expr(
+                    batch,
+                    *[q(c) for c in (primary_key, *attr_cols)],
+                    f"TRUE AS {q(is_current_col)}",
+                    q(effective_time_col),
+                    f"CAST(NULL AS {end_type}) AS {q(end_time_col)}",
                 )
                 write_delta(init, path)
                 return
@@ -207,14 +207,15 @@ def write_stream_merge_to_delta(
     Spark the batch's size, not to save re-scans (the one-task merge
     reads its source once): a foreachBatch plan has no size estimate,
     a filled cache has its real one. The merge's one-task gate
-    (``merge._size_estimate``) needs that size, and so does Spark's
+    (``gateway.size_estimate``) needs that size, and so does Spark's
     planning of the one-task join, which leaves two one-partition sides
     unshuffled only when both are known to be small. Skipping the check
     leaves the cache unfilled: the merge then probes, and a warm batch
     into a one-file table runs 6 Spark jobs instead of 2. Do not remove
     the check or the cache to save a job."""
     from jodie_spark.tables.log import DeltaLog
-    from jodie_spark.tables.merge import num_partitions, quote_ident as q, star_assignments
+    from jodie_spark.tables.gateway import num_partitions, select_expr
+    from jodie_spark.tables.merge import quote_ident as q, star_assignments
     from jodie_spark.tables.table import DeltaTable, write_delta
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -240,7 +241,8 @@ def write_stream_merge_to_delta(
             if sequence_col is not None:
                 # __rn__ stays on the batch: every clause and the first
                 # write name their columns
-                batch = rows.selectExpr(
+                batch = select_expr(
+                    rows,
                     "*",
                     "row_number() OVER (PARTITION BY "
                     f"{', '.join(q(k) for k in keys)} "
@@ -255,7 +257,7 @@ def write_stream_merge_to_delta(
                 if delete_col is not None:
                     init = init.filter(f"not coalesce({q(delete_col)}, false)")
                 write_delta(
-                    init.selectExpr(*[q(c) for c in data_cols]),
+                    select_expr(init, *[q(c) for c in data_cols]),
                     path,
                     partition_by=partition_by or [],
                 )

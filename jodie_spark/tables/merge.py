@@ -49,13 +49,14 @@ re-expressed as DataFrame ops so Catalyst plans the joins):
      partition, is a sort-merge join with no exchange and no broadcast,
      so join, staging, lowering and write run as one job of one task.
      The write's observation counts the target rows the merge touches,
-     and with the multiple-match check on, the target rows matched more
-     than once (a window over a target row id, coalesced to one
-     partition too); the source row count is an observation on the
-     source in the same job. A refusal or a miss deletes the written
-     files; a miss then commits what the probe path commits when
-     nothing is touched, the inserts alone rewritten over an empty
-     target. The output is sorted by the join key.
+     the source rows (numbered 0…n-1 above the source's coalesce, so
+     the highest number counts each row once), and with the
+     multiple-match check on, the target rows matched more than once (a
+     window over a target row id, coalesced to one partition too). A
+     refusal or a miss deletes the written files; a miss then commits
+     what the probe path commits when nothing is touched, the inserts
+     alone rewritten over an empty target. The output is sorted by the
+     join key.
 
 Merge-on-read (``execute(deletion_vectors=True)``) joins the source
 with the candidates' coordinate scan, the same
@@ -83,10 +84,22 @@ import time
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING, Any
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from jodie_spark.errors import JodieValidationError
+from jodie_spark.tables.gateway import (
+    Observation,
+    expr,
+    function,
+    group_agg,
+    lit,
+    num_partitions,
+    observe,
+    observed,
+    select_expr,
+    size_estimate,
+)
 from jodie_spark.tables.log import remove_action
 from jodie_spark.tables.pruning import split_conjuncts, _referenced_names
 
@@ -234,7 +247,9 @@ def lower_assignments(
             v = assignments[fld.name]
             if isinstance(v, Column):
                 h = f"__col{len(hidden)}__"
-                hidden[h] = F.call_function("if", F.expr(branch), v, F.lit(None))
+                hidden[h] = function(
+                    "call_function", "if", [expr(branch), v, lit(None)]
+                )
                 v = h
             else:
                 v = _frag(v)
@@ -288,12 +303,10 @@ def _multiple_matches_error():
 
 
 def _observed(ob: Observation, keys: list[str]) -> dict[str, int]:
-    """The ``keys`` of an :func:`~jodie_spark.tables.table.observe`
+    """The ``keys`` of an :func:`~jodie_spark.tables.gateway.observe`
     observation, zero when Catalyst's empty-relation propagation
     optimized the observed subtree away (e.g. empty source)."""
-    from jodie_spark.tables.table import observed_or_none
-
-    got = observed_or_none(ob) or {}
+    got = observed(ob) or {}
     return {k: int(got.get(k) or 0) for k in keys}
 
 
@@ -302,9 +315,7 @@ def _source_rows(obs: Observation, source: DataFrame) -> int:
     source (over its cache when the merge cached it). A probe whose
     join comes out empty lets AQE fold the source scan away, and the
     observation with it, which used to read as 0 source rows."""
-    from jodie_spark.tables.table import observed_or_none
-
-    got = observed_or_none(obs)
+    got = observed(obs)
     return int(got["numSourceRows"]) if got is not None else source.count()
 
 
@@ -339,23 +350,6 @@ def one_small_candidate(conf, candidates: list[dict[str, Any]]) -> bool:
         and int(candidates[0]["size"])
         <= conf_bytes(conf, "spark.sql.files.openCostInBytes")
     )
-
-
-def _size_estimate(df: DataFrame) -> int:
-    """Spark's size estimate for ``df``: its optimized plan's
-    ``sizeInBytes``, the number the static broadcast rule compares with
-    the threshold. A persisted plan reports its cached bytes once the
-    cache is filled. PySpark has no public handle on plan statistics,
-    hence ``_jdf``."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-
-def num_partitions(df: DataFrame) -> int:
-    """The partition count of ``df``'s plan, computed without running
-    it (do not call it on a plan with an exchange: adaptive execution
-    runs the plan's stages to learn it). ``df.rdd`` would first wrap
-    the plan in a Python-pickling RDD, two more round trips."""
-    return int(df._jdf.rdd().getNumPartitions())
 
 
 def _assign_identities(result: DataFrame, schema, id_generate, keep_cols):
@@ -732,8 +726,8 @@ class DeltaMergeBuilder:
         ambiguous; otherwise it is TRUE. Added after the cache, so the
         persisted source holds the source columns only."""
         if any(cl.star for cl in self._matched + self._not_matched):
-            return cached.withColumn("__src__", F.struct(self.source["*"]))
-        return cached.withColumn("__src__", F.lit(True))
+            return cached.withColumn("__src__", function("struct", [self.source["*"]]))
+        return cached.withColumn("__src__", lit(True))
 
     def _stage_actions(
         self, joined: DataFrame, hidden: dict[str, Column], has_target: bool = True
@@ -777,7 +771,8 @@ class DeltaMergeBuilder:
             f" WHEN {is_t} THEN 'copy'"
             f"{_first(n, on_insert, True)} ELSE 'drop' END"
         )
-        staged = joined.selectExpr(
+        staged = select_expr(
+            joined,
             "*",
             f"{_idx_sql(m, on_match)} AS __m_idx__",
             f"{_idx_sql(n, on_insert)} AS __i_idx__",
@@ -843,7 +838,6 @@ class DeltaMergeBuilder:
             _dv_bitmaps,
             apply_generated_columns,
             enforce_check_constraints,
-            observe,
             plan_candidate_files,
         )
 
@@ -874,10 +868,10 @@ class DeltaMergeBuilder:
                 t._read_candidates(
                     snap, schema, candidates, lineage=lineage, coords=True, old_dvs=old_dvs
                 )
-                .withColumn("__t_exists__", F.lit(True))
+                .withColumn("__t_exists__", lit(True))
                 .alias(talias)
             )
-            joined = tgt.join(src, F.expr(self.condition), "full_outer")
+            joined = tgt.join(src, expr(self.condition), "full_outer")
             hidden, fields = self._lower(schema, talias)
             staged = self._stage_actions(joined, hidden).cache()
 
@@ -892,7 +886,7 @@ class DeltaMergeBuilder:
             )
             if check:
                 marks, pair_obs = observe(marks, {"pairs": "count(1)"})
-            dv_marks = marks.select("__fp__", "__ri__").distinct()
+            dv_marks = select_expr(marks, "__fp__", "__ri__").distinct()
             rows = t._write_dvs_for(dv_marks, old_dvs) if candidates else []
             marked = sum(int(r["new_card"]) - int(r["old_card"]) for r in rows)
             if check and rows and _observed(pair_obs, ["pairs"])["pairs"] > marked:
@@ -925,8 +919,8 @@ class DeltaMergeBuilder:
                 staged,
                 {a: f"count_if(__action__ = '{a}')" for a in ("update", "delete", "insert")},
             )
-            emitted = emitted.filter("__action__ IN ('update', 'insert')").selectExpr(
-                *fields, *lineage_out
+            emitted = select_expr(
+                emitted.filter("__action__ IN ('update', 'insert')"), *fields, *lineage_out
             )
             adds = t._write_rewrite_files(
                 snap,
@@ -987,7 +981,7 @@ class DeltaMergeBuilder:
     def execute(
         self, allow_multiple_matches: bool = False, deletion_vectors: bool = False
     ) -> None:
-        from jodie_spark.tables.table import observe, plan_candidate_files, read_files_df
+        from jodie_spark.tables.table import plan_candidate_files, read_files_df
 
         t = self.table
         spark = t.spark
@@ -1128,7 +1122,7 @@ class DeltaMergeBuilder:
         # the one-task rewrite (module docstring) also needs a source
         # Spark's static rule would broadcast: an unknown or large one
         # keeps the other shapes
-        one_task = one_task and limit >= 0 and _size_estimate(self.source) <= limit
+        one_task = one_task and limit >= 0 and size_estimate(self.source) <= limit
         # whether the source is small enough to broadcast is settled once
         # the probe has filled the cache. The row-lineage scan joins a
         # broadcast of its own, so its partition count is not known
@@ -1150,16 +1144,18 @@ class DeltaMergeBuilder:
         # from an eager count of the source instead — one extra job.
         # The staged-counts observation is safe either way: it attaches
         # to the target-derived plan, the same session the write
-        # executes on.
-        cached, src_obs = (
-            (self.source.select("*"), None)
-            if mode_id
-            else observe(self.source, {"numSourceRows": "count(1)"})
-        )
+        # executes on. The one-task rewrite counts the source rows in
+        # its own observation.
+        if mode_id:
+            cached, src_obs = select_expr(self.source, "*"), None
+        elif one_task:
+            cached, src_obs = self.source, None
+        else:
+            cached, src_obs = observe(self.source, {"numSourceRows": "count(1)"})
         if broadcast and self._not_matched:
             # source row ids, fixed by the cache: the probe observes the
             # matched ones, the rewrite inserts the others
-            cached = cached.withColumn("__sid__", F.monotonically_increasing_id())
+            cached = cached.withColumn("__sid__", function("monotonically_increasing_id"))
         if not one_task:
             # the source plan is consumed by both passes (find-touched
             # semi join, then the rewrite join); staged sources like
@@ -1188,7 +1184,7 @@ class DeltaMergeBuilder:
                     tgt = t._read_candidates(snap, schema, candidates).alias(talias)
                 else:
                     tgt = read_files_df(spark, t.path, schema, []).alias(talias)
-                joined = src.join(tgt, F.expr(self.condition), "left_anti")
+                joined = src.join(tgt, expr(self.condition), "left_anti")
             elif one_task:
                 # no probe: the rewrite's observation decides whether
                 # the candidate is touched
@@ -1203,7 +1199,7 @@ class DeltaMergeBuilder:
                     # ids, unless the source is known to be too large to
                     # broadcast (an RDD-backed source has no estimate
                     # until the probe fills its cache)
-                    est = _size_estimate(cached)
+                    est = size_estimate(cached)
                     broadcast = est <= limit or est >= _NO_SIZE_ESTIMATE
                 if candidates and (
                     self._matched or self._not_matched or self._not_matched_by_source
@@ -1217,7 +1213,7 @@ class DeltaMergeBuilder:
                     broadcast = (
                         broadcast
                         and len(matched_sids) <= _MAX_INSERT_FILTER_IDS
-                        and _size_estimate(src) <= limit
+                        and size_estimate(src) <= limit
                     )
                 # -- pass 2: rewrite touched files + insert unmatched rows ----
                 joined, n_out = self._rewrite_join(
@@ -1232,6 +1228,7 @@ class DeltaMergeBuilder:
             adds, cdc_actions, counts, id_schema_meta = self._rewrite(
                 joined, *rewrite, n_out=n_out, one_task=one_task, check=not multi_ok
             )
+            source_rows = counts.get("source_rows")
             if one_task and not counts["hits"]:
                 # a miss: the candidate is not touched, and the commit is
                 # the probe path's when nothing is (the inserts alone,
@@ -1246,11 +1243,12 @@ class DeltaMergeBuilder:
                     )
                 else:
                     counts = dict.fromkeys(counts, 0)
-            num_source_rows = (
-                eager_source_rows
-                if eager_source_rows is not None
-                else _source_rows(src_obs, cached)
-            )
+            if eager_source_rows is not None:
+                num_source_rows = eager_source_rows
+            elif one_task:
+                num_source_rows = source_rows
+            else:
+                num_source_rows = _source_rows(src_obs, cached)
         finally:
             if not one_task:
                 cached.unpersist()
@@ -1338,10 +1336,11 @@ class DeltaMergeBuilder:
 
         ``one_task`` coalesces each side to one partition: both report
         ``SinglePartition``, so Catalyst plans a sort-merge join with no
-        exchange and no broadcast. With ``check`` (the multiple-match
-        check) ``__n__`` counts each target row's matches, a window over
-        the row id ``__t_id__`` that a ``coalesce(1)`` above the join
-        keeps exchange-free too."""
+        exchange and no broadcast. The source rows carry ``__s_id__``,
+        0…n-1 in the one task. With ``check`` (the multiple-match check)
+        ``__n__`` counts each target row's matches, a window over the row
+        id ``__t_id__`` that a ``coalesce(1)`` above the join keeps
+        exchange-free too."""
         t = self.table
         if touched:
             # fresh scan over ONLY the touched adds — full columns, but a
@@ -1358,27 +1357,34 @@ class DeltaMergeBuilder:
                 from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
 
                 tgt = tgt.withColumn(
-                    LIN_RID, F.lit(None).cast("long")
-                ).withColumn(LIN_RCV, F.lit(None).cast("long"))
+                    LIN_RID, lit(None).cast("long")
+                ).withColumn(LIN_RCV, lit(None).cast("long"))
         if one_task:
             tgt = tgt.coalesce(1)
             if check:
-                tgt = tgt.withColumn("__t_id__", F.monotonically_increasing_id())
-        tgt = tgt.withColumn("__t_exists__", F.lit(True)).alias(talias)
+                tgt = tgt.withColumn("__t_id__", function("monotonically_increasing_id"))
+        tgt = tgt.withColumn("__t_exists__", lit(True)).alias(talias)
         if one_task:
-            joined = tgt.join(src.coalesce(1), F.expr(self.condition), "full_outer")
+            # the source rows, numbered 0…n-1 in the one task: the write's
+            # observation counts them once however many rows each matches
+            src = src.coalesce(1).withColumn(
+                "__s_id__", function("monotonically_increasing_id")
+            )
+            joined = tgt.join(src, expr(self.condition), "full_outer")
             if check:
-                joined = joined.coalesce(1).selectExpr(
-                    "*", "count(__src__) OVER (PARTITION BY __t_id__) AS __n__"
+                joined = select_expr(
+                    joined.coalesce(1),
+                    "*",
+                    "count(__src__) OVER (PARTITION BY __t_id__) AS __n__",
                 )
             return joined, None
         if not broadcast:
-            return tgt.join(src, F.expr(self.condition), "full_outer"), None
+            return tgt.join(src, expr(self.condition), "full_outer"), None
         # the updated, deleted and copied rows: the static rule broadcasts
         # the source (its size was just checked), so there is no target
         # shuffle and each file keeps its row order
         joined = (tgt if touched else tgt.limit(0)).join(
-            src, F.expr(self.condition), "left_outer"
+            src, expr(self.condition), "left_outer"
         )
         if not self._not_matched:
             return joined, None
@@ -1391,7 +1397,7 @@ class DeltaMergeBuilder:
             else src
         )
         joined = joined.union(
-            tgt.limit(0).join(new, F.expr(self.condition), "right_outer")
+            tgt.limit(0).join(new, expr(self.condition), "right_outer")
         )
         # one file per target scan partition: a one-file target and its
         # inserts stay one file
@@ -1409,8 +1415,10 @@ class DeltaMergeBuilder:
 
         On the ``one_task`` rewrite the same observation counts ``hits``,
         the target rows the merge touches (matched, or hit by a by-source
-        clause), and with ``check`` ``dups``, the target rows matching
-        more than one source row. They are read through
+        clause), ``source_rows`` (``numSourceRows``, from the numbers
+        :meth:`_rewrite_join` gives the source rows), and with ``check``
+        ``dups``, the target rows matching more than one source row.
+        They are read through
         :func:`~jodie_spark.tables.table.observation_values`, so a
         missing one raises, and decide before any change row is written:
         dups refuse the merge, and no hits mean the candidate is not
@@ -1420,7 +1428,6 @@ class DeltaMergeBuilder:
             apply_generated_columns,
             enforce_check_constraints,
             observation_values,
-            observe,
         )
 
         t = self.table
@@ -1431,6 +1438,7 @@ class DeltaMergeBuilder:
                 "count_if(__t_exists__ IS NOT NULL"
                 " AND (__src__ IS NOT NULL OR __b_idx__ >= 0))"
             )
+            aggs["source_rows"] = "coalesce(max(__s_id__) + 1, 0)"
             if check:
                 aggs["dups"] = "count_if(__t_exists__ IS NOT NULL AND __n__ > 1)"
         staged, obs = observe(self._stage_actions(joined, hidden, has_target), aggs)
@@ -1458,9 +1466,11 @@ class DeltaMergeBuilder:
                     if has_target
                     else [f"CAST(NULL AS BIGINT) AS {c}" for c in (LIN_RID, LIN_RCV)]
                 )
-            result = staged.filter(
-                "__action__ IN ('update', 'copy', 'insert')"
-            ).selectExpr(*fields, *lineage_out)
+            result = select_expr(
+                staged.filter("__action__ IN ('update', 'copy', 'insert')"),
+                *fields,
+                *lineage_out,
+            )
             id_schema_meta = None
             if id_generate:
                 keep_cols = [f.name for f in schema.fields] + (
@@ -1515,14 +1525,19 @@ class DeltaMergeBuilder:
                 ) + [("insert", fields, "insert")]
                 change_df = None
                 for action, cols, change in legs:
-                    leg = staged.filter(f"__action__ = '{action}'").selectExpr(
-                        *cols, f"'{change}' AS _change_type"
+                    leg = select_expr(
+                        staged.filter(f"__action__ = '{action}'"),
+                        *cols,
+                        f"'{change}' AS _change_type",
                     )
                     change_df = (
                         leg if change_df is None else change_df.unionByName(leg)
                     )
-                if n_out is not None:
-                    change_df = change_df.coalesce(n_out)
+                # no more change files than data files: uncoalesced,
+                # each change leg writes a file per partition
+                change_df = change_df.coalesce(
+                    n_out if n_out is not None else max(1, len(adds))
+                )
                 cdc_actions = t._write_cdf_files(
                     change_df, snap,
                     logical_schema=schema if schema_evolved else None,
@@ -1576,17 +1591,18 @@ class DeltaMergeBuilder:
             ).withColumnRenamed("__file__", "__path__")
         else:
             probe = t._read_candidates(snap, schema, candidates).withColumn(
-                "__path__", F.input_file_name()
+                "__path__", function("input_file_name")
             )
         # the multiple-match guard must run whenever touched files will
         # be rewritten, not only when matched clauses exist (by-source-
         # only and slow-path insert-only merges rewrite copies too)
         if sids:
-            rows = probe.alias(talias).join(src, F.expr(self.condition), "inner")
+            rows = probe.alias(talias).join(src, expr(self.condition), "inner")
         elif multi_ok:
-            rows = probe.alias(talias).join(
-                src, F.expr(self.condition), "left_semi"
-            ).select("__path__")
+            rows = select_expr(
+                probe.alias(talias).join(src, expr(self.condition), "left_semi"),
+                "__path__",
+            )
         else:
             # same shape as MergeIntoCommand.findTouchedFiles: matches
             # counted per target row (partial-aggregated map-side, so
@@ -1594,13 +1610,15 @@ class DeltaMergeBuilder:
             # file set is observed above the count: an observation
             # under the shuffle is dropped when AQE proves the join
             # empty (empty source)
-            rows = (
-                probe.withColumn("__t_id__", F.monotonically_increasing_id())
+            joined = (
+                probe.withColumn("__t_id__", function("monotonically_increasing_id"))
                 .alias(talias)
-                .join(src, F.expr(self.condition), "inner")
-                .groupBy("__t_id__", "__path__")
-                .agg(F.expr("count(1) AS __n__"))
-                .select("__path__", "__n__")
+                .join(src, expr(self.condition), "inner")
+            )
+            rows = select_expr(
+                group_agg(joined, ["__t_id__", "__path__"], "count(1) AS __n__"),
+                "__path__",
+                "__n__",
             )
         if self._not_matched_by_source:
             # files of UNMATCHED target rows satisfying some by-source
@@ -1609,11 +1627,13 @@ class DeltaMergeBuilder:
                 _frag(cl.condition) if cl.condition else "TRUE"
                 for cl in self._not_matched_by_source
             )
-            rows = rows.unionByName(
+            unmatched = (
                 probe.alias(talias)
-                .join(src, F.expr(self.condition), "left_anti")
+                .join(src, expr(self.condition), "left_anti")
                 .filter(bs_cond)
-                .selectExpr("__path__", *([] if multi_ok else ["1 AS __n__"]))
+            )
+            rows = rows.unionByName(
+                select_expr(unmatched, "__path__", *([] if multi_ok else ["1 AS __n__"]))
             )
         # only "> 0" is read: a re-executed task cannot turn the count
         # (nor the file set, a set union) into a wrong answer

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from jodie_spark.tables.gateway import select_expr
+
 MAT_RID_PROP = "delta.rowTracking.materializedRowIdColumnName"
 MAT_RCV_PROP = "delta.rowTracking.materializedRowCommitVersionColumnName"
 
@@ -200,7 +202,8 @@ def read_candidates_with_lineage(
         out = out.join(positions, ["__file__", "__ri__"], "left_anti")
 
     rid, rcv = quote_ident(rid_col), quote_ident(rcv_col)
-    return out.selectExpr(
+    return select_expr(
+        out,
         *[quote_ident(f.name) for f in schema.fields],
         f"__file__ AS {quote_ident(file_col)}",
         *(["__ri__"] if coords else []),

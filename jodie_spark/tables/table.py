@@ -21,13 +21,22 @@ import warnings
 from dataclasses import dataclass, field
 from typing import Any
 
-from py4j.protocol import Py4JJavaError
 from pyspark import Broadcast
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jodie_spark.errors import DeltaProtocolError, JodieValidationError
+from jodie_spark.tables.gateway import (
+    Observation,
+    apply_in_pandas,
+    load,
+    observe,
+    observed,
+    parquet_reader,
+    select_expr,
+    session_key,
+)
 from jodie_spark.tables.log import (
     CDF_PROP,
     CHECKPOINT_PROTECTION_PROP,
@@ -153,19 +162,6 @@ _FID_MIRRORED_CONFS = (
 )
 
 
-def _session_key(spark: SparkSession) -> str:
-    """The ``sessionUUID`` of the JVM session ``spark`` wraps, asked once
-    per wrapper. Caches of JVM-side objects key on it, not on the Python
-    wrapper: foreachBatch hands every micro-batch a new wrapper of the
-    query's one session, and ``spark.newSession()`` is a new session."""
-    key = spark.__dict__.get("_jodie_session_key")
-    if key is None:
-        key = spark.__dict__["_jodie_session_key"] = str(
-            spark._jsparkSession.sessionUUID()
-        )
-    return key
-
-
 class _Lru:
     """A bounded map, least recently used entry out first; one lock, as a
     streaming sink scans from its own thread."""
@@ -207,7 +203,7 @@ def _field_id_read_session(spark: SparkSession) -> SparkSession:
     DataFrame keeps id-matching even when unioned/joined/collected from
     the user's session, whose conf is never touched.
 
-    The child is kept per parent JVM session (:func:`_session_key`).
+    The child is kept per parent JVM session (:func:`gateway.session_key`).
     Every call re-reads the mirrored confs from ``spark`` and sets on
     the child only those whose value changed since the last call."""
 
@@ -217,7 +213,7 @@ def _field_id_read_session(spark: SparkSession) -> SparkSession:
         child._jodie_mirrored_confs = {}
         return child
 
-    child = _FID_SESSIONS.get_or_make(_session_key(spark), make)
+    child = _FID_SESSIONS.get_or_make(session_key(spark), make)
     mirrored = child._jodie_mirrored_confs
     for key in _FID_MIRRORED_CONFS:
         try:
@@ -253,7 +249,7 @@ def scan_parquet(
     The reader (``format``, ``basePath``, schema) is set up once per
     (JVM session, ``base``, ``schema``), so a repeat scan pays only the
     ``load``, a one-path scan one round trip. The key is the JVM
-    session (:func:`_session_key`), so the new wrapper foreachBatch
+    session (:func:`gateway.session_key`), so the new wrapper foreachBatch
     hands each micro-batch finds the reader the last one prepared. A
     schema carrying parquet field ids routes the scan through the
     field-id child session.
@@ -272,26 +268,16 @@ def scan_parquet(
     if schema is not None and schema_requests_field_ids(schema):
         spark = _field_id_read_session(spark)
 
-    def make():
-        reader = spark.read.format("parquet")
-        if base is not None:
-            reader = reader.option("basePath", base)
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader
-
     reader = _SCAN_READERS.get_or_make(
-        (_session_key(spark), base, schema.json() if schema is not None else None),
-        make,
+        (session_key(spark), base, schema.json() if schema is not None else None),
+        lambda: parquet_reader(spark, base, schema),
     )
-    # a one-path list as a string: a list is built on the JVM side
-    # element by element, five more round trips
-    df = reader.load(paths[0] if len(paths) == 1 else paths) if paths else reader.load()
+    df = load(spark, reader, paths)
     if cols is None and base is not None and any(
         "=" in p[len(base):].rpartition("/")[0] for p in paths
     ):
         cols = [quote_ident(f.name) for f in schema.fields]
-    return df.selectExpr(*cols) if cols else df
+    return select_expr(df, *cols) if cols else df
 
 
 def read_files_df(
@@ -388,7 +374,7 @@ def _read_external_files_df(
     present = set(scan.columns) - {"__fp__"}
     missing = [f for f in schema.fields if f.name not in present]
     if not missing:
-        return scan.selectExpr(*[quote_ident(f.name) for f in schema.fields])
+        return select_expr(scan, *[quote_ident(f.name) for f in schema.fields])
     # map Spark's exact URI spelling back to add entries (same
     # collect-and-match as the DV reader — O(#files), never per row;
     # string-reconstructing the URI driver-side is how silent
@@ -396,7 +382,7 @@ def _read_external_files_df(
     from jodie_spark.fs import scanned_path_key
 
     rows = []
-    for fp in observed_file_uris(scan.select("__fp__"), "__fp__"):
+    for fp in observed_file_uris(select_expr(scan, "__fp__"), "__fp__"):
         add = by_real.get(scanned_path_key(fp))
         if add is None:
             raise DeltaProtocolError(
@@ -411,7 +397,8 @@ def _read_external_files_df(
     )
     joined = scan.join(F.broadcast(spark.createDataFrame(rows, pv_schema)), "__fp__")
     missing_names = {m.name for m in missing}
-    return joined.selectExpr(
+    return select_expr(
+        joined,
         *[
             f"CAST({quote_ident(f.name)} AS {type_ddl(f.dataType)}) AS {quote_ident(f.name)}"
             if f.name in missing_names
@@ -420,6 +407,16 @@ def _read_external_files_df(
         ]
     )
 
+
+# the rows of :meth:`DeltaTable._write_dvs_for`, one per touched file
+_DV_ROWS = T.StructType(
+    [
+        T.StructField("fp", T.StringType()),
+        T.StructField("desc", T.StringType()),
+        T.StructField("old_card", T.LongType()),
+        T.StructField("new_card", T.LongType()),
+    ]
+)
 
 # Below this many total deleted rows the position set broadcasts, so
 # the anti-join adds no shuffle of the data side.
@@ -539,7 +536,7 @@ def _read_dv_files_df(
         )
 
     rows = []
-    for fp in observed_file_uris(scan.select("__fp__"), "__fp__"):
+    for fp in observed_file_uris(select_expr(scan, "__fp__"), "__fp__"):
         add = by_real.get(scanned_path_key(fp))
         if add is None:
             raise DeltaProtocolError(
@@ -741,7 +738,7 @@ class _DmlOp:
         )
         return enforce_check_constraints(
             apply_generated_columns(
-                rows.selectExpr(*self.fields, *lineage_out), self.schema
+                select_expr(rows, *self.fields, *lineage_out), self.schema
             ),
             self.snap.configuration,
         )
@@ -752,9 +749,9 @@ class _DmlOp:
         names = [quote_ident(f.name) for f in self.schema.fields]
         hit = rows.filter(self.cond)
         if self.fields is None:
-            return hit.selectExpr(*names, "'delete' AS _change_type")
-        return hit.selectExpr(*names, "'update_preimage' AS _change_type").unionByName(
-            hit.selectExpr(*self.fields, "'update_postimage' AS _change_type")
+            return select_expr(hit, *names, "'delete' AS _change_type")
+        return select_expr(hit, *names, "'update_preimage' AS _change_type").unionByName(
+            select_expr(hit, *self.fields, "'update_postimage' AS _change_type")
         )
 
     def metrics(self, t0: float) -> dict[str, str]:
@@ -1927,7 +1924,7 @@ class DeltaTable:
     # -- deletion-vector (merge-on-read) machinery ---------------------------
 
     def _write_dvs_for(self, matched: DataFrame, old_dvs: Broadcast | None) -> list[Any]:
-        """One ``applyInPandas`` group per touched file serializes and
+        """One pandas group per touched file serializes and
         writes the (old ∪ new) position bitmap EXECUTOR-side
         (:func:`~jodie_spark.tables.deletion_vectors.write_dv_file`: a
         relative ``u`` descriptor under the table's
@@ -1966,14 +1963,9 @@ class DeltaTable:
                 }
             )
 
-        return (
-            matched.select("__fp__", "__ri__")
-            .groupBy("__fp__")
-            .applyInPandas(
-                _make_dv, "fp string, desc string, old_card long, new_card long"
-            )
-            .collect()  # one row per TOUCHED FILE — bounded by #files
-        )
+        return apply_in_pandas(
+            select_expr(matched, "__fp__", "__ri__"), "__fp__", _make_dv, _DV_ROWS
+        ).collect()  # one row per TOUCHED FILE — bounded by #files
 
     def _dv_action_pairs(
         self, candidates: list[dict[str, Any]], rows: list[Any], now_ms: int
@@ -2768,35 +2760,6 @@ def map_touched_paths(
     return [by_abs[p] for p in sorted(normalized)]
 
 
-# the one struct metric every :func:`observe` observation carries
-_METRICS = "__metrics__"
-
-
-def observe(df: DataFrame, metrics: dict[str, str]) -> tuple[DataFrame, Observation]:
-    """``df`` observing ``metrics`` (name → SQL aggregate text), and the
-    observation. The metrics travel as ONE struct column, ``struct(<agg>
-    AS <name>, …)``: one ``F.expr`` and an empty varargs Seq, where a
-    Column per metric cost three round trips and a Seq element each.
-    Read it with :func:`observation_values`, or with
-    :func:`observed_or_none` where a dropped observation has a meaning."""
-    obs = Observation()
-    body = ", ".join(f"{agg} AS {quote_ident(name)}" for name, agg in metrics.items())
-    return df.observe(obs, F.expr(f"struct({body}) AS {_METRICS}")), obs
-
-
-def observed_or_none(obs: Observation) -> dict[str, Any] | None:
-    """The metrics an :func:`observe` observation reported, or None when
-    it reported none: AQE's empty-relation propagation drops an
-    observation that sits under a shuffle, with the subtree it
-    removes."""
-    try:
-        got = obs.get
-    except Py4JJavaError:  # no metrics row: the observation was dropped
-        return None
-    row = got.get(_METRICS)
-    return None if row is None else row.asDict()
-
-
 def observed_metrics(df: DataFrame, **metrics: str) -> dict[str, Any]:
     """Run ``df`` by ONE noop action while observing ``metrics`` (name →
     SQL aggregate text) and return their values. Every touched-file and
@@ -2811,18 +2774,18 @@ def observed_metrics(df: DataFrame, **metrics: str) -> dict[str, Any]:
     over an empty source or a filter that folds to false, but AQE's
     empty-relation propagation can drop an observation that sits under
     a shuffle. A missing metric raises (:func:`observation_values`)."""
-    observed, obs = observe(df, metrics)
-    observed.write.format("noop").mode("overwrite").save()
+    df, obs = observe(df, metrics)
+    df.write.format("noop").mode("overwrite").save()
     return observation_values(obs, "probe")
 
 
 def observation_values(obs: Observation, what: str) -> dict[str, Any]:
-    """The metrics an :func:`observe` observation reported after its
-    action ran. A missing report RAISES: the probe's file set and a DML
-    rewrite's match count decide what commits, and read as "no files" or
-    0 they would make a DML commit nothing, or a merge re-insert its
-    matched rows as duplicates."""
-    got = observed_or_none(obs)
+    """The metrics a :func:`~jodie_spark.tables.gateway.observe`
+    observation reported after its action ran. A missing report RAISES:
+    the probe's file set and a DML rewrite's match count decide what
+    commits, and read as "no files" or 0 they would make a DML commit
+    nothing, or a merge re-insert its matched rows as duplicates."""
+    got = observed(obs)
     if got is None:
         raise DeltaProtocolError(
             f"the {what}'s observation reported no metrics; refusing to "

@@ -14,14 +14,16 @@ sys.path.insert(0, "/root/repo")
 def spark():
     from jodie_spark.session import get_spark
 
-    from jodie_spark.tables.table import _session_key
+    from jodie_spark.tables.gateway import jvm_methods, session_key
 
     s = get_spark("jodie_tests", master="local[4]")
     s.conf.set("spark.sql.shuffle.partitions", "4")
     # the first scan through a session wrapper asks its JVM session's
-    # key once; ask it here, so no pinned round-trip count depends on
-    # which test scanned first
-    _session_key(s)
+    # key once, and the first plan built on a gateway looks its JVM
+    # methods up; do both here, so no pinned round-trip count depends
+    # on which test ran first
+    session_key(s)
+    jvm_methods(s)
     yield s
 
 
@@ -32,31 +34,64 @@ def tmpdir_path():
     shutil.rmtree(d, ignore_errors=True)
 
 
-def py4j_round_trips(spark, fn) -> int:
+# the kinds of py4j command, as the gateway audit in SCALE.md counts them
+PY4J_KINDS = ("release", "reflection", "seq", "call")
+
+
+def py4j_commands(spark, fn) -> dict[str, int]:
     """py4j commands sent to the JVM while ``fn()`` runs, from every
     thread (a streaming query's foreachBatch callback too), counted on
-    the gateway client the way perfbench's GatewayCounter counts them.
-    Object-release commands (py4j's ``m``) are left out: they follow
-    Python's garbage collector, which frees earlier work's objects at
-    arbitrary points."""
+    the gateway client the way perfbench's GatewayCounter counts them,
+    by kind:
+
+    - ``release``: py4j's object releases (``m``), which follow
+      Python's garbage collector and free earlier work's objects at
+      arbitrary points;
+    - ``reflection``: class and member lookups (``r``);
+    - ``seq``: building a Seq from a Python list (the ``ArrayList``
+      constructor, its ``add`` calls, ``PythonUtils.toSeq``);
+    - ``call``: every other call and constructor."""
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     lock = threading.Lock()
-    n = 0
+    counts = dict.fromkeys(PY4J_KINDS, 0)
+    lists: set[str] = set()
+
+    def kind(command: str) -> str:
+        if command.startswith("m\n"):
+            return "release"
+        if command.startswith("r\n"):
+            return "reflection"
+        if command.startswith("i\njava.util.ArrayList\n"):
+            return "seq"
+        if command.startswith("c\n"):
+            target, name = command.split("\n", 3)[1:3]
+            if name == "toSeq" or (name == "add" and target in lists):
+                return "seq"
+        return "call"
 
     def counted(command, *args, **kwargs):
-        nonlocal n
-        if not command.startswith("m"):
-            with lock:
-                n += 1
-        return send(command, *args, **kwargs)
+        answer = send(command, *args, **kwargs)
+        with lock:
+            k = kind(command)
+            counts[k] += 1
+            if command.startswith("i\njava.util.ArrayList\n"):
+                lists.add(answer[2:])  # "yl<id>": a java.util.List
+        return answer
 
     client.send_command = counted
     try:
         fn()
     finally:
         client.send_command = send
-    return n
+    return counts
+
+
+def py4j_round_trips(spark, fn) -> int:
+    """py4j commands sent to the JVM while ``fn()`` runs
+    (:func:`py4j_commands`), object releases left out."""
+    counts = py4j_commands(spark, fn)
+    return sum(counts.values()) - counts["release"]
 
 
 def parquet_files(path) -> list[str]:

@@ -11,7 +11,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from conftest import executed_plans, py4j_round_trips, spark_jobs, sql_executions
+from conftest import executed_plans, py4j_commands, spark_jobs, sql_executions
 from jodie_spark.tables import merge as merge_mod
 from jodie_spark.tables.table import DeltaTable, write_delta
 from test_single_file_merge import _src
@@ -141,10 +141,12 @@ def test_sink_batch_on_one_file_target_runs_two_jobs(spark, tmpdir_path):
     is gone.
 
     The warm batch's py4j commands (every thread, releases left out)
-    are pinned too, 98: the sink and the merge build few JVM objects
-    per batch (one struct metric per observation, one staging
-    projection, the scan reader an earlier batch of the query's session
-    prepared, no ``drop``, ``cache()`` over ``persist()``)."""
+    are pinned too, 52: the sink and the merge build few JVM objects
+    per batch (one struct metric on the write, one staging projection,
+    the scan reader an earlier batch of the query's session prepared,
+    no ``drop``, ``cache()`` over ``persist()``), and name no JVM class
+    or method PySpark has to look up: the 3 reflection commands left
+    are PySpark's own, in its foreachBatch wrapper."""
     import uuid
 
     import pyarrow as pa
@@ -204,7 +206,7 @@ def test_sink_batch_on_one_file_target_runs_two_jobs(spark, tmpdir_path):
 
     def measured(rows):
         jobs.append(spark_jobs(
-            spark, lambda: commands.append(py4j_round_trips(spark, lambda: batch(rows)))
+            spark, lambda: commands.append(py4j_commands(spark, lambda: batch(rows)))
         ))
 
     try:
@@ -212,7 +214,9 @@ def test_sink_batch_on_one_file_target_runs_two_jobs(spark, tmpdir_path):
             executions.append(sql_executions(spark, lambda: measured(rows)))
     finally:
         query.stop()
-    assert (jobs[1], executions[1], commands[1]) == (2, 4, 98)
+    sent = commands[1]
+    assert (jobs[1], executions[1], sum(sent.values()) - sent["release"]) == (2, 4, 52)
+    assert sent["reflection"] == 3
     t = DeltaTable.forPath(spark, dst)
     want = {k: (0, "r") for k in range(100)}
     want.update({1: (2, "b"), 4: (8, "e"), 200: (4, "n"), 201: (10, "o")})

@@ -402,13 +402,14 @@ def test_mor_dml_on_cdf_table_with_a_dotted_column_name(spark, tmpdir_path):
 
 @pytest.mark.parametrize(
     "op, jobs, round_trips",
-    [pytest.param("delete", 3, 83, id="delete"), pytest.param("update", 4, 93, id="update")],
+    [pytest.param("delete", 3, 39, id="delete"), pytest.param("update", 4, 44, id="update")],
 )
 def test_mor_dml_counts_pinned(spark, tmpdir_path, op, jobs, round_trips):
     """Spark jobs and py4j round trips of one merge-on-read DML over a
     one-file table: the bitmap write's grouping, and for UPDATE the
-    write of the updated copy. Its scans load one path as a string, and
-    the scan it caches costs one ``cache()`` call."""
+    write of the updated copy. Its scans load one path as a string, the
+    scan it caches costs one ``cache()`` call, and the bitmap write's
+    pandas UDF is built with no JVM lookups."""
     def run(name, count):
         p = os.path.join(tmpdir_path, name)
         write_delta(spark.range(100).selectExpr("id AS k", "id AS v").coalesce(1), p)

@@ -15,6 +15,7 @@ import pytest
 
 from conftest import py4j_round_trips
 from jodie_spark.tables import table as table_mod
+from jodie_spark.tables.gateway import session_key
 from jodie_spark.tables.table import DeltaTable, read_files_df, scan_parquet, write_delta
 from test_table import _mk_id_mapped_table
 
@@ -34,12 +35,12 @@ def _rows(df):
 def _readers(spark):
     """The prepared readers of ``spark``'s JVM session, by (table root,
     schema json)."""
-    key = table_mod._session_key(spark)
+    key = session_key(spark)
     return {k[1:]: r for k, r in table_mod._SCAN_READERS.items.items() if k[0] == key}
 
 
 def _field_id_session(spark):
-    return table_mod._FID_SESSIONS.items[table_mod._session_key(spark)]
+    return table_mod._FID_SESSIONS.items[session_key(spark)]
 
 
 def _upsert(t, src):
@@ -62,23 +63,35 @@ def _by_source(t, src):
 
 def test_repeat_scan_of_one_file_costs_one_round_trip(spark, tmpdir_path):
     """The repeat scan pays only the load of its one path, passed as a
-    string. A path list costs five more (PythonUtils lookup, ArrayList,
-    one add per path, toSeq); building the reader, parsing the schema
-    and a no-op reorder 16 more."""
+    string; building the reader, parsing the schema and a no-op reorder
+    cost 16 more."""
     t = _kv(spark, tmpdir_path)
     t.toDF()
     assert py4j_round_trips(spark, t.toDF) == 1
     assert _rows(t.toDF()) == [(i, i) for i in range(100)]
 
 
+def test_repeat_scan_of_many_files_costs_two_round_trips(spark, tmpdir_path):
+    """A path list is one ``String[]``, split on the JVM side from one
+    string, whatever its length: the split and the load. As a Python
+    list it cost the list, one ``add`` per path and ``toSeq``."""
+    path = os.path.join(tmpdir_path, "many")
+    write_delta(spark.range(80).selectExpr("id AS k").repartition(8), path)
+    t = DeltaTable.forPath(spark, path)
+    assert len(t.snapshot().add_files()) == 8
+    t.toDF()
+    assert py4j_round_trips(spark, t.toDF) == 2
+    assert _rows(t.toDF()) == [(i,) for i in range(80)]
+
+
 @pytest.mark.parametrize(
     "op, want",
     [
-        pytest.param("delete", 29, id="delete"),
-        pytest.param("update", 35, id="update"),
-        pytest.param("upsert", 101, id="upsert"),
-        pytest.param("by_source", 93, id="by_source"),
-        pytest.param("upsert_unsized", 155, id="upsert_unsized"),
+        pytest.param("delete", 16, id="delete"),
+        pytest.param("update", 17, id="update"),
+        pytest.param("upsert", 48, id="upsert"),
+        pytest.param("by_source", 42, id="by_source"),
+        pytest.param("upsert_unsized", 69, id="upsert_unsized"),
     ],
 )
 def test_dml_round_trips_pinned(spark, tmpdir_path, op, want):
@@ -90,7 +103,9 @@ def test_dml_round_trips_pinned(spark, tmpdir_path, op, want):
     a ``createDataFrame`` source, which Spark cannot size, keeps the
     probe and pays for the size check. A merge stages its clause
     indexes and actions in one ``selectExpr`` and observes each action's
-    metrics as one struct column; a one-path scan loads a string."""
+    metrics as one struct column; a one-path scan loads a string. Every
+    JVM method is looked up once per gateway (``tables/gateway.py``),
+    and a list of strings reaches the JVM as one ``String[]``."""
     t = _kv(spark, tmpdir_path)
     src = spark.sql("SELECT * FROM VALUES (5L, 50L), (500L, 1L) AS s(k, v)")
     unsized = spark.createDataFrame([(5, 50), (500, 1)], "k long, v long")
@@ -242,7 +257,7 @@ def test_foreach_batch_wrappers_share_one_reader(spark, tmpdir_path):
     assert len(seen) == 2
     (first, reader, _, rows), (second, again, repeat, rows_again) = seen
     assert isinstance(second, SparkSession) and second is not first
-    assert table_mod._session_key(second) == table_mod._session_key(first)
+    assert session_key(second) == session_key(first)
     assert again is reader
     assert repeat == 1
     assert rows == rows_again == [(0, 0), (1, 1), (2, 2)]

@@ -11,12 +11,12 @@ import os
 import shutil
 
 import pytest
-from pyspark.sql import Observation
 
 from conftest import executed_plans, parquet_files, session_conf, spark_jobs
 from jodie_spark.errors import DeltaProtocolError, MergeMultipleMatchesError
 from jodie_spark.operators.cdf import read_cdf
 from jodie_spark.sources.datasource import register
+from jodie_spark.tables.gateway import Observation
 from jodie_spark.tables.table import DeltaTable, write_delta
 from test_single_file_dml import _id_mapped
 
@@ -152,10 +152,14 @@ def _orphans(t, before):
 
 
 def _state(spark, t, kind):
+    """Rows, metrics, the last commit and ``kind``'s extra state. Of the
+    metrics only the data file count is left out: the probe path's
+    output takes its own number of files (``_assign_identities`` unions
+    two plans), while its change rows fill as many files as the data."""
     metrics = {
         k: v
         for k, v in t.history(1).collect()[0]["operationMetrics"].items()
-        if k not in TIMINGS + ("numTargetFilesAdded", "numTargetChangeFilesAdded")
+        if k not in TIMINGS + ("numTargetFilesAdded",)
     }
     extra = None
     if kind == "cdf":
@@ -230,6 +234,37 @@ def test_one_task_merge_matches_the_probe_path(spark, tmpdir_path, kind, op, row
     assert _state(spark, one, kind) == _state(spark, twin, kind)
     assert _orphans(one, before) == [] and _orphans(twin, before) == []
     assert one.deltaLog.latest_version() == twin.deltaLog.latest_version()
+
+
+@pytest.mark.parametrize(
+    "case, jobs, source_rows",
+    [
+        pytest.param("two_matches", 1, 2, id="two_matches"),
+        pytest.param("empty", 1, 0, id="empty"),
+        pytest.param("miss_with_inserts", 2, 2, id="miss_with_inserts"),
+    ],
+)
+def test_source_rows_come_from_the_write(spark, tmpdir_path, case, jobs, source_rows):
+    """A one-task merge counts its source rows in the write's own
+    observation (the source rows are numbered in the one task): a source
+    row matching two target rows counts once, an empty source is 0, and
+    a miss whose inserts are rewritten again keeps the first count. Each
+    equals what the probe path's observation of the source counts."""
+    one, twin = _twins(spark, tmpdir_path, "plain")
+    run = {
+        # s.k = 3 matches t.k = 6 and t.k = 7
+        "two_matches": _upsert(
+            _src(spark, [(3, 30), (500, 1)]), "t.k DIV 2 = s.k", allow_multiple_matches=True
+        ),
+        "empty": _upsert(_src(spark, [(0, 0)]).limit(0)),
+        "miss_with_inserts": _upsert(_src(spark, NEW)),
+    }[case]
+    assert spark_jobs(spark, lambda: run(one)) == jobs
+    with session_conf(spark, OPEN_COST, "1b"):
+        run(twin)
+    got = [t.history(1).collect()[0]["operationMetrics"]["numSourceRows"] for t in (one, twin)]
+    assert got == [str(source_rows)] * 2
+    assert _state(spark, one, "plain") == _state(spark, twin, "plain")
 
 
 def test_empty_rdd_source_still_commits(spark, tmpdir_path):

@@ -11,12 +11,12 @@ import os
 
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from conftest import parquet_files, py4j_round_trips, session_conf, spark_jobs
 from jodie_spark.errors import DeltaProtocolError, MergeMultipleMatchesError
 from jodie_spark.operators.cdf import read_cdf
+from jodie_spark.tables.gateway import Observation, observe
 from jodie_spark.tables.table import DeltaTable, observed_file_uris, write_delta
 
 
@@ -162,7 +162,7 @@ def test_dropped_observation_reads_as_zero_or_refuses(spark, tmpdir_path):
     path a merge of an empty source, or of one no target row matches,
     drops its source observation that way; its metrics stay exact."""
     from jodie_spark.tables.merge import _observed, _source_rows
-    from jodie_spark.tables.table import observation_values, observe
+    from jodie_spark.tables.table import observation_values
 
     empty = spark.createDataFrame([], "k long, v long")
     observed, obs = observe(empty, {"numSourceRows": "count(1)", "ks": "collect_set(k)"})
