@@ -26,11 +26,13 @@ timestamp options for every change-feed and stream reader.
 
 Scale: :func:`read_cdf` reads each kind of change file in one Spark
 scan (a path one kind serves twice adds a scan), never a per-version
-read loop over data. Commit version and
-timestamp attach per file by a broadcast join on Spark's spelling of
-the file path, learned from one observed metadata-only job and mapped
-to log entries through the shared path canonicalization
-(``jodie_spark.fs.add_path_key`` / ``scanned_path_key``).
+read loop over data; data files go through the one add scan
+(``read_files_df``), which drops the rows their deletion vectors
+delete. Commit version and timestamp attach per file by a broadcast
+join on Spark's spelling of the file path, learned from one observed
+job over all the scans and mapped to change files by the one
+URI-to-add mapping (``scanned_files``), which refuses a file it cannot
+map.
 """
 
 from __future__ import annotations
@@ -45,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jodie_spark.errors import DeltaProtocolError, VersionNotFoundError
-from jodie_spark.fs import add_path_key, get_fs, scanned_path_key
+from jodie_spark.fs import get_fs
 from jodie_spark.tables.column_mapping import rename_to_logical
 from jodie_spark.tables.gateway import select_expr
 from jodie_spark.tables.log import DeltaLog
@@ -54,10 +56,9 @@ from jodie_spark.tables.table import (
     _FP_RI,
     CDF_PROP,
     DeltaTable,
-    _drop_dv_positions,
-    _dv_bitmaps,
-    observed_file_uris,
+    read_files_df,
     scan_parquet,
+    scanned_files,
 )
 
 
@@ -232,46 +233,40 @@ def read_cdf(
         list(read_schema.fields) + [T.StructField("_change_type", T.StringType())]
     )
     fs = get_fs(path)
-    base = fs.spark_path(path)
-    scans: list[DataFrame] = []
-    for i, ((kind, _), leg) in enumerate(legs.items()):
-        paths = [fs.spark_path(fs.join(path, urllib.parse.unquote(f.path))) for f in leg]
-        extra = [*_FP_RI, f"{i} AS ___leg"]
-        if kind == "cdc":
-            scan = scan_parquet(spark, paths, cdc_schema, cols=["*", *extra])
-        else:
-            scan = scan_parquet(
-                spark, paths, read_schema, base, cols=["*", f"'{kind}' AS _change_type", *extra]
-            )
-        scans.append(scan)
-
-    # Spark's spelling of each scanned file, one metadata-only job
-    uris = observed_file_uris(
-        reduce(lambda a, b: a.union(b), [s.select("__fp__") for s in scans]), "__fp__"
-    )
-    key_of = {u: scanned_path_key(u) for u in uris}
-    versions = []
     parts: list[DataFrame] = []
-    for i, (scan, leg) in enumerate(zip(scans, legs.values())):
-        by_key = {add_path_key(path, f.path): f for f in leg}
-        versions += [
-            (i, u, f.version, f.ts_ms) for u, k in key_of.items() if (f := by_key.get(k))
+    files: list[dict[str, Any]] = []
+    for i, ((kind, _), leg) in enumerate(legs.items()):
+        adds = [
+            {"path": f.path, "deletionVector": f.dv, "leg": i, "change": f} for f in leg
         ]
-        bc = _dv_bitmaps(spark, path, [{"path": f.path, "deletionVector": f.dv} for f in leg])
-        if bc is not None:
-            scan = _drop_dv_positions(scan, path, bc, strict=False)
+        files += adds
+        if kind == "cdc":
+            paths = [fs.spark_path(fs.join(path, urllib.parse.unquote(f.path))) for f in leg]
+            scan = scan_parquet(spark, paths, cdc_schema, cols=["*", *_FP_RI, f"{i} AS ___leg"])
+        else:
+            scan = select_expr(
+                read_files_df(spark, path, read_schema, adds, coords=True),
+                "*",
+                f"'{kind}' AS _change_type",
+                f"{i} AS ___leg",
+            )
         if ms is not None:
             scan = rename_to_logical(
                 scan, ms[0], ms[1], keep=("_change_type", "__fp__", "___leg")
             )
         parts.append(scan)
+    scans = reduce(lambda a, b: a.unionByName(b), parts)
+    # Spark's spelling of each scanned file, one job; a file two legs
+    # read maps to its change file in each
     mapping = spark.createDataFrame(
-        versions, "___leg int, __fp__ string, _commit_version long, ___ts_ms long"
+        [
+            (a["leg"], u, a["change"].version, a["change"].ts_ms)
+            for u, a in scanned_files(scans, path, files)
+        ],
+        "___leg int, __fp__ string, _commit_version long, ___ts_ms long",
     )
-    joined = (
-        reduce(lambda a, b: a.unionByName(b), parts)
-        .join(F.broadcast(mapping), ["___leg", "__fp__"])
-        .withColumn("_commit_timestamp", F.timestamp_millis(F.col("___ts_ms")))
+    joined = scans.join(F.broadcast(mapping), ["___leg", "__fp__"], "left").withColumn(
+        "_commit_timestamp", F.timestamp_millis(F.col("___ts_ms"))
     )
     return select_expr(joined, *[quote_ident(f.name) for f in out_schema.fields])
 

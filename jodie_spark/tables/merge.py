@@ -70,10 +70,13 @@ Row counts are ``Observation`` s on actions that run anyway: the
 rewrite's write (merge-on-read: its data-file write, and its DV-marks
 action for the multiple-match check). Extra jobs remain in two places:
 on ``mode=id`` tables the source row count is an eager ``count()`` of
-the source (see ``execute``), and on row-tracking tables every
-row-lineage scan of candidate files (the probe, the rewrite, the
-coordinate scan) learns its file URIs in a job of its own; a scan of no
-files runs none.
+the source (see ``execute``), and on row-tracking tables the scan that
+reads row ids (the rewrite, or merge-on-read's coordinate scan) learns
+its file URIs in one job of its own (the lineage layer of
+``read_files_df``); a scan of no files runs none. The probe never reads
+row ids, so it costs what it costs on any table. Both write modes
+commit the same ``operationParameters`` and ``operationMetrics`` keys
+(``_commit``).
 """
 
 from __future__ import annotations
@@ -371,10 +374,15 @@ def _assign_identities(result: DataFrame, schema, id_generate, keep_cols):
     for name, spec in id_generate.items():
         need = result.filter(F.col(name).isNull()).drop(name)
         keep = result.filter(F.col(name).isNotNull())
-        need, hwm = assign_identity_values(
+        assigned, hwm = assign_identity_values(
             need, name, next_identity_base(spec), int(spec["step"])
         )
-        result = keep.unionByName(need).select(*keep_cols)
+        # as many partitions as before the split, so a small merge's
+        # kept and generated rows fill one file, not two: ``need`` is
+        # cached and filled now, so counting its partitions runs no job
+        result = (
+            keep.unionByName(assigned).select(*keep_cols).coalesce(num_partitions(need))
+        )
         if hwm is not None:
             new_specs[name] = {**spec, "high_water_mark": hwm}
             changed = True
@@ -890,19 +898,13 @@ class DeltaMergeBuilder:
             rows = t._write_dvs_for(dv_marks, old_dvs) if candidates else []
             marked = sum(int(r["new_card"]) - int(r["old_card"]) for r in rows)
             if check and rows and _observed(pair_obs, ["pairs"])["pairs"] > marked:
-                from jodie_spark.errors import MergeMultipleMatchesError
                 from jodie_spark.fs import get_fs
                 from jodie_spark.tables.deletion_vectors import dv_absolute_path
 
                 fs = get_fs(t.path)
                 for r in rows:
                     fs.remove(dv_absolute_path(t.path, json.loads(r["desc"])))
-                raise MergeMultipleMatchesError(
-                    "MERGE: one target row matched multiple source rows "
-                    "under an update/delete clause; the result would be "
-                    "nondeterministic. Deduplicate the source on the "
-                    "merge key, or pass allow_multiple_matches=True."
-                )
+                raise _multiple_matches_error()
 
             # row tracking: updated rows keep their id, inserts get
             # fresh ids (NULL materialized value + fresh baseRowId);
@@ -917,7 +919,11 @@ class DeltaMergeBuilder:
             # above the cache and under no shuffle
             emitted, counts_obs = observe(
                 staged,
-                {a: f"count_if(__action__ = '{a}')" for a in ("update", "delete", "insert")},
+                {
+                    label: f"count_if(__action__ = '{a}')"
+                    for a, label in _COUNTS
+                    if a != "copy"
+                },
             )
             emitted = select_expr(
                 emitted.filter("__action__ IN ('update', 'insert')"), *fields, *lineage_out
@@ -932,50 +938,18 @@ class DeltaMergeBuilder:
 
         finally:
             cached.unpersist()
-        rewrite_ms = int((time.time() - t_rewrite) * 1000)
 
-        actions = list(lineage_actions)
-        pair_actions, changed_rows, dv_bytes = t._dv_action_pairs(
+        pair_actions, _, dv_bytes = t._dv_action_pairs(
             candidates, rows, int(time.time() * 1000)
         )
-        actions += pair_actions
-        actions += [{"add": a} for a in adds]
-        action_counts = _observed(counts_obs, ["update", "delete", "insert"])
-        metrics = {
-            "numTargetRowsUpdated": str(action_counts["update"]),
-            "numTargetRowsDeleted": str(action_counts["delete"]),
-            "numTargetRowsInserted": str(action_counts["insert"]),
-            "numSourceRows": str(
-                _observed(src_obs, ["numSourceRows"])["numSourceRows"]
-            ),
-            "numTargetRowsCopied": "0",
-            "numTargetFilesRemoved": "0",
-            "numTargetFilesAdded": str(len(adds)),
-            "numDeletionVectorsAdded": str(len(rows)),
-            "numAddedBytes": str(
-                dv_bytes + sum(int(a.get("size") or 0) for a in adds)
-            ),
-            "executionTimeMs": str(int((time.time() - t0) * 1000)),
-            "scanTimeMs": str(int((t_rewrite - t_scan) * 1000)),
-            "rewriteTimeMs": str(rewrite_ms),
-        }
+        counts = {"copied": 0, **_observed(counts_obs, ["updated", "deleted", "inserted"])}
         if staged is not None:
             staged.unpersist()
-        from jodie_spark.tables.pruning import make_read_checker
-
-        t.deltaLog.commit(
-            snap.version,
-            actions,
-            "MERGE",
-            {"predicate": self.condition},
-            metrics,
-            # prune_cond selected the candidate files this merge read
-            # (None = whole table, e.g. with by-source clauses)
-            read_check=make_read_checker(
-                t._planning_condition(snap, prune_cond),
-                schema,
-                snap.partition_columns,
-            ),
+        self._commit(
+            snap, schema, prune_cond,
+            list(lineage_actions) + pair_actions + [{"add": a} for a in adds],
+            counts, _observed(src_obs, ["numSourceRows"])["numSourceRows"],
+            (t0, t_scan, t_rewrite), adds, dv_rows=rows, dv_bytes=dv_bytes,
         )
 
     def execute(
@@ -1205,8 +1179,8 @@ class DeltaMergeBuilder:
                     self._matched or self._not_matched or self._not_matched_by_source
                 ):
                     touched, matched_sids = self._find_touched(
-                        snap, schema, talias, src, candidates, lineage,
-                        multi_ok, broadcast and bool(self._not_matched),
+                        snap, schema, talias, src, candidates, multi_ok,
+                        broadcast and bool(self._not_matched),
                     )
                     # the probe filled the cache: Spark's static rule now
                     # sees the source's real size
@@ -1252,7 +1226,6 @@ class DeltaMergeBuilder:
         finally:
             if not one_task:
                 cached.unpersist()
-        rewrite_ms = int((time.time() - t_rewrite) * 1000)
 
         now_ms = int(time.time() * 1000)
         actions: list[dict[str, Any]] = list(lineage_actions)
@@ -1273,23 +1246,48 @@ class DeltaMergeBuilder:
         actions += list(cdc_actions)
         actions += [{"add": a} for a in adds]
         actions += [remove_action(r, now_ms) for r in touched]
+        self._commit(
+            snap, schema, prune_cond, actions, counts, num_source_rows,
+            (t0, t_scan, t_rewrite), adds, removed=touched, cdc_actions=cdc_actions,
+        )
+        from jodie_spark.tables.table import maybe_auto_compact
+
+        maybe_auto_compact(t, config=snap.configuration)
+
+    def _commit(
+        self, snap, schema, prune_cond, actions, counts, source_rows, times,
+        adds, removed=(), cdc_actions=(), dv_rows=(), dv_bytes=0,
+    ) -> None:
+        """The MERGE commit, one ``operationParameters`` and one
+        ``operationMetrics`` key set in either write mode. ``counts`` are
+        the row counts by :data:`_COUNTS` label; ``times`` is (start,
+        planning start, rewrite start); merge-on-read passes the
+        bitmap rows it wrote (:meth:`~jodie_spark.tables.table.DeltaTable._write_dvs_for`)
+        and their bytes. The read set is ``prune_cond``, which selected
+        the candidate files (None = whole table, e.g. with by-source
+        clauses; the insert-only anti join read the same stats-pruned
+        set)."""
+        from jodie_spark.tables.pruning import make_read_checker
+
+        t0, t_scan, t_rewrite = times
+        now = time.time()
         metrics = {
-            "numSourceRows": str(num_source_rows),
-            "numTargetRowsInserted": str(counts["inserted"]),
-            "numTargetRowsUpdated": str(counts["updated"]),
-            "numTargetRowsDeleted": str(counts["deleted"]),
-            "numTargetRowsCopied": str(counts["copied"]),
-            "numOutputRows": str(
-                counts["inserted"] + counts["updated"] + counts["copied"]
-            ),
-            "numTargetFilesAdded": str(len(adds)),
-            "numTargetFilesRemoved": str(len(touched)),
-            "numTargetChangeFilesAdded": str(len(cdc_actions)),
-            "executionTimeMs": str(int((time.time() - t0) * 1000)),
+            "numSourceRows": source_rows,
+            "numTargetRowsInserted": counts["inserted"],
+            "numTargetRowsUpdated": counts["updated"],
+            "numTargetRowsDeleted": counts["deleted"],
+            "numTargetRowsCopied": counts["copied"],
+            "numOutputRows": counts["inserted"] + counts["updated"] + counts["copied"],
+            "numTargetFilesAdded": len(adds),
+            "numTargetFilesRemoved": len(removed),
+            "numTargetChangeFilesAdded": len(cdc_actions),
+            "numDeletionVectorsAdded": len(dv_rows),
+            "numAddedBytes": dv_bytes + sum(int(a.get("size") or 0) for a in adds),
+            "executionTimeMs": int((now - t0) * 1000),
             # candidate planning + touched-file probe
-            "scanTimeMs": str(int((t_rewrite - t_scan) * 1000)),
+            "scanTimeMs": int((t_rewrite - t_scan) * 1000),
             # pass 2 and its writes
-            "rewriteTimeMs": str(rewrite_ms),
+            "rewriteTimeMs": int((now - t_rewrite) * 1000),
         }
         params = {"predicate": self.condition}
         for key, clauses in (
@@ -1305,26 +1303,18 @@ class DeltaMergeBuilder:
                     for c in clauses
                 ]
             )
-        from jodie_spark.tables.pruning import make_read_checker
-
-        t.deltaLog.commit(
+        self.table.deltaLog.commit(
             snap.version,
             actions,
             "MERGE",
             params,
-            metrics,
-            # prune_cond selected the candidate files this merge read
-            # (None = whole table, e.g. with by-source clauses; the
-            # insert-only anti join read the same stats-pruned set)
+            {k: str(v) for k, v in metrics.items()},
             read_check=make_read_checker(
-                t._planning_condition(snap, prune_cond),
+                self.table._planning_condition(snap, prune_cond),
                 schema,
                 snap.partition_columns,
             ),
         )
-        from jodie_spark.tables.table import maybe_auto_compact
-
-        maybe_auto_compact(t, config=snap.configuration)
 
     def _rewrite_join(
         self, snap, schema, talias, src, touched, lineage, broadcast=False,
@@ -1347,8 +1337,6 @@ class DeltaMergeBuilder:
             # file-list-level prune instead of an input_file_name filter
             # over every candidate
             tgt = t._read_candidates(snap, schema, touched, lineage=lineage)
-            if lineage is not None:
-                tgt = tgt.drop("__file__")
         else:
             from jodie_spark.tables.table import read_files_df
 
@@ -1563,7 +1551,7 @@ class DeltaMergeBuilder:
         )
 
     def _find_touched(
-        self, snap, schema, talias, src, candidates, lineage, multi_ok, sids
+        self, snap, schema, talias, src, candidates, multi_ok, sids
     ) -> tuple[list[dict[str, Any]], list[int]]:
         """Pass 1: the candidate adds holding at least one row the merge
         changes, found by ONE noop action that observes the file set
@@ -1585,14 +1573,10 @@ class DeltaMergeBuilder:
         from jodie_spark.tables.table import map_touched_paths, observed_metrics
 
         t = self.table
-        if lineage is not None:
-            probe = t._read_candidates(
-                snap, schema, candidates, lineage=lineage
-            ).withColumnRenamed("__file__", "__path__")
-        else:
-            probe = t._read_candidates(snap, schema, candidates).withColumn(
-                "__path__", function("input_file_name")
-            )
+        # the probe never resolves row ids: only the rewrite reads them
+        probe = t._read_candidates(snap, schema, candidates).withColumn(
+            "__path__", function("input_file_name")
+        )
         # the multiple-match guard must run whenever touched files will
         # be rewritten, not only when matched clauses exist (by-source-
         # only and slow-path insert-only merges rewrite copies too)

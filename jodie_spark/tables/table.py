@@ -280,61 +280,162 @@ def scan_parquet(
     return select_expr(df, *cols) if cols else df
 
 
+def _is_external(table_path: str, add: dict[str, Any]) -> bool:
+    """Whether ``add`` names a file outside the table directory (a
+    shallow clone's reference to its source table's files)."""
+    p = urllib.parse.unquote(add["path"])
+    return os.path.isabs(p) and not os.path.abspath(p).startswith(
+        os.path.abspath(table_path) + os.sep
+    )
+
+
 def read_files_df(
     spark: SparkSession,
     table_path: str,
     schema: T.StructType,
     adds: list[dict[str, Any]],
+    lineage: tuple[str, str] | None = None,
+    coords: bool = False,
+    old_dvs: Broadcast | None = None,
 ) -> DataFrame:
-    """Load the given add-files as one DataFrame with ``schema``'s
-    columns in schema order.
+    """The one scan of a set of add-files: ``schema``'s columns, each
+    file read with what its add carries.
 
-    Plain files are one :func:`scan_parquet` of the explicit file list
-    (from the log, never a storage listing) with the table root as
-    ``basePath``: a repeat scan of the same table and schema reuses the
-    session's prepared reader, and the schema-order projection runs
-    only for ``key=value`` (partition) directories. No adds is an empty
-    scan through the same reader (one py4j round trip).
+    Plain files (inside the table directory, no deletion vector) with
+    no ``lineage`` and no ``coords`` are one :func:`scan_parquet` of
+    the explicit file list (from the log, never a storage listing) with
+    the table root as ``basePath``: a repeat scan of the same table and
+    schema reuses the session's prepared reader, and the schema-order
+    projection runs only for ``key=value`` (partition) directories. No
+    adds is an empty scan through the same reader (one py4j round trip).
 
-    Files outside the table directory (shallow clones) take
-    :func:`_read_external_files_df`; files carrying a ``deletionVector``
-    descriptor take :func:`_read_dv_files_df`, which drops deleted row
-    indexes (``_metadata.row_index``) — see
-    :mod:`jodie_spark.tables.deletion_vectors`. The parts are unioned
-    by name.
-    """
-    def _is_external(a: dict[str, Any]) -> bool:
-        p = urllib.parse.unquote(a["path"])
-        return os.path.isabs(p) and not os.path.abspath(p).startswith(
-            os.path.abspath(table_path) + os.sep
-        )
+    Any other set is the coordinate scan — each row carries ``__fp__``
+    / ``__ri__``, Spark's file path and row index — with layers on top:
 
-    plain, dv, external = [], [], []
+    - files outside the table directory (shallow clones) are scanned
+      without ``basePath``, and the columns their files lack (the
+      partition columns) come from their adds' ``partitionValues``;
+    - deletion vectors drop the rows they delete: the files carrying
+      one are a scan of their own, masked by :func:`_drop_dv_positions`
+      (``old_dvs`` is the adds' :func:`_dv_bitmaps` when the caller
+      holds them already);
+    - ``lineage=(rid_col, rcv_col)``, the table's materialized
+      row-tracking columns, adds ``__lineage_rid__`` /
+      ``__lineage_rcv__``: the materialized value, else the add's
+      ``baseRowId`` + row index / ``defaultRowCommitVersion``
+      (:mod:`jodie_spark.tables.row_lineage`). Row indexes are
+      pre-mask physical positions, so surviving rows keep their ids.
+
+    The per-file values reach the rows as a broadcast join on
+    ``__fp__``, mapped by :func:`scanned_files` (one observed job).
+    ``coords`` keeps ``__fp__``/``__ri__`` in the output."""
+    plain: list[dict[str, Any]] = []
+    dv: list[dict[str, Any]] = []
+    external: list[dict[str, Any]] = []
     for a in adds:
-        if _dv_cardinality(a):
-            if _is_external(a):
-                raise DeltaProtocolError(
-                    "deletion vectors on externally-referenced (cloned) files "
-                    "are not supported; deep-copy the table instead"
-                )
-            dv.append(a)
-        elif _is_external(a):
+        if _is_external(table_path, a):
             external.append(a)
         else:
-            plain.append(a)
-    parts: list[DataFrame] = []
-    if plain or not adds:
+            (dv if _dv_cardinality(a) else plain).append(a)
+    if not (external or dv or lineage or coords):
         # the facade translates schemed table paths for Spark's Hadoop
         # data plane (identity for local tables)
-        base, paths = _spark_paths(table_path, plain)
-        parts.append(scan_parquet(spark, paths, schema, base))
+        base, paths = _spark_paths(table_path, adds)
+        return scan_parquet(spark, paths, schema, base)
+    if any(_dv_cardinality(a) for a in external):
+        raise DeltaProtocolError(
+            "deletion vectors on externally-referenced (cloned) files "
+            "are not supported; deep-copy the table instead"
+        )
+    fields = list(schema.fields)
+    if lineage is not None:
+        fields += [T.StructField(c, T.LongType()) for c in lineage]
+    names = [quote_ident(f.name) for f in fields]
+
+    def scan(group: list[dict[str, Any]]) -> DataFrame:
+        base, paths = _spark_paths(table_path, group)
+        return scan_parquet(
+            spark, paths, T.StructType(fields), base, cols=[*names, *_FP_RI]
+        )
+
+    # the files with deletion vectors are a scan of their own, so only
+    # their rows pass the mask's Python predicate
+    parts = [scan(plain)] if plain or not (dv or external) else []
+    missing: list[str] = []
     if external:
-        parts.append(_read_external_files_df(spark, schema, external))
+        # no basePath: the files are not under this table
+        ext = scan_parquet(
+            spark,
+            [urllib.parse.unquote(a["path"]) for a in external],
+            cols=["*", *_FP_RI],
+        )
+        present = set(ext.columns)
+        missing = [f.name for f in fields if f.name not in present]
+        parts.append(
+            select_expr(
+                ext,
+                *[
+                    f"CAST(NULL AS {type_ddl(f.dataType)}) AS {n}"
+                    if f.name in missing
+                    else n
+                    for f, n in zip(fields, names)
+                ],
+                "__fp__",
+                "__ri__",
+            )
+        )
+    dv_scan = [scan(dv)] if dv else []
+    files = None
+    if lineage is not None or missing:
+        files = scanned_files(_union(parts + dv_scan), table_path, adds)
     if dv:
-        parts.append(_read_dv_files_df(spark, table_path, schema, dv))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+        parts.append(_drop_dv_positions(dv_scan[0], table_path, dv, old_dvs, files))
+    df = _union(parts)
+    if files is None:
+        return df if coords else select_expr(df, *names)
+    meta = T.StructType(
+        [
+            T.StructField("__fp__", T.StringType()),
+            T.StructField("__base_rid__", T.LongType()),
+            T.StructField("__dflt_rcv__", T.LongType()),
+        ]
+        + [T.StructField(f"__pv{i}__", T.StringType()) for i in range(len(missing))]
+    )
+    rows = [
+        (
+            u,
+            a.get("baseRowId"),
+            a.get("defaultRowCommitVersion"),
+            *[(a.get("partitionValues") or {}).get(m) for m in missing],
+        )
+        for u, a in files
+    ]
+    # the scan's own session: a mode=id scan runs in the field-id child
+    df = df.join(F.broadcast(df.sparkSession.createDataFrame(rows, meta)), "__fp__", "left")
+    out = [
+        f"coalesce({n}, CAST(__pv{missing.index(f.name)}__ AS {type_ddl(f.dataType)}))"
+        f" AS {n}"
+        if f.name in missing
+        else n
+        for f, n in zip(schema.fields, names)
+    ]
+    if coords:
+        out += ["__fp__", "__ri__"]
+    if lineage is not None:
+        from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
+
+        rid, rcv = names[len(schema.fields):]
+        out += [
+            f"coalesce({rid}, __base_rid__ + __ri__) AS {LIN_RID}",
+            f"coalesce({rcv}, __dflt_rcv__) AS {LIN_RCV}",
+        ]
+    return select_expr(df, *out)
+
+
+def _union(dfs: list[DataFrame]) -> DataFrame:
+    out = dfs[0]
+    for df in dfs[1:]:
+        out = out.unionByName(df)
     return out
 
 
@@ -356,58 +457,6 @@ def _dv_cardinality(add: dict[str, Any]) -> int:
     return int(desc.get("cardinality") or 0) if desc else 0
 
 
-def _read_external_files_df(
-    spark: SparkSession, schema: T.StructType, adds: list[dict[str, Any]]
-) -> DataFrame:
-    """Scan add-files that live OUTSIDE the table directory (shallow
-    clones reference the source table's files by absolute path).
-
-    ``basePath``-driven Hive partition reconstruction can't apply (the
-    files aren't under this table), so partition columns come from the
-    log's own ``partitionValues``: one scan of all external files with
-    ``_metadata.file_path``, broadcast-joined to the per-file partition
-    value map. One job regardless of partition count — never a scan per
-    partition."""
-    paths = [urllib.parse.unquote(a["path"]) for a in adds]
-    by_real = {os.path.realpath(p): a for p, a in zip(paths, adds)}
-    scan = scan_parquet(spark, paths, cols=["*", "_metadata.file_path AS __fp__"])
-    present = set(scan.columns) - {"__fp__"}
-    missing = [f for f in schema.fields if f.name not in present]
-    if not missing:
-        return select_expr(scan, *[quote_ident(f.name) for f in schema.fields])
-    # map Spark's exact URI spelling back to add entries (same
-    # collect-and-match as the DV reader — O(#files), never per row;
-    # string-reconstructing the URI driver-side is how silent
-    # percent-encoding mismatches happen)
-    from jodie_spark.fs import scanned_path_key
-
-    rows = []
-    for fp in observed_file_uris(select_expr(scan, "__fp__"), "__fp__"):
-        add = by_real.get(scanned_path_key(fp))
-        if add is None:
-            raise DeltaProtocolError(
-                f"cannot map scanned file {fp!r} back to an external add "
-                "entry; refusing to fabricate partition values"
-            )
-        pv = add.get("partitionValues") or {}
-        rows.append((fp, *[pv.get(f.name) for f in missing]))
-    pv_schema = T.StructType(
-        [T.StructField("__fp__", T.StringType())]
-        + [T.StructField(f.name, T.StringType()) for f in missing]
-    )
-    joined = scan.join(F.broadcast(spark.createDataFrame(rows, pv_schema)), "__fp__")
-    missing_names = {m.name for m in missing}
-    return select_expr(
-        joined,
-        *[
-            f"CAST({quote_ident(f.name)} AS {type_ddl(f.dataType)}) AS {quote_ident(f.name)}"
-            if f.name in missing_names
-            else quote_ident(f.name)
-            for f in schema.fields
-        ]
-    )
-
-
 # the rows of :meth:`DeltaTable._write_dvs_for`, one per touched file
 _DV_ROWS = T.StructType(
     [
@@ -418,8 +467,9 @@ _DV_ROWS = T.StructType(
     ]
 )
 
-# Below this many total deleted rows the position set broadcasts, so
-# the anti-join adds no shuffle of the data side.
+# Up to this many deleted rows in all, a scan drops them by a filter
+# over the broadcast bitmaps; past it by an anti join with the decoded
+# positions, so a million-row bitmap is not decoded in every task.
 _DV_BROADCAST_MAX_POSITIONS = 2_000_000
 
 
@@ -428,8 +478,10 @@ def _dv_bitmaps(
 ) -> Broadcast | None:
     """The raw roaring bitmaps of the ``adds``' deletion vectors, read
     once on the driver (through the facade, whatever their descriptor)
-    and broadcast once, keyed by ``add_path_key``; None when no add
-    carries one."""
+    and broadcast once, keyed by ``add_path_key`` for EVERY add (None
+    for an add without one); None when no add carries one."""
+    if not any(a.get("deletionVector") for a in adds):
+        return None
     from jodie_spark.fs import add_path_key
     from jodie_spark.tables.deletion_vectors import read_dv_bytes
 
@@ -437,29 +489,66 @@ def _dv_bitmaps(
         add_path_key(table_path, a["path"]): bytes(
             read_dv_bytes(table_path, a["deletionVector"])
         )
-        for a in adds
         if a.get("deletionVector")
+        else None
+        for a in adds
     }
-    return spark.sparkContext.broadcast(raw) if raw else None
+    return spark.sparkContext.broadcast(raw)
 
 
 def _drop_dv_positions(
-    df: DataFrame, table_path: str, bc: Broadcast, strict: bool
+    df: DataFrame,
+    table_path: str,
+    adds: list[dict[str, Any]],
+    bc: Broadcast | None = None,
+    files: list[tuple[str, dict[str, Any]]] | None = None,
 ) -> DataFrame:
-    """``df`` (carrying ``__fp__``/``__ri__``, Spark's file path and row
-    index) minus the rows deleted by the bitmaps of ``bc``
-    (:func:`_dv_bitmaps`): ONE Arrow-batched predicate over the
-    broadcast — no extra Spark job, no join. Spark's URI spelling of
-    ``file_path`` is normalized executor-side by the shared path
-    canonicalization (``add_path_key`` / ``scanned_path_key``).
-    ``strict``: a scanned file whose key maps to no bitmap REFUSES
-    (task error) rather than resurrecting deleted rows; otherwise such
-    a file keeps every row."""
+    """``df`` (the coordinate scan of ``adds``: ``__fp__``/``__ri__``)
+    minus the rows the adds' deletion vectors delete. A scanned file
+    that maps to no add REFUSES rather than resurrect deleted rows.
+
+    Up to ``_DV_BROADCAST_MAX_POSITIONS`` deleted rows in all it is ONE
+    Arrow-batched predicate over the broadcast bitmaps (``bc``, the
+    adds' :func:`_dv_bitmaps`, read here when None): no extra Spark
+    job, no join; Spark's spelling of each file path is keyed
+    executor-side by ``scanned_path_key``. Past the bound the positions
+    are decoded executor-side from a tiny (path, bytes) frame, exploded
+    and anti-joined, so a million-row bitmap never burdens a task; its
+    paths are Spark's, from :func:`scanned_files` (``files`` when the
+    caller mapped the scan already)."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    from jodie_spark.tables.deletion_vectors import (
+        parse_roaring_bitmap_array,
+        read_dv_bytes,
+    )
+
+    if sum(_dv_cardinality(a) for a in adds) > _DV_BROADCAST_MAX_POSITIONS:
+        if files is None:
+            files = scanned_files(df, table_path, adds)
+        rows = [
+            (u, bytearray(read_dv_bytes(table_path, a["deletionVector"])))
+            for u, a in files
+            if a.get("deletionVector")
+        ]
+
+        def _decode_fn(dv):
+            return dv.apply(lambda b: parse_roaring_bitmap_array(bytes(b)))
+
+        # real annotation objects: `from __future__ import annotations`
+        # stringifies inline hints, which pandas_udf cannot infer
+        _decode_fn.__annotations__ = {"dv": pd.Series, "return": pd.Series}
+        _decode = pandas_udf(_decode_fn, T.ArrayType(T.LongType()))
+        positions = df.sparkSession.createDataFrame(
+            rows, "__fp__ string, __dv__ binary"
+        ).select("__fp__", F.explode(_decode(F.col("__dv__"))).alias("__ri__"))
+        return df.join(positions, ["__fp__", "__ri__"], "left_anti")
+
     from jodie_spark.fs import scanned_path_key
-    from jodie_spark.tables.deletion_vectors import parse_roaring_bitmap_array
+
+    if bc is None:
+        bc = _dv_bitmaps(df.sparkSession, table_path, adds)
 
     def _keep_fn(fp, ri):
         import numpy as np
@@ -467,13 +556,12 @@ def _drop_dv_positions(
         out = np.ones(len(fp), dtype=bool)
         for val in fp.unique():
             key = scanned_path_key(val)
-            if strict and key not in bc.value:
+            if key not in bc.value:
                 raise DeltaProtocolError(
-                    f"cannot map scanned file {val!r} back to a "
-                    f"deletion-vector add entry of {table_path}; refusing "
-                    "to resurrect deleted rows"
+                    f"cannot map scanned file {val!r} back to an add entry "
+                    f"of {table_path}; refusing to resurrect deleted rows"
                 )
-            raw = bc.value.get(key)
+            raw = bc.value[key]
             if raw is None:
                 continue  # no DV on this file: keep every row
             pos = np.asarray(parse_roaring_bitmap_array(raw), dtype=np.int64)
@@ -481,8 +569,6 @@ def _drop_dv_positions(
             out[m] = ~np.isin(ri[m].values, pos)
         return pd.Series(out)
 
-    # real annotation objects: `from __future__ import annotations`
-    # stringifies inline hints, which pandas_udf cannot infer
     _keep_fn.__annotations__ = {
         "fp": pd.Series,
         "ri": pd.Series,
@@ -490,79 +576,6 @@ def _drop_dv_positions(
     }
     _keep = pandas_udf(_keep_fn, T.BooleanType())
     return df.filter(_keep(F.col("__fp__"), F.col("__ri__")))
-
-
-def _read_dv_files_df(
-    spark: SparkSession,
-    table_path: str,
-    schema: T.StructType,
-    adds: list[dict[str, Any]],
-) -> DataFrame:
-    """Scan deletion-vector-carrying files, dropping deleted rows.
-
-    Shape, small DV sets (≤ ``_DV_BROADCAST_MAX_POSITIONS`` deleted
-    rows): ONE parquet scan with ``_metadata.file_path`` /
-    ``row_index`` filtered by :func:`_drop_dv_positions` (strict: a
-    scanned file that maps to no add refuses).
-
-    Large DV sets keep the prior shape: positions decoded
-    executor-side from a tiny (path, bytes) frame, exploded, and
-    anti-joined — a million-row bitmap never burdens the driver or the
-    broadcast plane. DV bytes are fetched driver-side either way
-    (O(#DV files) I/O, like the log itself)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from jodie_spark.errors import DeltaProtocolError
-    from jodie_spark.tables.deletion_vectors import (
-        parse_roaring_bitmap_array,
-        read_dv_bytes,
-    )
-
-    from jodie_spark.fs import add_path_key, scanned_path_key
-
-    # keys use the ONE shared canonicalization (jodie_spark.fs.add_path_key)
-    by_real = {add_path_key(table_path, a["path"]): a for a in adds}
-    base, paths = _spark_paths(table_path, adds)
-    scan = scan_parquet(
-        spark, paths, schema, base,
-        cols=[*(quote_ident(f.name) for f in schema.fields), *_FP_RI],
-    )
-    total = sum(_dv_cardinality(a) for a in adds)
-    if total <= _DV_BROADCAST_MAX_POSITIONS:
-        bc = _dv_bitmaps(spark, table_path, adds)
-        return _drop_dv_positions(scan, table_path, bc, strict=True).drop(
-            "__fp__", "__ri__"
-        )
-
-    rows = []
-    for fp in observed_file_uris(select_expr(scan, "__fp__"), "__fp__"):
-        add = by_real.get(scanned_path_key(fp))
-        if add is None:
-            raise DeltaProtocolError(
-                f"cannot map scanned file {fp!r} back to a deletion-vector "
-                f"add entry of {table_path}; refusing to resurrect deleted rows"
-            )
-        rows.append((fp, bytearray(read_dv_bytes(table_path, add["deletionVector"]))))
-
-    def _decode_fn(dv):
-        return dv.apply(lambda b: parse_roaring_bitmap_array(bytes(b)))
-
-    # real annotation objects: `from __future__ import annotations`
-    # stringifies inline hints, which pandas_udf cannot infer
-    _decode_fn.__annotations__ = {"dv": pd.Series, "return": pd.Series}
-    _decode = pandas_udf(_decode_fn, T.ArrayType(T.LongType()))
-
-    pos_schema = T.StructType(
-        [T.StructField("__fp__", T.StringType()), T.StructField("__dv__", T.BinaryType())]
-    )
-    positions = (
-        scan.sparkSession.createDataFrame(rows, pos_schema)
-        .select("__fp__", F.explode(_decode(F.col("__dv__"))).alias("__ri__"))
-    )
-    return scan.join(positions, ["__fp__", "__ri__"], "left_anti").drop(
-        "__fp__", "__ri__"
-    )
 
 
 # Bounds that pick where plan_candidate_files prunes: on the driver or
@@ -1458,12 +1471,9 @@ class DeltaTable:
         rewrite, else (None, []). Skipped on tables with externally-
         referenced files (shallow clones) — those get fresh ids, never
         wrong ones."""
-        from jodie_spark.tables.row_lineage import (
-            ensure_lineage_metadata,
-            has_external_adds,
-        )
+        from jodie_spark.tables.row_lineage import ensure_lineage_metadata
 
-        if has_external_adds(self.path, candidates):
+        if any(_is_external(self.path, a) for a in candidates):
             return None, []
         cols, meta_action = ensure_lineage_metadata(snap)
         if cols is None:
@@ -1487,16 +1497,14 @@ class DeltaTable:
         the caller discards the rewrite of a miss. Any other candidate
         set is probed: one observed scan of the condition columns and
         the file path, no cache (column pruning then reaches the
-        parquet scan)."""
+        parquet scan). The probe never resolves row ids: only the
+        rewrite reads them."""
         lineage, lineage_actions = self._lineage_setup(snap, candidates)
         if one_small_candidate(self.spark.conf, candidates):
             return candidates, lineage, lineage_actions
-        if lineage is not None:
-            cand_df = self._read_candidates(snap, schema, candidates, lineage=lineage)
-        else:
-            cand_df = self._read_candidates(snap, schema, candidates).withColumn(
-                "__file__", F.input_file_name()
-            )
+        cand_df = self._read_candidates(snap, schema, candidates).withColumn(
+            "__file__", F.input_file_name()
+        )
         touched = map_touched_paths(
             self.path,
             candidates,
@@ -1535,17 +1543,15 @@ class DeltaTable:
         new columns back as typed NULLs, exactly like the unmapped
         path does.
 
-        With ``lineage`` the scan resolves each row's preserved
-        ``__lineage_rid__/__lineage_rcv__`` (and exposes ``__file__``),
-        masking DV'd rows — see :mod:`jodie_spark.tables.row_lineage`.
-
-        ``coords`` is the merge-on-read coordinate scan: each row
-        carries ``__fp__``/``__ri__`` (Spark's file path and row index,
-        the deletion-vector coordinates) in place of ``__file__``, and
-        rows an existing deletion vector deleted are dropped, so they
-        neither match nor come back. ``old_dvs`` is the candidates'
-        :func:`_dv_bitmaps` when the caller holds it already (the DV
-        write merges the same bitmaps); it is read here otherwise."""
+        The scan is :func:`read_files_df`'s, whose layers ``lineage``,
+        ``coords`` and ``old_dvs`` pick: with ``lineage`` each row
+        carries its preserved ``__lineage_rid__/__lineage_rcv__``; with
+        ``coords`` (the merge-on-read coordinate scan) its
+        ``__fp__``/``__ri__``, the deletion-vector coordinates. Rows an
+        existing deletion vector deleted are dropped either way, so
+        they neither match nor come back. ``old_dvs`` is the
+        candidates' :func:`_dv_bitmaps` when the caller holds it already
+        (the DV write merges the same bitmaps)."""
         from jodie_spark.tables.column_mapping import (
             column_mapping_mode,
             rename_to_logical,
@@ -1558,32 +1564,16 @@ class DeltaTable:
             if mode in ("name", "id")
             else schema
         )
-        keep: tuple[str, ...] = ("__fp__", "__ri__") if coords else ()
-        if lineage is not None:
-            from jodie_spark.tables.row_lineage import (
-                LIN_RCV,
-                LIN_RID,
-                read_candidates_with_lineage,
-            )
-
-            df = read_candidates_with_lineage(
-                self.spark, self.path, physical, candidates, *lineage,
-                file_col="__fp__" if coords else "__file__",
-                coords=coords,
-            )
-            keep = (keep or ("__file__",)) + (LIN_RID, LIN_RCV)
-        elif coords:
-            base, paths = _spark_paths(self.path, candidates)
-            df = scan_parquet(self.spark, paths, physical, base, cols=["*", *_FP_RI])
-        else:
-            df = read_files_df(self.spark, self.path, physical, candidates)
-        if coords:
-            if old_dvs is None:
-                old_dvs = _dv_bitmaps(self.spark, self.path, candidates)
-            if old_dvs is not None:
-                df = _drop_dv_positions(df, self.path, old_dvs, strict=False)
+        df = read_files_df(
+            self.spark, self.path, physical, candidates, lineage, coords, old_dvs
+        )
         if physical is schema:
             return df
+        from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
+
+        keep = ("__fp__", "__ri__") if coords else ()
+        if lineage is not None:
+            keep += (LIN_RID, LIN_RCV)
         return rename_to_logical(df, schema, physical, keep=keep)
 
     def _write_rewrite_files(
@@ -1852,8 +1842,6 @@ class DeltaTable:
         if not touched:
             return
         rows = self._read_candidates(d.snap, d.schema, touched, lineage=lineage)
-        if lineage is not None:
-            rows = rows.drop("__file__")
         if d.hidden:
             rows = rows.withColumns(d.hidden)
         cdf_on = self.is_cdf_enabled(d.snap)
@@ -1974,19 +1962,13 @@ class DeltaTable:
         Returns (actions, changed_row_count, dv_bytes). Adds are emitted
         AFTER removes: snapshot replay applies in order, so the re-added
         path ends live and un-tombstoned (vacuum safe)."""
-        from jodie_spark.fs import add_path_key, scanned_path_key
-
-        by_real = {add_path_key(self.path, a["path"]): a for a in candidates}
+        add_of = dict(map_scanned_uris(self.path, candidates, [r["fp"] for r in rows]))
         changed = 0
         dv_bytes = 0
         removes: list[dict[str, Any]] = []
         adds: list[dict[str, Any]] = []
         for r in rows:
-            add = by_real.get(scanned_path_key(r["fp"]))
-            if add is None:
-                raise DeltaProtocolError(
-                    f"cannot map {r['fp']!r} back to a candidate add entry"
-                )
+            add = add_of[r["fp"]]
             desc = json.loads(r["desc"])
             changed += int(r["new_card"]) - int(r["old_card"])
             dv_bytes += int(desc.get("sizeInBytes") or 0)
@@ -2146,28 +2128,18 @@ class DeltaTable:
         # tables (e.g. DV'd by another engine) stay physical end-to-end
         ms = self._mapping_schemas(snap)
         lineage, lineage_actions = self._lineage_setup(snap, dv_adds)
+        live = read_files_df(
+            self.spark, self.path, ms[1] if ms else schema, dv_adds, lineage
+        )
         stat_exclude = None
         if lineage is not None:
             # copied rows keep id AND commit version (pure layout change)
-            from jodie_spark.tables.row_lineage import (
-                LIN_RCV,
-                LIN_RID,
-                read_candidates_with_lineage,
-            )
+            from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
 
-            live = (
-                read_candidates_with_lineage(
-                    self.spark, self.path, ms[1] if ms else schema, dv_adds, *lineage
-                )
-                .drop("__file__")
-                .withColumnRenamed(LIN_RID, lineage[0])
-                .withColumnRenamed(LIN_RCV, lineage[1])
+            live = live.withColumnRenamed(LIN_RID, lineage[0]).withColumnRenamed(
+                LIN_RCV, lineage[1]
             )
             stat_exclude = set(lineage)
-        else:
-            live = read_files_df(
-                self.spark, self.path, ms[1] if ms else schema, dv_adds
-            )
         adds = write_data_files(
             live, self.path, snap.partition_columns, stat_exclude=stat_exclude,
             table_config=snap.configuration,
@@ -2567,14 +2539,7 @@ class OptimizeBuilder:
         # row tracking: OPTIMIZE copies rows unmodified, so ids AND
         # commit versions are materialized through the rewrite
         lineage, lineage_actions = t._lineage_setup(snap, files)
-        if lineage is not None:
-            from jodie_spark.tables.row_lineage import read_candidates_with_lineage
-
-            df = read_candidates_with_lineage(
-                t.spark, t.path, read_schema, files, *lineage
-            ).drop("__file__")
-        else:
-            df = read_files_df(t.spark, t.path, read_schema, files)
+        df = read_files_df(t.spark, t.path, read_schema, files, lineage)
         total_bytes = sum(int(f.get("size") or 0) for f in files)
         n_out = max(1, -(-total_bytes // target_file_size))
         mc = None
@@ -2731,33 +2696,55 @@ def filter_by_paths(df: DataFrame, path_col: str, paths: set[str]) -> DataFrame:
     return df.join(F.broadcast(names), path_col, "left_semi")
 
 
+def map_scanned_uris(
+    table_path: str, adds: list[dict[str, Any]], uris
+) -> list[tuple[str, dict[str, Any]]]:
+    """The one URI-to-add mapping: each of Spark's ``_metadata.file_path``
+    / ``input_file_name()`` URIs paired with every add of ``adds`` that
+    names its file (one, unless ``adds`` lists a file twice), in URI
+    order. Both sides go through the shared canonicalization
+    (``jodie_spark.fs.add_path_key`` / ``scanned_path_key``):
+    percent-encoding and the data-plane spelling are where hand-built
+    variants have diverged before. A URI that maps to no add RAISES:
+    reading a file without its add's deletion vector, row ids or
+    partition values, or rewriting against a partial touched set, would
+    return wrong rows silently."""
+    from jodie_spark.fs import add_path_key, scanned_path_key
+
+    by_key: dict[str, list[dict[str, Any]]] = {}
+    for a in adds:
+        by_key.setdefault(add_path_key(table_path, a["path"]), []).append(a)
+    out = []
+    for u in sorted(uris):
+        got = by_key.get(scanned_path_key(u))
+        if not got:
+            raise DeltaProtocolError(
+                f"cannot map scanned file {u!r} back to an add entry of "
+                f"{table_path}; refusing to read or rewrite it without its add"
+            )
+        out += [(u, a) for a in got]
+    return out
+
+
+def scanned_files(
+    df: DataFrame, table_path: str, adds: list[dict[str, Any]]
+) -> list[tuple[str, dict[str, Any]]]:
+    """:func:`map_scanned_uris` over the files ``df`` (a scan of
+    ``adds`` carrying ``__fp__``) read, their URIs learned in ONE
+    observed noop job (:func:`observed_file_uris`; none for no adds)."""
+    uris = observed_file_uris(select_expr(df, "__fp__"), "__fp__") if adds else ()
+    return map_scanned_uris(table_path, adds, uris)
+
+
 def map_touched_paths(
     table_path: str,
     candidates: list[dict[str, Any]],
     raw_paths: set[str],
 ) -> list[dict[str, Any]]:
-    """Map ``input_file_name()`` URIs back to log add entries.
-
-    Both sides normalize to the on-disk absolute path (URIs are
-    scheme-stripped + unquoted; add-paths are unquoted per the Delta
-    protocol's percent-encoding). A URI that maps to no candidate add is
-    a bug (encoding drift) — raise rather than rewrite against a partial
-    target, which would silently duplicate matched rows.
-    """
-    from jodie_spark.fs import add_path_key, scanned_path_key
-
-    # both sides normalize through the ONE shared canonicalization
-    # (jodie_spark.fs) — percent-encoding and data-plane spelling are
-    # exactly where per-site variants have diverged before
-    normalized = {scanned_path_key(p) for p in raw_paths}
-    by_abs = {add_path_key(table_path, a["path"]): a for a in candidates}
-    unmapped = normalized - set(by_abs)
-    if unmapped:
-        raise DeltaProtocolError(
-            "touched-file discovery returned file URIs that do not map back "
-            f"to log add entries: {sorted(unmapped)[:3]}"
-        )
-    return [by_abs[p] for p in sorted(normalized)]
+    """The candidate adds a touched-file probe's URIs name
+    (:func:`map_scanned_uris`, which raises on a URI that maps to none)."""
+    touched = map_scanned_uris(table_path, candidates, raw_paths)
+    return list({a["path"]: a for _, a in touched}.values())
 
 
 def observed_metrics(df: DataFrame, **metrics: str) -> dict[str, Any]:

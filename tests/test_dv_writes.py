@@ -1,6 +1,7 @@
 """Merge-on-read DELETE via deletion vectors (write side)."""
 
 import glob
+import json
 import os
 
 import pytest
@@ -551,3 +552,93 @@ def test_mor_merge_on_name_mapped_table(spark, tmpdir_path):
     assert dvs and dvs[0]["deletionVector"]["cardinality"] == 2
     assert (rows, []) == run("cow", False)
     assert rows == sorted([(i, i) for i in range(10) if i not in (2, 3)] + [(2, 102), (42, 0)])
+
+
+def test_mor_and_cow_merge_record_the_same_history(spark, tmpdir_path):
+    """Both write modes of one merge commit the same operationParameters
+    and the same operationMetrics keys."""
+    src = spark.createDataFrame([(5, -1), (7, -1), (2000, 42)], ["id", "m"])
+    got = []
+    for dv in (False, True):
+        p = os.path.join(tmpdir_path, f"dv{dv}")
+        write_delta(spark.range(100).selectExpr("id", "id % 10 as m"), p)
+        t = DeltaTable.forPath(spark, p)
+        (
+            t.alias("tg")
+            .merge(src.alias("s"), "tg.id = s.id")
+            .whenMatchedDelete("s.m < 0 and tg.id = 7")
+            .whenMatchedUpdate(set={"m": "s.m"})
+            .whenNotMatchedInsertAll()
+            .execute(deletion_vectors=dv)
+        )
+        h = t.history(1).collect()[0]
+        m = h["operationMetrics"]
+        assert m["numOutputRows"] == str(
+            int(m["numTargetRowsInserted"]) + int(m["numTargetRowsUpdated"])
+            + int(m["numTargetRowsCopied"])
+        )
+        got.append((h["operationParameters"], sorted(m)))
+    assert got[0] == got[1]
+    assert json.loads(got[0][0]["matchedPredicates"]) == [
+        {"predicate": "s.m < 0 and tg.id = 7", "actionType": "delete"},
+        {"actionType": "update"},
+    ]
+
+
+def _dv_state(spark, t, op):
+    """What ``op`` leaves of a DV'd row-tracking CDF table: its rows and
+    their row ids, read by the datasource, or its change rows once a
+    full delete removed the DV'd files."""
+    from jodie_spark.operators.cdf import read_cdf
+    from jodie_spark.sources.datasource import register
+
+    if op == "read_cdf":  # the delete rows of the removed DV'd files
+        t.delete()
+        df = read_cdf(spark, t.path, 0, t.deltaLog.latest_version())
+        return sorted(tuple(r) for r in df.drop("_commit_timestamp").collect())
+    if op == "cow_delete":
+        t.delete("id = 15 OR id = 16")
+    elif op == "row_tracking_update":
+        t.update("id < 20", {"m": "m + 100"})
+    elif op == "reorg_purge":
+        assert t.reorg_purge() == 2
+    register(spark)
+    ids = spark.read.format("jodie_delta").option("withRowIds", "true").load(t.path)
+    return (
+        sorted(tuple(r) for r in t.toDF().collect()),
+        sorted((r["_row_id"], r["id"], r["m"], r["_row_commit_version"]) for r in ids.collect()),
+    )
+
+
+@pytest.mark.parametrize(
+    "op", ["toDF", "cow_delete", "row_tracking_update", "reorg_purge", "read_cdf"]
+)
+def test_large_dv_shape_matches_the_bitmap_filter(spark, tmpdir_path, monkeypatch, op):
+    """Past ``_DV_BROADCAST_MAX_POSITIONS`` deleted rows a scan drops
+    them by an anti join instead of the bitmap filter: with the bound at
+    0 every op over DV'd files returns the rows and row ids it returns
+    with the default bound."""
+    import shutil
+
+    import jodie_spark.tables.table as table_module
+    from conftest import executed_plans
+
+    base = os.path.join(tmpdir_path, "base")
+    write_delta(
+        spark.range(40).selectExpr("id", "id % 10 AS m").repartitionByRange(2, "id"),
+        base,
+        options={"delta.enableRowTracking": "true", "delta.enableChangeDataFeed": "true"},
+    )
+    DeltaTable.forPath(spark, base).delete("m = 3", deletion_vectors=True)
+    got = []
+    for bound in (table_module._DV_BROADCAST_MAX_POSITIONS, 0):
+        monkeypatch.setattr(table_module, "_DV_BROADCAST_MAX_POSITIONS", bound)
+        p = os.path.join(tmpdir_path, f"b{bound}")
+        shutil.copytree(base, p)
+        plans = executed_plans(
+            spark, lambda: got.append(_dv_state(spark, DeltaTable.forPath(spark, p), op))
+        )
+        assert any("LeftAnti" in plan for plan in plans) == (bound == 0)
+    assert got[0] == got[1]
+    rows = got[0] if op == "read_cdf" else got[0][0]
+    assert rows and not any(r[1] == 3 for r in rows if op != "read_cdf")

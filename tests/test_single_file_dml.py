@@ -141,9 +141,11 @@ def test_open_cost_bounds_the_single_pass(spark, tmpdir_path, op):
 @pytest.mark.parametrize("kind", ["plain", "cdf", "row_tracking"])
 def test_single_file_miss_commits_nothing(spark, tmpdir_path, op, kind):
     """The stats let the file through, no row matches: the rewrite runs
-    in place of the probe (as many jobs as the probe path on a twin
-    table), the same commit that removes and adds nothing follows, and
-    the rewrite's file is deleted."""
+    in place of the probe (one job, as the probe on a twin table, but on
+    row tracking, whose rewrite reads row ids: its scan learns the
+    file's URI and broadcasts the file's row ids, two jobs more), the
+    same commit that removes and adds nothing follows, and the
+    rewrite's file is deleted."""
     run = (_delete if op == "delete" else _update)("k = 5 AND v = 6")
     one = _make(spark, os.path.join(tmpdir_path, "one"), kind)
     twin = _make(spark, os.path.join(tmpdir_path, "twin"), kind)
@@ -151,9 +153,8 @@ def test_single_file_miss_commits_nothing(spark, tmpdir_path, op, kind):
     jobs_one = spark_jobs(spark, lambda: run(one))
     with session_conf(spark, OPEN_COST, "1b"):
         jobs_twin = spark_jobs(spark, lambda: run(twin))
-    assert jobs_twin == jobs_one
-    if kind != "row_tracking":  # the lineage scan runs jobs of its own
-        assert jobs_one == 1
+    assert jobs_twin == 1
+    assert jobs_one == (3 if kind == "row_tracking" else 1)
     assert _state(spark, one, kind) == _state(spark, twin, kind)
     assert _rows(one) == [(i, i) for i in range(100)]
     m = _last(one)
@@ -192,16 +193,16 @@ def test_failed_commit_keeps_the_rewrite_files(spark, tmpdir_path, monkeypatch):
 )
 def test_single_pass_matches_the_probe_path(spark, tmpdir_path, op, kind, cond, hit):
     """The same op on twin tables, the second with a 1-byte open cost
-    so it probes: one job fewer (three on row tracking, where the
-    probe's scan resolves row ids too), and the same rows, operation
-    metrics and change rows or row ids."""
+    so it probes: one job fewer on every kind (the probe reads no row
+    ids, so row tracking costs it nothing extra), and the same rows,
+    operation metrics and change rows or row ids."""
     run = (_delete if op == "delete" else _update)(cond)
     one = _make(spark, os.path.join(tmpdir_path, "one"), kind)
     twin = _make(spark, os.path.join(tmpdir_path, "twin"), kind)
     jobs_one = spark_jobs(spark, lambda: run(one))
     with session_conf(spark, OPEN_COST, "1b"):
         jobs_twin = spark_jobs(spark, lambda: run(twin))
-    assert jobs_twin == jobs_one + (3 if kind == "row_tracking" else 1)
+    assert jobs_twin == jobs_one + 1
     got = _state(spark, one, kind)
     assert got == _state(spark, twin, kind)
     rows, metrics, _ = got

@@ -153,13 +153,18 @@ def _orphans(t, before):
 
 def _state(spark, t, kind):
     """Rows, metrics, the last commit and ``kind``'s extra state. Of the
-    metrics only the data file count is left out: the probe path's
-    output takes its own number of files (``_assign_identities`` unions
-    two plans), while its change rows fill as many files as the data."""
+    metrics the timings are left out, the bytes added (the paths write
+    the rows in another order, which parquet encodes in another number
+    of bytes) and, but for identity columns, the data file count: the
+    probe path's output can take its own number of files, while its
+    change rows fill as many files as the data."""
+    left_out = TIMINGS + ("numAddedBytes",)
+    if kind != "identity":
+        left_out += ("numTargetFilesAdded",)
     metrics = {
         k: v
         for k, v in t.history(1).collect()[0]["operationMetrics"].items()
-        if k not in TIMINGS + ("numTargetFilesAdded",)
+        if k not in left_out
     }
     extra = None
     if kind == "cdf":
